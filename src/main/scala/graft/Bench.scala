@@ -1,41 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Bypass Hadoop's checksum layer on the FILECONTEXT route
-      // (guide §6 / OPTIMIZATION_r16.md): streaming checkpoint IO —
-      // offset log, commit log, and one HDFS-backed state-store delta
-      // per partition per batch — goes through CheckpointFileManager's
-      // FileContext, whose default local impl wraps ChecksumFs: a
-      // second buffered stream plus a .crc sidecar written AND
-      // re-verified per tiny file, pure overhead this deployment
-      // doesn't need (at 100 TB checkpoints live on an object store
-      // whose FS impl has no such layer). Measured at sf0.1/32:
-      // st14 2.73→2.13 s, st03 1.48→1.25 s, batch rows neutral;
-      // results byte-identical — Verify runs under the SAME config
-      // and stays 319/319 oracle-exact. The FileSystem-route knob
-      // (fs.file.impl=RawLocalFileSystem) is deliberately NOT set:
-      // RocksDB's checkpoint file manager aborts commits under it
-      // (19 task aborts on st07 in the A/B), and its marginal win on
-      // top of this knob measured ~4%.
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-    // A/B experiment channel, mirrored from graft.Profile: unset (the
-    // driver never sets it) the session is EXACTLY the line above —
-    // no timing logic, query set, or output change rides this.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
-      .filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     import scala.util.control.NonFatal
     // Machine-contention context: round-9's driver bench carried a 12×
     // contamination band (q60–q68 41.3 s driver vs 3.5 s isolated,

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: dumps `explain("formatted")` for the named
   * queries (or a default set of plan-shape-critical ones) so shuffle
   * count, broadcast choice, pushed filters, and codegen spans can be
@@ -69,14 +67,7 @@ object Explain {
         "fz01_fuzz_s1", "fz03_fuzz_s9",
         "dm01_dml_fuzz_cow", "dm02_dml_fuzz_mordv",
         "fw01_fuzz_setop", "fw02_fuzz_window")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

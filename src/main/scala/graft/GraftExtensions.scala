@@ -8,9 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * injects the library's full custom-function catalog (sketches,
   * portable hashes, vector ops, the shingle UDTF, the top-k UDAF) into
   * every session built from that config — including Thrift-server /
-  * pure-SQL sessions that never run driver-side `register` calls.
-  * Function semantics are identical to the per-module registrations;
-  * see [[graft.functions.FunctionCatalog]].
+  * pure-SQL sessions that never run a query row, so never run
+  * [[graft.GraftSession.prepare]]. Both read
+  * [[graft.functions.FunctionCatalog]], so function semantics match.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement harness (optimization guide §1): runs ONE named query
   * end-to-end under the bench's exact session config and attributes
@@ -18,19 +17,7 @@ object Profile {
     val name = args(0)
     val repeat = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // A/B experiment channel: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
-      .filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     final case class Job(var start: Long = 0L, var end: Long = 0L,
       var desc: String = "", var stages: Int = 0, var tasks: Int = 0,

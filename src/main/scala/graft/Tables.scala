@@ -69,14 +69,18 @@ object Tables {
     * skew): the harness tables are ONE parquet split at small SFs, so
     * CPU-heavy per-row derivation fused after the scan (JSON
     * build/parse at ingest, hash placement + explode) otherwise runs
-    * in a single task. Hash-of-key repartition — deterministic under
-    * retry (the §2.5 rule) and exempt from sortBeforeRepartition's
+    * in a single task. Parallelism is the smaller of the shuffle
+    * partition count and the cores: a session configured with far more
+    * shuffle partitions than cores gains nothing from spreading a scan
+    * that already covers them. Hash-of-key repartition — deterministic
+    * under retry (the §2.5 rule) and exempt from sortBeforeRepartition's
     * local sort — and USER-specified, so AQE never coalesces it. At
     * 100 TB the scan already has more splits than the session has
     * cores and no exchange is added at all. */
   def spreadNarrowScan(s: SparkSession, df: DataFrame, key: String): DataFrame = {
-    val parts = s.sessionState.conf.numShufflePartitions
-    if (df.rdd.getNumPartitions * 2 < parts)
+    val parts = math.min(s.sessionState.conf.numShufflePartitions,
+      s.sparkContext.defaultParallelism)
+    if (df.queryExecution.toRdd.getNumPartitions * 2 < parts)
       df.repartition(parts, org.apache.spark.sql.functions.col(key))
     else df
   }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Single source of truth for every custom Catalyst function the
   * library ships: name → expression builder. Consumed two ways:
   *
-  *  - per-module `register(spark)` calls (session-scoped temp
-  *    functions, the form the query registry uses), and
+  *  - [[graft.GraftSession.prepare]], which registers the entries a
+  *    session lacks as session-scoped temp functions before any query
+  *    row runs, and
   *  - [[graft.GraftExtensions]], which injects the whole catalog at
   *    session build time via `SparkSessionExtensions` — the deploy-time
   *    form (`spark.sql.extensions=graft.GraftExtensions`) that gives

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -138,12 +138,8 @@ case class PortableSimHash60(child: Expression)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Registry + Column API for the portable hash expressions. */
+/** Column API for the portable hash expressions. */
 object PortableHashFunctions {
-  def register(spark: SparkSession): Unit =
-    FunctionCatalog.register(spark, "poly_hash", "rolling_min4_w8",
-      "portable_simhash60")
-
   def polyHash(c: Column): Column = call_function("poly_hash", c)
   def rollingMin4W8(c: Column): Column = call_function("rolling_min4_w8", c)
   def portableSimhash60(c: Column): Column = call_function("portable_simhash60", c)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -69,9 +69,6 @@ case class ShingleGenerator(child: Expression, n: Int)
 }
 
 object GeneratorFunctions {
-  def register(spark: SparkSession): Unit =
-    FunctionCatalog.register(spark, "shingles")
-
   def shingles(tokens: Column, n: Column): Column =
     call_function("shingles", tokens, n)
 }

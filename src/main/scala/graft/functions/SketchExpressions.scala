@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -293,10 +293,6 @@ object SketchFunctions {
       val h2 = PortableHash.poly(s, 37L, PortableHash.P2)
       h1 * h2 % PortableHash.P1 % 2001L - 1000L
     }
-
-  def register(spark: SparkSession): Unit =
-    FunctionCatalog.register(spark, "simhash64", "minhash_sig16",
-      "lsh_buckets_8x6", "lsh_probe_buckets_8x6", "sorted_intersect_count")
 
   def simhash64(c: Column): Column = call_function("simhash64", c)
   def minhashSig16(c: Column): Column = call_function("minhash_sig16", c)

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -152,11 +152,6 @@ object TopKBuffer {
 }
 
 object TopKFunctions {
-  /** Registers `topk_by(ord, payload, k)` and its payload-deduping
-    * sibling `topk_by_distinct`; k must be a foldable int. */
-  def register(spark: SparkSession): Unit =
-    FunctionCatalog.register(spark, "topk_by", "topk_by_distinct")
-
   def topkBy(ord: Column, payload: Column, k: Int): Column =
     call_function("topk_by", ord, payload, org.apache.spark.sql.functions.lit(k))
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -109,10 +109,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object VectorFunctions {
 
-  /** Idempotent session registration; queries call this before use. */
-  def register(spark: SparkSession): Unit =
-    FunctionCatalog.register(spark, "cosine_sim")
-
-  /** Column API for the custom expression (post-`register`). */
+  /** Column API for the custom expression. */
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 }

@@ -18,7 +18,8 @@ object Behavioral {
 
   import Relational.t
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
 
     // ── q77: COHORT RETENTION — customers grouped by first-order month
     // (the cohort), activity counted per months-since-cohort offset.
@@ -92,7 +93,7 @@ object Behavioral {
             col("conv_us_sum")))
         .orderBy(col("stage"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     "q77_cohort_retention" ->

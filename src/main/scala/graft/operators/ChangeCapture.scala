@@ -75,7 +75,8 @@ object ChangeCapture {
         col("valid_to").isNull.as("is_current"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
     // ── q47: diff two deterministic customer snapshots. Snapshot B
     // drops every 10th key (removed), bumps acctbal on every 7th
     // (changed), and mints negative keys from every 13th (added) — all
@@ -165,7 +166,7 @@ object ChangeCapture {
           sum(round(col("bal") * 100).cast("long")).as("bal_cents"))
         .orderBy(col("v_at"))
     })
-  )
+  ))
 
   /** The q92/q100 shared fixture: a 4-version balance history per
     * customer key, synthesized in-plan with deterministic change

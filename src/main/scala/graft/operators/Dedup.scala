@@ -51,7 +51,8 @@ object Dedup {
     * full-corpus shuffle of raw text bodies — there it is a no-op. */
   private[operators] def spreadSmall(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < want) df.repartition(want) else df
+    if (df.queryExecution.toRdd.getNumPartitions < want) df.repartition(want)
+    else df
   }
 
   private val gramArraySql =
@@ -154,7 +155,6 @@ object Dedup {
     * shorten the prefix below the lossless length. */
   private[graft] def exactJaccardPairsUncached(s: SparkSession, d: String,
       prefixFilter: Boolean = true): DataFrame = {
-    SketchFunctions.register(s) // rescore uses sorted_intersect_count
     val g = withGramHashes(docs(s, d)).select(col("doc_id"), col("gh"), col("gsz"))
       .localCheckpoint()
     val post = g.select(col("doc_id"), col("gsz"), explode(col("gh")).as("h"))
@@ -194,7 +194,6 @@ object Dedup {
       cosinePairsUncached(s, d).localCheckpoint())
 
   private[operators] def cosinePairsUncached(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     import s.implicits._
     val B = 8
     val e = Tables(s, d, "embeddings")
@@ -328,7 +327,6 @@ object Dedup {
     // (DedupSpec's recall/zero-false-positive check does this at test
     // scale) before trusting a d02 hash mismatch as an engine bug.
     "d02_dedup_minhash_lsh" -> ((s, d) => {
-      SketchFunctions.register(s)
       // localCheckpoint: three consumers (signature branch + both
       // rescore sides) would each recompute the interpreted gram
       // pipeline; materializing it once collapses the diamond lineage.
@@ -369,7 +367,6 @@ object Dedup {
     // chunks would give only 256 buckets and O(n²/256) spurious
     // candidates at scale.
     "d03_dedup_simhash" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       val sim = docs(s, d)
         .select(col("doc_id"),
           graft.functions.PortableHashFunctions
@@ -581,8 +578,6 @@ object Dedup {
     // Uses Spark's own BloomFilterAggregate/MightContain (q53's
     // runtime-filter machinery, invoked explicitly).
     "d15_bloom_membership" -> ((s, d) => {
-      graft.functions.FunctionCatalog.register(s,
-        "bloom_agg", "bloom_might_contain")
       val all = docs(s, d)
       val cut = all.agg(expr("(max(doc_id) + 1) * 4 div 5").as("c"))
       val dig = all
@@ -615,7 +610,6 @@ object Dedup {
     * portable hashes, one row per contaminated training doc. */
   private[graft] def decontaminationStats(s: SparkSession,
       docsDf: DataFrame): DataFrame = {
-    graft.functions.PortableHashFunctions.register(s)
     val pos = gramPositions(tokenized(docsDf))
     val grams = pos.select(col("doc_id"), col("gh")).distinct()
     val bench = grams.filter(col("doc_id") % 7 === 0)
@@ -638,7 +632,6 @@ object Dedup {
     * documents. */
   private[graft] def exactSubstringSpans(s: SparkSession,
       docsDf: DataFrame): DataFrame = {
-    graft.functions.PortableHashFunctions.register(s)
     val pos = gramPositions(tokenized(docsDf))
     val shared = pos.select(col("doc_id"), col("gh")).distinct()
       .groupBy(col("gh")).agg(count(lit(1)).as("df"))
@@ -661,7 +654,6 @@ object Dedup {
     * integer ≥0.8 gate. */
   private[graft] def containmentPairs(s: SparkSession,
       docsDf: DataFrame): DataFrame = {
-    SketchFunctions.register(s)
     val g = withGramHashes(docsDf)
       .select(col("doc_id"), col("gh"), col("gsz")).localCheckpoint()
     val post = g.select(col("doc_id"), col("gsz"), explode(col("gh")).as("h"))
@@ -894,7 +886,8 @@ object Dedup {
     * ([[DedupSubstring]]) families — one map for SparkEntry, three
     * files under the repo's 1,500-line discipline. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    coreQueries ++ DedupCluster.queries ++ DedupSubstring.queries
+    graft.GraftSession.prepared(
+      coreQueries ++ DedupCluster.queries ++ DedupSubstring.queries)
 
   val oracles: Map[String, String] =
     coreOracles ++ DedupCluster.oracles ++ DedupSubstring.oracles

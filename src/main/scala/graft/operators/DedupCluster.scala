@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{SketchFunctions, VectorFunctions}
+import graft.functions.VectorFunctions
 import Dedup.{cosinePairs, cosinePairsUncached, docs, exactJaccardPairs, starComponents}
 
 /** The EMBEDDING / CLUSTER dedup family, split out of [[Dedup]] (which
@@ -136,8 +136,6 @@ object DedupCluster {
     // 0.38–0.40). Deterministic (fixed hyperplanes, fixed corpus), so
     // the gate is stable green.
     "d12_dedup_embedding_lsh" -> ((s, d) => {
-      VectorFunctions.register(s)
-      SketchFunctions.register(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("table_id"), col("bucket")).orderBy(col("vec_id"))
       // parallelize the hash/probe explosion (optimization rounds
@@ -223,7 +221,6 @@ object DedupCluster {
     // mode).
     "d16_semantic_dedup" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      VectorFunctions.register(s)
       val (_, cents) = Similarity.ivfIndex(s, d)
       // MULTI-ASSIGNMENT: each vector joins its top-3 cells by
       // centroid cosine (single-assignment measured recall 0.25–0.39
@@ -277,7 +274,6 @@ object DedupCluster {
     // necessarily 0) is computed in-plan from the same pair table — the
     // contract is visible in the output row, not just implied.
     "p06_leakage_safe_split" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       val pairs = exactJaccardPairs(s, d)
       val comp = starComponents(
         pairs.select(col("b_id").as("u"), col("a_id").as("v")))

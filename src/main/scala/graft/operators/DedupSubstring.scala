@@ -107,7 +107,6 @@ object DedupSubstring {
     // clones of an earlier doc) surface with empty new_text rather
     // than vanishing.
     "d18_substring_removal" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       val base = tokenized(spreadSmall(docs(s, d)))
         .localCheckpoint() // three consumers: grams, token explode, totals
       val pos = gramPositions(base).drop("n_toks")

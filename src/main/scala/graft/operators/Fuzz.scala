@@ -355,10 +355,10 @@ object Fuzz {
   private def rowName(i: Int, seed: Long) = f"fz${i + 1}%02d_fuzz_s$seed"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    PinnedSeeds.zipWithIndex.map { case (seed, i) =>
+    graft.GraftSession.prepared(PinnedSeeds.zipWithIndex.map { case (seed, i) =>
       rowName(i, seed) ->
         ((s: SparkSession, d: String) => plan(seed).frame(s, d))
-    }.toMap
+    }.toMap)
 
   val oracles: Map[String, String] =
     PinnedSeeds.zipWithIndex.map { case (seed, i) =>

@@ -168,9 +168,9 @@ object FuzzExt {
     ("fw01_fuzz_setop", 20L), ("fw02_fuzz_window", 3L))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Pinned.map { case (name, seed) =>
+    graft.GraftSession.prepared(Pinned.map { case (name, seed) =>
       name -> ((s: SparkSession, d: String) => plan(seed).frame(s, d))
-    }.toMap
+    }.toMap)
 
   val oracles: Map[String, String] =
     Pinned.map { case (name, seed) => name -> plan(seed).sql("") }.toMap

@@ -58,21 +58,6 @@ object Geo {
   private[graft] def pointsForSpec(s: SparkSession, d: String): DataFrame =
     points(s, d)
 
-  /** Spread a narrow key frame to session parallelism when its scan
-    * arrives in fewer splits than half the session's (guide §2.5 input
-    * skew — the d12 pathology): the harness fixture is ONE parquet
-    * split, so without this the per-point polyHash placement plus
-    * everything fused after it (q113's 9× probe explode + 30 MB
-    * exchange write, q114's ×25 facility cross + argmin partials) runs
-    * in a single task (profiled: 1.7–2.9 s single-task stages at
-    * sf0.1/32c). Hash-of-key repartition — deterministic under retry
-    * (§2.5's rule) and exempt from sortBeforeRepartition's local sort —
-    * and USER-specified, so AQE never coalesces it. The exchange
-    * carries only the 8-byte key; at scale the scan already has ≥
-    * parallelism splits and no exchange is added at all. */
-  private def spreadNarrowScan(s: SparkSession, df: DataFrame, key: String): DataFrame =
-    Tables.spreadNarrowScan(s, df, key)
-
   /** The facility dimension: one "station" per nation row, placed by
     * the same portable hash machinery (distinct prefixes). */
   private def facilities(s: SparkSession, d: String): DataFrame = {
@@ -90,20 +75,21 @@ object Geo {
   /** One point per order, poly-hash-placed. `spread` repartitions the
     * key scan (when it is narrower than the session) BEFORE the hash
     * placement so the per-point compute parallelizes — q113/q114 opt
-    * in (their per-point work is multiplied ×9/×25 downstream); q112
-    * stays a single map-side-combined aggregate with no extra
-    * exchange. */
+    * in (their per-point work is multiplied ×9/×25 downstream: 1.7–2.9 s
+    * single-task stages at sf0.1/32c without it), and the exchange
+    * carries only the 8-byte key; q112 stays a single map-side-combined
+    * aggregate with no extra exchange. */
   private def points(s: SparkSession, d: String, spread: Boolean = false): DataFrame = {
-    graft.functions.PortableHashFunctions.register(s)
     val keys = Tables(s, d, "orders").select(col("o_orderkey"))
-    val src = if (spread) spreadNarrowScan(s, keys, "o_orderkey") else keys
+    val src = if (spread) Tables.spreadNarrowScan(s, keys, "o_orderkey") else keys
     src.select(
       col("o_orderkey").as("id"),
       pmod(axis("lat:", 2654435761L), lit(LatExtent)).as("latu"),
       pmod(axis("lon:", 1779033703L), lit(LonExtent)).as("lonu"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
 
     // ── q112: HOTSPOT GRID — the density map behind every crime/
     // incident dashboard: bin points into 1000-unit cells, count per
@@ -208,7 +194,7 @@ object Geo {
           min(col("id")).as("min_id"), max(col("id")).as("max_id"))
         .orderBy(col("fid"))
     })
-  )
+  ))
 
   private def axisSql(prefix: String, mix: Long): String = {
     import graft.functions.PortableHashFunctions.polyHashSql

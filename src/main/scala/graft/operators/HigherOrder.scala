@@ -21,7 +21,8 @@ import graft.plans.Skew
   */
 object HigherOrder {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
 
     // ── q25: array & map functions + HOFs over embeddings.
     "q25_array_hof" -> ((s, d) => {
@@ -74,7 +75,6 @@ object HigherOrder {
     // with k-bounded heaps instead of per-group sorts (map-side partial
     // top-k; the shuffle carries ≤ k rows per group per task).
     "q27_topk_aggregate" -> ((s, d) => {
-      TopKFunctions.register(s)
       Tables(s, d, "part")
         .groupBy(col("p_brand"))
         .agg(TopKFunctions.topkBy(col("p_retailprice"), col("p_partkey"), 3).as("top"))
@@ -608,7 +608,7 @@ object HigherOrder {
           sum(col("cents")).as("sum_cents"))
         .orderBy(col("bin"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     "q25_array_hof" ->

@@ -175,7 +175,8 @@ object Multimodal {
       ((col("doc_id") % 9 + 1) * 64).cast(IntegerType).as("height"),
       encode(col("text"), "UTF-8").as("data"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
 
     // ── m01: multimodal ingest — binary payload column + typed
     // metadata; the byte-level facts are oracle-checked.
@@ -261,7 +262,6 @@ object Multimodal {
             }
           }
       }
-      graft.functions.PortableHashFunctions.register(s)
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
         .load(dir)
@@ -414,7 +414,7 @@ object Multimodal {
             "acc + CAST(x AS BIGINT) * CAST(x AS BIGINT))").as("sq_norm"))
         .orderBy(col("doc_id"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     "m01_multimodal_meta" ->

@@ -42,7 +42,8 @@ object Relational {
   private[operators] def dec(c: Column, scale: Int = 4): Column =
     c.cast(DecimalType(18, scale))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
 
     // ── q01: flagship parity — scan → string-eq filter → groupBy →
     // count(col) → alias (spark_process_script.py:35-39 re-expressed).
@@ -636,7 +637,7 @@ object Relational {
         .select(col("user_id"), col("n_events"), col("n_sessions"))
         .orderBy(col("user_id"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     "q01_crime_flagship" ->

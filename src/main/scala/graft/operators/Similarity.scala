@@ -118,7 +118,6 @@ object Similarity {
     * overflow. The s04 ivf gate (recall ≥ 0.3 at every SF) pins that
     * the portable quantizer still indexes well. */
   private def ivfIntFit(s: SparkSession, source: DataFrame): (DataFrame, DataFrame) = {
-    graft.functions.PortableHashFunctions.register(s)
     val sv = source
       .select(col("vec_id"), col("embedding"),
         expr("transform(embedding, x -> " +
@@ -287,7 +286,6 @@ object Similarity {
     * PersistedIndexSpec for the partition-pruning plan pin. */
   private[graft] def servedProbe(s: SparkSession, d: String,
       nProbe: Int = 3): DataFrame = {
-    VectorFunctions.register(s)
     val tag = d.replaceAll("[^A-Za-z0-9]", "_")
     val idxDir = graft.Scratch.dir(s, "graft_ivfidx", tag)
     if (!new java.io.File(s"$idxDir/cents/_SUCCESS").exists()) {
@@ -528,7 +526,6 @@ object Similarity {
   /** The s09 search path: per-query ADC lookup table → code-only
     * shortlist (top-50 by approximate cosine) → exact rescore top-K. */
   private[graft] def pqTopK(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val (codes, cb) = pqIndex(s, d)
     val lutQ = Tables(s, d, "embeddings").filter(col("vec_id") < NQ)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
@@ -570,7 +567,6 @@ object Similarity {
     * pessimal vs classic IVFPQ — which is exactly what the in-plan
     * gate measures. */
   private[graft] def ivfPqTopK(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val (assigned, centsDf) = ivfIndex(s, d)
     val (codes, cb) = pqIndex(s, d)
     // the serving index: cell-routed code entries — the inverted list
@@ -629,8 +625,6 @@ object Similarity {
       exactSelfTopKUncached(s, d).localCheckpoint())
 
   private def exactSelfTopKUncached(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
-    graft.functions.TopKFunctions.register(s)
     import s.implicits._
     val B = 8
     val e = Tables(s, d, "embeddings")
@@ -654,11 +648,11 @@ object Similarity {
       .select(col("q_id"), col("entry.payload").as("n_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
 
     // ── s01: exact top-k cosine per query vector (brute force).
     "s01_ann_bruteforce" -> ((s, d) => {
-      VectorFunctions.register(s)
       val e = Tables(s, d, "embeddings")
       val q = e.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
@@ -689,7 +683,6 @@ object Similarity {
     // nearest cos sits ≥ 3e-5 from 0.25 at every SF, 10 decades above
     // double noise.
     "s18_ann_range_search" -> ((s, d) => {
-      VectorFunctions.register(s)
       val e = Tables(s, d, "embeddings")
       val q = e.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
@@ -715,7 +708,6 @@ object Similarity {
     // corpus per query batch instead of all of it, and cell routing
     // is centroid-sized plan metadata.
     "s19_ann_range_ivf" -> ((s, d) => {
-      VectorFunctions.register(s)
       val (assigned, cents) = ivfIndex(s, d)
       val q = assigned.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
@@ -750,8 +742,6 @@ object Similarity {
     // broadcast would take d05's block decomposition on the join; the
     // aggregate shape is unchanged.
     "s05_knn_batch" -> ((s, d) => {
-      VectorFunctions.register(s)
-      graft.functions.TopKFunctions.register(s)
       val e = Tables(s, d, "embeddings")
       val q = e.filter(col("vec_id") < 100)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
@@ -777,8 +767,6 @@ object Similarity {
     // lifts recall@3 from 0.4 (single-probe) to ≥0.93 at every SF —
     // gated at 0.8 by s04 — with zero extra index size.
     "s02_ann_lsh" -> ((s, d) => {
-      VectorFunctions.register(s)
-      SketchFunctions.register(s)
       val emb = Tables(s, d, "embeddings")
       val q = probeBucketed(emb.filter(col("vec_id") < NQ), "embedding")
         .select(col("vec_id").as("q_id"), col("table_id"), col("bucket"))
@@ -816,7 +804,6 @@ object Similarity {
     // oracle replays the whole index and this row is fully
     // hash-checked (the last ANN rows-only entry retired with s02's).
     "s03_ann_ivf" -> ((s, d) => {
-      VectorFunctions.register(s)
       val (assigned, cents) = ivfIntIndex(s, d)
       ivfIntProbe(assigned, cents)
     }),
@@ -834,8 +821,6 @@ object Similarity {
     // lossy array round-trip through the blob codec, or a time-travel
     // resolution bug all break the hash.
     "s17_ann_catalog_served" -> ((s, d) => {
-      VectorFunctions.register(s)
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "embeddings").createOrReplaceTempView("s17_emb")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.embsrv")
       s.sql("CREATE TABLE graft_dml.ns.embsrv (vec_id BIGINT, " +
@@ -873,7 +858,6 @@ object Similarity {
     // contract — not the engine-specific neighbor lists — is the green
     // CORRECTNESS row.
     "s06_ann_persisted" -> ((s, d) => {
-      VectorFunctions.register(s)
       val exact = queries("s01_ann_bruteforce")(s, d)
       recallGate(exact, servedProbe(s, d), 0.3, "persisted_recall_ok")
     }),
@@ -893,7 +877,6 @@ object Similarity {
     // The [min,max] table rides as a broadcast 1-row array frame
     // (in-plan, the q97-bounds pattern), never a collect.
     "s07_ann_quantized" -> ((s, d) => {
-      VectorFunctions.register(s)
       val dim = 64
       val sv = Tables(s, d, "embeddings").select(col("vec_id"),
         expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
@@ -957,7 +940,6 @@ object Similarity {
     // one narrow pass (the cache makes it build-once), scan codes not
     // vectors; compose with s03's IVF cells for the full IVFPQ shape.
     "s09_ann_pq" -> ((s, d) => {
-      VectorFunctions.register(s)
       recallGate(queries("s01_ann_bruteforce")(s, d), pqTopK(s, d), 0.6,
         "pq_recall_ok")
     }),
@@ -974,7 +956,6 @@ object Similarity {
     // s04 already prices (measured 0.60–0.93 across SFs at 5 probes;
     // 3 probes sat at 0.33 on the sf0.001 embedding draw).
     "s10_ann_ivfpq" -> ((s, d) => {
-      VectorFunctions.register(s)
       recallGate(queries("s01_ann_bruteforce")(s, d), ivfPqTopK(s, d), 0.3,
         "ivfpq_recall_ok")
     }),
@@ -994,9 +975,6 @@ object Similarity {
     // high-recall hub documents cannot mask a tail of zero-recall ones.
     // Deterministic (fixed hyperplanes, fixed corpus) → stable green.
     "s08_ann_selfjoin" -> ((s, d) => {
-      VectorFunctions.register(s)
-      SketchFunctions.register(s)
-      graft.functions.TopKFunctions.register(s)
       val emb = Tables(s, d, "embeddings")
       val wb = Window.partitionBy(col("table_id"), col("bucket"))
         .orderBy(col("vec_id"))
@@ -1076,7 +1054,6 @@ object Similarity {
     // Scale: broadcast queries × filtered candidate stream, one
     // narrow pass, ≤ k rows per query survive the rank.
     "s14_ann_filtered" -> ((s, d) => {
-      VectorFunctions.register(s)
       val e = Tables(s, d, "embeddings")
       val q = e.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
@@ -1114,7 +1091,6 @@ object Similarity {
     // plain ANN and the gate proves nothing). SimilarityGuardSpec
     // re-checks non-vacuity structurally.
     "s15_ann_filtered_ivf" -> ((s, d) => {
-      VectorFunctions.register(s)
       val e = Tables(s, d, "embeddings")
       val (assigned, cents) = ivfIndex(s, d)
       val q = assigned.filter(col("vec_id") < NQ)
@@ -1171,7 +1147,6 @@ object Similarity {
     // count strictly shrank). SegmentCompactSpec pins the 1-file-per-
     // cell accounting and the probed-file shrinkage.
     "s16_ann_segment_compact" -> ((s, d) => {
-      VectorFunctions.register(s)
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val idxDir = graft.Scratch.dir(s, "graft_s16_idx", tag)
       val e = Tables(s, d, "embeddings")
@@ -1220,7 +1195,6 @@ object Similarity {
     }),
 
     "s12_hard_negatives" -> ((s, d) => {
-      VectorFunctions.register(s)
       val e = Tables(s, d, "embeddings")
       val q = e.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
@@ -1253,7 +1227,6 @@ object Similarity {
     // loop. Fully oracle-checked: the oracle unrolls the same four
     // greedy rounds as CTEs with identical double arithmetic.
     "s13_mmr_diversify" -> ((s, d) => {
-      VectorFunctions.register(s)
       val e = Tables(s, d, "embeddings")
       val q = e.filter(col("vec_id") === 0)
         .select(col("embedding").as("qv"))
@@ -1310,7 +1283,6 @@ object Similarity {
     // 0.3 matches s03's: the stub embeddings are hash-derived (no
     // cluster structure), the worst case for a 3-of-16-cell probe.
     "s11_multimodal_ann" -> ((s, d) => {
-      VectorFunctions.register(s)
       def emb = Multimodal.assetEmbeddings(s, d)
         .select(col("doc_id").as("vec_id"), col("embedding"))
       val (assigned, centsDf) = ivfIndexFor(s, s"$d#m07", emb)
@@ -1318,7 +1290,7 @@ object Similarity {
       val exact = exactTopK(assigned.select(col("vec_id"), col("embedding")))
       recallGate(exact, approx, 0.3, "mm_recall_ok")
     })
-  )
+  ))
 
   // s17 shares s03's oracle VERBATIM: the catalog-served probe at the
   // pre-merge version must equal the plain-parquet probe bit-for-bit

@@ -119,7 +119,6 @@ object SimilarityGraph {
     * (the centroid-frame allowance). */
   private[graft] def graphTopK(s: SparkSession, d: String,
       nProbe: Int = 6): DataFrame = {
-    VectorFunctions.register(s)
     val (assigned, cents) = Similarity.ivfIndex(s, d)
     val (graph, entries) = graphCache.getOrElseUpdate(s, d) {
       val (g, e) = buildGraph(assigned, cents)
@@ -212,7 +211,8 @@ object SimilarityGraph {
         (round(col("cos0"), 6) + 0.0).as("cos"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
     // ── s20: GRAPH-INDEX ANN (partitioned small-world) — entry →
     // expand → beam inside the probed cells, recall-gated in-plan
     // against the exact baseline (the s04 discipline). The gate is
@@ -224,7 +224,7 @@ object SimilarityGraph {
       val exact = Similarity.queries("s01_ann_bruteforce")(s, d)
       Similarity.recallGate(exact, graphTopK(s, d), 0.6, "graph_recall_ok")
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     "s20_ann_graph" ->

@@ -146,7 +146,6 @@ object TextOps {
     // oracle checks the full normalized string without hauling it
     // through the diff). One narrow codegen'd pass, no shuffle.
     "t05_normalize" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       docs(s, d)
         .withColumn("norm",
           trim(regexp_replace(regexp_replace(lower(col("text")),
@@ -169,7 +168,6 @@ object TextOps {
     // to keep the driver diff bounded; at 100 TB the same Generate
     // streams the whole corpus shard-parallel.
     "t06_shingle_udtf" -> ((s, d) => {
-      graft.functions.GeneratorFunctions.register(s)
       docs(s, d)
         .filter(col("doc_id") < 10)
         .select(col("doc_id"),
@@ -217,7 +215,6 @@ object TextOps {
     // codegen'd pass, no shuffle — at 100 TB this rides the same scan
     // as the other per-row gates.
     "t08_pii_scrub" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
       val phone = "[0-9]{3}-[0-9]{4}"
       docs(s, d)
@@ -354,7 +351,6 @@ object TextOps {
     // included — is oracle-checked against a DuckDB restatement
     // (round 1 left this rows-only behind xxhash64).
     "t04_fingerprint" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       docs(s, d)
         .withColumn("fp", graft.functions.PortableHashFunctions.rollingMin4W8(col("text")))
         .select(col("doc_id"),
@@ -465,7 +461,6 @@ object TextOps {
     }),
 
     "t16_shared_grams" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       val g = Dedup.spreadSmall(docs(s, d))
         .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
         .filter(size(col("toks")) >= 8)
@@ -502,7 +497,6 @@ object TextOps {
     // ratio table, one per-doc aggregate. No all-pairs, no global
     // window, no floats.
     "t18_dsir_weights" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       val toks = Dedup.spreadSmall(docs(s, d))
         .select(col("doc_id"), col("lang"),
           explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
@@ -879,7 +873,8 @@ object TextOps {
     * ([[TextBpe]]) families — one map for SparkEntry, three files
     * under the repo's 1,500-line discipline. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    coreQueries ++ TextPipeline.queries ++ TextBpe.queries
+    graft.GraftSession.prepared(
+      coreQueries ++ TextPipeline.queries ++ TextBpe.queries)
 
   val oracles: Map[String, String] =
     coreOracles ++ TextPipeline.oracles ++ TextBpe.oracles

@@ -55,7 +55,6 @@ object TextPipeline {
     // "split:") decorrelate the two decisions; the portable 31-poly
     // hash lets DuckDB replay membership bit-identically.
     "p02_sample_split" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       import graft.functions.PortableHashFunctions.{splitBucket, splitLabel}
       val keepRate = when(col("lang") === "en", 50)
         .when(col("lang") === "zh", 80).otherwise(100)
@@ -129,7 +128,6 @@ object TextPipeline {
     // reproducibility — is pinned by the oracle's single global
     // ROW_NUMBER restatement.
     "p07_train_order" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       import org.apache.spark.sql.expressions.Window
       val h = docs(s, d).select(col("doc_id"))
         .withColumn("shuf", graft.functions.PortableHashFunctions.polyHash(
@@ -165,7 +163,6 @@ object TextPipeline {
     // per-source counts come from a column-pruned aggregate here;
     // table stats at real scale).
     "p04_mixture_balance" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       val weight = when(
         pmod(regexp_extract(col("source"), "([0-9]+)", 1).cast(LongType),
           lit(3L)) === 0, 5L)
@@ -212,7 +209,6 @@ object TextPipeline {
     // replayable bit-for-bit. Zero-kept languages survive via the
     // left join, so the output is one row per language regardless.
     "p09_temperature_sample" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       val counts = docs(s, d).groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"))
         .withColumn("w",
@@ -253,7 +249,6 @@ object TextPipeline {
     // before the per-language rollup — reproducible at any
     // parallelism, which is the property that matters at 100 TB.
     "p10_quality_sample" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
       withQualityCols(docs(s, d))
         .withColumn("rate_ppm",
           expr("CAST(floor(quality * quality * 1000000) AS BIGINT)"))
@@ -329,8 +324,6 @@ object TextPipeline {
     // and merge is O(k), which is what survives a group with 10⁹ rows.
     // The hash (≤ 10⁹+6) is exact in the aggregate's double ord slot.
     "p05_group_sample" -> ((s, d) => {
-      graft.functions.PortableHashFunctions.register(s)
-      graft.functions.TopKFunctions.register(s)
       val h = graft.functions.PortableHashFunctions.polyHash(
         concat(lit("gsamp:"), col("doc_id").cast(StringType)))
       docs(s, d)

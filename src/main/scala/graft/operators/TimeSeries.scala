@@ -72,7 +72,8 @@ object TimeSeries {
       |    SUM(CAST(round(l_extendedprice * 100) AS BIGINT) * CAST(round(l_extendedprice * 100) AS BIGINT)) AS syy
       |  FROM lineitem GROUP BY l_returnflag""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
 
     // ── q57: ROLLING EVENT-TIME WINDOW — per-customer trailing-30-day
     // spend via a RANGE frame over the integer epoch-day. A ROWS frame
@@ -517,7 +518,7 @@ object TimeSeries {
           (lit(2L) * col("tot_a") * col("tot_b")).as("tvd_den"))
         .orderBy(col("bin"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     "q57_rolling_window" ->

@@ -76,7 +76,8 @@ object Adaptive {
       .orderBy(col("o_orderstatus"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
     "q43_aqe_skew_join" -> ((s, d) => {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val out = graft.Scratch.dir(s, "graft_q43", tag)
@@ -85,7 +86,7 @@ object Adaptive {
       }
       s.read.parquet(out).orderBy(col("o_orderstatus"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     // skew handling must be result-invariant: the oracle is the plain

@@ -72,7 +72,8 @@ object RuntimeFilter {
   private[graft] def urgentJoin(s: SparkSession, d: String): DataFrame =
     urgentJoinCore(s, d).orderBy(col("l_returnflag"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
     "q53_bloom_join" -> ((s, d) => {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val out = graft.Scratch.dir(s, "graft_q53", tag)
@@ -81,7 +82,7 @@ object RuntimeFilter {
       }
       s.read.parquet(out).orderBy(col("l_returnflag"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     // runtime filtering must be result-invariant: the oracle is the

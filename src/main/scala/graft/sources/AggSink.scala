@@ -155,7 +155,8 @@ object AggSinkQueries {
   import org.apache.spark.sql.functions._
   import org.apache.spark.sql.types.LongType
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
     // ── q87: the sink end-to-end — events fanned out through the
     // writer-commit protocol, the published aggregate read back and
     // emitted as the query result. The sfDir keys the registry tag so
@@ -173,7 +174,7 @@ object AggSinkQueries {
       Seq((n, sum, min, max)) // Option encodes as a nullable long
         .toDF("n_rows", "sum_cents", "min_event_id", "max_event_id")
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     // the same aggregate computed directly — count/sum/min/max over

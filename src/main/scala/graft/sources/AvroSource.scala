@@ -212,7 +212,8 @@ class AvroReaderFactory(schema: StructType) extends PartitionReaderFactory {
 object AvroQueries {
   import org.apache.spark.sql.functions._
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
     // ── q89: AVRO ROUND TRIP through the custom connector — orders
     // written as Avro container files (one per partition), read back
     // through the DSv2 source (schema from the file headers), and
@@ -240,7 +241,7 @@ object AvroQueries {
           max(col("o_orderkey")).as("max_key"))
         .orderBy(col("o_orderstatus"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     // the same aggregate over the parquet original: any fidelity loss

@@ -49,7 +49,8 @@ object Compaction {
     compacted
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
     // fragment → compact → read back: compaction must be row-invariant
     "q45_compaction" -> ((s, d) => {
       s.read.parquet(ensureCompacted(s, d))
@@ -59,7 +60,7 @@ object Compaction {
           sum(col("user_id")).as("user_sum"))
         .orderBy(col("event_type"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     "q45_compaction" ->

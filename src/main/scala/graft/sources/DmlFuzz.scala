@@ -136,7 +136,6 @@ object DmlFuzz {
   def run(s: SparkSession, seed: Long, variant: Variant,
       table: String, keep: Boolean = false,
       rowids: Boolean = false): Int = {
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql(s"DROP TABLE IF EXISTS $table")
     // ROW-LINEAGE sweep variant: same grammar, same differential —
     // plus the lineage INVARIANTS after every statement (uniqueness,
@@ -251,13 +250,13 @@ object DmlFuzz {
 
   val queries: Map[String, (SparkSession, String)
       => org.apache.spark.sql.DataFrame] =
-    Pinned.map { case (name, seed, variant) =>
+    graft.GraftSession.prepared(Pinned.map { case (name, seed, variant) =>
       name -> ((s: SparkSession, _: String) => {
         val t = s"graft_dml.fz.$name"
         run(s, seed, variant, t, keep = true)
         s.sql(s"SELECT k, v FROM $t")
       })
-    }.toMap
+    }.toMap)
 
   val oracles: Map[String, String] =
     Pinned.map { case (name, seed, variant) =>

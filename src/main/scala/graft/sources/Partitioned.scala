@@ -283,7 +283,8 @@ object Partitioned {
     (s.read.parquet(state), incremental)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
     "q42_dpp_join" -> ((s, d) => dppJoin(s, d)),
 
     // ── q98: the incremental run end-to-end — prior-state years merge
@@ -369,7 +370,7 @@ object Partitioned {
         .agg(count(lit(1)).as("n"), sum(col("user_id")).as("user_sum"))
         .orderBy(col("event_type"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     // state + incremental must reassemble the full history exactly

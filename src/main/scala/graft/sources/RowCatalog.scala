@@ -47,7 +47,6 @@ object RowCatalogQueries {
     * with the target's own cents, a delta misapplied) breaks the hash. */
   private[graft] def dmlLifecycle(s: SparkSession, d: String, table: String,
       viewTag: String, tblProps: String): Unit = {
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     graft.Tables(s, d, "orders").createOrReplaceTempView(s"${viewTag}_orders")
     s.sql(s"DROP TABLE IF EXISTS $table")
     s.sql(s"CREATE TABLE $table (k BIGINT, cents BIGINT, status STRING)" +
@@ -89,7 +88,6 @@ object RowCatalogQueries {
 
   private[graft] def sharedLifecycle(s: SparkSession, d: String,
       mor: Boolean): String = lifecycleBuilt.synchronized {
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val fmt = if (mor) "mor" else "cow"
     val tag = d.replaceAll("[^A-Za-z0-9]", "_")
     // cache key = the SAME sanitized tag the table name embeds: two
@@ -222,7 +220,6 @@ object RowCatalogQueries {
     // residual — skipping can cost performance, never correctness —
     // and the oracle restates the band from raw orders.
     "q115_dml_file_skip" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q115_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.ledger")
       s.sql("CREATE TABLE graft_dml.ns.ledger " +
@@ -261,7 +258,6 @@ object RowCatalogQueries {
     // filters stay residual — skipping can cost performance, never
     // correctness — and the oracle restates the band from raw part.
     "q140_dml_string_skip" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "part").createOrReplaceTempView("q140_part")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.sledger")
       s.sql("CREATE TABLE graft_dml.ns.sledger (name STRING, cents BIGINT)")
@@ -291,7 +287,6 @@ object RowCatalogQueries {
     // filters stay residual — skipping can cost performance, never
     // correctness.
     "q142_dml_column_skip" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q142_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.colz")
       s.sql("CREATE TABLE graft_dml.ns.colz " +
@@ -347,7 +342,6 @@ object RowCatalogQueries {
     // this row pins the arithmetic). Oracle restates insert+merge
     // relationally from raw orders.
     "q116_dml_bucket_transform" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q116_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.bucketed")
       s.sql("CREATE TABLE graft_dml.ns.bucketed " +
@@ -378,7 +372,6 @@ object RowCatalogQueries {
     // hash-checks that the intermediate CTAS state really held the
     // parent slice before the REPLACE narrowed it.
     "q132_dml_ctas" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q132_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.ctas")
       s.sql("""CREATE TABLE graft_dml.ns.ctas PARTITIONED BY (bucket(4, k))
@@ -411,7 +404,6 @@ object RowCatalogQueries {
     // reason as q43/q53: the demo models sides too big to broadcast;
     // the write+read-back keeps the session confs scoped.
     "q131_dml_spj" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q131_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.spja")
       s.sql("CREATE TABLE graft_dml.ns.spja (k BIGINT, cents BIGINT) " +
@@ -454,7 +446,6 @@ object RowCatalogQueries {
     // one inserts explicit values, and the read-back must show
     // exactly which rows got which — restated relationally.
     "q130_dml_default_columns" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q130_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.defs")
       s.sql("CREATE TABLE graft_dml.ns.defs (k BIGINT, " +
@@ -509,7 +500,6 @@ object RowCatalogQueries {
     // RowCatalogSpec pins the OCC refusal when the table advances
     // under a staged branch.
     "q128_dml_wap" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q128_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.wap")
       s.sql("CREATE TABLE graft_dml.ns.wap (k BIGINT, cents BIGINT)")
@@ -548,7 +538,6 @@ object RowCatalogQueries {
     // RowCatalogSpec pins tag immutability and the retention
     // accounting.
     "q138_dml_tags" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q138_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.tagged")
       s.sql("CREATE TABLE graft_dml.ns.tagged (k BIGINT, cents BIGINT)")
@@ -590,7 +579,6 @@ object RowCatalogQueries {
     // really spans multiple files per group. The oracle restates all
     // five aggregates relationally from raw orders.
     "q147_dml_column_minmax" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q147_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.cmm")
       s.sql("CREATE TABLE graft_dml.ns.cmm " +
@@ -622,7 +610,6 @@ object RowCatalogQueries {
     // bloom is performance metadata — results must be identical with
     // or without it).
     "q148_dml_bloom_skip" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q148_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.blm")
       s.sql("CREATE TABLE graft_dml.ns.blm (k BIGINT, cents BIGINT) " +
@@ -651,7 +638,6 @@ object RowCatalogQueries {
     // RowCatalogSpec pins zero data-file opens for the `.refs` scan
     // itself and that tag/branch drops leave only `main`.
     "q146_dml_refs_table" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q146_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.refsd")
       s.sql("CREATE TABLE graft_dml.ns.refsd (k BIGINT, cents BIGINT)")
@@ -694,7 +680,6 @@ object RowCatalogQueries {
     // after expiry. RowCatalogSpec pins each procedure's result row,
     // named-argument binding, and the unknown-procedure error.
     "q141_dml_procedures" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q141_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.proc")
       s.sql("CREATE TABLE graft_dml.ns.proc (k BIGINT, cents BIGINT)")
@@ -733,7 +718,6 @@ object RowCatalogQueries {
     // between bucket 2 and range 2) shifts the aggregate the oracle
     // restates from raw orders.
     "q125_dml_spec_evolution" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q125_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.evo")
       s.sql("CREATE TABLE graft_dml.ns.evo (k BIGINT, cents BIGINT) " +
@@ -769,7 +753,6 @@ object RowCatalogQueries {
     // ~6%), over two commits so the fold genuinely merges per-file
     // sketches. The aggregate restates relationally.
     "q155_dml_ndv_stats" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q155_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.ndvt")
       s.sql("CREATE TABLE graft_dml.ns.ndvt " +
@@ -810,7 +793,6 @@ object RowCatalogQueries {
     // and cross-spec DML on imported files. The oracle restates both
     // slices from raw orders.
     "q156_dml_add_files" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q156_orders")
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val ext = graft.Scratch.dir(s, "graft_q156_ext", tag)
@@ -871,7 +853,6 @@ object RowCatalogQueries {
     // The final read plans across both specs; the oracle restates the
     // whole state from raw orders.
     "q157_dml_cross_spec_merge" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q157_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.xspec")
       s.sql("CREATE TABLE graft_dml.ns.xspec (k BIGINT, cents BIGINT) " +
@@ -911,7 +892,6 @@ object RowCatalogQueries {
     // restatement over raw events exactly — a truncation or timezone
     // slip anywhere moves boundary events across days.
     "q126_dml_days_transform" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "events").createOrReplaceTempView("q126_events")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.daily")
       s.sql("CREATE TABLE graft_dml.ns.daily (ts TIMESTAMP, v BIGINT) " +
@@ -932,7 +912,6 @@ object RowCatalogQueries {
     // only). The band-range rollup read back must match the oracle's
     // restatement over raw orders.
     "q137_dml_identity_transform" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q137_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.ident")
       s.sql("CREATE TABLE graft_dml.ns.ident " +
@@ -990,7 +969,6 @@ object RowCatalogQueries {
     // restatement over raw events exactly; RowCatalogSpec pins the
     // group numbers (months since 1970-01) at a month boundary.
     "q134_dml_months_transform" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q134_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.monthly")
       s.sql("CREATE TABLE graft_dml.ns.monthly (ts TIMESTAMP, v BIGINT) " +
@@ -1014,7 +992,6 @@ object RowCatalogQueries {
     // seed again, and `VERSION AS OF 2` still shows which rows the
     // bad DELETE removed.
     "q135_dml_rollback" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q135_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.rb")
       s.sql("CREATE TABLE graft_dml.ns.rb (k BIGINT, cents BIGINT) " +
@@ -1045,7 +1022,6 @@ object RowCatalogQueries {
     // name, a mistranslated rewrite) breaks the hash. RowCatalogSpec
     // pins the refusal surface (re-use of a stored name, MOR).
     "q133_dml_rename_column" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q133_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.ren")
       s.sql("CREATE TABLE graft_dml.ns.ren (k BIGINT, cents BIGINT) " +
@@ -1081,7 +1057,6 @@ object RowCatalogQueries {
     // schema or hash match. RowCatalogSpec pins the refusal surface
     // (narrowing, non-integer changes) and the boundary types.
     "q143_dml_type_widening" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q143_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.widen")
       s.sql("CREATE TABLE graft_dml.ns.widen (k BIGINT, v INT)")
@@ -1111,7 +1086,6 @@ object RowCatalogQueries {
     // restates from raw orders. RowCatalogSpec pins the added-column
     // list, the MOR refusal, and the pre-merge snapshot's shape.
     "q144_dml_merge_evolution" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q144_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.mev")
       s.sql("CREATE TABLE graft_dml.ns.mev (k BIGINT, cents BIGINT)")
@@ -1145,7 +1119,6 @@ object RowCatalogQueries {
     // no-base-rewrite accounting, the post-OPTIMIZE files-opened
     // count, and the COW/non-bucket refusals.
     "q145_dml_equality_delete" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q145_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.eqd")
       s.sql("CREATE TABLE graft_dml.ns.eqd (k BIGINT, cents BIGINT) " +
@@ -1181,7 +1154,6 @@ object RowCatalogQueries {
     // only, and the not-matched-by-source leg splits on the seeded
     // cents — big ones deleted, the rest stamped archived.
     "q117_dml_merge_sync" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q117_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.sync")
       s.sql("CREATE TABLE graft_dml.ns.sync " +
@@ -1265,7 +1237,6 @@ object RowCatalogQueries {
     // restates the surviving keys and the conditional bump
     // arithmetically.
     "q121_dml_subquery" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q121_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.subq")
       s.sql("CREATE TABLE graft_dml.ns.subq " +
@@ -1297,7 +1268,6 @@ object RowCatalogQueries {
     // v2 snapshot exactly); the content read-back must be unchanged —
     // the oracle restates all four slices.
     "q149_dml_rewrite_manifests" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q149_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.manif")
       s.sql("CREATE TABLE graft_dml.ns.manif (k BIGINT, cents BIGINT)")
@@ -1335,7 +1305,6 @@ object RowCatalogQueries {
     // relationally by the oracle. RowCatalogSpec pins zero data-file
     // opens for the `.snapshots` scan itself.
     "q150_dml_snapshots_table" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q150_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.snap")
       s.sql("CREATE TABLE graft_dml.ns.snap (k BIGINT, cents BIGINT) " +
@@ -1372,7 +1341,6 @@ object RowCatalogQueries {
     // untouched. RowCatalogSpec pins the referenced-files-retained
     // accounting.
     "q151_dml_orphan_cleanup" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q151_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.orph")
       s.sql("CREATE TABLE graft_dml.ns.orph (k BIGINT, cents BIGINT)")
@@ -1411,7 +1379,6 @@ object RowCatalogQueries {
     // groups per slice), so the oracle derives the full table
     // relationally. RowCatalogSpec pins zero data-file opens.
     "q153_dml_manifests_table" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q153_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.mtab")
       s.sql("CREATE TABLE graft_dml.ns.mtab (k BIGINT, cents BIGINT) " +
@@ -1438,7 +1405,6 @@ object RowCatalogQueries {
     // restated relationally by the oracle, with ordered replay pinned
     // against the q109 rule in RowCatalogSpec.
     "q152_dml_cdf_updates" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q152_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.cdfu")
       s.sql("CREATE TABLE graft_dml.ns.cdfu " +
@@ -1482,8 +1448,8 @@ object RowCatalogQueries {
   /** Family aggregation (the 1,500-line split discipline): SparkEntry
     * and every spec key see ONE registry. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    coreQueries ++ RowCatalogStatsQueries.queries ++
-      RowCatalogMaintQueries.queries
+    graft.GraftSession.prepared(coreQueries ++
+      RowCatalogStatsQueries.queries ++ RowCatalogMaintQueries.queries)
 
   /** DuckDB oracle registry, split out to [[RowCatalogOracles]] under
     * the repo's 1,500-line discipline (byte-identical SQL). */

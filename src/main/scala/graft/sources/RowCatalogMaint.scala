@@ -59,7 +59,6 @@ object RowCatalogMaintQueries {
     // duplicate-free. RowLineageSpec pins the storage half (virtual
     // appends, MOR stamps, dv survivors, materializing rewrites).
     "q179_dml_row_lineage" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q179_orders")
       val t = "graft_dml.ns.rl"
       s.sql(s"DROP TABLE IF EXISTS $t")
@@ -107,7 +106,6 @@ object RowCatalogMaintQueries {
     // (fill through MergeRows). GeneratedColumnsSpec pins the refusal
     // and DDL halves.
     "q180_dml_generated_cols" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q180_orders")
       val t = "graft_dml.ns.gc"
       s.sql(s"DROP TABLE IF EXISTS $t")
@@ -142,7 +140,6 @@ object RowCatalogMaintQueries {
     // survive rewrites). The oracle restates the classification
     // relationally from the raw slice.
     "q181_dml_lineage_diff" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q181_orders")
       val t = "graft_dml.ns.ld"
       s.sql(s"DROP TABLE IF EXISTS $t")
@@ -191,7 +188,6 @@ object RowCatalogMaintQueries {
     // files keep writing the old storage name), null structs
     // round-trip, and a dropped nested field's path is blacklisted.
     "q160_dml_nested_types" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q160_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.nest")
       s.sql("CREATE TABLE graft_dml.ns.nest " +
@@ -256,7 +252,6 @@ object RowCatalogMaintQueries {
     // row. DeletionVectorSpec pins the lifecycle half: dv rows
     // appear on delete and disappear after OPTIMIZE.
     "q162_dml_files_dv" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q162_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.fdv")
       s.sql("CREATE TABLE graft_dml.ns.fdv " +
@@ -292,7 +287,6 @@ object RowCatalogMaintQueries {
     // with DuckDB's JSON operators and restates the array
     // relationally.
     "q163_dml_json_shred" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       // spread the single-split events scan so the ingest-time JSON
       // build + shred parallelizes (guide §2.5; profiled 0.9 s in one
       // task at sf0.1/32c) — conditional, a no-op on wide scans
@@ -339,7 +333,6 @@ object RowCatalogMaintQueries {
     // and collapses after the rewrite it advises; the content
     // aggregate anchors the oracle.
     "q167_dml_clustering_quality" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q167_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.cq")
       s.sql("CREATE TABLE graft_dml.ns.cq " +
@@ -382,7 +375,6 @@ object RowCatalogMaintQueries {
     // oracle from raw orders. ZOrderRewriteSpec pins the
     // majority-skip fractions.
     "q166_dml_zorder_rewrite" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q166_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.zord")
       s.sql("CREATE TABLE graft_dml.ns.zord " +
@@ -434,7 +426,6 @@ object RowCatalogMaintQueries {
     // observationally invariant throughout. BinpackSpec pins the
     // file-count/size half.
     "q178_dml_binpack" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q178_orders")
       val t = "graft_dml.ns.bp"
       s.sql(s"DROP TABLE IF EXISTS $t")
@@ -497,7 +488,6 @@ object RowCatalogMaintQueries {
     // pins the storage half (file moves not copies, clone teardown,
     // dv pairing across adoption).
     "q177_dml_transaction" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q177_orders")
       for (t <- Seq("txa", "txb"))
         s.sql(s"DROP TABLE IF EXISTS graft_dml.ns.$t")
@@ -574,7 +564,6 @@ object RowCatalogMaintQueries {
     // version unchanged, neither staged slice visible). The oracle
     // restates both tables' final content from raw orders.
     "q176_dml_atomic_publish" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q176_orders")
       def slice(t: String, r: Int, branch: Option[String]): Unit = {
         val df = s.sql(s"""SELECT CAST(o_orderkey AS BIGINT) AS k,
@@ -635,7 +624,6 @@ object RowCatalogMaintQueries {
     // the SAME keys CREATE accepted. The oracle restates the declared
     // values verbatim — a lost or renamed property breaks the hash.
     "q175_dml_show_properties" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.props")
       s.sql("CREATE TABLE graft_dml.ns.props " +
         "(k BIGINT, cents BIGINT, status STRING) " +
@@ -658,7 +646,6 @@ object RowCatalogMaintQueries {
     // double-load would double rows and break the hash). CopyIntoSpec
     // pins skip-survives-OPTIMIZE and the MOR refusal.
     "q174_dml_copy_into" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q174_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.cpy")
       s.sql("CREATE TABLE graft_dml.ns.cpy " +
@@ -707,7 +694,6 @@ object RowCatalogMaintQueries {
     // constrained-column DROP/RENAME), version-unchanged-on-refusal,
     // NULL-passes, and the MOR record path.
     "q173_dml_check_constraint" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q173_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.chk")
       s.sql("CREATE TABLE graft_dml.ns.chk " +
@@ -777,7 +763,6 @@ object RowCatalogMaintQueries {
     // (reference-aliveness under single-group churn, maintenance
     // never deleting source bytes, the no-overwrite refusal).
     "q172_dml_shallow_clone" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q172_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.snapcln")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.snapsrc")
@@ -834,7 +819,6 @@ object RowCatalogMaintQueries {
     // (full-outer-join mismatch count = 0). The oracle restates the
     // final view from raw orders with the wave applied relationally.
     "q171_dml_incremental_view" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q171_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.ivm")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.ivmv")
@@ -891,7 +875,6 @@ object RowCatalogMaintQueries {
     // removal-conflict refusal half (a branch that replaced files an
     // interleaved commit also rewrote) is pinned in CherrypickSpec.
     "q170_dml_cherrypick" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q170_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.cp")
       s.sql("CREATE TABLE graft_dml.ns.cp " +
@@ -941,7 +924,6 @@ object RowCatalogMaintQueries {
     // invariant (the q108 discipline); the oracle restates it from raw
     // orders with the delete/update algebra applied relationally.
     "q165_dml_rewrite_deletes" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q165_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.rpd")
       s.sql("CREATE TABLE graft_dml.ns.rpd " +
@@ -987,7 +969,6 @@ object RowCatalogMaintQueries {
     // pattern that proves dynamic keys survived storage). The oracle
     // re-derives every row's key set from event_id arithmetic.
     "q169_dml_map_shred" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       // spread the single-split events scan — the per-row JSON
       // concat/parse/map_filter ingest otherwise runs in ONE task
       // (guide §2.5; profiled 0.95 s at sf0.1/32c)
@@ -1045,7 +1026,6 @@ object RowCatalogMaintQueries {
     // MapTypesSpec pins the storage half (canonical blob equality,
     // MOR deltas, change-feed cancellation, DDL refusals).
     "q168_dml_map_table" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       // spread the single-split orders scan: the map-building insert
       // and the MERGE source both derive from this view (guide §2.5)
       graft.Tables.spreadNarrowScan(s, graft.Tables(s, d, "orders"),
@@ -1101,7 +1081,6 @@ object RowCatalogMaintQueries {
     // DOUBLE/FLOAT physical types, arrays as deterministic blobs,
     // change-feed blob equality).
     "q164_dml_embedding_table" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "embeddings").createOrReplaceTempView("q164_emb")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.emb")
       s.sql("CREATE TABLE graft_dml.ns.emb (vec_id BIGINT, " +
@@ -1148,7 +1127,6 @@ object RowCatalogMaintQueries {
     // SortedRewriteSpec pins the opened-fraction drop and the
     // rows-planned bound.
     "q161_dml_sorted_rewrite" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q161_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.sortr")
       s.sql("CREATE TABLE graft_dml.ns.sortr " +

@@ -25,7 +25,6 @@ object RowCatalogStatsQueries {
     // NULLs) make the fold genuinely merge per-file sketches and sum
     // per-file null counts.
     "q158_dml_column_stats_table" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q158_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.cstats")
       s.sql("CREATE TABLE graft_dml.ns.cstats " +
@@ -54,7 +53,6 @@ object RowCatalogStatsQueries {
     // the analyzed and the write-time sketches are exact and the row
     // hash-matches DuckDB's restatement.
     "q159_dml_compute_stats" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("q159_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.anlq")
       s.sql("CREATE TABLE graft_dml.ns.anlq " +

@@ -401,7 +401,8 @@ object SeqSourceQueries {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
     // ── q83: the custom DSv2 connector end-to-end — mid-range filter
     // (pushed into the source: rows outside [25000, 75000) are never
     // generated, spec-proven via the emission counter), grouped
@@ -510,7 +511,7 @@ object SeqSourceQueries {
         .withColumn("multi_batch", lit(lastBatch >= 3L))
         .orderBy(col("b10"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     // the synthetic table restated over generate_series with the same

@@ -167,7 +167,8 @@ object SpjQueries {
   private def enableSpj(s: SparkSession): Unit =
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.GraftSession.prepared(Map(
     // ── q90: SHUFFLE-FREE grouped aggregate — the scan's declared
     // KeyGroupedPartitioning(grp) already satisfies the aggregate's
     // ClusteredDistribution(grp), so the partial/final split
@@ -205,7 +206,7 @@ object SpjQueries {
           col("dim_max_id"))
         .orderBy(col("grp"))
     })
-  )
+  ))
 
   val oracles: Map[String, String] = Map(
     // the keyed synthetic table restated over generate_series

@@ -757,8 +757,6 @@ private[streaming] object StreamCoreQueries {
     // corpus makes coincide. multi_batch pins the drain really split
     // (≥2 batches), else the incremental path degenerates to d15.
     "st32_stream_dedup" -> ((s, d) => withStatePartitions(s, StateParts) {
-      graft.functions.FunctionCatalog.register(s,
-        "bloom_agg", "bloom_might_contain")
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val src = graft.Scratch.dir(s, "graft_st32_src", tag)
       val storeDir = graft.Scratch.dir(s, "graft_st32_store", tag)

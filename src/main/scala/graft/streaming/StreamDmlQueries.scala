@@ -29,7 +29,6 @@ private[streaming] object StreamDmlQueries {
     // idempotence, st25's pointer pattern; AvailableNow drains don't
     // retry.)
     "st31_stream_merge" -> ((s, d) => withStatePartitions(s, StateParts) {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.user_state")
       s.sql("CREATE TABLE graft_dml.ns.user_state (user_id BIGINT, " +
         "n_events BIGINT, last_event_id BIGINT, last_ts_us BIGINT)")
@@ -80,7 +79,6 @@ private[streaming] object StreamDmlQueries {
     // the oracle restates from raw orders.
     "st39_stream_merge_dv" -> ((s, d) => withStatePartitions(s, StateParts) {
       import graft.sources.RowStore
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val src = graft.Scratch.dir(s, "graft_st39_src", tag)
       graft.Scratch.materializeOnce(src) {
@@ -267,7 +265,6 @@ private[streaming] object StreamDmlQueries {
     // restated from raw orders by the oracle. multi_batch pins the
     // per-version stepping really happened.
     "st38_stream_cdc" -> ((s, d) => withStatePartitions(s, StateParts) {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("st38_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.scdc")
       s.sql("CREATE TABLE graft_dml.ns.scdc " +
@@ -327,7 +324,6 @@ private[streaming] object StreamDmlQueries {
     // which the oracle restates from raw orders (epoch = key band =
     // batch — any boundary drift breaks the hash).
     "st34_stream_table" -> ((s, d) => withStatePartitions(s, StateParts) {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       graft.Tables(s, d, "orders").createOrReplaceTempView("st34_orders")
       // the oracle restates k with the LITERAL 1e7 epoch offset, so
       // unlike q115 the offset cannot be derived at run time; assert
@@ -386,7 +382,6 @@ private[streaming] object StreamDmlQueries {
     // multi_batch pins that the growth really happened incrementally.
     "st35_stream_ann_upsert" -> ((s, d) => withStatePartitions(s, StateParts) {
       import graft.operators.Similarity
-      graft.functions.VectorFunctions.register(s)
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val src = graft.Scratch.dir(s, "graft_st35_src", tag)
       val idxDir = graft.Scratch.dir(s, "graft_st35_idx", tag)
@@ -478,8 +473,6 @@ private[streaming] object StreamDmlQueries {
     // shape is pinned to the oracle's four columns).
     "st40_stream_embedding_table" -> ((s, d) => withStatePartitions(s, StateParts) {
       import graft.operators.Similarity
-      graft.functions.VectorFunctions.register(s)
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val src = graft.Scratch.dir(s, "graft_st40_src", tag)
       val e = graft.Tables(s, d, "embeddings")
@@ -536,7 +529,6 @@ private[streaming] object StreamDmlQueries {
     // Four mtime-ordered chunks at 2 files/trigger force a genuinely
     // multi-epoch drain; the oracle restates the full slice.
     "st36_stream_table_write" -> ((s, d) => withStatePartitions(s, StateParts) {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val src = graft.Scratch.dir(s, "graft_st36_src", tag)
       graft.Scratch.materializeOnce(src) {
@@ -612,7 +604,6 @@ private[streaming] object StreamDmlQueries {
     // per-user count the hash will catch.
     "st37_medallion" -> ((s, d) => withStatePartitions(s, StateParts) {
       import graft.sources.RowStore
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       // deterministic multi-epoch source: 4 mtime-ordered chunks of
       // the events slice, 2 files per trigger → 2 bronze epochs

@@ -307,13 +307,14 @@ object StreamingOps {
     * Names are disjoint by construction (each query lives in exactly
     * one file); SparkEntry consumes these unchanged. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    StreamCoreQueries.queries ++ StreamJoinQueries.queries ++
-      StreamDmlQueries.queries ++
-      StreamFuzz.Pinned.map { case (name, seed) =>
-        name -> ((s: SparkSession, d: String) =>
-          StreamFuzz.pinnedResult(s, seed,
-            d.replaceAll("[^A-Za-z0-9]", "_")))
-      }.toMap
+    graft.GraftSession.prepared(
+      StreamCoreQueries.queries ++ StreamJoinQueries.queries ++
+        StreamDmlQueries.queries ++
+        StreamFuzz.Pinned.map { case (name, seed) =>
+          name -> ((s: SparkSession, d: String) =>
+            StreamFuzz.pinnedResult(s, seed,
+              d.replaceAll("[^A-Za-z0-9]", "_")))
+        }.toMap)
 
   val oracles: Map[String, String] =
     StreamCoreQueries.oracles ++ StreamJoinQueries.oracles ++

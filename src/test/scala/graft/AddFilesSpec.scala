@@ -18,7 +18,6 @@ class AddFilesSpec extends AnyFunSuite {
   test("import registers external parquet without copying or opening data") {
     val s = spark
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val ext = graft.Scratch.dir(s, "graft_addfiles_spec", "a")
     Seq((100L, 1L), (101L, 2L), (102L, 3L)).toDF("k", "v")
       .coalesce(1).write.mode("overwrite").parquet(s"$ext/p1")
@@ -79,7 +78,6 @@ class AddFilesSpec extends AnyFunSuite {
   test("refusals: MOR target, bad directory, incompatible types") {
     val s = spark
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.afm")
     s.sql("CREATE TABLE graft_dml.spec.afm (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('format'='mor')")
@@ -114,7 +112,6 @@ class AddFilesSpec extends AnyFunSuite {
   test("re-importing an already-registered path refuses loudly") {
     val s = spark
     import s.implicits._
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.afdup")
     s.sql("CREATE TABLE graft_dml.spec.afdup (k BIGINT, v BIGINT)")
     val ext = graft.Scratch.dir(s, "graft_addfiles_spec", "e")

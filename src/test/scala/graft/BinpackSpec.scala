@@ -11,9 +11,6 @@ import graft.sources.{BinpackOps, RowStore}
   * delta-bearing (MOR) groups are out of scope by contract. */
 class BinpackSpec extends AnyFunSuite {
 
-  private def conf(): Unit = SparkSuite.spark.conf
-    .set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
-
   private def sizes(t: String): Map[String, Long] = {
     val dir = RowStore.dataDir(t)
     RowStore.readManifest(t, RowStore.currentVersion(t))
@@ -23,7 +20,7 @@ class BinpackSpec extends AnyFunSuite {
   }
 
   test("fragments pack per group; in-band files survive; then no-op") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.bp.a"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -55,7 +52,7 @@ class BinpackSpec extends AnyFunSuite {
   }
 
   test("an oversized file splits toward the target size") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.bp.b"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -77,7 +74,7 @@ class BinpackSpec extends AnyFunSuite {
   }
 
   test("delta-bearing groups are out of scope (no-op, not corruption)") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.bp.c"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +

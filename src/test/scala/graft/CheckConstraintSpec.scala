@@ -13,12 +13,8 @@ class CheckConstraintSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   import graft.sources.RowStore
 
-  private def conf(): Unit =
-    spark.conf.set("spark.sql.catalog.graft_dml",
-      "graft.sources.GraftCatalog")
-
   test("DDL validation refuses bad constraints at CREATE") {
-    val s = spark; conf()
+    val s = spark
     def createWith(check: String): Unit = {
       s.sql("DROP TABLE IF EXISTS graft_dml.spec.chk_ddl")
       s.sql("CREATE TABLE graft_dml.spec.chk_ddl (k BIGINT, v BIGINT) " +
@@ -32,7 +28,7 @@ class CheckConstraintSpec extends AnyFunSuite {
   }
 
   test("a refused write commits nothing; NULL passes") {
-    val s = spark; conf()
+    val s = spark
     val t = "graft_dml.spec.chk_w"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -51,7 +47,7 @@ class CheckConstraintSpec extends AnyFunSuite {
   }
 
   test("decimal literals widen to hold the column, not the literal") {
-    val s = spark; conf()
+    val s = spark
     val t = "graft_dml.spec.chk_dec"
     s.sql(s"DROP TABLE IF EXISTS $t")
     // the trap: 99.5 parses as DECIMAL(3,1); casting the BIGINT
@@ -68,7 +64,7 @@ class CheckConstraintSpec extends AnyFunSuite {
   }
 
   test("the MOR delta record path enforces too") {
-    val s = spark; conf()
+    val s = spark
     val t = "graft_dml.spec.chk_mor"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -85,7 +81,7 @@ class CheckConstraintSpec extends AnyFunSuite {
   }
 
   test("streaming writes enforce the constraint too") {
-    val s = spark; conf()
+    val s = spark
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
     val t = "graft_dml.spec.chk_st"
@@ -122,7 +118,7 @@ class CheckConstraintSpec extends AnyFunSuite {
   }
 
   test("ALTER refuses breaking a constrained column; else evolves") {
-    val s = spark; conf()
+    val s = spark
     val t = "graft_dml.spec.chk_alt"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT, note STRING) " +

@@ -18,7 +18,6 @@ class CommitSeamSpec extends AnyFunSuite {
 
   test("full DML lifecycle publishes through the conditional-PUT impl") {
     val s = SparkSuite.spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.seam.a"
     s.sql(s"DROP TABLE IF EXISTS $t")
     RowStore.publisher = new RowStore.CasPublisher
@@ -42,7 +41,6 @@ class CommitSeamSpec extends AnyFunSuite {
 
   test("exactly one winner per version; losers conflict loudly") {
     val s = SparkSuite.spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.seam.b"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")

@@ -11,12 +11,8 @@ class CopyIntoSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowStore, RowStoreOps}
 
-  private def conf(): Unit =
-    spark.conf.set("spark.sql.catalog.graft_dml",
-      "graft.sources.GraftCatalog")
-
   test("skip survives OPTIMIZE rewriting the imports") {
-    val s = spark; conf()
+    val s = spark
     val t = "graft_dml.spec.cpy1"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -40,7 +36,7 @@ class CopyIntoSpec extends AnyFunSuite {
   }
 
   test("a crash between manifest commit and log write cannot double-load") {
-    val s = spark; conf()
+    val s = spark
     val t = "graft_dml.spec.cpy3"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -59,7 +55,7 @@ class CopyIntoSpec extends AnyFunSuite {
   }
 
   test("refuses CHECK-constrained targets (imports skip validation)") {
-    val s = spark; conf()
+    val s = spark
     val t = "graft_dml.spec.cpy4"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -74,7 +70,7 @@ class CopyIntoSpec extends AnyFunSuite {
   }
 
   test("refuses MOR targets like add_files") {
-    val s = spark; conf()
+    val s = spark
     val t = "graft_dml.spec.cpy2"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +

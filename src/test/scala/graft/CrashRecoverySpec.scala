@@ -43,7 +43,6 @@ class CrashRecoverySpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-crash").toString
     System.setProperty("graft.warehouse.root", root)
     try {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       s.sql("DROP TABLE IF EXISTS graft_dml.cr.t")
       s.sql("CREATE TABLE graft_dml.cr.t (k BIGINT, v BIGINT)")
       s.sql("INSERT INTO graft_dml.cr.t VALUES (1, 10), (2, 20)")
@@ -90,7 +89,6 @@ class CrashRecoverySpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-crash").toString
     System.setProperty("graft.warehouse.root", root)
     try {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       for (t <- Seq("t", "src")) s.sql(s"DROP TABLE IF EXISTS graft_dml.cr.$t")
       s.sql("CREATE TABLE graft_dml.cr.t (k BIGINT, v BIGINT) " +
         "TBLPROPERTIES ('format'='mor', 'deletes'='dv')")
@@ -138,7 +136,6 @@ class CrashRecoverySpec extends AnyFunSuite {
 
   test("publish_branches interrupted between links: survivors re-publish") {
     val s = SparkSuite.spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val (ka, kb) = ("graft_dml.cr.pba", "graft_dml.cr.pbb")
     for (t <- Seq(ka, kb)) {
       s.sql(s"DROP TABLE IF EXISTS $t")
@@ -180,7 +177,6 @@ class CrashRecoverySpec extends AnyFunSuite {
 
   test("copy_into heals an incomplete log even with no new files") {
     val s = SparkSuite.spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.cr.cpy"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -206,7 +202,6 @@ class CrashRecoverySpec extends AnyFunSuite {
 
   test("cherry-pick refuses a duplicate external-file addition") {
     val s = SparkSuite.spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.cr.ccp"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")

@@ -39,7 +39,6 @@ class CrossProcessCommitSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-xproc").toString
     System.setProperty("graft.warehouse.root", root)
     try {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       s.sql("DROP TABLE IF EXISTS graft_dml.xp.t")
       s.sql("CREATE TABLE graft_dml.xp.t (k BIGINT, v BIGINT)")
       s.sql("INSERT INTO graft_dml.xp.t VALUES (1, 10), (2, 20)")
@@ -69,7 +68,6 @@ class CrossProcessCommitSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-xproc").toString
     System.setProperty("graft.warehouse.root", root)
     try {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       for (t <- Seq("t", "src_a", "src_b"))
         s.sql(s"DROP TABLE IF EXISTS graft_dml.xp.$t")
       s.sql("CREATE TABLE graft_dml.xp.t (k BIGINT, v BIGINT) " +
@@ -124,7 +122,6 @@ class CrossProcessCommitSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-xproc").toString
     System.setProperty("graft.warehouse.root", root)
     try {
-      s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
       for (t <- Seq("t", "src_a", "src_b"))
         s.sql(s"DROP TABLE IF EXISTS graft_dml.xp.$t")
       s.sql("CREATE TABLE graft_dml.xp.t (k BIGINT, v BIGINT) " +

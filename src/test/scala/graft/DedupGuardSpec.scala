@@ -100,8 +100,6 @@ class DedupGuardSpec extends AnyFunSuite {
       // rate); this pins that the bloom actually does its work —
       // definite-new documents (bloom-negative, zero join cost) must
       // be the majority of the new batch, or the gate is vacuous
-      graft.functions.FunctionCatalog.register(spark,
-        "bloom_agg", "bloom_might_contain")
       import org.apache.spark.sql.functions._
       val all = Tables(spark, sf, "documents")
       val cut = all.agg(expr("(max(doc_id) + 1) * 4 div 5").as("c"))

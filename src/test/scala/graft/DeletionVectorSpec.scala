@@ -19,7 +19,6 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("one vector per touched file; second delete merges, not stacks") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.dv")
     s.sql("CREATE TABLE graft_dml.spec.dv (k BIGINT, v BIGINT) " +
       "PARTITIONED BY (bucket(2, k)) " +
@@ -76,7 +75,6 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("update+delete mix, CDF identical to the record-based MOR path") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     def lifecycle(t: String, props: String): Unit = {
       s.sql(s"DROP TABLE IF EXISTS $t")
       s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) $props")
@@ -102,7 +100,6 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("equality-delete interleave stays ordered under vectors") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.dve"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -132,7 +129,6 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test(".files surfaces vectors with popcounts; OPTIMIZE clears them") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.dvf")
     s.sql("CREATE TABLE graft_dml.spec.dvf (k BIGINT, v BIGINT) " +
       "PARTITIONED BY (bucket(2, k)) " +
@@ -187,7 +183,6 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("commit-message payload is O(touched files), not O(deleted rows)") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     // two single-file tables, same file count, 64× the rows: the dv
     // blobs are written EXECUTOR-SIDE and only fixed-size handles ride
     // the commit messages, so the serialized message bytes must be
@@ -232,7 +227,6 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("refusals: dv without mor, unknown deletes value") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.dvbad")
     val e1 = intercept[Exception] {
       s.sql("CREATE TABLE graft_dml.spec.dvbad (k BIGINT) " +

@@ -12,16 +12,11 @@ class GeneratedColumnsSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   import graft.sources.RowStoreOps
 
-  private def setup(): Unit =
-    spark.conf.set("spark.sql.catalog.graft_dml",
-      "graft.sources.GraftCatalog")
-
   private def rows(t: String): Seq[(Long, Long, Long)] =
     spark.sql(s"SELECT k, cents, b FROM $t ORDER BY k").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
 
   test("fill, explicit match, explicit mismatch, update refresh (cow)") {
-    setup()
     val s = spark
     val t = "graft_dml.spec.gen_cow"
     s.sql(s"DROP TABLE IF EXISTS $t")
@@ -68,7 +63,6 @@ class GeneratedColumnsSpec extends AnyFunSuite {
   }
 
   test("mor: record-path fill and update refresh") {
-    setup()
     val s = spark
     val t = "graft_dml.spec.gen_mor"
     s.sql(s"DROP TABLE IF EXISTS $t")
@@ -87,7 +81,6 @@ class GeneratedColumnsSpec extends AnyFunSuite {
   }
 
   test("generated partition column routes the group layout") {
-    setup()
     val s = spark
     import graft.sources.RowStore
     val t = "graft_dml.spec.gen_part"
@@ -109,7 +102,6 @@ class GeneratedColumnsSpec extends AnyFunSuite {
   }
 
   test("streaming append fills; check constraint sees computed value") {
-    setup()
     val s = spark
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -146,7 +138,6 @@ class GeneratedColumnsSpec extends AnyFunSuite {
   }
 
   test("ddl refusals: binding, type, chains, evolution guards") {
-    setup()
     val s = spark
     def refuse(sql: String): Unit = { intercept[Exception](s.sql(sql)); () }
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.gen_bad")

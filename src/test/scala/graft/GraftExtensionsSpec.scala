@@ -25,7 +25,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .withExtensions(new GraftExtensions)
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false")
-        .getOrCreate() // no graft register() ever ran here
+        .getOrCreate() // no graft prepare() ever ran here
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)

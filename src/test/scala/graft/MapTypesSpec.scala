@@ -20,7 +20,6 @@ class MapTypesSpec extends AnyFunSuite {
 
   test("map round-trip through insert + COW merge + time travel") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.mt"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (id BIGINT, attrs MAP<STRING, BIGINT>) " +
@@ -60,7 +59,6 @@ class MapTypesSpec extends AnyFunSuite {
 
   test("canonical entry order: same content in a different order is no churn") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.mtc"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (id BIGINT, attrs MAP<STRING, BIGINT>) " +
@@ -88,7 +86,6 @@ class MapTypesSpec extends AnyFunSuite {
 
   test("numeric-key maps round-trip with canonical numeric order") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.mtn"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (id BIGINT, w MAP<BIGINT, DOUBLE>)")
@@ -101,7 +98,6 @@ class MapTypesSpec extends AnyFunSuite {
 
   test("OPTIMIZE and sorted rewrite carry map blobs unchanged") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.mto"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (id BIGINT, attrs MAP<STRING, BIGINT>) " +
@@ -129,7 +125,6 @@ class MapTypesSpec extends AnyFunSuite {
 
   test("ADD COLUMN map: files predating the column read NULL") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.mte"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (id BIGINT, tag STRING)")
@@ -144,7 +139,6 @@ class MapTypesSpec extends AnyFunSuite {
 
   test("map leaf inside a struct flattens and round-trips") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.mts"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (id BIGINT, " +
@@ -171,7 +165,6 @@ class MapTypesSpec extends AnyFunSuite {
 
   test("stats machinery and key guard refuse map columns loudly") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.mtg")
     val e1 = intercept[Exception] {
       s.sql("CREATE TABLE graft_dml.spec.mtg " +

@@ -46,7 +46,6 @@ class NdvStatsSpec extends AnyFunSuite {
 
   test("reported NDV reaches attributeStats and join cardinality under CBO") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.ndva")
     s.sql("CREATE TABLE graft_dml.spec.ndva (k BIGINT, v BIGINT) " +
       "PARTITIONED BY (bucket(4, k)) TBLPROPERTIES ('ndv'='k')")
@@ -86,7 +85,6 @@ class NdvStatsSpec extends AnyFunSuite {
 
   test(".column_stats answers from manifests alone (zero file opens)") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.cst")
     s.sql("CREATE TABLE graft_dml.spec.cst (k BIGINT, tag STRING) " +
       "TBLPROPERTIES ('ndv'='tag')")
@@ -113,7 +111,6 @@ class NdvStatsSpec extends AnyFunSuite {
 
   test("an all-NULL file records a valid empty sketch, not a gap") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.ndvn")
     s.sql("CREATE TABLE graft_dml.spec.ndvn (k BIGINT, tag STRING) " +
       "TBLPROPERTIES ('ndv'='tag')")
@@ -137,7 +134,6 @@ class NdvStatsSpec extends AnyFunSuite {
 
   test("compute_table_stats retro-fits sketches onto an existing table") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     // created WITHOUT the ndv property — write-time tracking never ran
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.anlz")
     s.sql("CREATE TABLE graft_dml.spec.anlz " +
@@ -184,7 +180,6 @@ class NdvStatsSpec extends AnyFunSuite {
 
   test("the downstream broadcast decision flips under reported NDV") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     // A and B are small enough to broadcast from their exact row
     // counts in BOTH arms (join #1 is always a BHJ — the control);
     // the probe side C is row-heavy, far past the threshold. The

@@ -19,7 +19,6 @@ class NestedTypesSpec extends AnyFunSuite {
 
   test("leaves store flattened; rename is metadata-only name mapping") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.nst"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, " +
@@ -56,7 +55,6 @@ class NestedTypesSpec extends AnyFunSuite {
 
   test("null struct round-trips distinct from struct of nulls") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.nstn"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, props STRUCT<a: BIGINT, b: STRING>)")
@@ -74,7 +72,6 @@ class NestedTypesSpec extends AnyFunSuite {
 
   test("dropped nested paths are blacklisted; struct drop expands") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.nstd"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, " +
@@ -101,7 +98,6 @@ class NestedTypesSpec extends AnyFunSuite {
 
   test("nested leaves: pushed predicates skip files; ndv/bloom opt in") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.nstz"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, " +
@@ -138,7 +134,6 @@ class NestedTypesSpec extends AnyFunSuite {
 
   test("nested leaves widen types across committed files") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.nstw"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, props STRUCT<c: INT>)")
@@ -180,7 +175,6 @@ class NestedTypesSpec extends AnyFunSuite {
     val s = spark
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.nsts"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, props STRUCT<a: BIGINT, b: STRING>)")
@@ -209,7 +203,6 @@ class NestedTypesSpec extends AnyFunSuite {
 
   test("MOR delta path carries struct rows; CDF reassembles them") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.nstm"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, props STRUCT<a: BIGINT, b: STRING>) " +

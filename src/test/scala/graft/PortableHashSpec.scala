@@ -53,7 +53,6 @@ class PortableHashSpec extends AnyFunSuite {
   }
 
   test("portable_simhash60 stays in 60 bits, is deterministic, and ranks similarity") {
-    PortableHashFunctions.register(spark)
     val docs = Seq(
       "the quick brown fox jumps over the lazy dog and runs far away",
       "the quick brown fox jumps over the lazy dog and runs far home",
@@ -139,7 +138,6 @@ class PortableHashSpec extends AnyFunSuite {
   }
 
   test("d05 block decomposition matches the direct all-pairs result") {
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables(spark, SparkSuite.sf, "embeddings")
     val direct = e.select($"vec_id".as("a_id"), $"embedding".as("va"))
       .join(e.select($"vec_id".as("b_id"), $"embedding".as("vb")), $"a_id" < $"b_id")

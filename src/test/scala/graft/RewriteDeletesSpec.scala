@@ -24,7 +24,6 @@ class RewriteDeletesSpec extends AnyFunSuite {
 
   test("folds deletes to one terminal DV per file; bases untouched; reads invariant") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.rpd"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -92,7 +91,6 @@ class RewriteDeletesSpec extends AnyFunSuite {
 
   test("insert-bearing delta files stay intact; eq-deletes survive as records") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.rpdm"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -131,7 +129,6 @@ class RewriteDeletesSpec extends AnyFunSuite {
 
   test("dv-mode table: no records to fold, vectors already one-per-file") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.rpdv"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -151,7 +148,6 @@ class RewriteDeletesSpec extends AnyFunSuite {
 
   test("COW table and blank sorted-rewrite spec refuse loudly") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.rpdc"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")

@@ -12,7 +12,6 @@ class RowCatalogSpec extends AnyFunSuite {
 
   test("UPDATE, DELETE and catalog plumbing against the DML catalog") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.t")
     s.sql("CREATE TABLE graft_dml.spec.t (k BIGINT, v BIGINT, tag STRING)")
     s.sql("INSERT INTO graft_dml.spec.t VALUES " +
@@ -71,7 +70,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("COW MERGE touching 1 of 4 groups rewrites exactly 1 file") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.cow")
     s.sql("CREATE TABLE graft_dml.spec.cow (k BIGINT, v BIGINT, tag STRING)")
     // single-statement VALUES insert → one writer task → exactly one
@@ -117,7 +115,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("MOR UPDATE writes delta records and never rewrites base files") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.mor")
     s.sql("CREATE TABLE graft_dml.spec.mor (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('format'='mor')")
@@ -155,7 +152,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("OPTIMIZE rewrites only dirty groups, drops their deltas, keeps history") {
     val s = spark
     import graft.sources.{RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.opt")
     s.sql("CREATE TABLE graft_dml.spec.opt (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('format'='mor')")
@@ -201,7 +197,6 @@ class RowCatalogSpec extends AnyFunSuite {
     val s = spark
     import graft.sources.{GroupRowLevelOp, GroupWrite, RowStore}
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.occ")
     s.sql("CREATE TABLE graft_dml.spec.occ (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.occ VALUES (1, 10), (2, 20)")
@@ -229,7 +224,6 @@ class RowCatalogSpec extends AnyFunSuite {
     val s = spark
     import graft.sources.RowStore
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.cc")
     s.sql("CREATE TABLE graft_dml.spec.cc (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.cc VALUES " +
@@ -314,7 +308,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("bucket(n, col) transform drives grouping; 1-bucket MERGE rewrites 1 group") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.bt")
     // k is NOT the first column: grouping must follow the DECLARED
     // transform, not the first-column default
@@ -364,7 +357,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("TIMESTAMP AS OF resolves to the latest commit at or before the instant") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     // controlled clock: v0 CREATE at t=1000, commits 60s apart
     val t0 = 1755000000000L
     val tick = new java.util.concurrent.atomic.AtomicLong(t0)
@@ -407,7 +399,6 @@ class RowCatalogSpec extends AnyFunSuite {
     // analysis, never with a dangling file read
     val s = spark
     import graft.sources.{RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t0 = 1755100000000L
     val tick = new java.util.concurrent.atomic.AtomicLong(t0)
     RowStore.clock = () => tick.getAndAdd(60000L)
@@ -451,7 +442,6 @@ class RowCatalogSpec extends AnyFunSuite {
     // every read surface still answers.
     val s = spark
     import graft.sources.{RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t0 = 1755200000000L
     val tick = new java.util.concurrent.atomic.AtomicLong(t0)
     RowStore.clock = () => tick.getAndAdd(60000L)
@@ -511,7 +501,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("a re-delivered streaming epoch commit is a manifest no-op") {
     val s = spark
     import graft.sources.{FilesMessage, GroupWrite, RowStore}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.se")
     s.sql("CREATE TABLE graft_dml.spec.se (k BIGINT, v BIGINT)")
     val key = "graft_dml.spec.se"
@@ -554,7 +543,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("unconditional DELETE is a metadata truncate (files retained)") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.trunc")
     s.sql("CREATE TABLE graft_dml.spec.trunc (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.trunc VALUES (1, 10), (2, 20), (3, 30)")
@@ -582,7 +570,6 @@ class RowCatalogSpec extends AnyFunSuite {
 
   test("DROP COLUMN is metadata-only; the group-key column refuses to drop") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.dc")
     s.sql("CREATE TABLE graft_dml.spec.dc (k BIGINT, a BIGINT, b STRING)")
     s.sql("INSERT INTO graft_dml.spec.dc VALUES (1, 10, 'x'), (2, 20, 'y')")
@@ -623,7 +610,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("truncate and days transforms route groups by range / epoch day") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     // truncate(100, k): group = floorDiv(k, 100) — contiguous ranges
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.tr")
     s.sql("CREATE TABLE graft_dml.spec.tr (k BIGINT, v BIGINT) " +
@@ -658,7 +644,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("change feed diffs across equality-delete versions") {
     val s = spark
     import graft.sources.RowStoreOps
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.ecdf")
     s.sql("CREATE TABLE graft_dml.spec.ecdf (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('format'='mor')")
@@ -684,7 +669,6 @@ class RowCatalogSpec extends AnyFunSuite {
 
   test("change feed plans negative groups; DEFAULT add and branch stream refuse") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.ng")
     s.sql("CREATE TABLE graft_dml.spec.ng (ts TIMESTAMP, v BIGINT) " +
       "PARTITIONED BY (days(ts))")
@@ -727,7 +711,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("months/years calendar transforms route groups; rollback guards") {
     val s = spark
     import graft.sources.{RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     // months(ts): group = months since 1970-01, CALENDAR boundaries
     // (Feb 28 23:59 and Mar 1 00:01 must split despite being 2 min
     // apart; Jan 2024 = (2024-1970)*12 + 0 = 648)
@@ -772,7 +755,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("day-range predicates prune a days(ts) table to in-range files") {
     val s = spark
     import graft.sources.RowFiles
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.pr")
     s.sql("CREATE TABLE graft_dml.spec.pr (ts TIMESTAMP, v BIGINT) " +
       "PARTITIONED BY (days(ts))")
@@ -862,7 +844,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("RENAME COLUMN is metadata-only: storage name stable, guards hold") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.rn")
     s.sql("CREATE TABLE graft_dml.spec.rn (k BIGINT, cents BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.rn VALUES (1, 10), (2, 20)")   // v1
@@ -907,7 +888,6 @@ class RowCatalogSpec extends AnyFunSuite {
 
   test("co-bucketed catalog tables join with ZERO shuffle exchanges (SPJ)") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     for (t <- Seq("sa", "sb")) {
       s.sql(s"DROP TABLE IF EXISTS graft_dml.spec.$t")
       s.sql(s"CREATE TABLE graft_dml.spec.$t (k BIGINT, v BIGINT) " +
@@ -948,7 +928,6 @@ class RowCatalogSpec extends AnyFunSuite {
     // a group boundary must land it in its new group
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.trd")
     s.sql("CREATE TABLE graft_dml.spec.trd (k BIGINT, v BIGINT) " +
       "PARTITIONED BY (truncate(10, k))")
@@ -984,7 +963,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("partition-spec evolution: old groups keep their layout, new writes use the new one") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.ev")
     s.sql("CREATE TABLE graft_dml.spec.ev (k BIGINT, v BIGINT) " +
       "PARTITIONED BY (bucket(4, k))")
@@ -1075,7 +1053,6 @@ class RowCatalogSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     import graft.sources.{RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.wapx")
     s.sql("CREATE TABLE graft_dml.spec.wapx (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.wapx VALUES (1, 10), (2, 20)")
@@ -1131,7 +1108,6 @@ class RowCatalogSpec extends AnyFunSuite {
     // so the commit must refuse instead of defaulting to append
     val s = spark
     import graft.sources.{GroupRowLevelOp, GroupWrite, RowStore}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.up")
     s.sql("CREATE TABLE graft_dml.spec.up (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.up VALUES (1, 10), (2, 20)")
@@ -1153,7 +1129,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("COUNT(*) answers from manifest row counts; deltas refuse the shortcut") {
     val s = spark
     import graft.sources.{RowFiles, RowStore}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.mc")
     s.sql("CREATE TABLE graft_dml.spec.mc (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.mc VALUES " +
@@ -1241,7 +1216,6 @@ class RowCatalogSpec extends AnyFunSuite {
 
   test("reported scan statistics drive an auto-broadcast of the catalog side") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.dim")
     s.sql("CREATE TABLE graft_dml.spec.dim (k BIGINT, name STRING)")
     s.sql("INSERT INTO graft_dml.spec.dim VALUES " +
@@ -1268,7 +1242,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("manifest stats skip base files on clean plain reads only") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.skip")
     s.sql("CREATE TABLE graft_dml.spec.skip (k BIGINT, v BIGINT)")
     // three commits with disjoint key bands → 3 stat-carrying base
@@ -1322,7 +1295,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("bloom filters skip point lookups that zone maps cannot") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
 
     // the filter kernel's own contract first: round-trip + membership
     val hs = (0L until 100L).flatMap(i => RowStore.Bloom.hashOf(Long.box(i)))
@@ -1382,7 +1354,6 @@ class RowCatalogSpec extends AnyFunSuite {
     // the writer's recorded filter and the pushed literal agree exactly.
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.bld")
     s.sql("CREATE TABLE graft_dml.spec.bld " +
       "(k BIGINT, amt DECIMAL(12,2), d DATE) " +
@@ -1435,7 +1406,6 @@ class RowCatalogSpec extends AnyFunSuite {
     // internal Decimal / epoch-day Int, not hand Spark a raw Long
     val s = spark
     import graft.sources.RowFiles
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.ddmm")
     val t = "graft_dml.spec.ddmm"
     s.sql(s"CREATE TABLE $t (k BIGINT, amt DECIMAL(12,2), d DATE) " +
@@ -1465,7 +1435,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("string-key zone maps skip files via truncated bounds") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
 
     // the truncation helper's own contract first: exact short bounds,
     // truncated lower, incremented upper, and the unsound cases
@@ -1517,7 +1486,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("per-column zone maps skip files under non-key predicates") {
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.cskip")
     // table KEYED on k (bucket default): every commit covers every
     // residue mod 4, so KEY stats never separate the commits — only
@@ -1586,7 +1554,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("type widening: int->bigint is metadata-only; narrowing refuses") {
     val s = spark
     import org.apache.spark.sql.types.{IntegerType, LongType}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.wid")
     s.sql("CREATE TABLE graft_dml.spec.wid (k BIGINT, v INT)")
     s.sql("INSERT INTO graft_dml.spec.wid VALUES (1, 10), (2, 20)") // v1
@@ -1661,7 +1628,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("merge schema evolution auto-adds source-only columns; MOR refuses") {
     val s = spark
     import graft.sources.RowStoreOps
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.mev")
     s.sql("CREATE TABLE graft_dml.spec.mev (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.mev VALUES (1, 10), (2, 20)") // v1
@@ -1704,7 +1670,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("a FAILED evolving merge rolls the schema back (atomic-in-effect)") {
     val s = spark
     import graft.sources.{RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.mevr")
     s.sql("CREATE TABLE graft_dml.spec.mevr (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.mevr VALUES (1, 10), (2, 20)") // v1
@@ -1743,7 +1708,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("equality deletes: key-value deltas, no base rewrite, OPTIMIZE folds") {
     val s = spark
     import graft.sources.{RowFiles, RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.eqd")
     s.sql("CREATE TABLE graft_dml.spec.eqd (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('format'='mor')")
@@ -1812,7 +1776,6 @@ class RowCatalogSpec extends AnyFunSuite {
     // and every version of the two chains must agree.
     val s = spark
     import graft.sources.RowStoreOps
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     for ((t, props) <- Seq(
       ("graft_dml.spec.mixm", " TBLPROPERTIES ('format'='mor')"),
       ("graft_dml.spec.mixc", ""))) {
@@ -1849,7 +1812,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("manifest chain: incremental commits, checkpoint cap, rewrite_manifests") {
     val s = spark
     import graft.sources.{RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.chain")
     s.sql("CREATE TABLE graft_dml.spec.chain (k BIGINT, v BIGINT)")
     val t = "graft_dml.spec.chain"
@@ -1902,7 +1864,6 @@ class RowCatalogSpec extends AnyFunSuite {
     // per commit must not grow with the table's accumulated file count
     val s = spark
     import graft.sources.RowStore
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.osz")
     val t = "graft_dml.spec.osz"
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -1929,7 +1890,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("vacuum cuts retained manifest chains before expiring ancestors") {
     val s = spark
     import graft.sources.{RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.vchain")
     val t = "graft_dml.spec.vchain"
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -1949,7 +1909,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("remove_orphan_files deletes debris, retains every referenced file") {
     val s = spark
     import graft.sources.{RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.orph")
     val t = "graft_dml.spec.orph"
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -1987,7 +1946,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test(".snapshots classifies operations with zero data-file opens") {
     val s = spark
     import graft.sources.RowFiles
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.snap")
     val t = "graft_dml.spec.snap"
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -2021,7 +1979,6 @@ class RowCatalogSpec extends AnyFunSuite {
 
   test("cdc change feed pairs single-delete+insert keys, q109 rule otherwise") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.cdc")
     val t = "graft_dml.spec.cdc"
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -2050,7 +2007,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test(".refs lists main, tags, and staged branches with zero data-file opens") {
     val s = spark
     import graft.sources.{RowFiles, RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.refs")
     s.sql("CREATE TABLE graft_dml.spec.refs (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.refs VALUES (1, 10)") // v1
@@ -2078,7 +2034,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test(".partitions reports per-group rollups with zero data-file opens") {
     val s = spark
     import graft.sources.RowFiles
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.pt")
     s.sql("CREATE TABLE graft_dml.spec.pt (k BIGINT, v BIGINT) " +
       "PARTITIONED BY (bucket(2, k))")
@@ -2112,7 +2067,6 @@ class RowCatalogSpec extends AnyFunSuite {
 
   test("CALL procedures drive the maintenance surface end to end") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.proc")
     s.sql("CREATE TABLE graft_dml.spec.proc (k BIGINT, v BIGINT)") // v0
     s.sql("INSERT INTO graft_dml.spec.proc VALUES (1, 10), (2, 20)") // v1
@@ -2164,7 +2118,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("tags are immutable and VACUUM honors tag retention") {
     val s = spark
     import graft.sources.{RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.tg")
     s.sql("CREATE TABLE graft_dml.spec.tg (k BIGINT, v BIGINT)") // v0
     s.sql("INSERT INTO graft_dml.spec.tg VALUES (1, 10), (2, 20)") // v1
@@ -2210,7 +2163,6 @@ class RowCatalogSpec extends AnyFunSuite {
 
   test("the table stream refuses rewriting commits (append-only contract)") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.app")
     s.sql("CREATE TABLE graft_dml.spec.app (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.app VALUES (1, 10), (2, 20)")
@@ -2235,7 +2187,6 @@ class RowCatalogSpec extends AnyFunSuite {
   test("VACUUM deletes expired manifests and exactly the orphaned files") {
     val s = spark
     import graft.sources.{RowStore, RowStoreOps}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.vac")
     s.sql("CREATE TABLE graft_dml.spec.vac (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.vac VALUES " +

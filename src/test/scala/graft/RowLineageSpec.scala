@@ -27,7 +27,6 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("cow: append inherits virtually; rewrites preserve ids") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_cow"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -96,7 +95,6 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("mor: updates and deletes preserve ids; optimize materializes") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_mor"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -142,7 +140,6 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("mor + deletion vectors: survivors keep ids") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_dv"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -160,7 +157,6 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("counter is monotone across overwrite; ids never recycle") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_ow"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -175,7 +171,6 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("multi-group: ids unique across groups and rewrites") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_mg"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -199,7 +194,6 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("sorted rewrite and binpack preserve ids through relocation") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_srt"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -228,7 +222,6 @@ class RowLineageSpec extends AnyFunSuite {
     val s = spark
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_st"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -294,7 +287,6 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("branch-staged files have no ids until publish assigns them") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_br"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -322,7 +314,6 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("clone inherits the counter; ids never re-mint retired ranges") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_src"
     val c = "graft_dml.spec.lineage_cln"
     s.sql(s"DROP TABLE IF EXISTS $t"); s.sql(s"DROP TABLE IF EXISTS $c")
@@ -347,7 +338,6 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("cherry-pick assigns staged ranges from the landing head") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_cp"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -374,7 +364,6 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("transaction adoption refuses overlapping id ranges") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_tx"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -410,7 +399,6 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("rowids compose with generated columns through rewrites") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.lineage_gen"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT, b BIGINT) " +

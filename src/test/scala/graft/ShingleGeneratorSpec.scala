@@ -3,15 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GeneratorFunctions
-
 /** The custom Generator (UDTF surface): row emission, edge cases, and
   * the Generate plan shape. */
 class ShingleGeneratorSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
 
   test("shingles emits one (pos, n-gram) row per window, as a Generate node") {
-    GeneratorFunctions.register(spark)
     import spark.implicits._
     val df = Seq("a b c d").toDF("text")
       .select(expr("shingles(split(text, ' '), 3)"))
@@ -22,7 +19,6 @@ class ShingleGeneratorSpec extends AnyFunSuite {
   }
 
   test("short and empty token arrays emit nothing") {
-    GeneratorFunctions.register(spark)
     import spark.implicits._
     val df = Seq("x y", "").toDF("text")
       .select(expr("shingles(split(text, ' '), 3)"))
@@ -30,7 +26,6 @@ class ShingleGeneratorSpec extends AnyFunSuite {
   }
 
   test("null tokens invalidate every window containing them") {
-    GeneratorFunctions.register(spark)
     val df = spark.range(1)
       .select(expr("shingles(array('a', cast(null as string), 'b', 'c'), 2)"))
     assert(df.collect().map(_.getString(1)).toSeq == Seq("b c"))

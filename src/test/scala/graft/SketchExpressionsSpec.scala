@@ -11,7 +11,6 @@ class SketchExpressionsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("cosine_sim matches a reference double computation") {
-    VectorFunctions.register(spark)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
       (Array(1.0f, 0.0f, 0.0f), Array(0.0f, 1.0f, 0.0f)),
@@ -30,7 +29,6 @@ class SketchExpressionsSpec extends AnyFunSuite {
   }
 
   test("cosine_sim is null for mismatched lengths or zero vectors") {
-    VectorFunctions.register(spark)
     val df = Seq(
       (Array(1.0f, 2.0f), Array(1.0f, 2.0f, 3.0f)),
       (Array(0.0f, 0.0f), Array(1.0f, 2.0f))
@@ -40,7 +38,6 @@ class SketchExpressionsSpec extends AnyFunSuite {
   }
 
   test("sorted_intersect_count merges correctly") {
-    SketchFunctions.register(spark)
     val df = Seq(
       (Array(1L, 3L, 5L, 7L), Array(3L, 4L, 5L, 8L)),   // {3,5} → 2
       (Array[Long](), Array(1L, 2L)),                    // 0
@@ -52,7 +49,6 @@ class SketchExpressionsSpec extends AnyFunSuite {
   }
 
   test("simhash64 is deterministic and near-identical docs are close") {
-    SketchFunctions.register(spark)
     val df = Seq(
       "the quick brown fox jumps over the lazy dog and runs far away",
       "the quick brown fox jumps over the lazy dog and runs far home",
@@ -72,7 +68,6 @@ class SketchExpressionsSpec extends AnyFunSuite {
   }
 
   test("minhash_sig16 estimates jaccard") {
-    SketchFunctions.register(spark)
     val a = (1 to 40).map(i => s"tok$i")
     val b = (1 to 40).map(i => if (i <= 36) s"tok$i" else s"other$i") // jac = 36/44 ≈ 0.82
     val df = Seq((a, b)).toDF("a", "b")
@@ -86,7 +81,6 @@ class SketchExpressionsSpec extends AnyFunSuite {
   }
 
   test("simhash64 is token-order and multiplicity-sign invariant") {
-    SketchFunctions.register(spark)
     val toks = "alpha beta gamma delta epsilon zeta".split(" ").toSeq
     val perms = Seq(toks, scala.util.Random.shuffle(toks), toks ++ toks)
     val hs = perms.map { p =>
@@ -98,7 +92,6 @@ class SketchExpressionsSpec extends AnyFunSuite {
   }
 
   test("minhash_sig16 of a union is the elementwise min of signatures") {
-    SketchFunctions.register(spark)
     val a = (1 to 30).map(i => s"a$i")
     val b = (1 to 30).map(i => s"b$i")
     def sig(xs: Seq[String]): Seq[Long] =
@@ -109,7 +102,6 @@ class SketchExpressionsSpec extends AnyFunSuite {
   }
 
   test("lsh_buckets_8x6 emits 8 bucket ids in [0, 64)") {
-    SketchFunctions.register(spark)
     val df = Seq(Tuple1(Array.tabulate(64)(i => (i % 7 - 3).toFloat)))
       .toDF("v")
       .select(SketchFunctions.lshBuckets8x6($"v").as("b"))

@@ -29,7 +29,6 @@ class SnapshotCloneSpec extends AnyFunSuite {
 
   private def fresh(name: String, props: String = ""): String = {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = s"graft_dml.spec.$name"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +

@@ -16,7 +16,6 @@ class SortedRewriteSpec extends AnyFunSuite {
 
   test("sorted rewrite restores zone-map skipping on a churned table") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.srw"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +

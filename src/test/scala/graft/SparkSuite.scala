@@ -4,19 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (JVM-wide, forked once). */
 object SparkSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.start(
+    GraftSession.builder(cores = 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+        java.nio.file.Files.createTempDirectory("graft-wh").toString))
 
   val sf: String = "/root/testdata/sf0.001"
 }

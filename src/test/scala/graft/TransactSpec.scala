@@ -16,9 +16,6 @@ import graft.sources.{RowStore, Transact}
   * its rid pairing intact. */
 class TransactSpec extends AnyFunSuite {
 
-  private def conf(): Unit = SparkSuite.spark.conf
-    .set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
-
   private def listData(key: String): Set[String] = {
     val d = Paths.get(RowStore.dataDir(key))
     val stream = Files.list(d)
@@ -28,7 +25,7 @@ class TransactSpec extends AnyFunSuite {
   }
 
   test("commit MOVES txn-written files; clones drop; versions advance") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.tx.a"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -59,7 +56,7 @@ class TransactSpec extends AnyFunSuite {
   }
 
   test("rollback drops clones and leaves bases byte-identical") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.tx.b"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -80,7 +77,7 @@ class TransactSpec extends AnyFunSuite {
   }
 
   test("refused commit leaves the txn open, nothing moved; retry works") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val (ta, tb) = ("graft_dml.tx.c", "graft_dml.tx.d")
     for (t <- Seq(ta, tb)) {
       s.sql(s"DROP TABLE IF EXISTS $t")
@@ -113,7 +110,7 @@ class TransactSpec extends AnyFunSuite {
   }
 
   test("group-DISJOINT interloper and transaction BOTH land (rebase)") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.tx.g"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -136,7 +133,7 @@ class TransactSpec extends AnyFunSuite {
   }
 
   test("registry: open txns are observable; GC reclaims expired ones") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.tx.r"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -167,7 +164,7 @@ class TransactSpec extends AnyFunSuite {
   }
 
   test("a foreign process's txn: observed, commit refused, GC'd") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.tx.x"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -202,7 +199,7 @@ class TransactSpec extends AnyFunSuite {
   }
 
   test("MOR dv table: delta and vector state survives adoption") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.tx.m"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
@@ -244,7 +241,7 @@ class TransactSpec extends AnyFunSuite {
   }
 
   test("a commit that fails mid-adoption CLOSES the transaction") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.tx.f"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -270,7 +267,7 @@ class TransactSpec extends AnyFunSuite {
   }
 
   test("DDL inside a transaction refuses at commit") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.tx.e"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
@@ -285,7 +282,7 @@ class TransactSpec extends AnyFunSuite {
   }
 
   test("concurrent DDL on the BASE reads as a retryable conflict") {
-    val s = SparkSuite.spark; conf()
+    val s = SparkSuite.spark
     val t = "graft_dml.tx.h"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")

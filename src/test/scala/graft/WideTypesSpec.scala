@@ -19,7 +19,6 @@ class WideTypesSpec extends AnyFunSuite {
 
   test("array/double/binary round-trip through insert + COW merge + time travel") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.wt"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (id BIGINT, vec ARRAY<FLOAT>, score DOUBLE, " +
@@ -66,7 +65,6 @@ class WideTypesSpec extends AnyFunSuite {
 
   test("MOR delta records and the change feed carry array/binary rows") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.wtm"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (id BIGINT, vec ARRAY<FLOAT>, tag STRING) " +
@@ -98,7 +96,6 @@ class WideTypesSpec extends AnyFunSuite {
 
   test("stats machinery and key guard refuse statless types loudly") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.wtg")
     // implied first-column key of array type refuses
     val e1 = intercept[Exception] {

@@ -15,7 +15,6 @@ class ZOrderRewriteSpec extends AnyFunSuite {
 
   test("z-order rewrite cuts the opened fraction on BOTH dimensions") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.zrw"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, p BIGINT, v BIGINT) " +
@@ -70,7 +69,6 @@ class ZOrderRewriteSpec extends AnyFunSuite {
 
   test("clustering_quality is manifest-only and tracks the rewrite") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     import graft.sources.RowFiles
     val t = "graft_dml.spec.cq"
     s.sql(s"DROP TABLE IF EXISTS $t")
@@ -101,7 +99,6 @@ class ZOrderRewriteSpec extends AnyFunSuite {
 
   test("zorder spec validation refuses loudly") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.zrwv"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, cat STRING, v BIGINT)")
@@ -139,7 +136,6 @@ class ZOrderRewriteSpec extends AnyFunSuite {
 
   test("a column literally named zorder sorts, not silently bin-packs") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.zrname"
     s.sql(s"DROP TABLE IF EXISTS $t")
     // 'zorder' was the handshake's preserve-layout sentinel before the
@@ -161,7 +157,6 @@ class ZOrderRewriteSpec extends AnyFunSuite {
 
   test("clustering_quality reads 1.0 on a single-value domain") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.cqone"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, c BIGINT)")
@@ -176,7 +171,6 @@ class ZOrderRewriteSpec extends AnyFunSuite {
 
   test("zorder rewrite clamps delta rows outside the base-file bounds") {
     val s = spark
-    s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
     val t = "graft_dml.spec.zrclamp"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, p BIGINT, v BIGINT) " +

@@ -5,7 +5,8 @@
 #   tools/run_main.sh graft.Bench [args...]
 # Env: SPARK_GRAFT_* passes through; SPARK_DRIVER_MEM sizes the heap.
 set -e
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
