@@ -82,6 +82,19 @@ object GraftSession {
     s.conf.set("spark.sql.catalog.graft_dml", "graft.sources.GraftCatalog")
   }
 
+  /** Runs `body` with `confs` set on `s`, then restores each key's
+    * prior value (or unsets it). `body` must EXECUTE its plans, not
+    * just construct them, for the confs to apply. */
+  def withConfs[T](s: SparkSession, confs: Map[String, String])(body: => T): T = {
+    val saved = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   /** `rows`, each of which prepares its session before it runs. */
   def prepared(rows: Rows): Rows = rows.map { case (name, row) =>
     name -> ((s: SparkSession, d: String) => { prepare(s); row(s, d) })

@@ -31,8 +31,8 @@ object Adaptive {
     * it to force splits at sf0.001), runs `body`, restores prior
     * values. */
   private[graft] def withSkewConfs[T](s: SparkSession,
-      sizeBytes: Long = 262144L)(body: => T): T = {
-    val confs = Map(
+      sizeBytes: Long = 262144L)(body: => T): T =
+    graft.GraftSession.withConfs(s, Map(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.5",
@@ -45,15 +45,7 @@ object Adaptive {
       // to skew-split (and would be the right plan for a truly small
       // dim — this demo models a dim too big to broadcast)
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))(body)
 
   /** The skewed join: 30% of lineitem rows funnel onto orderkey 1.
     *

@@ -36,23 +36,15 @@ import org.apache.spark.sql.types.LongType
   */
 object RuntimeFilter {
 
-  /** Scoped runtime-filter confs (q43's save/restore pattern). */
-  private[graft] def withBloomConfs[T](s: SparkSession)(body: => T): T = {
-    val confs = Map(
+  /** Runs `body` under the runtime-filter confs. */
+  private[graft] def withBloomConfs[T](s: SparkSession)(body: => T): T =
+    graft.GraftSession.withConfs(s, Map(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // harness corpus is ~MBs; the transformation, not the threshold,
       // is what must survive the 100x scale-up
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))(body)
 
   /** Urgent-orders revenue: lineitem ⋈ (orders WHERE urgent). The
     * equality predicate on the dimension is what marks it "likely

@@ -646,8 +646,7 @@ object RowStoreOps {
     val existing = DvMerge.existingVectors(man, handles.map(_._2).toSet)
     val (dvAdded, replacedDvNames, consumed) =
       DvMerge.resolve(dir, meta.specId, handles, existing)
-    RowStore.commitLock.synchronized {
-      val cur = RowStore.currentVersion(table)
+    RowStore.commit(table) { (cur, _) =>
       if (cur != base)
         throw new java.util.ConcurrentModificationException(
           s"$table: rewrite_position_deletes planned at version $base " +
@@ -660,21 +659,20 @@ object RowStoreOps {
       // count); zone maps / blooms / ndv stay as-is — wider-than-
       // actual bounds and superset sketches are conservative, never
       // wrong
-      val next = man.flatMap {
+      man.flatMap {
         case e if e.kind == "delta" && replace.contains(e.name) =>
           replace(e.name).map { case (n, survivors) =>
             e.copy(name = n, rows = Some(survivors)) }
         case e if e.kind == "dv" && replacedDvNames(e.name) => None
         case e => Some(e)
       } ++ dvAdded
-      RowStore.writeManifest(table, cur + 1, next)
-      // merged-away partial blobs were never referenced — reclaim
-      // now that the publish landed (failure above leaves orphans,
-      // never dangling references)
-      consumed.foreach { n =>
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(dir, n)); ()
-      }
+    }
+    // merged-away partial blobs were never referenced — reclaim now
+    // that the publish landed (a failed commit leaves orphans, never
+    // dangling references; no manifest can name them, so this needs
+    // no lock)
+    consumed.foreach { n =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, n)); ()
     }
     (folded, dvAdded.size +
       man.count(e => e.kind == "dv" && !replacedDvNames(e.name)),
@@ -806,7 +804,7 @@ object RowStoreOps {
   /** MANIFEST COMPACTION (Iceberg's `rewrite_manifests`): collapse the
     * current snapshot's incremental manifest chain into ONE
     * self-contained manifest file. Commits write O(change) incremental
-    * manifests ([[RowStore.writeManifest]]); each chain hop is a
+    * manifests ([[RowStore.commit]]); each chain hop is a
     * manifest-file read at plan time, so at a 100-TB commit cadence
     * this keeps the planner's per-snapshot metadata read O(1) instead
     * of O(commits-since-checkpoint). Pure metadata — every snapshot's
@@ -867,13 +865,11 @@ object RowStoreOps {
     * just points at the old state again. Files are immutable, so this
     * is pure manifest metadata. Returns the new head version. */
   def rollback(table: String, v: Int): Int =
-    RowStore.commitLock.synchronized {
+    RowStore.commit(table) { (_, _) =>
       val have = RowStore.versions(table)
       require(have.contains(v),
         s"cannot roll back $table to version $v (have $have)")
-      val cur = RowStore.currentVersion(table)
-      RowStore.writeManifest(table, cur + 1, RowStore.readManifest(table, v))
-      cur + 1
+      RowStore.readManifest(table, v)
     }
 
   /** TAG a committed snapshot (Iceberg's `create_tag`): an immutable
@@ -980,16 +976,9 @@ object RowStoreOps {
         writers.values.foreach(_._2.close())
         writers.iterator.map { case (g, (name, _)) => (g, name) }
       }.collect()
-    // same pre-commit seam as every batch-write commit (GroupWrite
-    // .commit): concurrency fault-injection tests can latch this
-    // writer's commit like any other
-    RowStore.preCommitHook()
-    RowStore.commitLock.synchronized {
-      val cur = RowStore.currentVersion(table)
-      RowStore.writeManifest(table, cur + 1,
-        RowStore.readManifest(table, cur) ++ files.toSeq.map {
-          case (g, name) =>
-            RowStore.FileEntry("delta", g, name, spec = meta.specId) })
+    RowStore.commit(table) { (_, head) =>
+      head ++ files.toSeq.map { case (g, name) =>
+        RowStore.FileEntry("delta", g, name, spec = meta.specId) }
     }
     files.length
   }
@@ -1059,17 +1048,15 @@ object RowStoreOps {
           }.toMap
           (name, per)
         }.collect().toMap
-    RowStore.commitLock.synchronized {
-      val cur = RowStore.currentVersion(table)
+    RowStore.commit(table) { (cur, _) =>
       if (cur != baseV)
         throw new java.util.ConcurrentModificationException(
           s"$table: analyzed version $baseV but the table is now at " +
             s"$cur — retry")
-      val updated = man.map(e => e.copy(ndv = e.ndv ++ sketched(e.name)))
       val m2 = RowStore.readMeta(table)
       RowStore.writeMeta(table,
         m2.copy(ndvCols = (m2.ndvCols ++ cols).distinct))
-      RowStore.writeManifest(table, cur + 1, updated)
+      man.map(e => e.copy(ndv = e.ndv ++ sketched(e.name)))
     }
     (paths.size, cols.size)
   }
@@ -1193,9 +1180,7 @@ object RowStoreOps {
       totalRows += rows
       (f, rows)
     }
-    RowStore.commitLock.synchronized {
-      val cur = RowStore.currentVersion(table)
-      val man = RowStore.readManifest(table, cur)
+    RowStore.commit(table) { (_, man) =>
       // duplicate-registration guard (Iceberg's check_duplicate_files
       // default): re-importing an already-referenced path would
       // silently double rows, and a duplicated entry NAME poisons the
@@ -1210,10 +1195,9 @@ object RowStoreOps {
       // one fresh negative spec per call — a second import never
       // collides group numbers with the first
       val importSpec = (man.map(_.spec) :+ 0).min - 1
-      val entries = counted.zipWithIndex.map { case ((f, rows), i) =>
+      man ++ counted.zipWithIndex.map { case ((f, rows), i) =>
         RowStore.FileEntry("base", i, f, rows = Some(rows),
           spec = importSpec) }
-      RowStore.writeManifest(table, cur + 1, man ++ entries)
     }
     (files.size, totalRows)
   }
@@ -1291,7 +1275,8 @@ object RowStoreOps {
     * so restoring the schema needs none of user-DROP's name
     * blacklisting and the same evolution can be retried. If another
     * writer managed to commit between the ALTERs and the failure, the
-    * rollback declines (the columns may now carry data) and the
+    * rollback declines (the columns may now carry data; the refusal
+    * rides the MERGE's error as a suppressed exception) and the
     * documented evolved-but-unmerged state remains — safe to re-run
     * either way: a re-issued call finds the columns present and
     * degenerates to the plain MERGE. */
@@ -1332,20 +1317,20 @@ object RowStoreOps {
       // never mask the MERGE's own error — suppress it onto `e` and
       // let the documented evolved-but-unmerged state stand
       try {
-        if (added.nonEmpty) RowStore.commitLock.synchronized {
-          // roll back only while provably safe: the table must still
-          // sit at the pre-merge version (nothing committed data
-          // under the new columns)
-          if (RowStore.currentVersion(table) == preMergeV) {
-            val m = RowStore.readMeta(table)
-            RowStore.writeMeta(table, m.copy(schema = StructType(
-              m.schema.fields.filterNot(f => added.contains(f.name)))))
-            // the rollback commits its own version (same entries, the
-            // restored `#schema` header) — time travel sees evolve
-            // and un-evolve as two honest commits
-            RowStore.writeManifest(table, preMergeV + 1,
-              RowStore.readManifest(table, preMergeV))
-          }
+        // roll back only while provably safe: the table must still
+        // sit at the pre-merge version (nothing committed data under
+        // the new columns). The rollback commits its own version (same
+        // entries, the restored `#schema` header) — time travel sees
+        // evolve and un-evolve as two honest commits
+        if (added.nonEmpty) RowStore.commit(table) { (cur, head) =>
+          if (cur != preMergeV)
+            throw new java.util.ConcurrentModificationException(
+              s"$table: moved past version $preMergeV during the MERGE " +
+                s"— the added columns ${added.mkString(", ")} stay")
+          val m = RowStore.readMeta(table)
+          RowStore.writeMeta(table, m.copy(schema = StructType(
+            m.schema.fields.filterNot(f => added.contains(f.name)))))
+          head
         }
       } catch { case rb: Throwable => e.addSuppressed(rb) }
       throw e
@@ -1361,16 +1346,17 @@ object RowStoreOps {
     * and let the caller re-stage. Returns the published version. */
   def publishBranch(table: String, name: String): Int =
     RowStore.commitLock.synchronized {
-      val (base, entries) = RowStore.readBranchManifest(table, name)
-      val cur = RowStore.currentVersion(table)
-      if (cur != base)
-        throw new java.util.ConcurrentModificationException(
-          s"$table: branch $name forked at version $base but the table " +
-            s"is now at $cur — publishing would drop the interleaved " +
-            "commits; re-stage against the current snapshot")
-      RowStore.writeManifest(table, cur + 1, entries)
+      val v = RowStore.commit(table) { (cur, _) =>
+        val (base, entries) = RowStore.readBranchManifest(table, name)
+        if (cur != base)
+          throw new java.util.ConcurrentModificationException(
+            s"$table: branch $name forked at version $base but the " +
+              s"table is now at $cur — publishing would drop the " +
+              "interleaved commits; re-stage against the current snapshot")
+        entries
+      }
       RowStore.dropBranch(table, name)
-      cur + 1
+      v
     }
 
   /** ATOMIC MULTI-TABLE PUBLISH — the all-or-nothing WAP commit
@@ -1447,9 +1433,8 @@ object RowStoreOps {
     * Returns the published version. */
   def cherrypickBranch(table: String, name: String): Int =
     RowStore.commitLock.synchronized {
-      val (base, entries) = RowStore.readBranchManifest(table, name)
-      val cur = RowStore.currentVersion(table)
-      val next =
+      val v = RowStore.commit(table) { (cur, curEntries) =>
+        val (base, entries) = RowStore.readBranchManifest(table, name)
         if (cur == base) entries // nothing interleaved: fast-forward
         else {
           val baseNames = RowStore.readManifest(table, base)
@@ -1457,7 +1442,6 @@ object RowStoreOps {
           val branchNames = entries.map(_.name).toSet
           val added = entries.filterNot(e => baseNames(e.name))
           val removed = baseNames -- branchNames
-          val curEntries = RowStore.readManifest(table, cur)
           val curNames = curEntries.map(_.name).toSet
           val conflicts = removed.filterNot(curNames)
           if (conflicts.nonEmpty)
@@ -1482,9 +1466,9 @@ object RowStoreOps {
                 "its rows. Re-stage against the current snapshot")
           curEntries.filterNot(e => removed(e.name)) ++ added
         }
-      RowStore.writeManifest(table, cur + 1, next)
+      }
       RowStore.dropBranch(table, name)
-      cur + 1
+      v
     }
 
   /** ZERO-COPY TABLE CLONE (Delta's SHALLOW CLONE / Iceberg's
@@ -1525,7 +1509,7 @@ object RowStoreOps {
       // cross-version id uniqueness when a transaction adopts it back
       val floor = if (!meta.rowids) 0L
         else RowStore.nextRowId(src, RowStore.currentVersion(src))
-      RowStore.writeManifest(dst, 0, cloned, rowIdFloor = floor)
+      RowStore.create(dst, cloned, rowIdFloor = floor)
       cloned.size
     }
 }

@@ -682,7 +682,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       tparam = spec.map(_._2).getOrElse(0L),
       bloomCols = bloomCols, dv = dv, ndvCols = ndvCols, check = check,
       rowids = rowids, gen = gen))
-    RowStore.writeManifest(k, 0, Seq.empty) // v0 = empty table at CREATE
+    RowStore.create(k) // v0 = empty table at CREATE
     new RowTable(k, RowStore.readMeta(k), 0)
   }
 
@@ -970,9 +970,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       // this, the evolution would be invisible to the manifest chain
       // and historical reads would silently re-project through
       // whatever schema is current.
-      val cur = RowStore.currentVersion(k)
-      RowStore.writeManifest(k, cur + 1, RowStore.readManifest(k, cur))
-      new RowTable(k, RowStore.readMeta(k), cur + 1)
+      val v = RowStore.commit(k)((_, head) => head)
+      new RowTable(k, RowStore.readMeta(k), v)
     }
   }
 
@@ -1099,10 +1098,7 @@ class RowTable(tableKey: String, meta: RowStore.Meta, version: Int,
     predicates.isEmpty || predicates.forall(_.name() == "ALWAYS_TRUE")
   override def deleteWhere(predicates: Array[
       org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
-    RowStore.commitLock.synchronized {
-      val cur = RowStore.currentVersion(tableKey)
-      RowStore.writeManifest(tableKey, cur + 1, Seq.empty)
-    }
+    RowStore.commit(tableKey)((_, _) => Seq.empty)
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ,

@@ -195,6 +195,8 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
               epochId: Long): DataWriter[InternalRow] =
             inner.createWriter(partitionId, taskId)
         }
+      // the replay check and the epoch record stay atomic with the
+      // publish: both sit under the (reentrant) commit lock
       override def commit(epochId: Long,
           messages: Array[WriterCommitMessage]): Unit =
         RowStore.commitLock.synchronized {
@@ -202,13 +204,9 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
             s"$tableKey: streaming write without a query id")
           if (epochId > RowStore.lastStreamEpoch(tableKey, queryId)) {
             val added = messages.flatMap(_.asInstanceOf[FilesMessage].files)
-              .map(f => RowStore.FileEntry("base", f.group, f.name,
-                f.minK, f.maxK, f.rows, meta.specId, f.minS, f.maxS,
-                f.colsN, f.colsS, f.blooms, f.ndv)).toSeq
-            val cur = RowStore.currentVersion(tableKey)
-            RowStore.writeManifest(tableKey, cur + 1,
-              RowStore.readManifest(tableKey, cur) ++ added,
-              extraHeader = Seq(s"#ep\t$queryId\t$epochId"))
+              .map(_.entry("base", meta.specId)).toSeq
+            RowStore.commit(tableKey, Seq(s"#ep\t$queryId\t$epochId"))(
+              (_, head) => head ++ added)
             RowStore.recordStreamEpoch(tableKey, queryId, epochId)
           }
         }
@@ -219,43 +217,31 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val added = messages.flatMap(_.asInstanceOf[FilesMessage].files)
-      .map(f => RowStore.FileEntry("base", f.group, f.name, f.minK, f.maxK,
-        f.rows, meta.specId, f.minS, f.maxS, f.colsN, f.colsS, f.blooms,
-        f.ndv))
-      .toSeq
-    RowStore.preCommitHook()
-    RowStore.commitLock.synchronized {
-      mode match {
-        case GroupWrite.StageBranch(name) =>
-          // WAP staging: fold into the branch manifest (stacked audit
-          // appends compose); NO table version commits. Fork base is
-          // recorded on first stage — publish validates against it.
+      .map(_.entry("base", meta.specId)).toSeq
+    mode match {
+      case GroupWrite.StageBranch(name) =>
+        // WAP staging: fold into the branch manifest (stacked audit
+        // appends compose); NO table version commits. Fork base is
+        // recorded on first stage — publish validates against it.
+        RowStore.commitLock.synchronized {
           val cur = RowStore.currentVersion(tableKey)
-          val old = RowStore.readManifest(tableKey, cur)
           val (base, existing) =
             if (RowStore.branchExists(tableKey, name))
               RowStore.readBranchManifest(tableKey, name)
-            else (cur, old)
+            else (cur, RowStore.readManifest(tableKey, cur))
           RowStore.writeBranchManifest(tableKey, name, base,
             existing ++ added)
-          return
-        case _ => ()
-      }
-      // CROSS-PROCESS OCC retry loop: compute `next` against the
-      // current head, publish via the atomic create-if-absent. The
-      // in-JVM lock serializes same-process writers, so a publish
-      // loss means another PROCESS committed the version in the
-      // window — re-read the head and re-run this mode's own
-      // validation (ReplaceGroups' per-group signature check and
-      // Compact's base check re-fire naturally against the new cur;
-      // a REAL conflict still surfaces as
-      // ConcurrentModificationException, never a silent clobber).
-      var attempts = 0
-      var committed = false
-      while (!committed) {
-      val cur = RowStore.currentVersion(tableKey)
-      val old = RowStore.readManifest(tableKey, cur)
-      val next = mode match {
+        }
+        return
+      case _ => ()
+    }
+    // each mode validates against the head RowStore.commit hands it;
+    // after a cross-process publish loss it runs again against the new
+    // head (ReplaceGroups' per-group signature check and Compact's base
+    // check re-fire naturally; a REAL conflict surfaces as
+    // ConcurrentModificationException, never a silent clobber)
+    RowStore.commit(tableKey) { (cur, old) =>
+      mode match {
         case GroupWrite.StageBranch(_) =>
           sys.error("unreachable: staged above")
         case GroupWrite.Append    => old ++ added
@@ -341,16 +327,6 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
                 added
           }
       }
-      RowStore.prePublishHook()
-      try { RowStore.writeManifest(tableKey, cur + 1, next); committed = true }
-      catch {
-        case e: RowStore.CommitConflictException =>
-          attempts += 1
-          // a bound, not a policy: 16 consecutive cross-process losses
-          // means a pathologically hot table — surface it
-          if (attempts >= 16) throw e
-      }
-      }
     }
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
@@ -362,7 +338,12 @@ case class FileMeta(group: Int, name: String, minK: Option[Long],
     colsN: Map[String, (Long, Long)] = Map.empty,
     colsS: Map[String, (String, String)] = Map.empty,
     blooms: Map[String, String] = Map.empty,
-    ndv: Map[String, (Long, Seq[Long])] = Map.empty)
+    ndv: Map[String, (Long, Seq[Long])] = Map.empty) {
+  /** The manifest entry recording this file as `kind` under `spec`. */
+  def entry(kind: String, spec: Int): RowStore.FileEntry =
+    RowStore.FileEntry(kind, group, name, minK, maxK, rows, spec, minS,
+      maxS, colsN, colsS, blooms, ndv)
+}
 /** One task's deletion-vector output against ONE target file (dv
   * mode): the bitmap blob is written EXECUTOR-SIDE and only this
   * fixed-size handle rides the commit message — payload O(touched
@@ -815,9 +796,7 @@ class RowDeltaWrite(tableKey: String, meta: RowStore.Meta,
     // so row-lineage assignment can reserve the file's id range —
     // insert records inherit firstRowId + record index. Other tables
     // keep rows=None, the shape every metadata consumer expects.
-    val added = msgs.flatMap(_.files)
-      .map(f => RowStore.FileEntry("delta", f.group, f.name,
-        rows = f.rows, spec = meta.specId)).toSeq
+    val added = msgs.flatMap(_.files).map(_.entry("delta", meta.specId)).toSeq
     // DV MODE: the bitmap blobs were written EXECUTOR-SIDE (one per
     // (task, target)); this commit only RESOLVES their handles — the
     // Delta/Iceberg-v3 invariant: AT MOST ONE deletion vector per
@@ -837,45 +816,39 @@ class RowDeltaWrite(tableKey: String, meta: RowStore.Meta,
     // manifest entry (`dvTarget`), so commit IO is proportional to
     // this commit's touched files — never to the table's total
     // vector count (the economics the feature exists for)
-    def resolveAt(v: Int): (Seq[RowStore.FileEntry],
-        (Seq[RowStore.FileEntry], Set[String], Seq[String])) = {
-      val man = RowStore.readManifest(tableKey, v)
+    def resolveAt(man: Seq[RowStore.FileEntry])
+        : (Seq[RowStore.FileEntry], Set[String], Seq[String]) = {
       val existing =
         if (handles.isEmpty) Map.empty[String, RowStore.FileEntry]
         else DvMerge.existingVectors(man, handles.map(_._2).toSet)
-      (man, DvMerge.resolve(dir, meta.specId, handles, existing))
+      DvMerge.resolve(dir, meta.specId, handles, existing)
     }
-    RowStore.preCommitHook()
     // resolve OUTSIDE the commit lock: DvMerge's union pass is a
     // (small) distributed job, and running it under the process-wide
     // lock would stall every other table's commit for its duration.
-    // The lock section below re-validates the head and re-resolves in
-    // the rare case it moved (the first pass's merged blobs then
-    // become unreferenced orphans — swept, never dangling).
+    // The commit re-validates the head and re-resolves in the rare
+    // case it moved (the first pass's merged blobs then become
+    // unreferenced orphans — swept, never dangling).
     val preCur = RowStore.currentVersion(tableKey)
-    val preResolved = resolveAt(preCur)
-    RowStore.commitLock.synchronized {
-      val cur = RowStore.currentVersion(tableKey)
+    val preResolved = resolveAt(RowStore.readManifest(tableKey, preCur))
+    var consumed = Seq.empty[String]
+    RowStore.commit(tableKey) { (cur, man) =>
       op.flatMap(_.baseVersion).filter(_ != cur).foreach { v =>
         throw new java.util.ConcurrentModificationException(
           s"$tableKey: delta operation read version $v but the table " +
             s"is now at $cur — its _rids may no longer resolve; retry")
       }
-      val (man, (dvAdded, replacedDv, consumed)) =
-        if (cur == preCur) preResolved else resolveAt(cur)
-      // same pre-publish seam as the COW commit: the crash spec halts
-      // here to pin that landed-but-uncommitted delta/dv files stay
-      // invisible and sweep as orphans
-      RowStore.prePublishHook()
-      RowStore.writeManifest(tableKey, cur + 1,
-        man.filterNot(e => e.kind == "dv" && replacedDv(e.name)) ++
-          added ++ dvAdded)
-      // merged-away partial blobs were never referenced by any
-      // manifest — reclaim them now that the publish landed (a
-      // failure above leaves them as orphans, never dangling refs)
-      consumed.foreach { n =>
-        Files.deleteIfExists(Paths.get(dir, n)); ()
-      }
+      val (dvAdded, replacedDv, merged) =
+        if (cur == preCur) preResolved else resolveAt(man)
+      consumed = merged
+      man.filterNot(e => e.kind == "dv" && replacedDv(e.name)) ++
+        added ++ dvAdded
+    }
+    // merged-away partial blobs were never referenced by any manifest
+    // — reclaim them now that the publish landed (a failed commit
+    // leaves them as orphans, never dangling refs)
+    consumed.foreach { n =>
+      Files.deleteIfExists(Paths.get(dir, n)); ()
     }
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()

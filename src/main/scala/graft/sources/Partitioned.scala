@@ -68,13 +68,12 @@ object Partitioned {
       val ev = graft.Tables(s, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
       ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val old = s.conf.getOption(key)
-      s.conf.set(key, "dynamic")
-      try ev.filter(col("event_type") === "click")
-        .withColumn("user_id", col("user_id") + lit(1L))
-        .write.mode("overwrite").partitionBy("event_type").parquet(out)
-      finally old.fold(s.conf.unset(key))(v => s.conf.set(key, v))
+      graft.GraftSession.withConfs(s,
+          Map("spark.sql.sources.partitionOverwriteMode" -> "dynamic")) {
+        ev.filter(col("event_type") === "click")
+          .withColumn("user_id", col("user_id") + lit(1L))
+          .write.mode("overwrite").partitionBy("event_type").parquet(out)
+      }
       done.createNewFile()
     }
     out

@@ -26,20 +26,6 @@ object RowCatalogQueries {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions.{col, lit}
 
-  /** Scoped session confs (q43/q53's save/restore pattern): set for
-    * the duration of `body` — which must EXECUTE its plans, not just
-    * construct them — then restored. */
-  private[graft] def withScopedConfs[T](s: SparkSession,
-      confs: Map[String, String])(body: => T): T = {
-    val saved = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
-
   /** q106/q108 share one lifecycle (CREATE → INSERT seed → MERGE →
     * DELETE) differing only in table name and format; the oracle
     * restates the end state relationally from raw orders, so a wrong
@@ -420,7 +406,7 @@ object RowCatalogQueries {
         FROM q131_orders WHERE o_orderkey % 10 = 0""")
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val out = graft.Scratch.dir(s, "graft_q131", tag)
-      withScopedConfs(s, Map(
+      graft.GraftSession.withConfs(s, Map(
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")) {

@@ -74,26 +74,28 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object RowStore {
   /** Driver-side commit lock: the FAST PATH for same-JVM commit
-    * ordering. Cross-process atomicity does NOT rest on it — every
+    * ordering, taken by [[commit]]. It is reentrant, so a caller that
+    * must keep a step atomic with the publish (dropping a published
+    * branch, recording a stream epoch) holds it around its `commit`
+    * call. Cross-process atomicity does NOT rest on it — every
     * manifest publishes via [[publishStaged]]'s atomic
     * create-if-absent (write the rendered manifest to a temp file,
     * then hard-link it to `v<N>.manifest`, which FAILS if another
-    * process already committed that version). A loser gets
-    * [[CommitConflictException]] and re-validates against the new
-    * head — the atomic-rename / metastore-swap commit rule every
-    * real lake format uses, so two driver processes against one
-    * warehouse can never interleave half-written manifests or
-    * silently clobber each other's commits
+    * process already committed that version) — the atomic-rename /
+    * metastore-swap commit rule every real lake format uses, so two
+    * driver processes against one warehouse can never interleave
+    * half-written manifests or silently clobber each other's commits
     * (CrossProcessCommitSpec forks a second JVM to prove it). */
   private[sources] val commitLock = new Object
 
   /** Thrown when a manifest publish loses the cross-process
     * create-if-absent race: another writer committed the same version
     * number first. The in-JVM [[commitLock]] makes this unreachable
-    * for same-process contention; callers with rebase logic
-    * (GroupWrite's OCC validation) catch it, re-read the head,
-    * re-validate, and retry — everyone else surfaces it as a loud
-    * retry-the-statement error. */
+    * for same-process contention. [[commit]] catches it, re-reads the
+    * head and re-runs the caller's validation against it, so every
+    * single-table commit rebases; it reaches a caller only after
+    * [[MaxCommitAttempts]] consecutive losses, or from the multi-table
+    * publishes that stage and link their manifests themselves. */
   final class CommitConflictException(msg: String)
     extends RuntimeException(msg)
 
@@ -108,19 +110,19 @@ object RowStore {
     Set("_group", "_rid", "_change", "_op", "_grp", "_zv",
       "_row_id", "_rowid")
 
-  /** Test seam: invoked at the top of every batch-write commit BEFORE
-    * the lock is taken. The concurrency spec points it at a latch so
+  /** Test seam: invoked at the top of every [[commit]], before it
+    * takes the lock. The concurrency spec points it at a latch so
     * two contending row-level operations both finish their scans
     * before either commits — the interleaving the OCC validation
     * exists for, made deterministic. Production value is a no-op. */
   @volatile private[graft] var preCommitHook: () => Unit = () => ()
 
-  /** Test seam: invoked after a batch-write commit has computed its
-    * next manifest from the head it read, immediately BEFORE the
-    * atomic publish. The cross-process spec points it at a wait so a
-    * SECOND PROCESS can commit inside the window — forcing the
-    * create-if-absent loss and the rebase-retry deterministically.
-    * Production value is a no-op. */
+  /** Test seam: invoked once per publish attempt of [[commit]], after
+    * it has computed the next manifest from the head it read and
+    * immediately BEFORE the atomic publish. The cross-process spec
+    * points it at a wait so a SECOND PROCESS can commit inside the
+    * window — forcing the create-if-absent loss and the rebase-retry
+    * deterministically. Production value is a no-op. */
   @volatile private[graft] var prePublishHook: () => Unit = () => ()
 
   /** Test seam: observes the java-serialized byte size of each MOR
@@ -995,7 +997,7 @@ object RowStore {
   @volatile private[graft] var clock: () => Long =
     () => System.currentTimeMillis()
 
-  /** The schema a version was committed under ([[writeManifest]]'s
+  /** The schema a version was committed under ([[stageManifest]]'s
     * `#schema` header) — what `VERSION/TIMESTAMP AS OF` reads resolve
     * against. None for manifests written before the header existed
     * (callers fall back to the current schema). */
@@ -1022,7 +1024,7 @@ object RowStore {
   }
 
   /** A version's recorded commit time (ms). Header line written by
-    * [[writeManifest]]; manifests from before the header existed fall
+    * [[stageManifest]]; manifests from before the header existed fall
     * back to file mtime. */
   def commitTimeMs(key: String, v: Int): Long = {
     val p = Paths.get(tableDir(key), s"v$v.manifest")
@@ -1308,15 +1310,58 @@ object RowStore {
     }
   }
 
-  /** Commit version `v`: stage + atomically publish. Throws
+  /** Stage + atomically publish version `v`. Throws
     * [[CommitConflictException]] if another writer (any process) won
-    * version `v` first — unreachable for in-JVM contention (callers
-    * hold [[commitLock]]). */
-  def writeManifest(key: String, v: Int, entries: Seq[FileEntry],
+    * version `v` first. */
+  private def writeManifest(key: String, v: Int, entries: Seq[FileEntry],
       extraHeader: Seq[String] = Seq.empty,
       rowIdFloor: Long = 0L): Unit =
     publishStaged(key, v,
       stageManifest(key, v, entries, extraHeader, rowIdFloor))
+
+  /** Publish attempts one [[commit]] makes: a bound, not a policy —
+    * losing this many in a row to other processes means a
+    * pathologically hot table, and the last [[CommitConflictException]]
+    * surfaces. */
+  val MaxCommitAttempts = 16
+
+  /** THE single-table commit: publishes the next version of `key` and
+    * returns its number. Runs [[preCommitHook]], takes [[commitLock]],
+    * reads the head (`cur`, its entries) and asks `next` for the new
+    * entry list; `next` validates against that head and throws
+    * ConcurrentModificationException on a real conflict. Then
+    * [[prePublishHook]] and the atomic publish of `cur + 1`. A publish
+    * lost to another process (the in-JVM lock rules out a same-process
+    * loss) re-reads the new head and calls `next` again, so every
+    * caller's validation re-runs against what it rebases onto.
+    * `extraHeader` lines ride in the manifest header. A caller that
+    * already holds the lock (streaming epochs, branch publishes, ALTER)
+    * runs [[preCommitHook]] under it. Multi-table
+    * publishes (Transact, publishBranches) stage and link their
+    * manifests themselves. */
+  def commit(key: String, extraHeader: Seq[String] = Seq.empty)(
+      next: (Int, Seq[FileEntry]) => Seq[FileEntry]): Int = {
+    @annotation.tailrec
+    def attempt(n: Int): Int = {
+      val cur = currentVersion(key)
+      val entries = next(cur, readManifest(key, cur))
+      prePublishHook()
+      val won =
+        try { writeManifest(key, cur + 1, entries, extraHeader); true }
+        catch { case _: CommitConflictException if n < MaxCommitAttempts => false }
+      if (won) cur + 1 else attempt(n + 1)
+    }
+    preCommitHook()
+    commitLock.synchronized(attempt(1))
+  }
+
+  /** Publish version 0 of a new table (CREATE, snapshot_table). There
+    * is no head to rebase onto: losing version 0 means another writer
+    * created the table, and [[CommitConflictException]] says so.
+    * `rowIdFloor` seeds the row-lineage counter (see [[stageManifest]]). */
+  def create(key: String, entries: Seq[FileEntry] = Seq.empty,
+      rowIdFloor: Long = 0L): Unit =
+    writeManifest(key, 0, entries, rowIdFloor = rowIdFloor)
 
   // ── BRANCHES (Iceberg's write-audit-publish surface): a branch
   // manifest is a STAGED next snapshot — full entry list plus the

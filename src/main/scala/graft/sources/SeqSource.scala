@@ -500,8 +500,7 @@ object SeqSourceQueries {
       // batches — 2.47 s at 32 cores vs 1.07 s at 8 driver-side, pure
       // per-partition state-store overhead on 10 keys. The totals are
       // batch- and partition-count-invariant.
-      val q = graft.streaming.StreamingOps.withStatePartitions(s,
-          graft.streaming.StreamingOps.StateParts) {
+      val q = graft.streaming.StreamingOps.withStatePartitions(s) {
         agg.writeStream.format("memory").queryName("st27_out")
           .outputMode("complete").trigger(Trigger.AvailableNow()).start()
       }

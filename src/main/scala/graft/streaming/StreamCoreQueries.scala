@@ -18,9 +18,13 @@ import StreamingOps._
   * [[StreamingOps]].
   */
 private[streaming] object StreamCoreQueries {
+  /** The RocksDB state store (transformWithState requires it). */
+  private val RocksDb = Map("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ── st01: tumbling 1-hour window aggregation over the event stream.
-    "st01_stream_hourly" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st01_stream_hourly" -> ((s, d) => withStatePartitions(s) {
       // file-source streams want a directory basePath; a glob that
       // matches exactly events.parquet keeps the source scoped to the
       // one table while satisfying that contract.
@@ -54,7 +58,7 @@ private[streaming] object StreamCoreQueries {
     // "within 30 min" adjacency, i.e. exactly sorted-gap sessions.
     // With a continuous trigger the interval list is what you'd persist
     // in GroupState (+ watermark timeout to emit and evict).
-    "st02_stream_sessionize" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st02_stream_sessionize" -> ((s, d) => withStatePartitions(s) {
       import s.implicits._
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
       val stream = s.readStream
@@ -82,7 +86,7 @@ private[streaming] object StreamCoreQueries {
     // mode emits only FINALIZED windows (window_end ≤ max event time −
     // delay; AvailableNow runs the closing no-data batch). The oracle
     // states exactly that closed-window semantics in batch SQL.
-    "st03_stream_watermark" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st03_stream_watermark" -> ((s, d) => withStatePartitions(s) {
       val stream = s.readStream
         .schema(eventsSchema)
         .parquet(s"$d/events.parque[t]")
@@ -105,7 +109,7 @@ private[streaming] object StreamCoreQueries {
     // streaming/batch sink unification §2.9 promises. The query's
     // RESULT is the sink read back from disk, so the oracle checks the
     // whole write-read round trip, partition-column typing included.
-    "st05_stream_sink_parity" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st05_stream_sink_parity" -> ((s, d) => withStatePartitions(s) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val outDir = graft.Scratch.dir(s, "graft_st05", tag)
       val stream = s.readStream
@@ -135,7 +139,7 @@ private[streaming] object StreamCoreQueries {
     // count: dedup state must collapse the doubled input exactly. At
     // scale the same plan runs with dropDuplicatesWithinWatermark so
     // the key state is evicted instead of growing unboundedly.
-    "st04_stream_dedup" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st04_stream_dedup" -> ((s, d) => withStatePartitions(s) {
       def src() = s.readStream
         .schema(eventsSchema)
         .parquet(s"$d/events.parque[t]")
@@ -157,7 +161,7 @@ private[streaming] object StreamCoreQueries {
     // The fixture's duplicates (the doubled union) arrive at identical
     // event times, so they always fall inside the 1-hour horizon and
     // the result still equals batch-distinct.
-    "st11_dedup_bounded_state" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st11_dedup_bounded_state" -> ((s, d) => withStatePartitions(s) {
       val agg = dedupedEventStream(s, d)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"))
@@ -174,53 +178,47 @@ private[streaming] object StreamCoreQueries {
     // arrives (exactly what st02's within-batch demo could not do).
     // transformWithState requires the RocksDB state store. Same
     // semantics and oracle as st02/q24.
-    "st12_transform_with_state" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st12_transform_with_state" -> ((s, d) => withStatePartitions(s, RocksDb) {
       import s.implicits._
       import org.apache.spark.sql.Encoders
       import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-      val pk = "spark.sql.streaming.stateStore.providerClass"
-      val old = s.conf.getOption(pk)
-      s.conf.set(pk,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val stream = s.readStream
-          .schema(eventsSchema)
-          .parquet(s"$d/events.parque[t]")
-          .select(col("event_id"), col("user_id"), unix_micros(col("ts").cast("timestamp")).as("ts_us"))
-          .as[Ev]
-        class SessionProcessor extends StatefulProcessor[Long, Ev, UserSessions] {
-          @transient private var state: ValueState[SessionIvState] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-            state = getHandle.getValueState[SessionIvState]("sessions",
-              Encoders.product[SessionIvState], TTLConfig.NONE)
-          override def handleInputRows(userId: Long, rows: Iterator[Ev],
-              tv: TimerValues): Iterator[UserSessions] = {
-            val prev = if (state.exists()) Option(state.get()) else None
-            val store = prev.fold(new StreamingOps.IntervalStore)(p =>
-              StreamingOps.IntervalStore.from(p.starts, p.ends))
-            val n = store.addAll(rows.map(_.ts_us), 1800L * 1000000L)
-            val total = prev.map(_.n_events).getOrElse(0L) + n
-            val (starts, ends) = store.toArrays
-            state.update(SessionIvState(total, starts, ends))
-            Iterator.single(UserSessions(userId, total, store.size.toLong))
-          }
+      val stream = s.readStream
+        .schema(eventsSchema)
+        .parquet(s"$d/events.parque[t]")
+        .select(col("event_id"), col("user_id"), unix_micros(col("ts").cast("timestamp")).as("ts_us"))
+        .as[Ev]
+      class SessionProcessor extends StatefulProcessor[Long, Ev, UserSessions] {
+        @transient private var state: ValueState[SessionIvState] = _
+        override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+          state = getHandle.getValueState[SessionIvState]("sessions",
+            Encoders.product[SessionIvState], TTLConfig.NONE)
+        override def handleInputRows(userId: Long, rows: Iterator[Ev],
+            tv: TimerValues): Iterator[UserSessions] = {
+          val prev = if (state.exists()) Option(state.get()) else None
+          val store = prev.fold(new StreamingOps.IntervalStore)(p =>
+            StreamingOps.IntervalStore.from(p.starts, p.ends))
+          val n = store.addAll(rows.map(_.ts_us), 1800L * 1000000L)
+          val total = prev.map(_.n_events).getOrElse(0L) + n
+          val (starts, ends) = store.toArrays
+          state.update(SessionIvState(total, starts, ends))
+          Iterator.single(UserSessions(userId, total, store.size.toLong))
         }
-        val out = stream.groupByKey(_.user_id)
-          .transformWithState(new SessionProcessor, TimeMode.None(), OutputMode.Append())
-        // the processor emits a CUMULATIVE row per key per micro-batch;
-        // an AvailableNow run over one fixture file happens to be a
-        // single batch, but if the source ever splits (maxFilesPerTrigger,
-        // multi-file fixtures) the append sink holds stale totals too —
-        // keep only each user's final row (n_events strictly grows per
-        // emitted row) instead of relying on the single-batch accident
-        // (round-3 advisor).
-        runToMemory(s, out.toDF(), "st12_out", "append")
-          .groupBy(col("user_id"))
-          .agg(max(struct(col("n_events"), col("n_sessions"))).as("last"))
-          .select(col("user_id"), col("last.n_events").as("n_events"),
-            col("last.n_sessions").as("n_sessions"))
-          .orderBy(col("user_id"))
-      } finally old.fold(s.conf.unset(pk))(v => s.conf.set(pk, v))
+      }
+      val out = stream.groupByKey(_.user_id)
+        .transformWithState(new SessionProcessor, TimeMode.None(), OutputMode.Append())
+      // the processor emits a CUMULATIVE row per key per micro-batch;
+      // an AvailableNow run over one fixture file happens to be a
+      // single batch, but if the source ever splits (maxFilesPerTrigger,
+      // multi-file fixtures) the append sink holds stale totals too —
+      // keep only each user's final row (n_events strictly grows per
+      // emitted row) instead of relying on the single-batch accident
+      // (round-3 advisor).
+      runToMemory(s, out.toDF(), "st12_out", "append")
+        .groupBy(col("user_id"))
+        .agg(max(struct(col("n_events"), col("n_sessions"))).as("last"))
+        .select(col("user_id"), col("last.n_events").as("n_events"),
+          col("last.n_sessions").as("n_sessions"))
+        .orderBy(col("user_id"))
     }),
 
     // ── st15: EVENT-TIME TIMERS in transformWithState — the capstone of
@@ -236,69 +234,63 @@ private[streaming] object StreamCoreQueries {
     // the sessions closed by THAT watermark emit; still-open sessions
     // are discarded with the query — and the oracle restates precisely
     // that subset (end + gap ≤ final watermark).
-    "st15_timer_sessions" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st15_timer_sessions" -> ((s, d) => withStatePartitions(s, RocksDb) {
       import s.implicits._
       import org.apache.spark.sql.Encoders
       import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-      val pk = "spark.sql.streaming.stateStore.providerClass"
-      val old = s.conf.getOption(pk)
-      s.conf.set(pk,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val gapUs = 1800L * 1000000L
-        val stream = s.readStream
-          .schema(eventsSchema)
-          .parquet(s"$d/events.parque[t]")
-          .select(col("event_id"), col("user_id"),
-            col("ts").cast("timestamp").as("ts"))
-          .withWatermark("ts", "1 hour")
-          .as[EvT]
-        class TimerSessions extends StatefulProcessor[Long, EvT, ClosedSession] {
-          @transient private var state: ValueState[SessionIvState] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-            state = getHandle.getValueState[SessionIvState]("iv",
-              Encoders.product[SessionIvState], TTLConfig.NONE)
-          private def micros(t: java.sql.Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-          override def handleInputRows(userId: Long, rows: Iterator[EvT],
-              tv: TimerValues): Iterator[ClosedSession] = {
-            val prev = if (state.exists()) Option(state.get()) else None
-            val store = prev.fold(new StreamingOps.IntervalStore)(p =>
-              StreamingOps.IntervalStore.from(p.starts, p.ends))
-            val n = store.addAll(rows.map(e => micros(e.ts)), gapUs)
-            val (starts, ends) = store.toArrays
-            state.update(SessionIvState(
-              prev.map(_.n_events).getOrElse(0L) + n, starts, ends))
-            // one timer per open session at its close point; intervals
-            // merge as events arrive, so re-derive the timer set from
-            // the current store (stale timers fire harmlessly: expiry
-            // emits only what the watermark really closed)
-            getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-            ends.foreach(e => getHandle.registerTimer((e + gapUs) / 1000L + 1))
-            Iterator.empty
-          }
-          override def handleExpiredTimer(userId: Long, tv: TimerValues,
-              info: ExpiredTimerInfo): Iterator[ClosedSession] = {
-            if (!state.exists()) return Iterator.empty
-            val p = state.get()
-            // timers live in MILLISECOND granularity; compare close
-            // points at that granularity too, or a sub-ms close/watermark
-            // skew strands a session whose only timer already fired
-            val wmMs = tv.getCurrentWatermarkInMs
-            val (closed, open) = p.starts.zip(p.ends)
-              .partition { case (_, e) => (e + gapUs) / 1000L < wmMs }
-            if (open.isEmpty) state.clear()
-            else state.update(
-              SessionIvState(p.n_events, open.map(_._1), open.map(_._2)))
-            closed.iterator.map { case (st, en) => ClosedSession(userId, st, en) }
-          }
+      val gapUs = 1800L * 1000000L
+      val stream = s.readStream
+        .schema(eventsSchema)
+        .parquet(s"$d/events.parque[t]")
+        .select(col("event_id"), col("user_id"),
+          col("ts").cast("timestamp").as("ts"))
+        .withWatermark("ts", "1 hour")
+        .as[EvT]
+      class TimerSessions extends StatefulProcessor[Long, EvT, ClosedSession] {
+        @transient private var state: ValueState[SessionIvState] = _
+        override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+          state = getHandle.getValueState[SessionIvState]("iv",
+            Encoders.product[SessionIvState], TTLConfig.NONE)
+        private def micros(t: java.sql.Timestamp): Long =
+          t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+        override def handleInputRows(userId: Long, rows: Iterator[EvT],
+            tv: TimerValues): Iterator[ClosedSession] = {
+          val prev = if (state.exists()) Option(state.get()) else None
+          val store = prev.fold(new StreamingOps.IntervalStore)(p =>
+            StreamingOps.IntervalStore.from(p.starts, p.ends))
+          val n = store.addAll(rows.map(e => micros(e.ts)), gapUs)
+          val (starts, ends) = store.toArrays
+          state.update(SessionIvState(
+            prev.map(_.n_events).getOrElse(0L) + n, starts, ends))
+          // one timer per open session at its close point; intervals
+          // merge as events arrive, so re-derive the timer set from
+          // the current store (stale timers fire harmlessly: expiry
+          // emits only what the watermark really closed)
+          getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
+          ends.foreach(e => getHandle.registerTimer((e + gapUs) / 1000L + 1))
+          Iterator.empty
         }
-        val out = stream.groupByKey(_.user_id)
-          .transformWithState(new TimerSessions, TimeMode.EventTime(),
-            OutputMode.Append())
-        runToMemory(s, out.toDF(), "st15_out", "append")
-          .orderBy(col("user_id"), col("start_us"))
-      } finally old.fold(s.conf.unset(pk))(v => s.conf.set(pk, v))
+        override def handleExpiredTimer(userId: Long, tv: TimerValues,
+            info: ExpiredTimerInfo): Iterator[ClosedSession] = {
+          if (!state.exists()) return Iterator.empty
+          val p = state.get()
+          // timers live in MILLISECOND granularity; compare close
+          // points at that granularity too, or a sub-ms close/watermark
+          // skew strands a session whose only timer already fired
+          val wmMs = tv.getCurrentWatermarkInMs
+          val (closed, open) = p.starts.zip(p.ends)
+            .partition { case (_, e) => (e + gapUs) / 1000L < wmMs }
+          if (open.isEmpty) state.clear()
+          else state.update(
+            SessionIvState(p.n_events, open.map(_._1), open.map(_._2)))
+          closed.iterator.map { case (st, en) => ClosedSession(userId, st, en) }
+        }
+      }
+      val out = stream.groupByKey(_.user_id)
+        .transformWithState(new TimerSessions, TimeMode.EventTime(),
+          OutputMode.Append())
+      runToMemory(s, out.toDF(), "st15_out", "append")
+        .orderBy(col("user_id"), col("start_us"))
     }),
 
     // ── st10: SLIDING (hopping) windows — 1-hour windows every 15
@@ -308,7 +300,7 @@ private[streaming] object StreamCoreQueries {
     // row per (window, type) — the fan-out never crosses the wire
     // materialized). Epoch-aligned starts make the DuckDB restatement
     // a generate_series(0,3) cross join.
-    "st10_stream_sliding" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st10_stream_sliding" -> ((s, d) => withStatePartitions(s) {
       val stream = s.readStream
         .schema(eventsSchema)
         .parquet(s"$d/events.parque[t]")
@@ -330,7 +322,7 @@ private[streaming] object StreamCoreQueries {
     // restart-level exactly-once — the per-batch idempotence of a
     // foreachBatch retry is the sink's job, e.g. overwrite-by-batch-id;
     // here each source file is exactly one committed batch.)
-    "st09_checkpoint_recovery" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st09_checkpoint_recovery" -> ((s, d) => withStatePartitions(s) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val outDir = graft.Scratch.dir(s, "graft_st09", tag)
       val ckpt = graft.Scratch.dir(s, "graft_st09_ckpt", tag)
@@ -365,36 +357,26 @@ private[streaming] object StreamCoreQueries {
     // BATCH SIZE. The swap must be result-invariant, so st13 runs the
     // st04/st07 dedup semantics against the same oracle, with a real
     // (per-invocation) checkpoint dir since changelogs need one.
-    "st13_changelog_ckpt" -> ((s, d) => withStatePartitions(s, StateParts) {
-      val pk = "spark.sql.streaming.stateStore.providerClass"
-      val ck = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      val oldP = s.conf.getOption(pk)
-      val oldC = s.conf.getOption(ck)
-      s.conf.set(pk,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set(ck, "true")
-      try {
-        def src() = s.readStream
-          .schema(eventsSchema)
-          .parquet(s"$d/events.parque[t]")
-          .select(col("event_id"), col("event_type"))
-        val agg = src().union(src())
-          .dropDuplicates("event_id")
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"))
-        // fresh checkpoint per invocation: reusing one would make the
-        // second run (bench's min-of-2) a no-op against an already-
-        // committed offset log and drain an empty memory table
-        val tag = d.replaceAll("[^A-Za-z0-9]", "_") +
-          "_" + st13Runs.incrementAndGet()
-        val ckpt = graft.Scratch.dir(s, "graft_st13_ckpt", tag)
-        runToMemory(s, agg, "st13_out", "complete",
-          Map("checkpointLocation" -> ckpt))
-          .orderBy(col("event_type"))
-      } finally {
-        oldP.fold(s.conf.unset(pk))(v => s.conf.set(pk, v))
-        oldC.fold(s.conf.unset(ck))(v => s.conf.set(ck, v))
-      }
+    "st13_changelog_ckpt" -> ((s, d) => withStatePartitions(s,
+        RocksDb + ("spark.sql.streaming.stateStore.rocksdb." +
+          "changelogCheckpointing.enabled" -> "true")) {
+      def src() = s.readStream
+        .schema(eventsSchema)
+        .parquet(s"$d/events.parque[t]")
+        .select(col("event_id"), col("event_type"))
+      val agg = src().union(src())
+        .dropDuplicates("event_id")
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"))
+      // fresh checkpoint per invocation: reusing one would make the
+      // second run (bench's min-of-2) a no-op against an already-
+      // committed offset log and drain an empty memory table
+      val tag = d.replaceAll("[^A-Za-z0-9]", "_") +
+        "_" + st13Runs.incrementAndGet()
+      val ckpt = graft.Scratch.dir(s, "graft_st13_ckpt", tag)
+      runToMemory(s, agg, "st13_out", "complete",
+        Map("checkpointLocation" -> ckpt))
+        .orderBy(col("event_type"))
     }),
 
     // ── st07: the st04 stateful dedup on the RocksDB state store. The
@@ -406,22 +388,16 @@ private[streaming] object StreamCoreQueries {
     // must be RESULT-INVARIANT, so st07 runs the same dedup semantics
     // as st04 against the same oracle — a differential gate over the
     // state backend itself.
-    "st07_rocksdb_dedup" -> ((s, d) => withStatePartitions(s, StateParts) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val old = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        def src() = s.readStream
-          .schema(eventsSchema)
-          .parquet(s"$d/events.parque[t]")
-          .select(col("event_id"), col("event_type"))
-        val agg = src().union(src())
-          .dropDuplicates("event_id")
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"))
-        runToMemory(s, agg, "st07_out", "complete").orderBy(col("event_type"))
-      } finally old.fold(s.conf.unset(key))(v => s.conf.set(key, v))
+    "st07_rocksdb_dedup" -> ((s, d) => withStatePartitions(s, RocksDb) {
+      def src() = s.readStream
+        .schema(eventsSchema)
+        .parquet(s"$d/events.parque[t]")
+        .select(col("event_id"), col("event_type"))
+      val agg = src().union(src())
+        .dropDuplicates("event_id")
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"))
+      runToMemory(s, agg, "st07_out", "complete").orderBy(col("event_type"))
     }),
 
     // ── st17: UPDATE output mode over a genuinely MULTI-BATCH run —
@@ -436,7 +412,7 @@ private[streaming] object StreamCoreQueries {
     // monotonically per key, making "last" = max(n)). Update is what a
     // real dashboard sink wants: per-batch deltas without append's
     // wait-for-watermark latency or complete's full-result rewrite.
-    "st17_update_mode" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st17_update_mode" -> ((s, d) => withStatePartitions(s) {
       val agg = multiBatchEventStream(s, d)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("user_id")).as("user_sum"))
@@ -459,7 +435,7 @@ private[streaming] object StreamCoreQueries {
     // really is recomputed and re-emitted across ~4 micro-batches —
     // over the single-file fixture the "per-batch recompute" would be
     // one batch, i.e. a batch query in disguise.
-    "st18_stream_topk" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st18_stream_topk" -> ((s, d) => withStatePartitions(s) {
       val top = multiBatchEventStream(s, d)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"))
@@ -480,7 +456,7 @@ private[streaming] object StreamCoreQueries {
     // watermark-closed subset at the watermark's MILLISECOND granularity
     // (event-time stats are tracked in ms; the fixture's µs components
     // make that truncation visible, st15's lesson).
-    "st19_stream_session_window" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st19_stream_session_window" -> ((s, d) => withStatePartitions(s) {
       val stream = s.readStream
         .schema(eventsSchema)
         .parquet(s"$d/events.parque[t]")
@@ -508,7 +484,7 @@ private[streaming] object StreamCoreQueries {
     // propagates the watermark through. An emitted hour closed under
     // the watermark, which closes all four of its quarters too, so the
     // batch restatement needs no per-quarter emission modeling.
-    "st20_chained_stream_aggs" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st20_chained_stream_aggs" -> ((s, d) => withStatePartitions(s) {
       val stream = s.readStream
         .schema(eventsSchema)
         .parquet(s"$d/events.parque[t]")
@@ -536,7 +512,7 @@ private[streaming] object StreamCoreQueries {
     // support this took an intermediate sink and a second query, which
     // doubled latency and made the dedup horizon and the window
     // closure drift independently.
-    "st23_dedup_then_window" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st23_dedup_then_window" -> ((s, d) => withStatePartitions(s) {
       val agg = dedupedEventStream(s, d)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
@@ -557,7 +533,7 @@ private[streaming] object StreamCoreQueries {
     // query itself. Listener events ride an async bus: the
     // terminated-event latch (matched by query id captured at start)
     // is the only correct wait; sleeping after awaitTermination races.
-    "st24_listener_metrics" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st24_listener_metrics" -> ((s, d) => withStatePartitions(s) {
       import s.implicits._
       import org.apache.spark.sql.streaming.StreamingQueryListener
       import java.util.concurrent.{CountDownLatch, TimeUnit}
@@ -600,7 +576,7 @@ private[streaming] object StreamCoreQueries {
     // cross-source coupling is the whole point: emitting click windows
     // on the click watermark alone would silently drop late purchases.
     // The oracle restates exactly this LEAST() policy.
-    "st28_union_watermarks" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st28_union_watermarks" -> ((s, d) => withStatePartitions(s) {
       def src(tpe: String, delay: String) = s.readStream
         .schema(eventsSchema)
         .parquet(s"$d/events.parque[t]")
@@ -669,7 +645,7 @@ private[streaming] object StreamCoreQueries {
     // of changes, which is the whole time-travel contract.
     // four_versions pins that the drain really committed 4 snapshots
     // (otherwise "v1" could be the final table and the check vacuous).
-    "st30_time_travel" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st30_time_travel" -> ((s, d) => withStatePartitions(s) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val src = graft.Scratch.dir(s, "graft_st30_src", tag)
       val stateDir = graft.Scratch.dir(s, "graft_st30_state", tag)
@@ -756,7 +732,7 @@ private[streaming] object StreamCoreQueries {
     // stream's own contract — old ∪ earlier-batch — which the doubled
     // corpus makes coincide. multi_batch pins the drain really split
     // (≥2 batches), else the incremental path degenerates to d15.
-    "st32_stream_dedup" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st32_stream_dedup" -> ((s, d) => withStatePartitions(s) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val src = graft.Scratch.dir(s, "graft_st32_src", tag)
       val storeDir = graft.Scratch.dir(s, "graft_st32_store", tag)

@@ -28,7 +28,7 @@ private[streaming] object StreamDmlQueries {
     // each other. (Production adds a batchId guard for retry
     // idempotence, st25's pointer pattern; AvailableNow drains don't
     // retry.)
-    "st31_stream_merge" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st31_stream_merge" -> ((s, d) => withStatePartitions(s) {
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.user_state")
       s.sql("CREATE TABLE graft_dml.ns.user_state (user_id BIGINT, " +
         "n_events BIGINT, last_event_id BIGINT, last_ts_us BIGINT)")
@@ -77,7 +77,7 @@ private[streaming] object StreamDmlQueries {
     // replay-cost invariant; entry count tracks touched files, never
     // batches × deletes). The final state is a pure relational fold
     // the oracle restates from raw orders.
-    "st39_stream_merge_dv" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st39_stream_merge_dv" -> ((s, d) => withStatePartitions(s) {
       import graft.sources.RowStore
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val src = graft.Scratch.dir(s, "graft_st39_src", tag)
@@ -177,7 +177,7 @@ private[streaming] object StreamDmlQueries {
     // count 0) and the per-commit stepping really happened
     // (multi_batch, ≥3 batches). The oracle restates the final view
     // from raw orders with the lifecycle applied relationally.
-    "st41_stream_ivm" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st41_stream_ivm" -> ((s, d) => withStatePartitions(s) {
       val lifecycleTable =
         graft.sources.RowCatalogQueries.sharedLifecycle(s, d, mor = false)
       val preV = graft.sources.RowStore.currentVersion(lifecycleTable)
@@ -217,7 +217,7 @@ private[streaming] object StreamDmlQueries {
         .orderBy(col("cat"))
     }),
 
-    "st33_stream_changes" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st33_stream_changes" -> ((s, d) => withStatePartitions(s) {
       val lifecycleTable =
         graft.sources.RowCatalogQueries.sharedLifecycle(s, d, mor = false)
       // batch k is attributed to version k+1 below, and the oracle
@@ -264,7 +264,7 @@ private[streaming] object StreamDmlQueries {
     // from version 1 yields exactly two batches, version-tagged, each
     // restated from raw orders by the oracle. multi_batch pins the
     // per-version stepping really happened.
-    "st38_stream_cdc" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st38_stream_cdc" -> ((s, d) => withStatePartitions(s) {
       graft.Tables(s, d, "orders").createOrReplaceTempView("st38_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.scdc")
       s.sql("CREATE TABLE graft_dml.ns.scdc " +
@@ -323,7 +323,7 @@ private[streaming] object StreamDmlQueries {
     // batches whose contents are each commit's rows, version-tagged,
     // which the oracle restates from raw orders (epoch = key band =
     // batch — any boundary drift breaks the hash).
-    "st34_stream_table" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st34_stream_table" -> ((s, d) => withStatePartitions(s) {
       graft.Tables(s, d, "orders").createOrReplaceTempView("st34_orders")
       // the oracle restates k with the LITERAL 1e7 epoch offset, so
       // unlike q115 the offset cannot be derived at run time; assert
@@ -380,7 +380,7 @@ private[streaming] object StreamDmlQueries {
     // the FULL grown corpus computed in-plan (a streamed vector lost
     // by the upsert would break recall, not just a count).
     // multi_batch pins that the growth really happened incrementally.
-    "st35_stream_ann_upsert" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st35_stream_ann_upsert" -> ((s, d) => withStatePartitions(s) {
       import graft.operators.Similarity
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val src = graft.Scratch.dir(s, "graft_st35_src", tag)
@@ -471,7 +471,7 @@ private[streaming] object StreamDmlQueries {
     // double-committed epoch, or a catalog-read drift all break the
     // hash. The multi-epoch contract is a loud require (the output
     // shape is pinned to the oracle's four columns).
-    "st40_stream_embedding_table" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st40_stream_embedding_table" -> ((s, d) => withStatePartitions(s) {
       import graft.operators.Similarity
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val src = graft.Scratch.dir(s, "graft_st40_src", tag)
@@ -528,7 +528,7 @@ private[streaming] object StreamDmlQueries {
     // exactly-once; RowCatalogSpec pins the replayed-commit no-op).
     // Four mtime-ordered chunks at 2 files/trigger force a genuinely
     // multi-epoch drain; the oracle restates the full slice.
-    "st36_stream_table_write" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st36_stream_table_write" -> ((s, d) => withStatePartitions(s) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val src = graft.Scratch.dir(s, "graft_st36_src", tag)
       graft.Scratch.materializeOnce(src) {
@@ -602,7 +602,7 @@ private[streaming] object StreamDmlQueries {
     // restates silver straight from raw events — any loss, duplicate,
     // or double-application anywhere in the two-hop chain shifts a
     // per-user count the hash will catch.
-    "st37_medallion" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st37_medallion" -> ((s, d) => withStatePartitions(s) {
       import graft.sources.RowStore
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       // deterministic multi-epoch source: 4 mtime-ordered chunks of

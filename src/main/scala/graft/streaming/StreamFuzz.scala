@@ -172,7 +172,7 @@ object StreamFuzz {
     // local[32], which made st42 cost 2× MORE at 32 cores than 8
     // (3.17 vs 1.67 s driver-side). Results are partition-count
     // independent (the in-run batch/model differentials stay live).
-    val q = StreamingOps.withStatePartitions(s, StreamingOps.StateParts) {
+    val q = StreamingOps.withStatePartitions(s) {
       build(p, s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(glob), dim(s))
         .writeStream.outputMode(p.mode).format("memory").queryName(qn)

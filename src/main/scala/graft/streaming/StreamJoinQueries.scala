@@ -22,7 +22,7 @@ private[streaming] object StreamJoinQueries {
     // state-cleanup contract the time constraint exists for. Inner
     // join emits matches as they meet; the oracle is the batch
     // self-join restatement.
-    "st06_stream_join" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st06_stream_join" -> ((s, d) => withStatePartitions(s) {
       val (clicks, purchases) = clickPurchaseStreams(s, d)
       val joined = clicks.join(purchases, conversionWindow)
         .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"))
@@ -40,7 +40,7 @@ private[streaming] object StreamJoinQueries {
     // clicks qualify iff c_ts + 30 min < min(max c_ts, max p_ts) − 1 h
     // (the final global watermark; AvailableNow's closing no-data batch
     // advances it).
-    "st14_stream_left_join" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st14_stream_left_join" -> ((s, d) => withStatePartitions(s) {
       val (clicks, purchases) = clickPurchaseStreams(s, d)
       val joined = clicks.join(purchases, conversionWindow, "left_outer")
         .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"))
@@ -56,7 +56,7 @@ private[streaming] object StreamJoinQueries {
     // 100 TB/day ingest; only the downstream aggregation keeps state.
     // (The dim snapshot is read once per (re)start; a slowly-changing
     // dim is a restart or a foreachBatch re-read away.)
-    "st08_stream_static_join" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st08_stream_static_join" -> ((s, d) => withStatePartitions(s) {
       val stream = s.readStream
         .schema(eventsSchema)
         .parquet(s"$d/events.parque[t]")
@@ -82,7 +82,7 @@ private[streaming] object StreamJoinQueries {
     // stream-static shapes (inner/left-outer/semi/anti with the
     // static side on the right) — this pins the anti contract:
     // unmatched-only, stream rows never duplicated or buffered.
-    "st16_stream_anti_join" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st16_stream_anti_join" -> ((s, d) => withStatePartitions(s) {
       val stream = s.readStream
         .schema(eventsSchema)
         .parquet(s"$d/events.parque[t]")
@@ -110,7 +110,7 @@ private[streaming] object StreamJoinQueries {
     // condition's time bounds, and rows still inside their horizon at
     // stream end are discarded unemitted; the oracle restates both
     // closed subsets explicitly.
-    "st21_stream_full_join" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st21_stream_full_join" -> ((s, d) => withStatePartitions(s) {
       val (clicks, purchases) = clickPurchaseStreams(s, d)
       val joined = clicks.join(purchases, conversionWindow, "full_outer")
         .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
@@ -127,7 +127,7 @@ private[streaming] object StreamJoinQueries {
     // right-outer this completes all five stream-stream join types
     // Spark supports (inner st06 / left-outer st14 / right-outer st26 /
     // full-outer st21 / left-semi).
-    "st22_stream_semi_join" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st22_stream_semi_join" -> ((s, d) => withStatePartitions(s) {
       val (clicks, purchases) = clickPurchaseStreams(s, d)
       val converted = clicks.join(purchases, conversionWindow, "left_semi")
         .select(col("c_user").as("user_id"), col("click_id"))
@@ -141,7 +141,7 @@ private[streaming] object StreamJoinQueries {
     // [p_ts − 30min, p_ts], so the last eligible click's event time IS
     // p_ts — st21's asymmetry, isolated on the right side). Completes
     // the five supported stream-stream join types.
-    "st26_stream_right_join" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st26_stream_right_join" -> ((s, d) => withStatePartitions(s) {
       val (clicks, purchases) = clickPurchaseStreams(s, d)
       val joined = clicks.join(purchases, conversionWindow, "right_outer")
         .select(col("p_user").as("user_id"), col("click_id"), col("purchase_id"))
@@ -162,7 +162,7 @@ private[streaming] object StreamJoinQueries {
     // q51 is this operator's batch half; st05 is the append-only sink
     // half. The argmax fold is 128-bit (decimal / HUGEINT): µs·10¹² +
     // event_id overflows int64.
-    "st25_stream_upsert" -> ((s, d) => withStatePartitions(s, StateParts) {
+    "st25_stream_upsert" -> ((s, d) => withStatePartitions(s) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val stateDir = graft.Scratch.dir(s, "graft_st25", tag)
       // AtomicReference (not a captured var): written on the stream

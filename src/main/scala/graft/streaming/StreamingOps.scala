@@ -43,29 +43,23 @@ object StreamingOps {
   /** Typed event for the stateful path (µs timestamp). */
   case class Ev(event_id: Long, user_id: Long, ts_us: Long)
 
-  /** Run `body` with `spark.sql.shuffle.partitions` scoped to `n`:
-    * stateful streaming queries size their STATE partitioning here.
-    * Every state partition carries a fixed per-batch cost (delta +
-    * snapshot files, store maintenance) regardless of how many keys it
-    * holds, so state partitions should track key volume and
-    * throughput, not core count — measured on the stream-stream join:
-    * 32 partitions 16.2s vs 8 partitions 4.0s for ~1500 keys at sf0.1.
-    * A production deployment sizes this once at first start (the
-    * partitioning is frozen into the checkpoint thereafter). */
-  private[graft] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val old = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", old)
-  }
+  /** State-partition count: sized to KEY VOLUME, not core count —
+    * 8 suits the harness's 10³–10⁴ key cardinality. Every state
+    * partition carries a fixed per-batch cost (delta + snapshot files,
+    * store maintenance) regardless of how many keys it holds —
+    * measured on the stream-stream join: 32 partitions 16.2s vs 8
+    * partitions 4.0s for ~1500 keys at sf0.1. A production deployment
+    * sizes this once at first start (the partitioning is frozen into
+    * the checkpoint thereafter). */
+  private[graft] val StateParts = 8
 
-  /** State-partition count: sized to KEY VOLUME, not core count (the
-    * withStatePartitions scale note above) — 8 suits the harness's
-    * 10³–10⁴ key cardinality; a production deployment overrides via
-    * SPARK_GRAFT_STATE_PARTS when it first starts a query (the
-    * partitioning freezes into the checkpoint thereafter). Env-
-    * parameterized for the A/B measurements in OPTIMIZATION_r16.md. */
-  private[graft] val StateParts =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_PARTS", "8").toInt
+  /** Run `body` with `spark.sql.shuffle.partitions` scoped to
+    * [[StateParts]] — stateful streaming queries size their STATE
+    * partitioning here — plus `more`, a row's own state-store confs. */
+  private[graft] def withStatePartitions[T](s: SparkSession,
+      more: Map[String, String] = Map.empty)(body: => T): T =
+    graft.GraftSession.withConfs(s,
+      more + ("spark.sql.shuffle.partitions" -> StateParts.toString))(body)
 
   /** st13 invocation counter — each run gets its own checkpoint dir. */
   private[streaming] val st13Runs = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -1,0 +1,133 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.{RowStore, RowStoreOps}
+
+/** Every single-table version is published by [[RowStore.commit]]:
+  * statements and procedures outside the SQL write path run the same
+  * two commit hooks once per version they publish, a publish that
+  * keeps losing gives up after [[RowStore.MaxCommitAttempts]]
+  * attempts, and no other source file invokes the hooks. */
+class CommitPathSpec extends AnyFunSuite {
+  lazy val spark = SparkSuite.spark
+
+  /** Runs `body` with both hooks counting; returns (preCommit,
+    * prePublish) calls. */
+  private def counted(body: => Unit): (Int, Int) = {
+    val pre = new AtomicInteger(0)
+    val pub = new AtomicInteger(0)
+    RowStore.preCommitHook = () => { pre.incrementAndGet(); () }
+    RowStore.prePublishHook = () => { pub.incrementAndGet(); () }
+    try body
+    finally {
+      RowStore.preCommitHook = () => ()
+      RowStore.prePublishHook = () => ()
+    }
+    (pre.get(), pub.get())
+  }
+
+  test("ALTER, rollback, add_files, eq-delete, truncate and a streaming write each publish once through the hooks") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types._
+    val t = "graft_dml.spec.cpath"
+    val m = "graft_dml.spec.cpath_mor"
+    s.sql(s"DROP TABLE IF EXISTS $t")
+    s.sql(s"DROP TABLE IF EXISTS $m")
+    s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
+    s.sql(s"INSERT INTO $t VALUES (1, 10), (2, 20)")
+    s.sql(s"CREATE TABLE $m (k BIGINT, v BIGINT) " +
+      "TBLPROPERTIES ('format'='mor')")
+    s.sql(s"INSERT INTO $m VALUES (1, 10), (2, 20), (3, 30)")
+    val src = Scratch.dir(s, "graft_cpath_src", "a")
+    val ext = Scratch.dir(s, "graft_cpath_ext", "a")
+    val ckpt = Scratch.dir(s, "graft_cpath_ckpt", "a")
+    Scratch.deleteTree(ckpt)
+    Seq((5L, 50L)).toDF("k", "v").coalesce(1)
+      .write.mode("overwrite").parquet(src)
+    Seq((100L, 1L)).toDF("k", "v").coalesce(1)
+      .write.mode("overwrite").parquet(ext)
+    val sch = StructType(Seq(StructField("k", LongType),
+      StructField("v", LongType)))
+
+    def once(table: String, what: String)(op: => Unit): Unit = {
+      val before = RowStore.currentVersion(table)
+      val (pre, pub) = counted(op)
+      assert(RowStore.currentVersion(table) == before + 1,
+        s"$what must publish exactly one version")
+      assert((pre, pub) == ((1, 1)),
+        s"$what: preCommit/prePublish calls = ($pre, $pub), want (1, 1)")
+    }
+    once(t, "streaming write") {
+      s.readStream.schema(sch).parquet(src)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .toTable(t).awaitTermination()
+    }
+    once(t, "add_files") { RowStoreOps.addFiles(t, ext); () }
+    assert(s.table(t).count() == 4)
+    once(t, "rollback") { RowStoreOps.rollback(t, 1); () }
+    assert(s.table(t).orderBy("k").collect().map(_.getLong(0)).toSeq ==
+      Seq(1L, 2L))
+    once(t, "ALTER") { s.sql(s"ALTER TABLE $t ADD COLUMNS (w BIGINT)"); () }
+    once(t, "truncate") { s.sql(s"DELETE FROM $t"); () }
+    assert(s.table(t).count() == 0)
+    once(m, "equality delete") {
+      RowStoreOps.equalityDelete(s, m, Seq(2L).toDF("k")); ()
+    }
+    assert(s.table(m).orderBy("k").collect().map(_.getLong(0)).toSeq ==
+      Seq(1L, 3L))
+    s.sql(s"DROP TABLE $t")
+    s.sql(s"DROP TABLE $m")
+  }
+
+  test("a publish that always loses gives up after the attempt bound") {
+    val s = spark
+    val t = "graft_dml.spec.cpath_lose"
+    s.sql(s"DROP TABLE IF EXISTS $t")
+    s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
+    s.sql(s"INSERT INTO $t VALUES (1, 10)")
+    val before = RowStore.versions(t)
+    val saved = RowStore.publisher
+    RowStore.publisher = new RowStore.ManifestPublisher {
+      def publishIfAbsent(target: Path, staged: Path): Unit = {
+        Files.deleteIfExists(staged)
+        throw new java.nio.file.FileAlreadyExistsException(target.toString)
+      }
+    }
+    val (_, pub) =
+      try counted {
+        intercept[RowStore.CommitConflictException] {
+          RowStoreOps.rollback(t, 0)
+        }
+        ()
+      } finally RowStore.publisher = saved
+    assert(pub == RowStore.MaxCommitAttempts,
+      s"one prePublish call per attempt, saw $pub")
+    assert(RowStore.versions(t) == before, "nothing may publish")
+    s.sql(s"DROP TABLE $t")
+  }
+
+  test("only RowStore runs the commit hooks") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repository root: $main")
+    val files = Files.walk(main).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "RowStore.scala").toSeq
+    assert(files.size > 50)
+    val hits = for {
+      p: Path <- files
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      h <- Seq("preCommitHook()", "prePublishHook()") if line.contains(h)
+    } yield s"$p:${i + 1}: $h"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+}

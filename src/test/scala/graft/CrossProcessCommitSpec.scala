@@ -25,7 +25,10 @@ import graft.sources.RowStore
   *   3. the OVERLAPPING variant refuses instead of silently dropping
   *      the other process's update: the retry's re-validation throws
   *      ConcurrentModificationException, and a plain re-run of the
-  *      statement then succeeds on top of the winner.
+  *      statement then succeeds on top of the winner;
+  *   4. a commit outside the SQL write path (add_files) rebases the
+  *      same way, because every single-table commit goes through
+  *      [[RowStore.commit]].
   */
 class CrossProcessCommitSpec extends AnyFunSuite {
 
@@ -114,6 +117,45 @@ class CrossProcessCommitSpec extends AnyFunSuite {
     } finally {
       System.clearProperty("graft.warehouse.root")
       Scratch.deleteTree(root)
+    }
+  }
+
+  test("add_files loses its publish to another process, then rebases") {
+    val s = SparkSuite.spark
+    val root = Files.createTempDirectory("graft-xproc").toString
+    val ext = Files.createTempDirectory("graft-xproc-ext").toString
+    System.setProperty("graft.warehouse.root", root)
+    try {
+      s.sql("DROP TABLE IF EXISTS graft_dml.xp.t")
+      s.sql("CREATE TABLE graft_dml.xp.t (k BIGINT, v BIGINT)")
+      s.sql("INSERT INTO graft_dml.xp.t VALUES (1, 10), (2, 20)")
+      import s.implicits._
+      Seq((100L, 1L), (101L, 2L)).toDF("k", "v").coalesce(1)
+        .write.mode("overwrite").parquet(s"$ext/p")
+      val key = "graft_dml.xp.t"
+      val v0 = RowStore.currentVersion(key)
+      // the worker's INSERT takes v0+1 inside our read→publish window
+      val fires = new AtomicInteger(0)
+      RowStore.prePublishHook = () => {
+        if (fires.incrementAndGet() == 1)
+          awaitOk(forkWorker(root, Seq(
+            "INSERT INTO graft_dml.xp.t VALUES (3, 30)")))
+      }
+      try graft.sources.RowStoreOps.addFiles(key, ext)
+      finally RowStore.prePublishHook = () => ()
+      assert(fires.get() == 2,
+        s"expected exactly one publish loss + one retry, saw ${fires.get()}" +
+          " publish attempts")
+      assert(RowStore.versions(key) == (0 to v0 + 2),
+        s"linear versions: ${RowStore.versions(key)}")
+      val got = s.table(key).orderBy("k").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got == Seq((1L, 10L), (2L, 20L), (3L, 30L), (100L, 1L),
+        (101L, 2L)), s"both the insert and the import landed once: $got")
+    } finally {
+      System.clearProperty("graft.warehouse.root")
+      Scratch.deleteTree(root)
+      Scratch.deleteTree(ext)
     }
   }
 

@@ -897,7 +897,7 @@ class RowCatalogSpec extends AnyFunSuite {
       (0 until 20).map(i => s"($i, ${i * 10})").mkString(", "))
     s.sql("INSERT INTO graft_dml.spec.sb VALUES " +
       (0 until 20 by 2).map(i => s"($i, ${i * 100})").mkString(", "))
-    graft.sources.RowCatalogQueries.withScopedConfs(s, Map(
+    graft.GraftSession.withConfs(s, Map(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")) {
