@@ -765,11 +765,7 @@ object RowStoreOps {
       // chain-safe by the time its children are considered.)
       val retainedSet = retained.toSet
       retained.foreach { v =>
-        val lines = Files.readAllLines(
-          Paths.get(RowStore.tableDir(table), s"v$v.manifest")).asScala
-        lines.collectFirst { case l if l.startsWith("#parent\t") =>
-          l.stripPrefix("#parent\t").toInt }
-          .filterNot(retainedSet)
+        RowStore.parentVersion(table, v).filterNot(retainedSet)
           .foreach(_ => RowStore.materializeManifest(table, v))
       }
       // staged branch manifests keep their files alive too — VACUUM
@@ -787,13 +783,10 @@ object RowStoreOps {
         RowStore.purgeManifestCache(table, v)
       }
       val dir = Paths.get(RowStore.dataDir(table))
-      val stream = Files.list(dir)
       // data files only — Hadoop's LocalFileSystem writes hidden
       // `.<name>.crc` sidecars, which ride along with their data file
-      val dead = try stream.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => !n.startsWith(".") && !keep(n)).toSeq
-      finally stream.close()
+      val dead = RowStore.listNames(dir)
+        .filter(n => !n.startsWith(".") && !keep(n))
       dead.foreach { n =>
         Files.deleteIfExists(dir.resolve(n))
         Files.deleteIfExists(dir.resolve(s".$n.crc")); ()
@@ -845,10 +838,7 @@ object RowStoreOps {
           .map(_.name)
       val dir = Paths.get(RowStore.dataDir(table))
       val horizon = System.currentTimeMillis() - olderThanMs
-      val stream = Files.list(dir)
-      val all = try stream.iterator().asScala
-        .map(_.getFileName.toString).filter(!_.startsWith(".")).toSeq
-      finally stream.close()
+      val all = RowStore.listNames(dir).filter(!_.startsWith("."))
       val orphans = all.filterNot(keep).filter { n =>
         Files.getLastModifiedTime(dir.resolve(n)).toMillis <= horizon }
       orphans.foreach { n =>
@@ -1048,14 +1038,12 @@ object RowStoreOps {
           }.toMap
           (name, per)
         }.collect().toMap
-    RowStore.commit(table) { (cur, _) =>
+    RowStore.commit(table, evolve = m =>
+        m.copy(ndvCols = (m.ndvCols ++ cols).distinct)) { (cur, _) =>
       if (cur != baseV)
         throw new java.util.ConcurrentModificationException(
           s"$table: analyzed version $baseV but the table is now at " +
             s"$cur — retry")
-      val m2 = RowStore.readMeta(table)
-      RowStore.writeMeta(table,
-        m2.copy(ndvCols = (m2.ndvCols ++ cols).distinct))
       man.map(e => e.copy(ndv = e.ndv ++ sketched(e.name)))
     }
     (paths.size, cols.size)
@@ -1320,17 +1308,17 @@ object RowStoreOps {
         // roll back only while provably safe: the table must still
         // sit at the pre-merge version (nothing committed data under
         // the new columns). The rollback commits its own version (same
-        // entries, the restored `#schema` header) — time travel sees
-        // evolve and un-evolve as two honest commits
-        if (added.nonEmpty) RowStore.commit(table) { (cur, head) =>
-          if (cur != preMergeV)
-            throw new java.util.ConcurrentModificationException(
-              s"$table: moved past version $preMergeV during the MERGE " +
-                s"— the added columns ${added.mkString(", ")} stay")
-          val m = RowStore.readMeta(table)
-          RowStore.writeMeta(table, m.copy(schema = StructType(
-            m.schema.fields.filterNot(f => added.contains(f.name)))))
-          head
+        // entries, the restored schema) — time travel sees evolve and
+        // un-evolve as two honest commits
+        if (added.nonEmpty) RowStore.commit(table, evolve = m =>
+          m.copy(schema = StructType(
+            m.schema.fields.filterNot(f => added.contains(f.name))))) {
+          (cur, head) =>
+            if (cur != preMergeV)
+              throw new java.util.ConcurrentModificationException(
+                s"$table: moved past version $preMergeV during the " +
+                  s"MERGE — the added columns ${added.mkString(", ")} stay")
+            head
         }
       } catch { case rb: Throwable => e.addSuppressed(rb) }
       throw e
@@ -1390,7 +1378,8 @@ object RowStoreOps {
             s"$t: branch $b forked at version $base but the table is " +
               s"now at $cur — NOTHING was published (all-or-nothing); " +
               "re-stage or cherry-pick that branch and retry")
-        (t, b, cur, RowStore.stageManifest(t, cur + 1, entries))
+        (t, b, cur, RowStore.stageManifest(t, cur + 1,
+          RowStore.versionMeta(t, cur), entries))
       }
       // phase 2 — link all, then drop the branches. Against concurrent
       // COMMITS this is fully atomic (the shared lock in-process; a
@@ -1501,7 +1490,6 @@ object RowStoreOps {
       val srcData = RowStore.dataDir(src)
       def abs(n: String) = RowStore.entryPath(srcData, n)
       val cloned = entries.map(e => e.copy(name = abs(e.name)))
-      RowStore.writeMeta(dst, meta)
       // ROW LINEAGE: the clone inherits the source's COUNTER, not just
       // its live entries' max range end — the source counter can run
       // ahead of every live entry (INSERT OVERWRITE retires ranges),
@@ -1509,7 +1497,7 @@ object RowStoreOps {
       // cross-version id uniqueness when a transaction adopts it back
       val floor = if (!meta.rowids) 0L
         else RowStore.nextRowId(src, RowStore.currentVersion(src))
-      RowStore.create(dst, cloned, rowIdFloor = floor)
+      RowStore.create(dst, meta, cloned, rowIdFloor = floor)
       cloned.size
     }
 }

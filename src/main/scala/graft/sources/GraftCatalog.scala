@@ -373,12 +373,12 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
 
   /** DEFAULT column values: declaring the capability lets Spark's
     * analyzer accept `DEFAULT <expr>` in CREATE TABLE (the default
-    * rides the schema's field metadata, which the meta file's schema
-    * JSON round-trips) and fill omitted columns at INSERT analysis —
-    * the connector's writers always see complete rows, so no storage
-    * change is involved. CREATE-time defaults only: ALTER ADD COLUMN
-    * with a default would need exists-default semantics in the
-    * reader's null-padding path, which the catalog does not claim. */
+    * rides the schema's field metadata, which the manifest header's
+    * schema JSON round-trips) and fill omitted columns at INSERT
+    * analysis — the connector's writers always see complete rows, so
+    * no storage change is involved. CREATE-time defaults only: ALTER
+    * ADD COLUMN with a default would need exists-default semantics in
+    * the reader's null-padding path, which the catalog does not claim. */
   override def capabilities(): java.util.Set[
       org.apache.spark.sql.connector.catalog.TableCatalogCapability] =
     Set(org.apache.spark.sql.connector.catalog.TableCatalogCapability
@@ -433,8 +433,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
 
   override def loadTable(ident: Identifier): Table = {
     val k = key(ident)
-    if (RowStore.exists(k))
-      new RowTable(k, RowStore.readMeta(k), RowStore.currentVersion(k))
+    val have = RowStore.versions(k)
+    if (have.nonEmpty)
+      new RowTable(k, RowStore.versionMeta(k, have.last), have.last)
     else {
       // a real table always wins the name; only then does `t.<meta>`
       // resolve as a metadata table of `t`
@@ -453,10 +454,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
 
   /** `VERSION AS OF v` — SQL time travel: a read-only table pinned to
     * manifest v (files are immutable, so this is pure planning). The
-    * SNAPSHOT-TIME schema rides the manifest's `#schema` header
-    * (Iceberg/Delta's rule): after ADD/DROP COLUMN, older versions
-    * keep the shape they were committed under instead of being
-    * silently re-projected through the current schema.
+    * SNAPSHOT-TIME schema and renames ride the manifest's metadata
+    * header (Iceberg/Delta's rule): after ADD/DROP COLUMN, older
+    * versions keep the shape they were committed under instead of
+    * being silently re-projected through the current schema.
     *
     * A NON-numeric version resolves as a NAMED REF (Iceberg's
     * `VERSION AS OF 'ref'`): a TAG pins to its recorded committed
@@ -466,15 +467,12 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * collision (a tag is a committed fact, a branch a proposal). */
   override def loadTable(ident: Identifier, version: String): Table = {
     val k = key(ident)
-    if (!RowStore.exists(k)) throw new NoSuchTableException(ident)
-    val meta = RowStore.readMeta(k)
+    val have = RowStore.versions(k)
+    if (have.isEmpty) throw new NoSuchTableException(ident)
+    val meta = RowStore.versionMeta(k, have.last)
     def pinned(v: Int): Table = {
-      val have = RowStore.versions(k)
       require(have.contains(v), s"no version $v for $k (have $have)")
-      new RowTable(k,
-        meta.copy(schema = RowStore.versionSchema(k, v).getOrElse(meta.schema),
-          renames = RowStore.versionRenames(k, v)),
-        v)
+      pinnedTable(k, meta, v)
     }
     version.toIntOption match {
       case Some(v) => pinned(v)
@@ -505,19 +503,21 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * fails loudly. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val k = key(ident)
-    if (!RowStore.exists(k)) throw new NoSuchTableException(ident)
-    val have = RowStore.versions(k).sorted
+    val have = RowStore.versions(k)
+    if (have.isEmpty) throw new NoSuchTableException(ident)
     val atOrBefore = have.filter(v =>
       RowStore.commitTimeMs(k, v) * 1000L <= timestampMicros)
     require(atOrBefore.nonEmpty,
       s"no snapshot of $k at or before timestamp ${timestampMicros}us " +
         s"(earliest commit: ${RowStore.commitTimeMs(k, have.head)}ms)")
-    val v = atOrBefore.max
-    val meta = RowStore.readMeta(k)
-    new RowTable(k,
-      meta.copy(schema = RowStore.versionSchema(k, v).getOrElse(meta.schema),
-        renames = RowStore.versionRenames(k, v)),
-      v)
+    pinnedTable(k, RowStore.versionMeta(k, have.last), atOrBefore.max)
+  }
+
+  /** Version `v` read through the current metadata `meta`, with the
+    * schema and renames `v` was committed under. */
+  private def pinnedTable(k: String, meta: RowStore.Meta, v: Int): Table = {
+    val vm = RowStore.versionMeta(k, v)
+    new RowTable(k, meta.copy(schema = vm.schema, renames = vm.renames), v)
   }
 
   /** (transform, tparam, col, numGroups) from a declared transform.
@@ -676,21 +676,22 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     val gen = Option(properties.get("generated")).map(_.trim)
       .filter(_.nonEmpty).getOrElse("")
     if (gen.nonEmpty) RowGen.validate(gen, schema)
-    RowStore.writeMeta(k, RowStore.Meta(schema, numGroups, mor,
+    val meta = RowStore.Meta(schema, numGroups, mor,
       spec.map(_._3).getOrElse(""),
       transform = spec.map(_._1).getOrElse("bucket"),
       tparam = spec.map(_._2).getOrElse(0L),
       bloomCols = bloomCols, dv = dv, ndvCols = ndvCols, check = check,
-      rowids = rowids, gen = gen))
-    RowStore.create(k) // v0 = empty table at CREATE
-    new RowTable(k, RowStore.readMeta(k), 0)
+      rowids = rowids, gen = gen)
+    RowStore.create(k, meta) // v0 = empty table at CREATE
+    new RowTable(k, meta, 0)
   }
 
   /** Schema evolution, additive form (the lake-format default): ADD
-    * COLUMN rewrites ONLY the schema file — no data files move; old
+    * COLUMN commits ONLY new metadata — no data files move; old
     * files (and therefore old `VERSION AS OF` reads) surface NULL for
-    * the new column via read-time padding. */
-  /** Partition-spec EVOLUTION (Iceberg's `REPLACE PARTITION FIELD`
+    * the new column via read-time padding.
+    *
+    * Partition-spec EVOLUTION (Iceberg's `REPLACE PARTITION FIELD`
     * shape, surfaced through the one ALTER hook Spark SQL gives a
     * custom catalog): `ALTER TABLE t SET TBLPROPERTIES('partition' =
     * 'truncate(1000, k)')` — bumps the spec id, so files already
@@ -877,7 +878,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         // int → bigint is metadata-only. Committed files keep the
         // narrow INT32 physical type; readers widen at the parquet
         // boundary (RowFiles.readRows), new files write INT64, and
-        // each manifest's pinned `#schema` makes time travel surface
+        // each manifest's pinned schema makes time travel surface
         // the snapshot-time type. Narrowing (or any other change)
         // refuses loudly: committed wide values could not be read
         // back through a narrower type.
@@ -963,15 +964,17 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             s"this ALTER would break a generated-column definition " +
               s"(${m2.gen}): ${e.getMessage}")
         }
-      RowStore.writeMeta(k, m2)
       // schema/spec evolution COMMITS a version (same file entries,
-      // new `#schema` header): time travel to any pre-ALTER version
-      // keeps the old shape, the new head pins the new one. Without
-      // this, the evolution would be invisible to the manifest chain
-      // and historical reads would silently re-project through
-      // whatever schema is current.
-      val v = RowStore.commit(k)((_, head) => head)
-      new RowTable(k, RowStore.readMeta(k), v)
+      // new metadata header): time travel to any pre-ALTER version
+      // keeps the old shape, the new head pins the new one. m2 was
+      // planned against `meta`: a head another process evolved since
+      // refuses rather than silently dropping that evolution.
+      val v = RowStore.commit(k, evolve = head =>
+        if (head == meta) m2
+        else throw new java.util.ConcurrentModificationException(
+          s"$k: table metadata changed while this ALTER was planned " +
+            "— re-run it against the new schema"))((_, head) => head)
+      new RowTable(k, m2, v)
     }
   }
 

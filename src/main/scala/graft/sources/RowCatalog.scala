@@ -427,7 +427,7 @@ object RowCatalogQueries {
     // 42, status STRING DEFAULT 'NEW')`, then an INSERT naming only
     // some columns has the rest filled by the ANALYZER (the catalog
     // declares SUPPORT_COLUMN_DEFAULT_VALUE; defaults ride the schema
-    // metadata the meta file round-trips, and writers always see
+    // metadata each manifest header round-trips, and writers always see
     // complete rows). One slice inserts only keys (defaults fill),
     // one inserts explicit values, and the read-back must show
     // exactly which rows got which — restated relationally.
@@ -1037,7 +1037,7 @@ object RowCatalogQueries {
     // the wide type) into INT64 files, and the head read plans both
     // eras in ONE scan — the reader widens narrow files at the
     // parquet boundary. The time-travel leg joins the v1 snapshot,
-    // whose pinned `#schema` surfaces the SNAPSHOT-TIME narrow type
+    // whose pinned schema surfaces the SNAPSHOT-TIME narrow type
     // (v_v1 is INT in the output schema, the oracle restates it as
     // INTEGER), so a schema-pinning slip on either side breaks the
     // schema or hash match. RowCatalogSpec pins the refusal surface

@@ -777,11 +777,8 @@ object RowCatalogMaintQueries {
       val refs = s.sql("CALL graft_dml.system.snapshot_table(" +
         "'ns.snapsrc', 'ns.snapcln')").head().getInt(0)
       val clnEntries = RowStore.readManifest("graft_dml.ns.snapcln", 0)
-      val ownFiles = {
-        val st = java.nio.file.Files.list(java.nio.file.Paths.get(
-          RowStore.dataDir("graft_dml.ns.snapcln")))
-        try st.count() finally st.close()
-      }
+      val ownFiles = RowStore.listNames(java.nio.file.Paths.get(
+        RowStore.dataDir("graft_dml.ns.snapcln"))).size
       val zeroCopy = refs > 0 && clnEntries.nonEmpty &&
         clnEntries.forall(_.name.startsWith("/")) && ownFiles == 0L
       // diverge: churn the clone, append to the source

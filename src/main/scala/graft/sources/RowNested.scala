@@ -24,11 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * the dropped list / renames map keyed by the dotted display path.
   * Iceberg reaches the same property through field ids; dotted
   * storage names are this catalog's id-free equivalent (names may
-  * not contain '.', enforced at writeMeta).
+  * not contain '.', enforced when the metadata is rendered).
   *
   * The dotted names are purely internal: Spark sees real StructType
   * columns in every schema surface (CREATE, DESCRIBE, time travel's
-  * pinned `#schema` headers round-trip nested JSON as-is). */
+  * pinned schemas round-trip nested JSON as-is). */
 object RowNested {
 
   /** Flattened leaf fields of a (possibly struct-bearing) field list,

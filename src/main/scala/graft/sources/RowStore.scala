@@ -149,39 +149,48 @@ object RowStore {
     c.n
   }
 
-  /** `bucketCol` is the declared partition column (`PARTITIONED BY
+  /** A table's metadata. Every version's manifest header carries the
+    * whole value ([[stageManifest]]), so a change to it and the version
+    * recording it are one atomic publish.
+    *
+    * `bucketCol` is the declared partition column (`PARTITIONED BY
     * (bucket(n, col))` — Iceberg's bucket transform); empty = the
     * pre-transform default, first column. [[keyCol]] is the single
     * column every piece of group machinery routes through: write
     * distribution, writer-side bucketing, zone-map stats, and the
-    * scan's key-range file skipping. */
-  /** `dropped` remembers every column name ever DROPped: readers
+    * scan's key-range file skipping.
+    *
+    * `dropped` remembers every column name ever DROPped: readers
     * project by NAME (no Iceberg field-id indirection), so re-adding a
     * dropped name would resurrect the old files' values instead of
-    * NULL-padding — the catalog refuses it loudly. */
-  /** `transform` is the ACTIVE partition transform: `bucket` (group =
+    * NULL-padding — the catalog refuses it loudly.
+    *
+    * `transform` is the ACTIVE partition transform: `bucket` (group =
     * hash mod numGroups — the default), `truncate` (group =
     * floorDiv(key, tparam): contiguous key ranges per group, Iceberg's
     * truncate width), or `days` (group = epoch day of a TIMESTAMP
     * column). `specId` counts partition-spec EVOLUTIONS: every data
     * file records the spec it was written under, so a scan plans old
     * groups by their original layout and new writes use the active one
-    * — Iceberg's spec-evolution model. */
-  /** `renames` maps a column's CURRENT (display) name to the name its
+    * — Iceberg's spec-evolution model.
+    *
+    * `renames` maps a column's CURRENT (display) name to the name its
     * values are stored under in data files (its name at column
     * creation — identity entries are omitted). RENAME COLUMN is
     * metadata-only: files never rewrite; readers translate
     * display→storage at the parquet boundary and writers keep writing
     * the storage name, so old and new files stay mutually readable —
-    * the name-mapping half of Iceberg's field-id indirection. */
-  /** `dv` (TBLPROPERTIES('deletes'='dv'), MOR only): row deletions
+    * the name-mapping half of Iceberg's field-id indirection.
+    *
+    * `dv` (TBLPROPERTIES('deletes'='dv'), MOR only): row deletions
     * commit as one DELETION-VECTOR bitmap per touched data file
     * instead of row-granularity position-delete records — Delta's DVs
     * / Iceberg v3's puffin delete vectors. The invariant that makes
     * high-churn MOR readable at 100 TB: a file has AT MOST ONE vector
     * regardless of how many delete commits touched it, so replay cost
-    * tracks touched-file count, never deleted-row count. */
-  /** `rowids` (TBLPROPERTIES('rowids'='on'), CREATE-time only): ROW
+    * tracks touched-file count, never deleted-row count.
+    *
+    * `rowids` (TBLPROPERTIES('rowids'='on'), CREATE-time only): ROW
     * LINEAGE — Iceberg v3's row-lineage / Delta's row-tracking model.
     * Every committed row gets a STABLE unique `_row_id`, assigned at
     * manifest-commit time from a per-table monotone counter
@@ -224,16 +233,18 @@ object RowStore {
     * STORAGE name (stable across RENAME). Bounds cover the column's
     * NON-NULL values — sound for the pushed comparison shapes, which
     * no NULL satisfies. A column absent from the map (all-NULL file,
-    * unsound truncation, pre-stats manifest) never skips. */
-  /** `ndv` (opt-in via TBLPROPERTIES('ndv'='col,...')): per-column
+    * unsound truncation, pre-stats manifest) never skips.
+    *
+    * `ndv` (opt-in via TBLPROPERTIES('ndv'='col,...')): per-column
     * KMV DISTINCT-COUNT sketches — the K smallest distinct value
     * hashes, unsigned-sorted. Mergeable across files by construction
     * (union, keep K smallest), which is the whole point: Iceberg
     * ships theta-sketch NDVs in puffin blobs for the same reason —
     * per-file sketches fold to a table-level distinct count at plan
     * time, feeding CBO join-cardinality estimation, without any
-    * full-column scan. ≤ K longs per (file, column). */
-  /** `firstRowId` (rowids tables): the first id of this entry's
+    * full-column scan. ≤ K longs per (file, column).
+    *
+    * `firstRowId` (rowids tables): the first id of this entry's
     * contiguous row-id range — a row's inherited id is
     * firstRowId + its position (base files) / record index (delta
     * files). Assigned exactly once, at the entry's first version
@@ -531,10 +542,11 @@ object RowStore {
     Files.createDirectories(Paths.get(d))
     d
   }
-  private def metaPath(key: String): Path =
-    Paths.get(tableDir(key), "meta")
 
-  def exists(key: String): Boolean = Files.exists(metaPath(key))
+  /** A table exists once its version 0 is published: a CREATE that
+    * lost its publish leaves at most an empty directory, never a
+    * table. Not a test for `v0.manifest` — VACUUM expires v0. */
+  def exists(key: String): Boolean = versions(key).nonEmpty
 
   /** A manifest entry's on-disk path. Entry names are normally leaf
     * file names under the table's data dir; `add_files`-registered
@@ -545,10 +557,11 @@ object RowStore {
   def entryPath(dir: String, name: String): String =
     if (name.startsWith("/")) name else s"$dir/$name"
 
-  /** Meta serialization is line-oriented `k=v` with the dropped list
-    * comma-joined, so a column name containing ',', '=', or layout
-    * whitespace would corrupt the file (and silently split the dropped
-    * list, defeating the re-add guard). Validated at every write. */
+  /** The manifest header carries [[Meta]] as line-oriented `k=v` with
+    * the dropped list comma-joined, so a column name containing ',',
+    * '=', or layout whitespace would corrupt the header (and silently
+    * split the dropped list, defeating the re-add guard). Validated at
+    * every render. */
   private[sources] def validateColName(n: String): Unit =
     require(!n.exists(c => c == ',' || c == '=' || c == '\n' ||
       c == '\r' || c == '\t' || c == '>'),
@@ -609,65 +622,65 @@ object RowStore {
       }
     }
 
-  def writeMeta(key: String, m: Meta): Unit = {
+  /** [[Meta]] as `k=v` lines — the manifest header's metadata block
+    * ([[stageManifest]] prefixes each with `#meta\t`). Values may
+    * hold '=' and tabs (CHECK and generated-column expressions); only
+    * line breaks would tear the line-oriented layout. */
+  private def renderMeta(m: Meta): Seq[String] = {
     validateFieldNames(m.schema.fields.toSeq)
     (m.dropped ++
       m.renames.keys ++ m.renames.values).foreach(validateColName)
-    Files.createDirectories(Paths.get(tableDir(key)))
-    Files.writeString(metaPath(key),
-      s"groups=${m.numGroups}\nmor=${m.mor}\npcol=${m.bucketCol}\n" +
-        s"ptf=${m.transform}\nparg=${m.tparam}\nspec=${m.specId}\n" +
-        s"dropped=${m.dropped.mkString(",")}\n" +
-        s"renames=${renderRenames(m.renames)}\n" +
-        s"bloom=${m.bloomCols.mkString(",")}\ndv=${m.dv}\n" +
-        s"ndv=${m.ndvCols.mkString(",")}\ncheck=${m.check}\n" +
-        s"rowids=${m.rowids}\ngen=${m.gen}\n" +
-        s"schema=${m.schema.json}\n")
+    val lines = Seq(s"groups=${m.numGroups}", s"mor=${m.mor}",
+      s"pcol=${m.bucketCol}", s"ptf=${m.transform}", s"parg=${m.tparam}",
+      s"spec=${m.specId}", s"dropped=${m.dropped.mkString(",")}",
+      s"renames=${renderRenames(m.renames)}",
+      s"bloom=${m.bloomCols.mkString(",")}", s"dv=${m.dv}",
+      s"ndv=${m.ndvCols.mkString(",")}", s"check=${m.check}",
+      s"rowids=${m.rowids}", s"gen=${m.gen}", s"schema=${m.schema.json}")
+    lines.foreach(l => require(!l.exists(c => c == '\n' || c == '\r'),
+      s"table metadata may not contain a line break: $l"))
+    lines
   }
 
-  def readMeta(key: String): Meta = {
-    val kv = Files.readAllLines(metaPath(key)).asScala
-      .filter(_.contains("=")).map(l => l.splitAt(l.indexOf("="))).toMap
+  /** Inverse of [[renderMeta]], for version `v` of `key`. A manifest
+    * with no `#meta` lines predates metadata-in-the-header (it kept
+    * metadata in a separate `meta` file); such tables cannot be read. */
+  private def parseMeta(key: String, v: Int, lines: Seq[String]): Meta = {
+    require(lines.nonEmpty, s"$key: version $v's manifest has no #meta " +
+      "header; it was written by an older format that kept table " +
+      "metadata in a separate meta file, which this version cannot read")
+    val kv = lines.map(l => l.splitAt(l.indexOf("="))).toMap
       .map { case (k, v) => (k, v.drop(1)) }
+    def list(k: String) = kv(k).split(",").filter(_.nonEmpty).toSeq
     Meta(DataType.fromJson(kv("schema")).asInstanceOf[StructType],
-      kv("groups").toInt, kv("mor").toBoolean,
-      kv.getOrElse("pcol", ""),
-      kv.getOrElse("dropped", "").split(",").filter(_.nonEmpty).toSeq,
-      kv.getOrElse("ptf", "bucket"),
-      kv.getOrElse("parg", "0").toLong,
-      kv.getOrElse("spec", "0").toInt,
-      parseRenames(kv.getOrElse("renames", "")),
-      kv.getOrElse("bloom", "").split(",").filter(_.nonEmpty).toSeq,
-      kv.getOrElse("dv", "false").toBoolean,
-      kv.getOrElse("ndv", "").split(",").filter(_.nonEmpty).toSeq,
-      kv.getOrElse("check", ""),
-      kv.getOrElse("rowids", "false").toBoolean,
-      kv.getOrElse("gen", ""))
+      kv("groups").toInt, kv("mor").toBoolean, kv("pcol"), list("dropped"),
+      kv("ptf"), kv("parg").toLong, kv("spec").toInt,
+      parseRenames(kv("renames")), list("bloom"), kv("dv").toBoolean,
+      list("ndv"), kv("check"), kv("rowids").toBoolean, kv("gen"))
   }
 
-  def listTableKeys(): Seq[String] = {
-    val r = Paths.get(root())
-    if (!Files.isDirectory(r)) Seq.empty
-    else {
-      val stream = Files.list(r)
-      try stream.iterator().asScala.filter(Files.isDirectory(_))
-        .map(_.getFileName.toString).toSeq.sorted
-      finally stream.close()
-    }
-  }
+  /** The current version's metadata. */
+  def readMeta(key: String): Meta = versionMeta(key, currentVersion(key))
 
-  def versions(key: String): Seq[Int] = {
-    val d = Paths.get(tableDir(key))
-    if (!Files.isDirectory(d)) Seq.empty
+  /** Sorted entry names of `dir`; empty when it does not exist. */
+  private[sources] def listNames(dir: Path): Seq[String] =
+    if (!Files.isDirectory(dir)) Seq.empty
     else {
-      val stream = Files.list(d)
-      try stream.iterator().asScala.map(_.getFileName.toString)
-        .collect { case s if s.startsWith("v") && s.endsWith(".manifest") =>
-          s.stripPrefix("v").stripSuffix(".manifest").toInt }
-        .toSeq.sorted
+      val stream = Files.list(dir)
+      try stream.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
       finally stream.close()
     }
-  }
+
+  /** Every table of this warehouse (SHOW TABLES): directories that
+    * hold a published version, see [[exists]]. */
+  def listTableKeys(): Seq[String] =
+    listNames(Paths.get(root())).filter(exists)
+
+  def versions(key: String): Seq[Int] =
+    listNames(Paths.get(tableDir(key))).collect {
+      case s if s.startsWith("v") && s.endsWith(".manifest") =>
+        s.stripPrefix("v").stripSuffix(".manifest").toInt
+    }.sorted
 
   def currentVersion(key: String): Int = versions(key).lastOption.getOrElse(
     sys.error(s"no committed version for $key"))
@@ -686,15 +699,34 @@ object RowStore {
   /** Number of manifest FILES walked to resolve version `v` — 1 for a
     * full (checkpointed) manifest, parent chain + 1 for incrementals.
     * The `rewrite_manifests` procedure reports and collapses this. */
-  def manifestChainLength(key: String, v: Int): Int = {
-    val lines = Files.readAllLines(
-      Paths.get(tableDir(key), s"v$v.manifest")).asScala
-    lines.collectFirst { case l if l.startsWith("#parent\t") =>
-      l.stripPrefix("#parent\t").toInt } match {
-      case Some(p) => 1 + manifestChainLength(key, p)
-      case None    => 1
-    }
+  def manifestChainLength(key: String, v: Int): Int =
+    parentVersion(key, v).fold(1)(p => 1 + manifestChainLength(key, p))
+
+  /** The version an incremental manifest resolves through (`#parent`);
+    * None for a full one. */
+  private[sources] def parentVersion(key: String, v: Int): Option[Int] =
+    headerValue(key, v, "#parent").map(_.toInt)
+
+  /** The `#` header lines of version `v`'s manifest, through `#parent`
+    * for an incremental one. Stops at the first line that is not a
+    * header, so the cost never grows with the entries (or their bloom
+    * blobs) — the header always precedes the body. */
+  private def header(key: String, v: Int): Seq[String] = {
+    val r = Files.newBufferedReader(Paths.get(tableDir(key), s"v$v.manifest"))
+    try {
+      val out = Seq.newBuilder[String]
+      var line = r.readLine()
+      while (line != null && line.startsWith("#")) {
+        out += line
+        line = if (line.startsWith("#parent\t")) null else r.readLine()
+      }
+      out.result()
+    } finally r.close()
   }
+
+  private def headerValue(key: String, v: Int, tag: String): Option[String] =
+    header(key, v).collectFirst {
+      case l if l.startsWith(tag + "\t") => l.stripPrefix(tag + "\t") }
 
   /** EXACT row count of an entry list, defined only when provably so:
     * no delta/deletion-vector files (they add/remove/move rows at read
@@ -757,23 +789,28 @@ object RowStore {
     * table on [[drop]] and per version when VACUUM deletes a manifest
     * (a cached entry surviving expiry would let `VERSION AS OF` an
     * expired snapshot silently succeed — q111 pins that it fails). */
-  private val ManifestCacheCap = 512
-  private val manifestCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Int), Seq[FileEntry]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int), Seq[FileEntry]]) =
-        size > ManifestCacheCap
-    })
+  private val manifestCache = lru[(String, Int), Seq[FileEntry]](512)
 
+  /** A synchronized access-order LRU map holding at most `cap` entries. */
+  private def lru[K, V](cap: Int): java.util.Map[K, V] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[K, V]) =
+          size > cap
+      })
+
+  /** Drops the entries of `cache` whose key `hit` selects (iterating
+    * under the map's own monitor — synchronizedMap views aren't safe
+    * to traverse unsynchronized). */
+  private def purge[K](cache: java.util.Map[K, _], hit: K => Boolean): Unit =
+    cache.synchronized {
+      cache.keySet.asScala.filter(hit).toList.foreach(cache.remove)
+    }
+
+  /** VACUUM expired version `v`: forget its resolution. */
   private[sources] def purgeManifestCache(key: String, v: Int): Unit = {
     manifestCache.remove((tableDir(key), v)); ()
   }
-  private def purgeManifestCacheTable(key: String): Unit =
-    manifestCache.synchronized {
-      manifestCache.keySet.asScala.filter(_._1 == tableDir(key)).toList
-        .foreach(manifestCache.remove)
-    }
 
   def readManifest(key: String, v: Int): Seq[FileEntry] = {
     // keyed by the PER-APPLICATION table dir (see epochCache): a
@@ -959,14 +996,7 @@ object RowStore {
     * and per-table invalidation, and the commit path has no session in
     * scope). Eviction is cheap-and-correct: a dropped mark re-resolves
     * from the manifests on next touch. */
-  private val EpochCacheCap = 1024
-  private val epochCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String), java.lang.Long](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), java.lang.Long]) =
-        size > EpochCacheCap
-    })
+  private val epochCache = lru[(String, String), java.lang.Long](1024)
 
   def lastStreamEpoch(key: String, queryId: String): Long = {
     // keyed by the PER-APPLICATION table dir, not the bare name: a
@@ -976,12 +1006,9 @@ object RowStore {
     val cached = epochCache.get(ck)
     if (cached != null) cached.longValue
     else {
-      val pre = s"#ep\t$queryId\t"
-      val resolved = versions(key).sorted.reverse.iterator.map { v =>
-        Files.readAllLines(Paths.get(tableDir(key), s"v$v.manifest")).asScala
-          .collectFirst { case l if l.startsWith(pre) =>
-            l.stripPrefix(pre).toLong }
-      }.collectFirst { case Some(n) => n }.getOrElse(-1L)
+      val resolved = versions(key).reverse.iterator
+        .flatMap(v => headerValue(key, v, s"#ep\t$queryId"))
+        .nextOption().fold(-1L)(_.toLong)
       epochCache.put(ck, java.lang.Long.valueOf(resolved))
       resolved
     }
@@ -997,80 +1024,38 @@ object RowStore {
   @volatile private[graft] var clock: () => Long =
     () => System.currentTimeMillis()
 
-  /** The schema a version was committed under ([[stageManifest]]'s
-    * `#schema` header) — what `VERSION/TIMESTAMP AS OF` reads resolve
-    * against. None for manifests written before the header existed
-    * (callers fall back to the current schema). */
-  def versionSchema(key: String, v: Int): Option[StructType] = {
-    val p = Paths.get(tableDir(key), s"v$v.manifest")
-    if (!Files.exists(p)) None
-    else Files.readAllLines(p).asScala.collectFirst {
-      case l if l.startsWith("#schema\t") =>
-        DataType.fromJson(l.stripPrefix("#schema\t")).asInstanceOf[StructType]
-    }
-  }
+  /** The metadata version `v` was committed under — what `VERSION/
+    * TIMESTAMP AS OF` reads resolve their schema and renames against
+    * (Iceberg/Delta's snapshot-schema rule), and, at the head, the
+    * table's current metadata ([[readMeta]]). */
+  def versionMeta(key: String, v: Int): Meta =
+    parseMeta(key, v, header(key, v).collect {
+      case l if l.startsWith("#meta\t") => l.stripPrefix("#meta\t") })
 
-  /** The display→storage rename mapping a version was committed under
-    * (`#renames` manifest header). Empty for versions committed while
-    * no column was renamed — identity mapping, which is correct for
-    * that era by construction. */
-  def versionRenames(key: String, v: Int): Map[String, String] = {
-    val p = Paths.get(tableDir(key), s"v$v.manifest")
-    if (!Files.exists(p)) Map.empty
-    else Files.readAllLines(p).asScala.collectFirst {
-      case l if l.startsWith("#renames\t") =>
-        parseRenames(l.stripPrefix("#renames\t"))
-    }.getOrElse(Map.empty)
-  }
+  /** A version's recorded commit time (ms), from the `#ms` header
+    * [[stageManifest]] writes. */
+  def commitTimeMs(key: String, v: Int): Long =
+    headerValue(key, v, "#ms").getOrElse(
+      sys.error(s"$key: version $v has no commit time")).toLong
 
-  /** A version's recorded commit time (ms). Header line written by
-    * [[stageManifest]]; manifests from before the header existed fall
-    * back to file mtime. */
-  def commitTimeMs(key: String, v: Int): Long = {
-    val p = Paths.get(tableDir(key), s"v$v.manifest")
-    Files.readAllLines(p).asScala.collectFirst {
-      case l if l.startsWith("#ms\t") => l.stripPrefix("#ms\t").toLong
-    }.getOrElse(Files.getLastModifiedTime(p).toMillis)
-  }
+  /** The row-id high-water mark after version `v`'s commit (rowids
+    * tables; `#nextrowid` manifest header), 0 when the header is
+    * absent — safe, because the assignment fold below also maxes over
+    * the entries actually present. */
+  def nextRowId(key: String, v: Int): Long =
+    headerValue(key, v, "#nextrowid").fold(0L)(_.toLong)
 
   /** Render + stage version `v`'s manifest to a uniquely-named temp
     * file in the table dir (same filesystem as the target — the
     * precondition for an atomic link/rename), WITHOUT publishing it.
-    * [[publishStaged]] makes it the committed version; the split
-    * exists so multi-table publish (publish_branches) can stage
-    * EVERY table's manifest before linking ANY of them, shrinking
-    * the partial-publish crash window to the links alone. */
-  /** The row-id high-water mark after version `v`'s commit (rowids
-    * tables; `#nextrowid` manifest header). 0 for manifests that
-    * predate row lineage — safe, because the assignment fold below
-    * also maxes over the entries actually present. */
-  def nextRowId(key: String, v: Int): Long = {
-    val p = Paths.get(tableDir(key), s"v$v.manifest")
-    if (!Files.exists(p)) 0L
-    else {
-      // header-block scan only: `#nextrowid` is written in the header
-      // region, which always precedes the body (`#parent` for
-      // incremental manifests, a plain entry line for full ones) — so
-      // this reads a handful of lines, never O(entries)
-      val r = Files.newBufferedReader(p)
-      try {
-        var line = r.readLine()
-        var out = 0L
-        var done = false
-        while (!done && line != null) {
-          if (line.startsWith("#nextrowid\t")) {
-            out = line.stripPrefix("#nextrowid\t").toLong; done = true
-          } else if (!line.startsWith("#") ||
-            line.startsWith("#parent\t")) done = true
-          else line = r.readLine()
-        }
-        out
-      } finally r.close()
-    }
-  }
-
-  def stageManifest(key: String, v: Int, entries0: Seq[FileEntry],
-      extraHeader: Seq[String] = Seq.empty,
+    * The header carries the commit time, the whole `meta`, the
+    * row-id high-water mark and `extraHeader`. [[publishStaged]] makes
+    * it the committed version; the split exists so multi-table
+    * publish (publish_branches) can stage EVERY table's manifest
+    * before linking ANY of them, shrinking the partial-publish crash
+    * window to the links alone. */
+  def stageManifest(key: String, v: Int, meta: Meta,
+      entries0: Seq[FileEntry], extraHeader: Seq[String] = Seq.empty,
       rowIdFloor: Long = 0L): Path = {
     // ── ROW-LINEAGE ASSIGNMENT (rowids tables) — the one funnel every
     // version commit passes through (appends, COW swaps, MOR deltas,
@@ -1085,12 +1070,8 @@ object RowStore {
     // can ever overlap an adopted range. O(entries) driver work, zero
     // per-row cost — the ids themselves are virtual (firstRowId +
     // position) until a rewrite materializes them.
-    // one meta read per stage, shared by the row-id assignment and
-    // the schema header (the commit funnel is hot — review finding)
-    val metaOpt: Option[Meta] =
-      if (Files.exists(metaPath(key))) Some(readMeta(key)) else None
     val rowIdState: Option[(Seq[FileEntry], Long)] =
-      if (!metaOpt.exists(_.rowids)) None
+      if (!meta.rowids) None
       else {
         val parentNext = if (v <= 0) 0L else nextRowId(key, v - 1)
         // `rowIdFloor`: an external counter seed — snapshot_table
@@ -1120,20 +1101,11 @@ object RowStore {
       else try math.max(now, commitTimeMs(key, v - 1) + 1)
       catch { case _: java.io.IOException => now }
     }
-    // every version PINS the schema it was committed under (Iceberg/
-    // Delta's snapshot-schema rule): time travel reads this, not the
-    // current meta, so DROP COLUMN can't silently lose a column from
-    // historical reads. Schema JSON is single-line (column names are
-    // validated against layout characters at writeMeta).
-    val schemaHeader = metaOpt.map { m =>
-      Seq(s"#schema\t${m.schema.json}") ++
-        // the era's display→storage mapping rides with its schema,
-        // so a time-travel read of a post-RENAME version projects
-        // files by the right stored names
-        (if (m.renames.nonEmpty)
-          Seq(s"#renames\t${renderRenames(m.renames)}")
-        else Seq.empty)
-    }.getOrElse(Seq.empty)
+    // every version PINS the metadata it was committed under: time
+    // travel reads its schema and renames (so DROP COLUMN can't
+    // silently lose a column from historical reads), and the head's
+    // is the table's current metadata
+    val metaHeader = renderMeta(meta).map("#meta\t" + _)
     // INCREMENTAL encoding (the Delta-log commit model): when the new
     // entry list is the parent's with some names removed and new
     // entries appended — which every append/rewrite/compact commit is —
@@ -1171,7 +1143,7 @@ object RowStore {
       rowIdState.map { case (_, ctr) => s"#nextrowid\t$ctr" }.toSeq
     Files.writeString(tmp,
       s"#ms\t$ms\n" +
-        (schemaHeader ++ rowIdHeader ++ extraHeader).map(_ + "\n").mkString +
+        (metaHeader ++ rowIdHeader ++ extraHeader).map(_ + "\n").mkString +
         body)
     tmp
   }
@@ -1313,11 +1285,11 @@ object RowStore {
   /** Stage + atomically publish version `v`. Throws
     * [[CommitConflictException]] if another writer (any process) won
     * version `v` first. */
-  private def writeManifest(key: String, v: Int, entries: Seq[FileEntry],
-      extraHeader: Seq[String] = Seq.empty,
+  private def writeManifest(key: String, v: Int, meta: Meta,
+      entries: Seq[FileEntry], extraHeader: Seq[String] = Seq.empty,
       rowIdFloor: Long = 0L): Unit =
     publishStaged(key, v,
-      stageManifest(key, v, entries, extraHeader, rowIdFloor))
+      stageManifest(key, v, meta, entries, extraHeader, rowIdFloor))
 
   /** Publish attempts one [[commit]] makes: a bound, not a policy —
     * losing this many in a row to other processes means a
@@ -1334,20 +1306,26 @@ object RowStore {
     * lost to another process (the in-JVM lock rules out a same-process
     * loss) re-reads the new head and calls `next` again, so every
     * caller's validation re-runs against what it rebases onto.
-    * `extraHeader` lines ride in the manifest header. A caller that
-    * already holds the lock (streaming epochs, branch publishes, ALTER)
-    * runs [[preCommitHook]] under it. Multi-table
-    * publishes (Transact, publishBranches) stage and link their
-    * manifests themselves. */
-  def commit(key: String, extraHeader: Seq[String] = Seq.empty)(
+    * `extraHeader` lines ride in the manifest header. The new version
+    * carries the head's [[Meta]] passed through `evolve`, which a
+    * metadata change (ALTER, compute_table_stats, a MERGE's schema
+    * undo) uses to change it in the same publish; like `next` it
+    * re-runs against every head it rebases onto, and may throw
+    * ConcurrentModificationException. A caller that already holds the
+    * lock (streaming epochs, branch publishes, ALTER) runs
+    * [[preCommitHook]] under it. Multi-table publishes (Transact,
+    * publishBranches) stage and link their manifests themselves. */
+  def commit(key: String, extraHeader: Seq[String] = Seq.empty,
+      evolve: Meta => Meta = identity)(
       next: (Int, Seq[FileEntry]) => Seq[FileEntry]): Int = {
     @annotation.tailrec
     def attempt(n: Int): Int = {
       val cur = currentVersion(key)
       val entries = next(cur, readManifest(key, cur))
+      val meta = evolve(versionMeta(key, cur))
       prePublishHook()
       val won =
-        try { writeManifest(key, cur + 1, entries, extraHeader); true }
+        try { writeManifest(key, cur + 1, meta, entries, extraHeader); true }
         catch { case _: CommitConflictException if n < MaxCommitAttempts => false }
       if (won) cur + 1 else attempt(n + 1)
     }
@@ -1355,13 +1333,16 @@ object RowStore {
     commitLock.synchronized(attempt(1))
   }
 
-  /** Publish version 0 of a new table (CREATE, snapshot_table). There
-    * is no head to rebase onto: losing version 0 means another writer
-    * created the table, and [[CommitConflictException]] says so.
-    * `rowIdFloor` seeds the row-lineage counter (see [[stageManifest]]). */
-  def create(key: String, entries: Seq[FileEntry] = Seq.empty,
-      rowIdFloor: Long = 0L): Unit =
-    writeManifest(key, 0, entries, rowIdFloor = rowIdFloor)
+  /** Publish version 0 of a new table (CREATE, snapshot_table) — its
+    * metadata and entries in one atomic publish. There is no head to
+    * rebase onto: losing version 0 means another writer created the
+    * table, and [[CommitConflictException]] says so. `rowIdFloor`
+    * seeds the row-lineage counter (see [[stageManifest]]). */
+  def create(key: String, meta: Meta, entries: Seq[FileEntry] = Seq.empty,
+      rowIdFloor: Long = 0L): Unit = {
+    Files.createDirectories(Paths.get(tableDir(key)))
+    writeManifest(key, 0, meta, entries, rowIdFloor = rowIdFloor)
+  }
 
   // ── BRANCHES (Iceberg's write-audit-publish surface): a branch
   // manifest is a STAGED next snapshot — full entry list plus the
@@ -1408,17 +1389,11 @@ object RowStore {
   }
 
   /** Names of every staged branch of `key`. */
-  def listBranches(key: String): Seq[String] = {
-    val td = Paths.get(tableDir(key))
-    if (!Files.isDirectory(td)) Seq.empty
-    else {
-      val stream = Files.list(td)
-      try stream.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.startsWith("branch-") && n.endsWith(".manifest"))
-        .map(_.stripPrefix("branch-").stripSuffix(".manifest")).toSeq.sorted
-      finally stream.close()
-    }
-  }
+  def listBranches(key: String): Seq[String] =
+    listNames(Paths.get(tableDir(key))).collect {
+      case n if n.startsWith("branch-") && n.endsWith(".manifest") =>
+        n.stripPrefix("branch-").stripSuffix(".manifest")
+    }.sorted
 
   // ── TAGS (Iceberg's named immutable snapshot refs): a tag pins a
   // COMMITTED version under a name — `VERSION AS OF '<tag>'` resolves
@@ -1458,32 +1433,20 @@ object RowStore {
   }
 
   /** (name, version) of every tag of `key`. */
-  def listTags(key: String): Seq[(String, Int)] = {
-    val td = Paths.get(tableDir(key))
-    if (!Files.isDirectory(td)) Seq.empty
-    else {
-      val stream = Files.list(td)
-      val names = try stream.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.startsWith("tag-") && n.endsWith(".ref"))
-        .map(_.stripPrefix("tag-").stripSuffix(".ref")).toSeq.sorted
-      finally stream.close()
-      names.map(n => (n, readTag(key, n)))
-    }
-  }
+  def listTags(key: String): Seq[(String, Int)] =
+    listNames(Paths.get(tableDir(key))).collect {
+      case n if n.startsWith("tag-") && n.endsWith(".ref") =>
+        n.stripPrefix("tag-").stripSuffix(".ref")
+    }.sorted.map(n => (n, readTag(key, n)))
 
   def drop(key: String): Boolean = {
-    // the epoch high-water cache follows the table: a re-created table
-    // with the same name starts a fresh manifest chain, so stale marks
-    // must not survive the drop (iteration under the map's own monitor
-    // — synchronizedMap views aren't safe to traverse unsynchronized)
-    epochCache.synchronized {
-      epochCache.keySet.asScala.filter(_._1 == tableDir(key)).toList
-        .foreach(epochCache.remove)
-    }
-    // the resolved-manifest cache follows the table for the same
-    // reason: a re-created table starts a fresh manifest chain
-    purgeManifestCacheTable(key)
-    val d = Paths.get(tableDir(key))
+    // the caches follow the table: a re-created table with the same
+    // name starts a fresh manifest chain, so stale epoch marks
+    // and resolutions must not survive the drop
+    val dir = tableDir(key)
+    purge[(String, String)](epochCache, _._1 == dir)
+    purge[(String, Int)](manifestCache, _._1 == dir)
+    val d = Paths.get(dir)
     if (!Files.exists(d)) false
     else {
       val walk = Files.walk(d)

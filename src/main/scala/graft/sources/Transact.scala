@@ -143,11 +143,8 @@ object Transact {
   /** Every open transaction's record, any owner. */
   def scan(): Seq[OpenTxn] = {
     val d = txnDir()
-    val stream = Files.list(d)
-    try stream.iterator().asScala.toSeq
-      .filter(_.getFileName.toString.startsWith("txn"))
-      .flatMap(readRecord).sortBy(_.id)
-    finally stream.close()
+    RowStore.listNames(d).filter(_.startsWith("txn"))
+      .flatMap(n => readRecord(d.resolve(n))).sortBy(_.id)
   }
 
   /** Refuse an operation on a transaction this process does not own.
@@ -377,7 +374,8 @@ object Transact {
         val entries = plan.carried ++ plan.adopt
           .map(e => e.copy(name = adopt(e.name),
             dvTarget = e.dvTarget.map(readdress)))
-        val tmp = RowStore.stageManifest(t, plan.cur + 1, entries)
+        val tmp = RowStore.stageManifest(t, plan.cur + 1,
+          RowStore.versionMeta(t, plan.cur), entries)
         stagedTmps += tmp
         (t, plan.cur, tmp)
       }

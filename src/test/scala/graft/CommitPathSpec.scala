@@ -13,7 +13,9 @@ import graft.sources.{RowStore, RowStoreOps}
   * statements and procedures outside the SQL write path run the same
   * two commit hooks once per version they publish, a publish that
   * keeps losing gives up after [[RowStore.MaxCommitAttempts]]
-  * attempts, and no other source file invokes the hooks. */
+  * attempts, and no other source file invokes the hooks. Table
+  * metadata lives only in the published versions: a CREATE or ALTER
+  * whose publish is lost leaves no trace of its metadata. */
 class CommitPathSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
 
@@ -114,6 +116,95 @@ class CommitPathSpec extends AnyFunSuite {
       s"one prePublish call per attempt, saw $pub")
     assert(RowStore.versions(t) == before, "nothing may publish")
     s.sql(s"DROP TABLE $t")
+  }
+
+  /** A publisher that loses every publish, as if another process
+    * always won the version first. */
+  private val alwaysLoses = new RowStore.ManifestPublisher {
+    def publishIfAbsent(target: Path, staged: Path): Unit = {
+      Files.deleteIfExists(staged)
+      throw new java.nio.file.FileAlreadyExistsException(target.toString)
+    }
+  }
+
+  private def losing[T](body: => T): T = {
+    val saved = RowStore.publisher
+    RowStore.publisher = alwaysLoses
+    try body finally RowStore.publisher = saved
+  }
+
+  test("a lost CREATE leaves the name free") {
+    val s = spark
+    val t = "graft_dml.spec.cpath_lost_create"
+    s.sql(s"DROP TABLE IF EXISTS $t")
+    val ddl = s"CREATE TABLE $t (k BIGINT, v BIGINT)"
+    losing { intercept[Exception] { s.sql(ddl) } }
+    assert(!RowStore.exists(t), "a CREATE that never published is no table")
+    val shown = s.sql("SHOW TABLES IN graft_dml.spec").collect()
+      .map(_.getAs[String]("tableName")).toSeq
+    assert(!shown.contains("cpath_lost_create"), s"SHOW TABLES: $shown")
+    s.sql(ddl)
+    assert(RowStore.versions(t) == Seq(0))
+    assert(s.table(t).schema.fieldNames.toSeq == Seq("k", "v"))
+    s.sql(s"DROP TABLE $t")
+  }
+
+  test("an ALTER that gives up leaves the metadata at the head version's") {
+    val s = spark
+    val t = "graft_dml.spec.cpath_lost_alter"
+    s.sql(s"DROP TABLE IF EXISTS $t")
+    s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
+    s.sql(s"INSERT INTO $t VALUES (1, 10)")
+    val before = RowStore.versions(t)
+    losing {
+      intercept[RowStore.CommitConflictException] {
+        s.sql(s"ALTER TABLE $t ADD COLUMNS (w BIGINT)")
+      }
+    }
+    assert(RowStore.versions(t) == before, "nothing may publish")
+    val head = RowStore.versionMeta(t, RowStore.currentVersion(t))
+    assert(RowStore.readMeta(t) == head)
+    assert(head.schema.fieldNames.toSeq == Seq("k", "v"))
+    s.sql(s"DROP TABLE $t")
+  }
+
+  test("table metadata round-trips through the manifest header") {
+    import org.apache.spark.sql.types._
+    val s = spark
+    val t = "graft_dml.spec.cpath_meta"
+    s.sql(s"DROP TABLE IF EXISTS $t")
+    // every field off its default; CHECK and generated text hold '='
+    // and a tab, which the line-oriented header must carry verbatim
+    val m = RowStore.Meta(
+      schema = StructType(Seq(StructField("k", LongType, nullable = false),
+        StructField("cents", LongType),
+        StructField("s", StructType(Seq(StructField("f", StringType)))),
+        StructField("d", DecimalType(12, 2)))),
+      numGroups = 8, mor = true, bucketCol = "k",
+      dropped = Seq("old", "s.g"), transform = "truncate", tparam = 1000L,
+      specId = 3, renames = Map("cents" -> "amount", "s.f" -> "s.h"),
+      bloomCols = Seq("k", "s.f"), dv = true, ndvCols = Seq("cents"),
+      check = "k = 1\tOR cents >= 0", rowids = true,
+      gen = "d: CAST(cents AS DECIMAL(12, 2)) =\t1")
+    RowStore.create(t, m)
+    assert(RowStore.readMeta(t) == m)
+    RowStore.drop(t)
+  }
+
+  test("a manifest without a metadata header is refused by name") {
+    val s = spark
+    val t = "graft_dml.spec.cpath_oldfmt"
+    s.sql(s"DROP TABLE IF EXISTS $t")
+    s.sql(s"CREATE TABLE $t (k BIGINT)")
+    // a manifest in the earlier layout: metadata lived in a separate
+    // file, so the header has no #meta lines
+    val v0 = Paths.get(RowStore.dataDir(t)).getParent.resolve("v0.manifest")
+    Files.write(v0, Files.readAllLines(v0).asScala
+      .filterNot(_.startsWith("#meta\t")).asJava)
+    val e = intercept[IllegalArgumentException](RowStore.readMeta(t))
+    assert(e.getMessage.contains("no #meta header"), e.getMessage)
+    assert(e.getMessage.contains("older format"), e.getMessage)
+    RowStore.drop(t)
   }
 
   test("only RowStore runs the commit hooks") {

@@ -47,6 +47,7 @@ class CommitSeamSpec extends AnyFunSuite {
     s.sql(s"INSERT INTO $t VALUES (1, 10)")
     val key = t
     val entries = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val meta = RowStore.readMeta(key)
     for (publisher <- Seq[RowStore.ManifestPublisher](
         RowStore.HardLinkPublisher, new RowStore.CasPublisher)) {
       RowStore.publisher = publisher
@@ -60,8 +61,8 @@ class CommitSeamSpec extends AnyFunSuite {
         // publish from two threads: the seam's contract is exactly
         // one success and one CommitConflictException — on EITHER
         // implementation
-        val s1 = RowStore.stageManifest(key, v, entries)
-        val s2 = RowStore.stageManifest(key, v, entries)
+        val s1 = RowStore.stageManifest(key, v, meta, entries)
+        val s2 = RowStore.stageManifest(key, v, meta, entries)
         assert(s1 != s2, "staging must be private per writer")
         val outcomes =
           new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -28,7 +28,10 @@ import graft.sources.RowStore
   *      statement then succeeds on top of the winner;
   *   4. a commit outside the SQL write path (add_files) rebases the
   *      same way, because every single-table commit goes through
-  *      [[RowStore.commit]].
+  *      [[RowStore.commit]];
+  *   5. two processes' ALTERs never split table metadata from its
+  *      version: the loser lands on top of the winner's schema or
+  *      refuses, and the current metadata is always the head's.
   */
 class CrossProcessCommitSpec extends AnyFunSuite {
 
@@ -156,6 +159,53 @@ class CrossProcessCommitSpec extends AnyFunSuite {
       System.clearProperty("graft.warehouse.root")
       Scratch.deleteTree(root)
       Scratch.deleteTree(ext)
+    }
+  }
+
+  test("ALTER loses its publish to another process's ALTER; metadata stays the head's") {
+    val s = SparkSuite.spark
+    val root = Files.createTempDirectory("graft-xproc").toString
+    System.setProperty("graft.warehouse.root", root)
+    try {
+      s.sql("DROP TABLE IF EXISTS graft_dml.xp.t")
+      s.sql("CREATE TABLE graft_dml.xp.t (k BIGINT, v BIGINT)")
+      s.sql("INSERT INTO graft_dml.xp.t VALUES (1, 10)")
+      val key = "graft_dml.xp.t"
+      val v0 = RowStore.currentVersion(key)
+      // the worker's ADD COLUMNS (b) takes v0+1 inside the publish
+      // window of this process's ADD COLUMNS (a)
+      val fires = new AtomicInteger(0)
+      RowStore.prePublishHook = () => {
+        if (fires.incrementAndGet() == 1)
+          awaitOk(forkWorker(root, Seq(
+            "ALTER TABLE graft_dml.xp.t ADD COLUMNS (b BIGINT)")))
+      }
+      val refused =
+        try { s.sql("ALTER TABLE graft_dml.xp.t ADD COLUMNS (a BIGINT)"); None }
+        catch { case e: Exception => Some(e) }
+        finally RowStore.prePublishHook = () => ()
+      assert(fires.get() >= 1, "the worker never ran")
+      def cols(v: Int) = RowStore.versionMeta(key, v).schema.fieldNames.toSeq
+      assert(cols(v0 + 1) == Seq("k", "v", "b"),
+        s"the worker's version records its own schema: ${cols(v0 + 1)}")
+      val head = RowStore.currentVersion(key)
+      refused match {
+        case None =>
+          assert(head == v0 + 2 && cols(head) == Seq("k", "v", "b", "a"),
+            s"rebased ALTER: v$head ${cols(head)}")
+        case Some(e) =>
+          def causes(t: Throwable): Seq[Throwable] =
+            if (t == null) Seq.empty else t +: causes(t.getCause)
+          assert(causes(e).exists(
+            _.isInstanceOf[java.util.ConcurrentModificationException]),
+            s"expected an OCC refusal, got $e")
+          assert(head == v0 + 1, s"a refused ALTER publishes nothing: v$head")
+      }
+      assert(RowStore.readMeta(key) == RowStore.versionMeta(key, head))
+      assert(s.table(key).schema.fieldNames.toSeq == cols(head))
+    } finally {
+      System.clearProperty("graft.warehouse.root")
+      Scratch.deleteTree(root)
     }
   }
 
