@@ -775,13 +775,8 @@ object RowStoreOps {
         .map(_.name).toSet
       val keep = retained.flatMap(v => RowStore.readManifest(table, v))
         .map(_.name).toSet ++ branchKeep
-      expired.foreach { v =>
-        Files.deleteIfExists(
-          Paths.get(RowStore.tableDir(table), s"v$v.manifest"))
-        // an expired version's cached resolution must die with its
-        // manifest, or VERSION AS OF it would silently keep working
-        RowStore.purgeManifestCache(table, v)
-      }
+      expired.foreach(v =>
+        Files.deleteIfExists(RowStore.manifestPath(table, v)))
       val dir = Paths.get(RowStore.dataDir(table))
       // data files only — Hadoop's LocalFileSystem writes hidden
       // `.<name>.crc` sidecars, which ride along with their data file
@@ -1327,50 +1322,36 @@ object RowStoreOps {
   }
 
   /** PUBLISH a staged branch (the WAP fast-forward): the branch's
-    * snapshot becomes the next committed version — atomically, under
-    * the same OCC rule as any rewrite: if the table advanced past the
-    * branch's fork base, the staged snapshot no longer contains those
-    * commits and publishing it would silently drop them, so refuse
-    * and let the caller re-stage. Returns the published version. */
+    * snapshot becomes the next committed version — [[publishBranches]]
+    * for one table. Returns the published version. */
   def publishBranch(table: String, name: String): Int =
-    RowStore.commitLock.synchronized {
-      val v = RowStore.commit(table) { (cur, _) =>
-        val (base, entries) = RowStore.readBranchManifest(table, name)
-        if (cur != base)
-          throw new java.util.ConcurrentModificationException(
-            s"$table: branch $name forked at version $base but the " +
-              s"table is now at $cur — publishing would drop the " +
-              "interleaved commits; re-stage against the current snapshot")
-        entries
-      }
-      RowStore.dropBranch(table, name)
-      v
-    }
+    publishBranches(Seq(table -> name)).head
 
   /** ATOMIC MULTI-TABLE PUBLISH — the all-or-nothing WAP commit
     * across TABLES (the cross-table transaction single-table formats
     * push to an external catalog service): validate EVERY branch's
-    * OCC precondition first (each must fast-forward cleanly from its
-    * table's current head), and only then commit them all under the
-    * one lock nothing can interleave with. If ANY table moved past
-    * its branch's fork base, NOTHING publishes — every branch stays
-    * staged for re-staging or cherry-pick. The staged audit pattern
-    * this serves: a pipeline lands bronze+silver+gold (or data +
-    * index) as branches, audits them TOGETHER, and downstream readers
-    * never observe one without the other. Returns the published
-    * version per table, in input order. */
+    * OCC precondition first, and only then publish them all through
+    * [[RowStore.commitTables]] under the one lock nothing in this
+    * process can interleave with. Each branch must fast-forward
+    * cleanly from its table's current head: a table that advanced past
+    * its branch's fork base no longer matches the staged snapshot, and
+    * publishing it would silently drop the interleaved commits. If ANY
+    * table moved, NOTHING publishes — every branch stays staged for
+    * re-staging or cherry-pick. Each table's branch drops right after
+    * its link. The staged audit pattern this serves: a pipeline lands
+    * bronze+silver+gold (or data + index) as branches, audits them
+    * TOGETHER, and downstream readers never observe one without the
+    * other. Against a CRASH or a cross-process rival between two
+    * links, the linked tables stay published and the rest stay staged
+    * as branches; re-running publish_branches on the survivors
+    * reaches the same terminal state. Returns the published version
+    * per table, in input order. */
   def publishBranches(pairs: Seq[(String, String)]): Seq[Int] =
     RowStore.commitLock.synchronized {
       require(pairs.nonEmpty, "publish_branches: no (table, branch) pairs")
       require(pairs.map(_._1).distinct.size == pairs.size,
         "publish_branches: a table may appear once per call")
-      // phase 1 — validate ALL, STAGE all, commit NONE: every table's
-      // new manifest is fully rendered to a temp file before any
-      // becomes visible, so the crash window for a partial publish is
-      // the bare atomic links of phase 2 (microseconds, no rendering
-      // or IO-proportional work between them — r14 advisor). Residual
-      // window documented below.
-      val staged = pairs.map { case (t, b) =>
+      val plans = pairs.map { case (t, b) =>
         val (base, entries) = RowStore.readBranchManifest(t, b)
         val cur = RowStore.currentVersion(t)
         if (cur != base)
@@ -1378,34 +1359,11 @@ object RowStoreOps {
             s"$t: branch $b forked at version $base but the table is " +
               s"now at $cur — NOTHING was published (all-or-nothing); " +
               "re-stage or cherry-pick that branch and retry")
-        (t, b, cur, RowStore.stageManifest(t, cur + 1,
-          RowStore.versionMeta(t, cur), entries))
+        (t, cur, entries)
       }
-      // phase 2 — link all, then drop the branches. Against concurrent
-      // COMMITS this is fully atomic (the shared lock in-process; a
-      // cross-process interloper makes a link fail loudly via
-      // CommitConflictException before any behavioral divergence).
-      // Against a CRASH between two links, the already-linked tables
-      // stay published and the rest stay staged as branches — the
-      // recovery is re-running publish_branches on the survivors
-      // (same terminal state; nothing is lost or torn).
-      try staged.map { case (t, b, cur, tmp) =>
-        RowStore.publishStaged(t, cur + 1, tmp)
-        RowStore.dropBranch(t, b)
-        postPublishLinkHook(t)
-        cur + 1
-      } finally staged.foreach { case (_, _, _, tmp) =>
-        java.nio.file.Files.deleteIfExists(tmp) }
+      val branch = pairs.toMap
+      RowStore.commitTables(plans, t => RowStore.dropBranch(t, branch(t)))
     }
-
-  /** Test seam: invoked after EACH table's link + branch drop inside
-    * publish_branches' phase 2. The crash spec throws from it after
-    * the first table to pin the documented partial-publish recovery
-    * (published tables stay published, the rest stay staged, and
-    * re-running publish_branches on the survivors reaches the same
-    * terminal state). No-op in production. */
-  @volatile private[graft] var postPublishLinkHook: String => Unit =
-    _ => ()
 
   /** CHERRY-PICK a staged branch onto a main that MOVED past its fork
     * base (Iceberg's cherrypick_snapshot, the resolution publishBranch

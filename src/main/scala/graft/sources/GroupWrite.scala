@@ -205,9 +205,9 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
           if (epochId > RowStore.lastStreamEpoch(tableKey, queryId)) {
             val added = messages.flatMap(_.asInstanceOf[FilesMessage].files)
               .map(_.entry("base", meta.specId)).toSeq
-            RowStore.commit(tableKey, Seq(s"#ep\t$queryId\t$epochId"))(
-              (_, head) => head ++ added)
-            RowStore.recordStreamEpoch(tableKey, queryId, epochId)
+            val v = RowStore.commit(tableKey,
+              Seq(s"#ep\t$queryId\t$epochId"))((_, head) => head ++ added)
+            RowStore.recordStreamEpoch(tableKey, queryId, epochId, v)
           }
         }
       override def abort(epochId: Long,
@@ -425,17 +425,12 @@ object DvMerge {
   }
 
   /** Existing vector per TOUCHED target, keyed by target LEAF name
-    * (rid space is leaf-named; clone manifests keep dvTarget in leaf
-    * form too, but normalize here so even a legacy absolutized entry
-    * still merges instead of silently stacking a second vector —
-    * the r15 advisor's invariant-break). */
+    * (rid space is leaf-named, and every dv entry's target is a leaf:
+    * [[resolve]] writes it so, and clones keep it). */
   def existingVectors(man: Seq[RowStore.FileEntry],
-      touched: Set[String]): Map[String, RowStore.FileEntry] = {
-    def leafOf(n: String) = n.substring(n.lastIndexOf('/') + 1)
-    man.filter(e => e.kind == "dv" &&
-        e.dvTarget.exists(t => touched(leafOf(t))))
-      .map(e => leafOf(e.dvTarget.get) -> e).toMap
-  }
+      touched: Set[String]): Map[String, RowStore.FileEntry] =
+    man.filter(e => e.kind == "dv" && e.dvTarget.exists(touched))
+      .map(e => e.dvTarget.get -> e).toMap
 }
 
 /** `matRowIds` (row lineage, rewrite paths only): the writer appends

@@ -112,18 +112,8 @@ class FilesTable(baseKey: String) extends Table with SupportsRead {
       override def readSchema(): StructType = FilesTable.this.schema()
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] = {
-        val man = RowStore.readManifest(baseKey,
-          RowStore.currentVersion(baseKey))
-        val dir = RowStore.dataDir(baseKey)
-        // vector popcounts ride the manifest since r16 (the dv
-        // entry's `rows` field, stamped by the executor-side writer)
-        // — zero blob opens at plan time; a legacy entry without one
-        // falls back to reading its blob (rows-per-file/8 bytes)
-        val cards = man.filter(_.kind == "dv").map { e =>
-          e.name -> e.rows.getOrElse(RowStore.Dv.cardinality(
-            RowStore.Dv.read(RowStore.entryPath(dir, e.name))._2).toLong)
-        }.toMap
-        Array(FilesPartition(man, cards))
+        Array(FilesPartition(RowStore.readManifest(baseKey,
+          RowStore.currentVersion(baseKey))))
       }
       override def createReaderFactory(): PartitionReaderFactory =
         new PartitionReaderFactory {
@@ -141,7 +131,9 @@ class FilesTable(baseKey: String) extends Table with SupportsRead {
                   cur.minK.map(Long.box).orNull,
                   cur.maxK.map(Long.box).orNull,
                   cur.dvTarget.map(UTF8String.fromString).orNull,
-                  fp.dvCards.get(cur.name).map(Long.box).orNull,
+                  // a vector's popcount rides its manifest entry
+                  (if (cur.kind == "dv") cur.rows else None)
+                    .map(Long.box).orNull,
                   cur.firstRowId.map(Long.box).orNull))
               override def close(): Unit = ()
             }
@@ -150,8 +142,7 @@ class FilesTable(baseKey: String) extends Table with SupportsRead {
     }
 }
 
-case class FilesPartition(entries: Seq[RowStore.FileEntry],
-    dvCards: Map[String, Long] = Map.empty)
+case class FilesPartition(entries: Seq[RowStore.FileEntry])
     extends InputPartition
 
 /** `<table>.partitions` — Iceberg's partitions metadata table: one row
@@ -198,11 +189,8 @@ class PartitionsTable(baseKey: String) extends Table with SupportsRead {
           .map { case ((sp, g), fs) =>
             val base = fs.filter(_.kind == "base")
             val nDelta = fs.count(_.kind != "base")
-            // manifest-resident popcounts (r16); blob-read fallback
-            // for a legacy entry only
-            val dvDel = fs.filter(_.kind == "dv").map(e =>
-              e.rows.getOrElse(RowStore.Dv.cardinality(RowStore.Dv.read(
-                RowStore.entryPath(dir, e.name))._2).toLong)).sum
+            // manifest-resident popcounts
+            val dvDel = fs.filter(_.kind == "dv").flatMap(_.rows).sum
             val recordDeltas = fs.exists(e =>
               e.kind != "base" && e.kind != "dv")
             val nRows: Option[Long] =

@@ -95,7 +95,7 @@ object RowStore {
     * head and re-runs the caller's validation against it, so every
     * single-table commit rebases; it reaches a caller only after
     * [[MaxCommitAttempts]] consecutive losses, or from the multi-table
-    * publishes that stage and link their manifests themselves. */
+    * [[commitTables]], which does not retry. */
   final class CommitConflictException(msg: String)
     extends RuntimeException(msg)
 
@@ -712,7 +712,7 @@ object RowStore {
     * header, so the cost never grows with the entries (or their bloom
     * blobs) — the header always precedes the body. */
   private def header(key: String, v: Int): Seq[String] = {
-    val r = Files.newBufferedReader(Paths.get(tableDir(key), s"v$v.manifest"))
+    val r = Files.newBufferedReader(manifestPath(key, v))
     try {
       val out = Seq.newBuilder[String]
       var line = r.readLine()
@@ -767,8 +767,7 @@ object RowStore {
     * count) — what the `.manifests` metadata table surfaces so an
     * operator can see chain structure and per-commit write cost. */
   def manifestFileStats(key: String, v: Int): (Option[Int], Int, Int) = {
-    val lines = Files.readAllLines(
-      Paths.get(tableDir(key), s"v$v.manifest")).asScala.toSeq
+    val lines = Files.readAllLines(manifestPath(key, v)).asScala.toSeq
     val parent = lines.collectFirst { case l if l.startsWith("#parent\t") =>
       l.stripPrefix("#parent\t").toInt }
     // count entry LINES (parseEntries' own keep-predicate) rather than
@@ -780,16 +779,19 @@ object RowStore {
   /** Resolved-entry cache for [[readManifest]]: a committed version's
     * RESOLVED entry sequence is immutable (files never change meaning;
     * even [[materializeManifest]] rewrites only the FILE SHAPE — same
-    * resolved entries by contract), so one (key, version) resolution
-    * can be reused for the table's lifetime. Without it, every commit
-    * on a deep incremental chain re-walks the chain's manifest FILES
-    * (st31's per-micro-batch MERGE read the whole chain per epoch —
-    * O(chain) file IO per commit, the round-11 regression), and every
-    * scan build re-reads at least one file. LRU-bounded; purged per
-    * table on [[drop]] and per version when VACUUM deletes a manifest
-    * (a cached entry surviving expiry would let `VERSION AS OF` an
-    * expired snapshot silently succeed — q111 pins that it fails). */
-  private val manifestCache = lru[(String, Int), Seq[FileEntry]](512)
+    * resolved entries by contract), so one resolution can be reused for
+    * as long as its manifest file is the same file. Without it, every
+    * commit on a deep incremental chain re-walks the chain's manifest
+    * FILES (st31's per-micro-batch MERGE read the whole chain per epoch
+    * — O(chain) file IO per commit, the round-11 regression), and every
+    * scan build re-reads at least one file. Each hit is checked against
+    * the manifest's [[fileId]] with one stat, so a manifest that VACUUM
+    * deleted (q111 pins that `VERSION AS OF` an expired snapshot
+    * fails) or that a DROP and re-CREATE replaced — in this process or
+    * any other sharing the warehouse — is never served from here.
+    * LRU-bounded; entries of dropped tables simply age out. */
+  private val manifestCache =
+    lru[(String, Int), (FileId, Seq[FileEntry])](512)
 
   /** A synchronized access-order LRU map holding at most `cap` entries. */
   private def lru[K, V](cap: Int): java.util.Map[K, V] =
@@ -799,17 +801,20 @@ object RowStore {
           size > cap
       })
 
-  /** Drops the entries of `cache` whose key `hit` selects (iterating
-    * under the map's own monitor — synchronizedMap views aren't safe
-    * to traverse unsynchronized). */
-  private def purge[K](cache: java.util.Map[K, _], hit: K => Boolean): Unit =
-    cache.synchronized {
-      cache.keySet.asScala.filter(hit).toList.foreach(cache.remove)
-    }
+  /** Which file a path names right now: its inode key, modification
+    * time and size. Deleting a manifest and writing one again at the
+    * same path yields a different id. */
+  private type FileId = (AnyRef, java.nio.file.attribute.FileTime, Long)
 
-  /** VACUUM expired version `v`: forget its resolution. */
-  private[sources] def purgeManifestCache(key: String, v: Int): Unit = {
-    manifestCache.remove((tableDir(key), v)); ()
+  private[sources] def manifestPath(key: String, v: Int): Path =
+    Paths.get(tableDir(key), s"v$v.manifest")
+
+  /** The [[FileId]] of version `v`'s manifest; throws
+    * NoSuchFileException when it is not (or no longer) published. */
+  private def fileId(key: String, v: Int): FileId = {
+    val a = Files.readAttributes(manifestPath(key, v),
+      classOf[java.nio.file.attribute.BasicFileAttributes])
+    (a.fileKey, a.lastModifiedTime, a.size)
   }
 
   def readManifest(key: String, v: Int): Seq[FileEntry] = {
@@ -817,11 +822,11 @@ object RowStore {
     // re-created same-named table under a new SparkSession's root
     // must never resolve through the old application's cache
     val ck = (tableDir(key), v)
+    val id = fileId(key, v)
     val cached = manifestCache.get(ck)
-    if (cached != null) cached
+    if (cached != null && cached._1 == id) cached._2
     else {
-      val lines = Files.readAllLines(
-        Paths.get(tableDir(key), s"v$v.manifest")).asScala.toSeq
+      val lines = Files.readAllLines(manifestPath(key, v)).asScala.toSeq
       val resolved = lines.collectFirst { case l if l.startsWith("#parent\t") =>
         l.stripPrefix("#parent\t").toInt } match {
         case None => parseEntries(lines)
@@ -836,7 +841,7 @@ object RowStore {
           readManifest(key, p).filterNot(e => removed(e.name)) ++
             parseEntries(lines)
       }
-      manifestCache.put(ck, resolved)
+      manifestCache.put(ck, (id, resolved))
       resolved
     }
   }
@@ -848,7 +853,7 @@ object RowStore {
     * resolve the identical entry sequence). Caller holds
     * [[commitLock]]. */
   private[sources] def materializeManifest(key: String, v: Int): Unit = {
-    val p = Paths.get(tableDir(key), s"v$v.manifest")
+    val p = manifestPath(key, v)
     val lines = Files.readAllLines(p).asScala.toSeq
     if (lines.exists(_.startsWith("#parent\t"))) {
       val resolved = readManifest(key, v)
@@ -941,6 +946,9 @@ object RowStore {
           s"corrupt manifest line (unpaired stats): $l")
         require(minS.isDefined == maxS.isDefined,
           s"corrupt manifest line (unpaired string stats): $l")
+        // every vector carries its popcount and target leaf (DvMerge)
+        require(toks(0) != "dv" || (rows.isDefined && dvTarget.isDefined),
+          s"corrupt manifest line (vector without row count or target): $l")
         FileEntry(toks(0), toks(1).toInt, toks(2), minK, maxK, rows, spec,
           minS, maxS, colsN, colsS, blooms, ndv, dvTarget, firstRowId)
       }
@@ -983,42 +991,42 @@ object RowStore {
     * "mark written" cannot exist, so a replayed epoch can never
     * double-commit. Resolution scans retained versions newest-first;
     * like Delta's txn retention, VACUUMing past a query's last commit
-    * ends its replay-dedup window. -1 = nothing committed yet. */
-  /** In-memory high-water cache: every epoch commit runs on this
-    * driver under [[commitLock]], so once a (table, query) mark is
-    * resolved from the manifests, later commits keep it current in
-    * memory — without it, each epoch commit re-reads every retained
-    * manifest newest-first (O(versions) file IO per epoch, O(V²) over
-    * a long-running query into a table with deep history). Entries
-    * drop with the table ([[drop]]), and the map is access-order LRU
-    * bounded (same discipline as [[graft.SessionLruCache]] — which
-    * doesn't fit directly: epoch marks need overwrite-put on commit
-    * and per-table invalidation, and the commit path has no session in
-    * scope). Eviction is cheap-and-correct: a dropped mark re-resolves
-    * from the manifests on next touch. */
-  private val epochCache = lru[(String, String), java.lang.Long](1024)
+    * ends its replay-dedup window. -1 = nothing committed yet.
+    *
+    * Every epoch commit runs on this driver under [[commitLock]], so
+    * once a (table, query) mark is resolved, later commits keep it
+    * current in `epochCache` — without it, each epoch commit re-reads
+    * every retained manifest newest-first (O(versions) file IO per
+    * epoch, O(V²) over a long-running query into a table with deep
+    * history). A cached mark remembers the version whose manifest
+    * carries it and that manifest's [[fileId]], and holds only while
+    * that is still the same file: a DROP and re-CREATE of the table
+    * by any process, or a VACUUM that expired the version, sends the
+    * next call back to the manifests. Access-order LRU bounded;
+    * eviction is cheap-and-correct. */
+  private val epochCache = lru[(String, String), (Int, FileId, Long)](1024)
 
   def lastStreamEpoch(key: String, queryId: String): Long = {
     // keyed by the PER-APPLICATION table dir, not the bare name: a
     // second SparkSession in this JVM gets a fresh scratch root, and
     // a stale mark for a same-named table must not leak across
-    val ck = (tableDir(key), queryId)
-    val cached = epochCache.get(ck)
-    if (cached != null) cached.longValue
-    else {
-      val resolved = versions(key).reverse.iterator
-        .flatMap(v => headerValue(key, v, s"#ep\t$queryId"))
-        .nextOption().fold(-1L)(_.toLong)
-      epochCache.put(ck, java.lang.Long.valueOf(resolved))
-      resolved
-    }
+    val cached = epochCache.get((tableDir(key), queryId))
+    val live = cached != null &&
+      (try fileId(key, cached._1) == cached._2
+      catch { case _: java.nio.file.NoSuchFileException => false })
+    if (live) cached._3
+    else versions(key).reverse.iterator
+      .flatMap(v => headerValue(key, v, s"#ep\t$queryId").map(v -> _.toLong))
+      .nextOption().fold(-1L) { case (v, epoch) =>
+        recordStreamEpoch(key, queryId, epoch, v); epoch }
   }
 
-  /** Record a just-committed epoch (called under [[commitLock]] right
-    * after the manifest carrying its `#ep` header is written). */
+  /** Record epoch `epoch` as committed by version `v` (called under
+    * [[commitLock]] right after that version, whose header carries the
+    * `#ep` mark, is published). */
   private[sources] def recordStreamEpoch(key: String, queryId: String,
-      epoch: Long): Unit =
-    epochCache.put((tableDir(key), queryId), java.lang.Long.valueOf(epoch))
+      epoch: Long, v: Int): Unit =
+    epochCache.put((tableDir(key), queryId), (v, fileId(key, v), epoch))
 
   /** Test seam for commit wall-clock (TIMESTAMP AS OF resolution). */
   @volatile private[graft] var clock: () => Long =
@@ -1050,11 +1058,10 @@ object RowStore {
     * precondition for an atomic link/rename), WITHOUT publishing it.
     * The header carries the commit time, the whole `meta`, the
     * row-id high-water mark and `extraHeader`. [[publishStaged]] makes
-    * it the committed version; the split exists so multi-table
-    * publish (publish_branches) can stage EVERY table's manifest
-    * before linking ANY of them, shrinking the partial-publish crash
-    * window to the links alone. */
-  def stageManifest(key: String, v: Int, meta: Meta,
+    * it the committed version; the split exists so [[commitTables]]
+    * can stage EVERY table's manifest before linking ANY of them. Only
+    * [[stageAndLink]] and [[create]] call the pair. */
+  private[graft] def stageManifest(key: String, v: Int, meta: Meta,
       entries0: Seq[FileEntry], extraHeader: Seq[String] = Seq.empty,
       rowIdFloor: Long = 0L): Path = {
     // ── ROW-LINEAGE ASSIGNMENT (rowids tables) — the one funnel every
@@ -1117,7 +1124,7 @@ object RowStore {
     // full manifest past that depth, so snapshot reads stay bounded.
     val body = {
       val pv = v - 1
-      val parentPath = Paths.get(tableDir(key), s"v$pv.manifest")
+      val parentPath = manifestPath(key, pv)
       if (v <= 0 || !Files.exists(parentPath)) renderEntries(entries)
       else if (manifestChainLength(key, pv) >= CheckpointEvery)
         renderEntries(entries)
@@ -1270,8 +1277,8 @@ object RowStore {
     * [[ManifestPublisher]] seam. A loser's staged file is cleaned up
     * and [[CommitConflictException]] tells it to re-validate against
     * the new head. */
-  def publishStaged(key: String, v: Int, staged: Path): Unit = {
-    val target = Paths.get(tableDir(key), s"v$v.manifest")
+  private[graft] def publishStaged(key: String, v: Int, staged: Path): Unit = {
+    val target = manifestPath(key, v)
     try publisher.publishIfAbsent(target, staged)
     catch {
       case e: java.nio.file.FileAlreadyExistsException =>
@@ -1281,15 +1288,6 @@ object RowStore {
             "head, re-validate, and retry")
     }
   }
-
-  /** Stage + atomically publish version `v`. Throws
-    * [[CommitConflictException]] if another writer (any process) won
-    * version `v` first. */
-  private def writeManifest(key: String, v: Int, meta: Meta,
-      entries: Seq[FileEntry], extraHeader: Seq[String] = Seq.empty,
-      rowIdFloor: Long = 0L): Unit =
-    publishStaged(key, v,
-      stageManifest(key, v, meta, entries, extraHeader, rowIdFloor))
 
   /** Publish attempts one [[commit]] makes: a bound, not a policy —
     * losing this many in a row to other processes means a
@@ -1312,9 +1310,9 @@ object RowStore {
     * undo) uses to change it in the same publish; like `next` it
     * re-runs against every head it rebases onto, and may throw
     * ConcurrentModificationException. A caller that already holds the
-    * lock (streaming epochs, branch publishes, ALTER) runs
-    * [[preCommitHook]] under it. Multi-table publishes (Transact,
-    * publishBranches) stage and link their manifests themselves. */
+    * lock (streaming epochs, ALTER) runs [[preCommitHook]] under it.
+    * Versions of several tables published together go through
+    * [[commitTables]]. */
   def commit(key: String, extraHeader: Seq[String] = Seq.empty,
       evolve: Meta => Meta = identity)(
       next: (Int, Seq[FileEntry]) => Seq[FileEntry]): Int = {
@@ -1323,14 +1321,54 @@ object RowStore {
       val cur = currentVersion(key)
       val entries = next(cur, readManifest(key, cur))
       val meta = evolve(versionMeta(key, cur))
-      prePublishHook()
       val won =
-        try { writeManifest(key, cur + 1, meta, entries, extraHeader); true }
+        try { stageAndLink(Seq((key, cur, meta, entries)), extraHeader); true }
         catch { case _: CommitConflictException if n < MaxCommitAttempts => false }
       if (won) cur + 1 else attempt(n + 1)
     }
     preCommitHook()
     commitLock.synchronized(attempt(1))
+  }
+
+  /** THE multi-table commit (publish_branches, COMMIT TRANSACTION):
+    * publishes version `cur + 1` of every `(key, cur, entries)` plan,
+    * each under its head's [[Meta]], and returns the new versions in
+    * input order. The caller holds [[commitLock]] and has validated
+    * every plan against its head `cur` before calling, so every check
+    * runs before any link. Runs [[preCommitHook]] once, then
+    * [[stageAndLink]] with `afterLink` as the per-table step. There is
+    * no retry: a link lost to another process throws
+    * [[CommitConflictException]], and the tables linked before it stay
+    * published — the documented partial-publish window, which staging
+    * every manifest before linking any narrows to the links alone. */
+  def commitTables(plans: Seq[(String, Int, Seq[FileEntry])],
+      afterLink: String => Unit = _ => ()): Seq[Int] = {
+    require(Thread.holdsLock(commitLock),
+      "commitTables runs under the commit lock its caller validated in")
+    preCommitHook()
+    stageAndLink(plans.map { case (key, cur, entries) =>
+      (key, cur, versionMeta(key, cur), entries) }, afterLink = afterLink)
+  }
+
+  /** The publish step [[commit]] and [[commitTables]] share: stages
+    * version `cur + 1` of every `(key, cur, meta, entries)` plan, then,
+    * table by table, runs [[prePublishHook]], links the staged
+    * manifest and calls `afterLink(key)`. Returns the published
+    * versions; no staged temp outlives it. */
+  private def stageAndLink(plans: Seq[(String, Int, Meta, Seq[FileEntry])],
+      extraHeader: Seq[String] = Seq.empty,
+      afterLink: String => Unit = _ => ()): Seq[Int] = {
+    val staged = scala.collection.mutable.ListBuffer.empty[Path]
+    try {
+      plans.foreach { case (key, cur, meta, entries) =>
+        staged += stageManifest(key, cur + 1, meta, entries, extraHeader) }
+      plans.zip(staged).map { case ((key, cur, _, _), tmp) =>
+        prePublishHook()
+        publishStaged(key, cur + 1, tmp)
+        afterLink(key)
+        cur + 1
+      }
+    } finally staged.foreach(Files.deleteIfExists(_))
   }
 
   /** Publish version 0 of a new table (CREATE, snapshot_table) — its
@@ -1341,7 +1379,8 @@ object RowStore {
   def create(key: String, meta: Meta, entries: Seq[FileEntry] = Seq.empty,
       rowIdFloor: Long = 0L): Unit = {
     Files.createDirectories(Paths.get(tableDir(key)))
-    writeManifest(key, 0, meta, entries, rowIdFloor = rowIdFloor)
+    publishStaged(key, 0,
+      stageManifest(key, 0, meta, entries, rowIdFloor = rowIdFloor))
   }
 
   // ── BRANCHES (Iceberg's write-audit-publish surface): a branch
@@ -1440,13 +1479,7 @@ object RowStore {
     }.sorted.map(n => (n, readTag(key, n)))
 
   def drop(key: String): Boolean = {
-    // the caches follow the table: a re-created table with the same
-    // name starts a fresh manifest chain, so stale epoch marks
-    // and resolutions must not survive the drop
-    val dir = tableDir(key)
-    purge[(String, String)](epochCache, _._1 == dir)
-    purge[(String, Int)](manifestCache, _._1 == dir)
-    val d = Paths.get(dir)
+    val d = Paths.get(tableDir(key))
     if (!Files.exists(d)) false
     else {
       val walk = Files.walk(d)

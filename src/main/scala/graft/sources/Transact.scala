@@ -32,10 +32,10 @@ import scala.jdk.CollectionConverters._
   *     external references (add_files imports) carry verbatim. Leaf
   *     names never change, so `leaf#pos` rid addressing — and with it
   *     every delta record and deletion-vector pairing — survives
-  *     adoption untouched. Every table's next manifest is STAGED
-  *     before any publishes, then all link atomically (the
-  *     publish_branches two-phase discipline); the clones and the
-  *     record drop.
+  *     adoption untouched. The tables then publish through
+  *     [[RowStore.commitTables]], the multi-table commit
+  *     publish_branches also uses: every table's next manifest is
+  *     STAGED before any links; the clones and the record drop.
   *
   *     OCC is GROUP-LEVEL (r15 verdict item 4): a base that advanced
   *     since BEGIN refuses only when a (spec, group) pair the
@@ -337,73 +337,44 @@ object Transact {
   }
 
   /** Phases 1+2 of [[commit]] (caller holds the lock and owns the
-    * failure contract). */
+    * failure contract): adopt every clone's files, then publish every
+    * table through [[RowStore.commitTables]]. KNOWN WINDOW (the
+    * copy_into/publish_branches documentation discipline): a
+    * cross-process writer that commits a version number between
+    * phase 0 and a later table's link makes that link throw
+    * CommitConflictException with EARLIER tables already published
+    * and the remaining clones' txn-written files already moved — the
+    * already-published tables are correct and durable, the
+    * unpublished tables are untouched, and the moved files are
+    * unreferenced debris remove_orphan_files reclaims; the residual
+    * transaction closes rather than retries. Single-writer-per-table
+    * deployments (this harness) never hit it; a real format closes it
+    * with a catalog-service CAS over the whole table set. */
   private def commitAdopt(txn: Txn, plans: Seq[TablePlan]): Seq[Int] = {
     val id = txn.id
-      // staged-temp ledger spanning BOTH phases: a phase-1 failure on
-      // table N (adopt IO error, stageManifest throw) must still
-      // reclaim tables 1..N-1's already-staged temps — the phase-2
-      // finally alone only covers a fully-built `staged` collection
-      // (r15 advisor finding). deleteIfExists is idempotent against
-      // publishStaged's own cleanup.
-      val stagedTmps = scala.collection.mutable.ListBuffer.empty[Path]
-      try {
-      // phase 1 — adopt + stage every table's next manifest
-      val staged = plans.map { plan =>
-        val t = plan.table
-        val baseData = RowStore.dataDir(t)
-        val cloneData = RowStore.dataDir(cloneKey(t, id))
-        def adopt(n: String): String =
-          if (!n.startsWith("/")) {
-            // clone-relative = a file THIS transaction wrote: move it
-            // into the base's data dir (same filesystem, pure rename).
-            // UUID leaf names make collisions impossible.
-            Files.move(Paths.get(cloneData, n), Paths.get(baseData, n))
-            n
-          } else if (n.startsWith(baseData + "/"))
-            n.stripPrefix(baseData + "/") // untouched shallow-clone ref
-          else n // genuine external reference (add_files import)
-        // a dv TARGET is an address, never an owned file — clones now
-        // keep it in canonical leaf form (snapshotTable), so this is
-        // normally the identity; it still strips a base-absolute form
-        // defensively so a legacy-shaped manifest can never leak an
-        // absolutized target into the base
-        def readdress(n: String): String =
-          if (n.startsWith(baseData + "/")) n.stripPrefix(baseData + "/")
-          else n
-        val entries = plan.carried ++ plan.adopt
-          .map(e => e.copy(name = adopt(e.name),
-            dvTarget = e.dvTarget.map(readdress)))
-        val tmp = RowStore.stageManifest(t, plan.cur + 1,
-          RowStore.versionMeta(t, plan.cur), entries)
-        stagedTmps += tmp
-        (t, plan.cur, tmp)
-      }
-      // phase 2 — link all (atomic create-if-absent per table; the
-      // lock + phase-0 validation make an in-flight loss impossible
-      // in-process, and a cross-process interloper fails loudly).
-      // KNOWN WINDOW (the copy_into/publish_branches documentation
-      // discipline): a cross-process writer that commits a version
-      // number between phase 0 and a later table's link makes that
-      // link throw CommitConflictException with EARLIER tables
-      // already published and the remaining clones' txn-written files
-      // already moved — the already-published tables are correct and
-      // durable, the unpublished tables are untouched, and the moved
-      // files are unreferenced debris remove_orphan_files reclaims;
-      // the residual transaction should be rolled back, not retried.
-      // Single-writer-per-table deployments (this harness) never hit
-      // it; a real format closes it with a catalog-service CAS over
-      // the whole table set.
-      val versions = staged.map { case (t, cur, tmp) =>
-        RowStore.publishStaged(t, cur + 1, tmp)
-        cur + 1
-      }
-      txn.tables.foreach(t => RowStore.drop(cloneKey(t, id)))
-      live.remove(id)
-      Files.deleteIfExists(recordPath(id))
-      versions
-      } finally stagedTmps.foreach { tmp =>
-        Files.deleteIfExists(tmp); ()
-      }
+    // phase 1 — adopt: every table's next entry list, in base form
+    val adopted = plans.map { plan =>
+      val t = plan.table
+      val baseData = RowStore.dataDir(t)
+      val cloneData = RowStore.dataDir(cloneKey(t, id))
+      def adopt(n: String): String =
+        if (!n.startsWith("/")) {
+          // clone-relative = a file THIS transaction wrote: move it
+          // into the base's data dir (same filesystem, pure rename).
+          // UUID leaf names make collisions impossible.
+          Files.move(Paths.get(cloneData, n), Paths.get(baseData, n))
+          n
+        } else if (n.startsWith(baseData + "/"))
+          n.stripPrefix(baseData + "/") // untouched shallow-clone ref
+        else n // genuine external reference (add_files import)
+      (t, plan.cur,
+        plan.carried ++ plan.adopt.map(e => e.copy(name = adopt(e.name))))
+    }
+    // phase 2 — stage all, then link all
+    val versions = RowStore.commitTables(adopted)
+    txn.tables.foreach(t => RowStore.drop(cloneKey(t, id)))
+    live.remove(id)
+    Files.deleteIfExists(recordPath(id))
+    versions
   }
 }

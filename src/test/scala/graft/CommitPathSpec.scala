@@ -9,11 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{RowStore, RowStoreOps}
 
-/** Every single-table version is published by [[RowStore.commit]]:
-  * statements and procedures outside the SQL write path run the same
-  * two commit hooks once per version they publish, a publish that
-  * keeps losing gives up after [[RowStore.MaxCommitAttempts]]
-  * attempts, and no other source file invokes the hooks. Table
+/** Every single-table version is published by [[RowStore.commit]],
+  * and every multi-table one (publish_branches, a transaction commit)
+  * by [[RowStore.commitTables]]: statements and procedures outside the
+  * SQL write path run the same two commit hooks once per version they
+  * publish, a publish that keeps losing gives up after
+  * [[RowStore.MaxCommitAttempts]] attempts, and no other source file
+  * invokes the hooks or stages and links a manifest itself. Table
   * metadata lives only in the published versions: a CREATE or ALTER
   * whose publish is lost leaves no trace of its metadata. */
 class CommitPathSpec extends AnyFunSuite {
@@ -207,6 +209,58 @@ class CommitPathSpec extends AnyFunSuite {
     RowStore.drop(t)
   }
 
+  test("publish_branches and a transaction commit publish each table once through the hooks") {
+    val s = spark
+    val (a, b) = ("graft_dml.spec.cpath_ma", "graft_dml.spec.cpath_mb")
+    for (t <- Seq(a, b)) {
+      s.sql(s"DROP TABLE IF EXISTS $t")
+      s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
+      s.sql(s"INSERT INTO $t VALUES (1, 10)")
+    }
+    // each table gains exactly one version, with one preCommit call
+    // for the whole publish and one prePublish call per table
+    def oncePerTable(what: String, tables: Seq[String])(op: => Unit): Unit = {
+      val before = tables.map(RowStore.currentVersion)
+      val (pre, pub) = counted(op)
+      assert(tables.map(RowStore.currentVersion) == before.map(_ + 1),
+        s"$what must publish exactly one version per table")
+      assert((pre, pub) == ((1, tables.size)),
+        s"$what: preCommit/prePublish calls = ($pre, $pub)")
+    }
+    for (t <- Seq(a, b))
+      s.range(2, 3).selectExpr("id AS k", "id * 10 AS v").writeTo(t)
+        .option("branch", "audit").append()
+    oncePerTable("publish_branches", Seq(a, b)) {
+      RowStoreOps.publishBranches(Seq(a -> "audit", b -> "audit")); ()
+    }
+    val txn = graft.sources.Transact.begin(Seq(a, b))
+    for (t <- Seq(a, b))
+      s.sql(s"INSERT INTO ${graft.sources.Transact.cloneKey(t, txn.id)} " +
+        "VALUES (3, 30)")
+    oncePerTable("commit_transaction", Seq(a, b)) {
+      graft.sources.Transact.commit(txn.id); ()
+    }
+    for (t <- Seq(a, b)) {
+      assert(s.table(t).orderBy("k").collect().map(_.getLong(0)).toSeq ==
+        Seq(1L, 2L, 3L), s"content of $t")
+      s.sql(s"DROP TABLE $t")
+    }
+  }
+
+  test("a deletion-vector entry without its row count or target is refused") {
+    val s = spark
+    val t = "graft_dml.spec.cpath_dvline"
+    s.sql(s"DROP TABLE IF EXISTS $t")
+    s.sql(s"CREATE TABLE $t (k BIGINT)")
+    val v0 = Paths.get(RowStore.dataDir(t)).getParent.resolve("v0.manifest")
+    // a vector entry naming its target but not its popcount
+    Files.write(v0, (Files.readAllLines(v0).asScala :+
+      "dv\t0\tdv0-x.bin\tDpart-0.parquet").asJava)
+    val e = intercept[IllegalArgumentException](RowStore.readManifest(t, 0))
+    assert(e.getMessage.contains("corrupt manifest line"), e.getMessage)
+    RowStore.drop(t)
+  }
+
   test("only RowStore runs the commit hooks") {
     val main = Paths.get("src/main/scala")
     assert(Files.isDirectory(main), s"run from the repository root: $main")
@@ -217,7 +271,8 @@ class CommitPathSpec extends AnyFunSuite {
     val hits = for {
       p: Path <- files
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      h <- Seq("preCommitHook()", "prePublishHook()") if line.contains(h)
+      h <- Seq("preCommitHook()", "prePublishHook()", "stageManifest(",
+        "publishStaged(") if line.contains(h)
     } yield s"$p:${i + 1}: $h"
     assert(hits.isEmpty, hits.mkString("\n"))
   }

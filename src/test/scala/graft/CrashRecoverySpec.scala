@@ -145,14 +145,16 @@ class CrashRecoverySpec extends AnyFunSuite {
       s.range(3, 5).selectExpr("id AS k", "id * 10 AS v")
         .writeTo(t).option("branch", "audit").append()
     }
-    // inject the crash AFTER the first table's link + branch drop —
-    // the sharpest window the r14 verdict named for q176
-    RowStoreOps.postPublishLinkHook =
-      t => sys.error(s"injected crash after $t")
+    // inject the crash AFTER the first table's link + branch drop
+    // (before the second table's link) — the sharpest window the r14
+    // verdict named for q176
+    val links = new java.util.concurrent.atomic.AtomicInteger(0)
+    RowStore.prePublishHook = () =>
+      if (links.incrementAndGet() == 2) sys.error(s"injected crash after $ka")
     val e =
       try intercept[RuntimeException] {
         RowStoreOps.publishBranches(Seq((ka, "audit"), (kb, "audit")))
-      } finally RowStoreOps.postPublishLinkHook = _ => ()
+      } finally RowStore.prePublishHook = () => ()
     assert(e.getMessage.contains("injected crash"), e.getMessage)
     // partial state is EXACTLY as documented: the linked table is
     // published (branch consumed), the other still fully staged

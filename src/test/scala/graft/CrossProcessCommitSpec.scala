@@ -31,7 +31,12 @@ import graft.sources.RowStore
   *      [[RowStore.commit]];
   *   5. two processes' ALTERs never split table metadata from its
   *      version: the loser lands on top of the winner's schema or
-  *      refuses, and the current metadata is always the head's.
+  *      refuses, and the current metadata is always the head's;
+  *   6. a table the other process dropped and re-created reads as the
+  *      new table: no cached resolution of the old one is served;
+  *   7. publish_branches whose first link loses to the other process
+  *      throws CommitConflictException (a multi-table publish never
+  *      retries) and publishes nothing: every branch stays staged.
   */
 class CrossProcessCommitSpec extends AnyFunSuite {
 
@@ -203,6 +208,71 @@ class CrossProcessCommitSpec extends AnyFunSuite {
       }
       assert(RowStore.readMeta(key) == RowStore.versionMeta(key, head))
       assert(s.table(key).schema.fieldNames.toSeq == cols(head))
+    } finally {
+      System.clearProperty("graft.warehouse.root")
+      Scratch.deleteTree(root)
+    }
+  }
+
+  private def rows(key: String): Seq[(Long, Long)] =
+    SparkSuite.spark.table(key).orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  test("a table another process dropped and re-created reads as the new table") {
+    val s = SparkSuite.spark
+    val root = Files.createTempDirectory("graft-xproc").toString
+    System.setProperty("graft.warehouse.root", root)
+    try {
+      val key = "graft_dml.xp.t"
+      s.sql(s"DROP TABLE IF EXISTS $key")
+      s.sql(s"CREATE TABLE $key (k BIGINT, v BIGINT)")
+      s.sql(s"INSERT INTO $key VALUES (1, 10), (2, 20)")
+      assert(rows(key) == Seq((1L, 10L), (2L, 20L)))
+      // same name, same version numbers, other files
+      awaitOk(forkWorker(root, Seq(
+        s"DROP TABLE $key",
+        s"CREATE TABLE $key (k BIGINT, v BIGINT)",
+        s"INSERT INTO $key VALUES (7, 70)")))
+      assert(RowStore.versions(key) == Seq(0, 1))
+      assert(rows(key) == Seq((7L, 70L)))
+    } finally {
+      System.clearProperty("graft.warehouse.root")
+      Scratch.deleteTree(root)
+    }
+  }
+
+  test("publish_branches loses its first link to another process and publishes nothing") {
+    val s = SparkSuite.spark
+    val root = Files.createTempDirectory("graft-xproc").toString
+    System.setProperty("graft.warehouse.root", root)
+    try {
+      val (a, b) = ("graft_dml.xp.pa", "graft_dml.xp.pb")
+      for (t <- Seq(a, b)) {
+        s.sql(s"DROP TABLE IF EXISTS $t")
+        s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
+        s.sql(s"INSERT INTO $t VALUES (1, 10)")
+        s.range(2, 4).selectExpr("id AS k", "id * 10 AS v").writeTo(t)
+          .option("branch", "audit").append()
+      }
+      val (va, vb) = (RowStore.currentVersion(a), RowStore.currentVersion(b))
+      // the worker's INSERT takes a's next version after every branch
+      // validated and staged, before a's link
+      val fires = new AtomicInteger(0)
+      RowStore.prePublishHook = () => {
+        if (fires.incrementAndGet() == 1)
+          awaitOk(forkWorker(root, Seq(s"INSERT INTO $a VALUES (9, 90)")))
+      }
+      try intercept[RowStore.CommitConflictException] {
+        graft.sources.RowStoreOps.publishBranches(
+          Seq(a -> "audit", b -> "audit"))
+      } finally RowStore.prePublishHook = () => ()
+      assert(fires.get() == 1, "no link may follow the lost one")
+      assert(RowStore.versions(a) == (0 to va + 1) && rows(a) ==
+        Seq((1L, 10L), (9L, 90L)), s"a holds only the worker's version")
+      assert(RowStore.versions(b) == (0 to vb) &&
+        rows(b) == Seq((1L, 10L)), "b is untouched")
+      for (t <- Seq(a, b))
+        assert(RowStore.branchExists(t, "audit"), s"$t's branch stays staged")
     } finally {
       System.clearProperty("graft.warehouse.root")
       Scratch.deleteTree(root)
