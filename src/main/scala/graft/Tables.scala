@@ -64,24 +64,31 @@ object Tables {
     }
   }
 
-  /** Spread a scan to session parallelism when it arrives in fewer
-    * splits than half the session's (optimization guide §2.5 input
-    * skew): the harness tables are ONE parquet split at small SFs, so
-    * CPU-heavy per-row derivation fused after the scan (JSON
-    * build/parse at ingest, hash placement + explode) otherwise runs
-    * in a single task. Parallelism is the smaller of the shuffle
-    * partition count and the cores: a session configured with far more
-    * shuffle partitions than cores gains nothing from spreading a scan
-    * that already covers them. Hash-of-key repartition — deterministic
-    * under retry (the §2.5 rule) and exempt from sortBeforeRepartition's
-    * local sort — and USER-specified, so AQE never coalesces it. At
+  /** The one repartition of an under-split input (optimization guide
+    * §2.5 input skew). The harness tables are ONE parquet split at
+    * small SFs, so CPU-heavy per-row work fused after the scan (text
+    * tokenizing, decode stubs, JSON build/parse, hash placement,
+    * vector scoring) otherwise runs in a single task.
+    *
+    * Gate: parallelism `parts` is the smaller of the shuffle partition
+    * count and the cores (a session with far more shuffle partitions
+    * than cores gains nothing from spreading a scan that already
+    * covers them), and `df` is spread only when its splits × 2 are
+    * fewer than `parts`; otherwise `df` itself is returned. At
     * 100 TB the scan already has more splits than the session has
-    * cores and no exchange is added at all. */
-  def spreadNarrowScan(s: SparkSession, df: DataFrame, key: String): DataFrame = {
+    * cores, so no exchange is added: an ungated spread there would be
+    * a full shuffle of the corpus down to the core count.
+    *
+    * Kind: round-robin `repartition(parts)` — USER-specified, so AQE
+    * never coalesces it, and deterministic under retry through
+    * `spark.sql.execution.sortBeforeRepartition`. Repartitioning moves
+    * rows and never makes them, so a caller's result must not depend on
+    * which partition a row lands in. */
+  def spread(df: DataFrame): DataFrame = {
+    val s = df.sparkSession
     val parts = math.min(s.sessionState.conf.numShufflePartitions,
       s.sparkContext.defaultParallelism)
-    if (df.queryExecution.toRdd.getNumPartitions * 2 < parts)
-      df.repartition(parts, org.apache.spark.sql.functions.col(key))
+    if (df.queryExecution.toRdd.getNumPartitions * 2 < parts) df.repartition(parts)
     else df
   }
 

@@ -37,38 +37,28 @@ object Dedup {
   private[operators] def docs(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
 
-  /** word-level 3-gram shingle set (distinct), lowercased.
-    *
-    * Spreads UNDER-PARALLEL inputs first: a small corpus parquet is ONE
-    * input split, and the gram pipeline (regex split + HOF transform +
-    * hash + sort) is interpreted (higher-order lambdas are not
-    * codegen'd), so without the spread every downstream stage that
-    * fuses with this projection — including a broadcast join's streamed
-    * side — runs on one core (measured: 25s single-task vs ~2s spread
-    * at sf0.1). The repartition is GATED on actual input parallelism
-    * (round-3 verdict): at 100 TB the scan already yields far more
-    * splits than cores and an unconditional repartition would be a
-    * full-corpus shuffle of raw text bodies — there it is a no-op. */
-  private[operators] def spreadSmall(df: DataFrame): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.queryExecution.toRdd.getNumPartitions < want) df.repartition(want)
-    else df
-  }
-
   private val gramArraySql =
     "array_distinct(transform(sequence(0, size(toks)-3), " +
       "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))"
 
+  /** word-level 3-gram shingle set (distinct), lowercased.
+    *
+    * Spreads the input first ([[Tables.spread]]): the gram pipeline
+    * (regex split + HOF transform + hash + sort) is interpreted
+    * (higher-order lambdas are not codegen'd), so on a one-split corpus
+    * every downstream stage that fuses with this projection — including
+    * a broadcast join's streamed side — runs on one core (measured: 25s
+    * single-task vs ~2s spread at sf0.1). */
   private def withToks(df: DataFrame): DataFrame =
-    spreadSmall(df)
+    Tables.spread(df)
       .withColumn("toks", expr("split(lower(text), '\\\\s+')"))
       .filter(size(col("toks")) >= 3)
 
   private def withGrams(df: DataFrame): DataFrame =
     withToks(df).withColumn("grams", expr(gramArraySql))
 
-  /** Gram postings (doc_id, gram string) with the parallelism-gated
-    * spread — shared with TextOps's decontamination operator so the
+  /** Gram postings (doc_id, gram string) with the input spread —
+    * shared with TextOps's decontamination operator so the
     * single-split small-corpus pathology is handled in exactly one
     * place.
     *

@@ -150,26 +150,21 @@ object DedupCluster {
       // AFTER the exchange whose size AQE measured (profiled: 1.8 s
       // of a 3.4 s warm run in one task writing the 12.7 MB distinct
       // exchange). Two changes:
-      //  - spread the corpus by HASH of vec_id (deterministic — the
-      //    §2.5 retry rule — and exempt from sortBeforeRepartition's
-      //    local sort, unlike round-robin);
+      //  - spread the corpus ([[Tables.spread]]);
       //  - USER-specified (table_id, bucket) repartitions on both
       //    join inputs: AQE never coalesces user repartitions and the
       //    matching counts satisfy the join requirement, so the
       //    explosion stage keeps session parallelism at any scale.
       // Results unchanged (the cap window orders by vec_id, the pair
-      // set is distinct-ed; repartitioning moves rows, never makes
-      // them).
+      // set is distinct-ed).
       val parts = s.sessionState.conf.numShufflePartitions
       val capped = Similarity.bucketed(
-          Tables(s, d, "embeddings").repartition(parts, col("vec_id")),
-          "embedding")
+          Tables.spread(Tables(s, d, "embeddings")), "embedding")
         .select(col("vec_id"), col("table_id"), col("bucket"))
         .withColumn("pos", row_number().over(w))
         .filter(col("pos") <= 256).drop("pos")
       val probes = Similarity.probeBucketed(
-          Tables(s, d, "embeddings").repartition(parts, col("vec_id")),
-          "embedding")
+          Tables.spread(Tables(s, d, "embeddings")), "embedding")
         .select(col("vec_id").as("a_id"), col("table_id"), col("bucket"))
       val cands = probes
         .repartition(parts, col("table_id"), col("bucket"))

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import Dedup.{containmentPairs, decontaminationStats, docs, exactSubstringSpans, gramPositions, spreadSmall, tokenized}
+import graft.Tables
+import Dedup.{containmentPairs, decontaminationStats, docs, exactSubstringSpans, gramPositions, tokenized}
 
 /** The SUBSTRING dedup family, split out of [[Dedup]] (which keeps the
   * shared tokenize/gram-position/span helpers the DedupGuardSpec pins
@@ -39,7 +40,7 @@ object DedupSubstring {
     // collision-free, exactly d01's contract), so the reassembled
     // corpus — not a summary — is what hash-matches.
     "d13_line_dedup" -> ((s, d) => {
-      val segs = spreadSmall(docs(s, d))
+      val segs = Tables.spread(docs(s, d))
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
         .filter(size(col("tk")) >= 1)
         .select(col("doc_id"), posexplode(expr(
@@ -107,7 +108,7 @@ object DedupSubstring {
     // clones of an earlier doc) surface with empty new_text rather
     // than vanishing.
     "d18_substring_removal" -> ((s, d) => {
-      val base = tokenized(spreadSmall(docs(s, d)))
+      val base = tokenized(Tables.spread(docs(s, d)))
         .localCheckpoint() // three consumers: grams, token explode, totals
       val pos = gramPositions(base).drop("n_toks")
       val gs = pos.select(col("doc_id"), col("gh")).distinct()
@@ -161,7 +162,7 @@ object DedupSubstring {
         .partitionBy(col("doc_id")).orderBy(col("a"))
       val prev = w.rowsBetween(
         org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      exactSubstringSpans(s, spreadSmall(docs(s, d)))
+      exactSubstringSpans(s, Tables.spread(docs(s, d)))
         .withColumn("pmax",
           coalesce(max(col("b") + lit(8)).over(prev), lit(-1)))
         .withColumn("ng",
@@ -200,7 +201,7 @@ object DedupSubstring {
     // corpus×benchmark pair stage. Non-vacuous at all three SFs
     // (7/9/57 contaminated docs).
     "d20_decontaminate" -> ((s, d) =>
-      decontaminationStats(s, spreadSmall(docs(s, d)))
+      decontaminationStats(s, Tables.spread(docs(s, d)))
         .orderBy(col("doc_id")))
   )
 

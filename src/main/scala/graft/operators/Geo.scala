@@ -72,16 +72,16 @@ object Geo {
       fAxis("flon:", 1779033703L, LonExtent).as("flon"))
   }
 
-  /** One point per order, poly-hash-placed. `spread` repartitions the
-    * key scan (when it is narrower than the session) BEFORE the hash
-    * placement so the per-point compute parallelizes — q113/q114 opt
-    * in (their per-point work is multiplied ×9/×25 downstream: 1.7–2.9 s
-    * single-task stages at sf0.1/32c without it), and the exchange
-    * carries only the 8-byte key; q112 stays a single map-side-combined
-    * aggregate with no extra exchange. */
+  /** One point per order, poly-hash-placed. `spread` spreads the key
+    * scan BEFORE the hash placement so the per-point compute
+    * parallelizes — q113/q114 opt in (their per-point work is
+    * multiplied ×9/×25 downstream: 1.7–2.9 s single-task stages at
+    * sf0.1/32c without it), and the exchange carries only the 8-byte
+    * key; q112 stays a single map-side-combined aggregate with no extra
+    * exchange. */
   private def points(s: SparkSession, d: String, spread: Boolean = false): DataFrame = {
     val keys = Tables(s, d, "orders").select(col("o_orderkey"))
-    val src = if (spread) Tables.spreadNarrowScan(s, keys, "o_orderkey") else keys
+    val src = if (spread) Tables.spread(keys) else keys
     src.select(
       col("o_orderkey").as("id"),
       pmod(axis("lat:", 2654435761L), lit(LatExtent)).as("latu"),

@@ -129,7 +129,7 @@ object Multimodal {
     * multimodal column s11 feeds into the shared IVF index build. */
   private[operators] def assetEmbeddings(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Dedup.spreadSmall(assets(s, d)).as[Asset]
+    Tables.spread(assets(s, d)).as[Asset]
       .mapPartitions(it => it.map(encodeStub))
       .toDF()
   }
@@ -194,11 +194,8 @@ object Multimodal {
     // 1e9+7 over ASCII bytes == DuckDB's char-code fold).
     "m02_multimodal_decode" -> ((s, d) => {
       import s.implicits._
-      // parallelism-gated spread (Dedup.spreadSmall): the harness
-      // corpus is one input split, so without it the whole decode runs
-      // on one core; at real scale the scan already yields more splits
-      // than cores and this is a no-op — no payload shuffle.
-      val ds: Dataset[Asset] = Dedup.spreadSmall(assets(s, d)).as[Asset]
+      // spread: on a one-split corpus the whole decode runs on one core
+      val ds: Dataset[Asset] = Tables.spread(assets(s, d)).as[Asset]
       ds.mapPartitions(it => it.map(decodeStub))
         .toDF()
         .select(col("doc_id"), col("n_frames"),
@@ -218,11 +215,11 @@ object Multimodal {
     // "decode" is the same marked stub byte-slicer as m02 — swap it
     // for a codec's frame iterator and the plan is identical. At real
     // scale this is narrow and shuffle-free until the presentation
-    // sort (the spread below is a no-op there, as in m02): frame rows
-    // flow straight into the next stage without landing.
+    // sort: frame rows flow straight into the next stage without
+    // landing.
     "m03_frame_sample" -> ((s, d) => {
       import s.implicits._
-      val ds: Dataset[Asset] = Dedup.spreadSmall(assets(s, d)).as[Asset]
+      val ds: Dataset[Asset] = Tables.spread(assets(s, d)).as[Asset]
       ds.flatMap { a =>
         val n = a.data.length
         val nFrames = (n + 127) / 128
@@ -296,7 +293,7 @@ object Multimodal {
       val avroJson =
         graft.sources.AvroFiles.toAvroSchema(payloadSchema, "graft_evt")
           .toString
-      val src = Dedup.spreadSmall(Tables(s, d, "events")
+      val src = Tables.spread(Tables(s, d, "events")
         .select(col("event_id"), col("event_type"), col("value")))
       val encoded: Dataset[Array[Byte]] = src.mapPartitions { it =>
         val schema = new Schema.Parser().parse(avroJson)
@@ -367,7 +364,7 @@ object Multimodal {
         .select((col("doc_id") + 10000000L).as("doc_id"),
           expr("concat(substring(text, 1, (17 * length(text)) div 64), 'Z', " +
             "substring(text, (17 * length(text)) div 64 + 2))").as("text"))
-      val ds: Dataset[Asset] = Dedup.spreadSmall(
+      val ds: Dataset[Asset] = Tables.spread(
         base.unionByName(variants)
           .select(col("doc_id"), lit("png").as("fmt"),
             lit(64).as("width"), lit(64).as("height"),

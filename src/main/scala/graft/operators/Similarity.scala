@@ -72,7 +72,7 @@ object Similarity {
       // source this count folds to footer metadata, no data pages
       val corpusRows = source.count()
       val e = source
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Tables.spread)
         .withColumn("fv", array_to_vector(col("embedding")))
       // a coarse quantizer only partitions space — 5 iterations is
       // plenty and halves the fit cost vs the default 20. The fit
@@ -122,7 +122,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         expr("transform(embedding, x -> " +
           "CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))").as("sv"))
-      .repartition(s.sparkContext.defaultParallelism)
+      .transform(Tables.spread)
       .localCheckpoint()
     val hk = graft.functions.PortableHashFunctions.polyHash(
       concat(lit("ivf:"), col("vec_id").cast("string")))
@@ -469,7 +469,7 @@ object Similarity {
       // recall gate)
       val corpusRows = Tables(s, d, "embeddings").count() // footer-only
       val e = Tables(s, d, "embeddings")
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Tables.spread)
         .withColumn("nrm", expr("greatest(sqrt(aggregate(embedding, " +
           "CAST(0 AS DOUBLE), (a, x) -> a + CAST(x AS DOUBLE) * " +
           "CAST(x AS DOUBLE))), CAST(1e-12 AS DOUBLE))"))
@@ -657,7 +657,7 @@ object Similarity {
       val q = e.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
       val c = e.select(col("vec_id").as("n_id"), col("embedding").as("nv"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Tables.spread)
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("n_id").asc)
       c.join(broadcast(q), col("q_id") =!= col("n_id"))
@@ -687,7 +687,7 @@ object Similarity {
       val q = e.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
       val c = e.select(col("vec_id").as("n_id"), col("embedding").as("nv"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Tables.spread)
       c.join(broadcast(q), col("q_id") =!= col("n_id"))
         .withColumn("cos", VectorFunctions.cosineSim(col("qv"), col("nv")))
         .filter(col("cos") >= 0.25)
@@ -746,7 +746,7 @@ object Similarity {
       val q = e.filter(col("vec_id") < 100)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
       val c = e.select(col("vec_id").as("n_id"), col("embedding").as("nv"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Tables.spread)
       c.join(broadcast(q), col("q_id") =!= col("n_id"))
         .groupBy(col("q_id"))
         .agg(graft.functions.TopKFunctions.topkBy(
@@ -1062,7 +1062,7 @@ object Similarity {
         .orderBy(col("cos").desc, col("n_id").asc)
       e.select(col("vec_id").as("n_id"), col("embedding").as("nv"),
         col("label").as("n_label"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Tables.spread)
         .join(broadcast(q), col("q_id") =!= col("n_id") &&
           col("n_label") === col("q_label"))
         .withColumn("cos", VectorFunctions.cosineSim(col("qv"), col("nv")))
@@ -1201,7 +1201,7 @@ object Similarity {
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("n_id").asc)
       e.select(col("vec_id").as("n_id"), col("embedding").as("nv"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Tables.spread)
         .join(broadcast(q), col("q_id") =!= col("n_id"))
         .withColumn("cos", VectorFunctions.cosineSim(col("qv"), col("nv")))
         .filter(col("cos") < 0.35)
@@ -1232,7 +1232,7 @@ object Similarity {
         .select(col("embedding").as("qv"))
       val cand = e.filter(col("vec_id") =!= 0)
         .select(col("vec_id").as("n_id"), col("embedding").as("nv"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Tables.spread)
         .crossJoin(broadcast(q))
         .withColumn("rel", VectorFunctions.cosineSim(col("qv"), col("nv")))
         .orderBy(col("rel").desc, col("n_id").asc).limit(12)

@@ -188,7 +188,7 @@ object TextOps {
     // stays one pass; grams would be posted as hashes there (strings
     // here keep the oracle exact), same join shape either way.
     "t07_decontaminate" -> ((s, d) => {
-      // Dedup's gram pipeline (with its parallelism-gated spread). Both
+      // Dedup's gram pipeline (with its input spread). Both
       // self-join branches recompute it — deliberately NOT checkpointed:
       // materializing the full exploded posting set costs far more than
       // re-running the narrow gram projection (measured 10.3s vs 1.4s at
@@ -246,14 +246,14 @@ object TextOps {
     // bigram exceeds 10% of the text (the Gopher-rule shape).
     //
     // Plan: non-distinct bigram postings explode from the same
-    // parallelism-gated token projection as the dedup family (the gram
+    // spread token projection as the dedup family (the gram
     // expression inlined INTO the generator — the f963675 lesson), then
     // two keyed aggregations: (doc, gram) counts → per-doc moments.
     // Both shuffles hash on doc_id-prefixed keys with map-side partial
     // aggregation; nothing is quadratic and no global ordering exists
     // before the presentation sort — one corpus pass at 100 TB.
     "t09_repetition" -> ((s, d) => {
-      Dedup.spreadSmall(docs(s, d))
+      Tables.spread(docs(s, d))
         .withColumn("toks", expr("split(lower(text), '\\\\s+')"))
         .filter(size(col("toks")) >= 2)
         .select(col("doc_id"), explode(expr(
@@ -288,7 +288,7 @@ object TextOps {
     // dictionary is the natural broadcast/bucketed dimension.
     "t10_tfidf_terms" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val tf = Dedup.spreadSmall(docs(s, d))
+      val tf = Tables.spread(docs(s, d))
         .select(col("doc_id"), explode(expr(
           "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("term"))
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -323,7 +323,7 @@ object TextOps {
         (2, "window"), (2, "hash"), (2, "stream"),
         (3, "merge"), (3, "sort"), (3, "filter")).toDF("qid", "term")
       val qsize = qdf.groupBy(col("qid")).agg(count(lit(1)).as("n_q"))
-      val tf = Dedup.spreadSmall(docs(s, d))
+      val tf = Tables.spread(docs(s, d))
         .select(col("doc_id"), explode(expr(
           "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("term"))
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -381,7 +381,7 @@ object TextOps {
     // to the dictionary on (w1,w2) — the dictionary is the natural
     // broadcast/bucketed dimension, and nothing is ever quadratic.
     "t15_lm_score" -> ((s, d) => {
-      val grams = Dedup.spreadSmall(docs(s, d))
+      val grams = Tables.spread(docs(s, d))
         .withColumn("toks", expr("split(lower(text), '\\\\s+')"))
         .filter(size(col("toks")) >= 2)
         .select(col("doc_id"),
@@ -461,7 +461,7 @@ object TextOps {
     }),
 
     "t16_shared_grams" -> ((s, d) => {
-      val g = Dedup.spreadSmall(docs(s, d))
+      val g = Tables.spread(docs(s, d))
         .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
         .filter(size(col("toks")) >= 8)
         .select(col("doc_id"), explode(expr(
@@ -497,7 +497,7 @@ object TextOps {
     // ratio table, one per-doc aggregate. No all-pairs, no global
     // window, no floats.
     "t18_dsir_weights" -> ((s, d) => {
-      val toks = Dedup.spreadSmall(docs(s, d))
+      val toks = Tables.spread(docs(s, d))
         .select(col("doc_id"), col("lang"),
           explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
         .withColumn("b", expr("poly_hash(tok) % 512"))

@@ -298,7 +298,7 @@ object TextPipeline {
     // stride arithmetic is pure integer (chunk_idx = start/stride),
     // hash-exact against the oracle's stepped generate_series.
     "p12_chunk_windows" -> ((s, d) => {
-      Dedup.spreadSmall(docs(s, d))
+      Tables.spread(docs(s, d))
         .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
         .withColumn("n_toks", size(col("toks")).cast(LongType))
         .select(col("doc_id"), col("toks"), col("n_toks"),

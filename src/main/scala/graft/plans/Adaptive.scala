@@ -49,15 +49,14 @@ object Adaptive {
 
   /** The skewed join: 30% of lineitem rows funnel onto orderkey 1.
     *
-    * The explicit repartition matters: AQE splits a skewed REDUCE
-    * partition along its MAP-output chunk boundaries, so a shuffle fed
-    * by one mapper (the harness fixture is a single-row-group parquet
-    * file → one scan task) is unsplittable no matter how skewed. On a
-    * real cluster the fact side always arrives from thousands of
-    * upstream tasks; the spread reproduces that precondition here. */
+    * The spread matters: AQE splits a skewed REDUCE partition along
+    * its MAP-output chunk boundaries, so a shuffle fed by one mapper
+    * (the harness fixture is a single-row-group parquet file → one
+    * scan task) is unsplittable no matter how skewed. On a real
+    * cluster the fact side always arrives from thousands of upstream
+    * tasks; the spread reproduces that precondition here. */
   private[graft] def skewedAgg(s: SparkSession, d: String): DataFrame = {
-    val fact = graft.Tables(s, d, "lineitem")
-      .repartition(s.sparkContext.defaultParallelism)
+    val fact = graft.Tables.spread(graft.Tables(s, d, "lineitem"))
       .withColumn("k",
         when(pmod(col("l_orderkey"), lit(10)) < 3, lit(1L))
           .otherwise(col("l_orderkey")))

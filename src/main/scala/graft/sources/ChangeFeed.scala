@@ -768,26 +768,31 @@ object RowStoreOps {
         RowStore.parentVersion(table, v).filterNot(retainedSet)
           .foreach(_ => RowStore.materializeManifest(table, v))
       }
-      // staged branch manifests keep their files alive too — VACUUM
-      // must not strand an un-published WAP branch
-      val branchKeep = RowStore.listBranches(table)
-        .flatMap(b => RowStore.readBranchManifest(table, b)._2)
-        .map(_.name).toSet
-      val keep = retained.flatMap(v => RowStore.readManifest(table, v))
-        .map(_.name).toSet ++ branchKeep
+      val keep = referencedFiles(table, retained)
       expired.foreach(v =>
         Files.deleteIfExists(RowStore.manifestPath(table, v)))
       val dir = Paths.get(RowStore.dataDir(table))
-      // data files only — Hadoop's LocalFileSystem writes hidden
-      // `.<name>.crc` sidecars, which ride along with their data file
       val dead = RowStore.listNames(dir)
         .filter(n => !n.startsWith(".") && !keep(n))
-      dead.foreach { n =>
-        Files.deleteIfExists(dir.resolve(n))
-        Files.deleteIfExists(dir.resolve(s".$n.crc")); ()
-      }
+      dead.foreach(deleteDataFile(dir, _))
       (retained, dead.size)
     }
+
+  /** Names of the data files that `versions`' manifests reference, plus
+    * those of every staged branch manifest — a sweep must not strand an
+    * un-published WAP branch. */
+  private def referencedFiles(table: String, versions: Seq[Int]): Set[String] =
+    (versions.flatMap(v => RowStore.readManifest(table, v)) ++
+      RowStore.listBranches(table)
+        .flatMap(b => RowStore.readBranchManifest(table, b)._2))
+      .map(_.name).toSet
+
+  /** Delete data file `name` with the hidden `.<name>.crc` sidecar
+    * Hadoop's LocalFileSystem writes beside it. */
+  private def deleteDataFile(dir: Path, name: String): Unit = {
+    Files.deleteIfExists(dir.resolve(name))
+    Files.deleteIfExists(dir.resolve(s".$name.crc")); ()
+  }
 
   /** MANIFEST COMPACTION (Iceberg's `rewrite_manifests`): collapse the
     * current snapshot's incremental manifest chain into ONE
@@ -826,20 +831,13 @@ object RowStoreOps {
   def removeOrphanFiles(table: String,
       olderThanMs: Long = 3600000L): (Int, Int) =
     RowStore.commitLock.synchronized {
-      val keep = RowStore.versions(table)
-        .flatMap(v => RowStore.readManifest(table, v)).map(_.name).toSet ++
-        RowStore.listBranches(table)
-          .flatMap(b => RowStore.readBranchManifest(table, b)._2)
-          .map(_.name)
+      val keep = referencedFiles(table, RowStore.versions(table))
       val dir = Paths.get(RowStore.dataDir(table))
       val horizon = System.currentTimeMillis() - olderThanMs
       val all = RowStore.listNames(dir).filter(!_.startsWith("."))
       val orphans = all.filterNot(keep).filter { n =>
         Files.getLastModifiedTime(dir.resolve(n)).toMillis <= horizon }
-      orphans.foreach { n =>
-        Files.deleteIfExists(dir.resolve(n))
-        Files.deleteIfExists(dir.resolve(s".$n.crc")); ()
-      }
+      orphans.foreach(deleteDataFile(dir, _))
       (orphans.size, all.filterNot(orphans.contains).size)
     }
 

@@ -287,11 +287,10 @@ object RowCatalogMaintQueries {
     // with DuckDB's JSON operators and restates the array
     // relationally.
     "q163_dml_json_shred" -> ((s, d) => {
-      // spread the single-split events scan so the ingest-time JSON
-      // build + shred parallelizes (guide §2.5; profiled 0.9 s in one
-      // task at sf0.1/32c) — conditional, a no-op on wide scans
-      graft.Tables.spreadNarrowScan(s, graft.Tables(s, d, "events"),
-        "event_id").createOrReplaceTempView("q163_events")
+      // spread the events scan so the ingest-time JSON build + shred
+      // parallelizes (profiled 0.9 s in one task at sf0.1/32c)
+      graft.Tables.spread(graft.Tables(s, d, "events"))
+        .createOrReplaceTempView("q163_events")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.shred")
       s.sql("CREATE TABLE graft_dml.ns.shred " +
         "(event_id BIGINT, etype STRING, " +
@@ -966,11 +965,11 @@ object RowCatalogMaintQueries {
     // pattern that proves dynamic keys survived storage). The oracle
     // re-derives every row's key set from event_id arithmetic.
     "q169_dml_map_shred" -> ((s, d) => {
-      // spread the single-split events scan — the per-row JSON
-      // concat/parse/map_filter ingest otherwise runs in ONE task
-      // (guide §2.5; profiled 0.95 s at sf0.1/32c)
-      graft.Tables.spreadNarrowScan(s, graft.Tables(s, d, "events"),
-        "event_id").createOrReplaceTempView("q169_events")
+      // spread the events scan — the per-row JSON concat/parse/
+      // map_filter ingest otherwise runs in ONE task (profiled 0.95 s
+      // at sf0.1/32c)
+      graft.Tables.spread(graft.Tables(s, d, "events"))
+        .createOrReplaceTempView("q169_events")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.shredm")
       s.sql("CREATE TABLE graft_dml.ns.shredm (event_id BIGINT, " +
         "etype STRING, k BIGINT, extra MAP<STRING, STRING>) " +
@@ -1023,10 +1022,10 @@ object RowCatalogMaintQueries {
     // MapTypesSpec pins the storage half (canonical blob equality,
     // MOR deltas, change-feed cancellation, DDL refusals).
     "q168_dml_map_table" -> ((s, d) => {
-      // spread the single-split orders scan: the map-building insert
-      // and the MERGE source both derive from this view (guide §2.5)
-      graft.Tables.spreadNarrowScan(s, graft.Tables(s, d, "orders"),
-        "o_orderkey").createOrReplaceTempView("q168_orders")
+      // spread the orders scan: the map-building insert and the MERGE
+      // source both derive from this view
+      graft.Tables.spread(graft.Tables(s, d, "orders"))
+        .createOrReplaceTempView("q168_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.mapt")
       s.sql("CREATE TABLE graft_dml.ns.mapt (k BIGINT, status STRING, " +
         "attrs MAP<STRING, BIGINT>) PARTITIONED BY (bucket(4, k))")

@@ -356,7 +356,7 @@ private[streaming] object StreamCoreQueries {
     // between per-batch checkpoint cost tracking STATE SIZE vs tracking
     // BATCH SIZE. The swap must be result-invariant, so st13 runs the
     // st04/st07 dedup semantics against the same oracle, with a real
-    // (per-invocation) checkpoint dir since changelogs need one.
+    // checkpoint dir since changelogs need one.
     "st13_changelog_ckpt" -> ((s, d) => withStatePartitions(s,
         RocksDb + ("spark.sql.streaming.stateStore.rocksdb." +
           "changelogCheckpointing.enabled" -> "true")) {
@@ -368,12 +368,12 @@ private[streaming] object StreamCoreQueries {
         .dropDuplicates("event_id")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"))
-      // fresh checkpoint per invocation: reusing one would make the
-      // second run (bench's min-of-2) a no-op against an already-
+      // cleared fixed checkpoint per invocation: reusing one would make
+      // the second run (bench's min-of-2) a no-op against an already-
       // committed offset log and drain an empty memory table
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + st13Runs.incrementAndGet()
-      val ckpt = graft.Scratch.dir(s, "graft_st13_ckpt", tag)
+      val ckpt = graft.Scratch.dir(s, "graft_st13_ckpt",
+        d.replaceAll("[^A-Za-z0-9]", "_"))
+      graft.Scratch.deleteTree(ckpt)
       runToMemory(s, agg, "st13_out", "complete",
         Map("checkpointLocation" -> ckpt))
         .orderBy(col("event_type"))

@@ -61,9 +61,6 @@ object StreamingOps {
     graft.GraftSession.withConfs(s,
       more + ("spark.sql.shuffle.partitions" -> StateParts.toString))(body)
 
-  /** st13 invocation counter — each run gets its own checkpoint dir. */
-  private[streaming] val st13Runs = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Per-user session summary emitted by the stateful operator. */
   case class UserSessions(user_id: Long, n_events: Long, n_sessions: Long)
 

@@ -88,21 +88,26 @@ class GraftSessionSpec extends AnyFunSuite {
     } finally SparkSession.setActiveSession(spark)
   }
 
-  test("only GraftSession builds sessions or installs their prerequisites") {
+  /** `file:line: text` for every line of `src/main` outside the
+    * `exempt` file names that contains one of `banned`. */
+  private def sourceHits(banned: Seq[String], exempt: Set[String]): Seq[String] = {
     val main = Paths.get("src/main/scala")
     assert(Files.isDirectory(main), s"run from the repository root: $main")
-    val banned = Seq("SparkSession.builder()", "spark.sql.catalog.graft_dml",
-      "FunctionCatalog.register")
-    val exempt = Set("GraftSession.scala", "FunctionCatalog.scala")
     val files = Files.walk(main).iterator.asScala
       .filter(_.toString.endsWith(".scala"))
       .filterNot(p => exempt(p.getFileName.toString)).toSeq
     assert(files.size > 50)
-    val hits = for {
+    for {
       p: Path <- files
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
       b <- banned if line.contains(b)
     } yield s"$p:${i + 1}: $b"
+  }
+
+  test("only GraftSession builds sessions or installs their prerequisites") {
+    val hits = sourceHits(Seq("SparkSession.builder()",
+      "spark.sql.catalog.graft_dml", "FunctionCatalog.register"),
+      Set("GraftSession.scala", "FunctionCatalog.scala"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
@@ -113,9 +118,28 @@ class GraftSessionSpec extends AnyFunSuite {
     try {
       assert(spark.sparkContext.defaultParallelism == 4)
       val scan = spark.range(0, 1000, 1, 2).toDF("k")
-      val out = Tables.spreadNarrowScan(spark, scan, "k")
+      val out = Tables.spread(scan)
       assert(out eq scan, out.queryExecution.analyzed.treeString)
     } finally conf.setConfString("spark.sql.shuffle.partitions",
       before.toString)
+  }
+
+  test("a one-split input is spread round-robin to the cores; a wide one is not") {
+    assert(spark.sparkContext.defaultParallelism == 4)
+    assert(spark.sessionState.conf.numShufflePartitions == 4)
+    val narrow = spark.range(0, 1000, 1, 1).toDF("k")
+    val spread = Tables.spread(narrow)
+    assert(spread.queryExecution.toRdd.getNumPartitions == 4)
+    val plan = spread.queryExecution.executedPlan.toString
+    assert(plan.contains("RoundRobinPartitioning(4)"), plan)
+    assert(spread.collect().map(_.getLong(0)).sorted.toSeq == (0L until 1000L))
+    val wide = spark.range(0, 1000, 1, 4).toDF("k")
+    assert(Tables.spread(wide) eq wide)
+  }
+
+  test("only Tables decides how to spread an under-split input") {
+    val hits = sourceHits(Seq("defaultParallelism", "getNumPartitions",
+      "spreadSmall", "spreadNarrowScan"), Set("Tables.scala"))
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -173,6 +173,17 @@ class OperatorSpec extends AnyFunSuite {
         s"only-batch=${(batch -- streamed).toSeq.sorted.take(5)}")
   }
 
+  test("st13 run twice equals st07 both times and keeps one checkpoint tree") {
+    def rows(n: String) = SparkEntry.queries(n)(spark, sf).collect().toSeq
+    val st07 = rows("st07_rocksdb_dedup")
+    assert(st07.nonEmpty)
+    assert(rows("st13_changelog_ckpt") == st07)
+    assert(rows("st13_changelog_ckpt") == st07)
+    val trees = java.nio.file.Paths.get(
+      Scratch.dir(spark, "graft_st13_ckpt", "_")).getParent.toFile.list()
+    assert(trees.length == 1, trees.mkString(", "))
+  }
+
   test("streaming hourly agg equals its batch equivalent") {
     import org.apache.spark.sql.functions._
     val streamed = SparkEntry.queries("st01_stream_hourly")(spark, sf)
