@@ -33,23 +33,46 @@ object Scratch {
     if (cleanupRegistered.add(appRoot)) {
       sys.addShutdownHook(deleteRecursively(Paths.get(appRoot)))
     }
-    s"$appRoot/$tag"
+    s"$appRoot/${Scratch.tag(tag)}"
   }
 
-  /** Run `body` once per scratch `dir` lifetime: a `_DONE` marker file
-    * records completion, so re-invocations (the same query verified at
-    * several SFs, bench min-of-2 runs) skip the materialization. The
-    * marker is written only AFTER `body` returns — a partial write
-    * (exception mid-body) leaves no marker and is redone, not read.
-    * ONE definition for every materialize-once fixture (m04 binary
-    * files, q89 avro files), so the guard can't drift per call site. */
-  def materializeOnce(dir: String)(body: => Unit): Unit = {
+  /** The one sanitization of a dataset key into a path, table,
+    * database or query-name fragment. Idempotent, so an already
+    * sanitized key maps to itself. */
+  def tag(d: String): String = d.replaceAll("[^A-Za-z0-9]", "_")
+
+  private val buildLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** The one build-once guard for on-disk fixtures: run `build` at most
+    * once per scratch `dir` lifetime and return `dir`. A `_DONE` marker
+    * written after `build` returns records completion, so later calls
+    * (the same query verified at several SFs, bench min-of-2 runs)
+    * skip the build. Three guarantees:
+    *  - concurrent callers coalesce: a per-`dir` lock makes the second
+    *    caller wait for the first and then see the marker, so `build`
+    *    never runs twice at once over the same files;
+    *  - a failed build is redone from empty: whatever an earlier
+    *    attempt left in `dir` is deleted before `build` runs again, so
+    *    a body that appends never stacks a retry on a partial write;
+    *  - one key: `dir` comes from [[Scratch.dir]], which sanitizes the
+    *    tag and scopes the path by applicationId, so the lock and the
+    *    marker are per application and no other process reads a
+    *    half-built tree.
+    * Multi-output fixtures guard on one directory and may write
+    * siblings next to it; a sibling must be written with overwrite,
+    * since only `dir` itself is cleared. */
+  def materializeOnce(dir: String)(build: => Unit): String = {
     val done = Paths.get(dir, "_DONE")
-    if (!Files.exists(done)) {
-      Files.createDirectories(Paths.get(dir))
-      body
-      Files.createFile(done)
+    buildLocks.computeIfAbsent(dir, _ => new Object).synchronized {
+      if (!Files.exists(done)) {
+        deleteRecursively(Paths.get(dir))
+        Files.createDirectories(Paths.get(dir))
+        build
+        Files.createFile(done)
+      }
     }
+    dir
   }
 
   /** Recursive delete for callers that retire a scratch subtree early

@@ -71,10 +71,6 @@ object Graph {
     (ranks, e)
   }
 
-  def pagerank(s: SparkSession, edges: DataFrame, nNodes: Int,
-      rounds: Int): DataFrame =
-    pagerankWithEdges(s, edges, nNodes, rounds)._1
-
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.GraftSession.prepared(Map(
     // ── g01: 3 PageRank rounds; the full exact rank vector is the

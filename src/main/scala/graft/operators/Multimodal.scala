@@ -246,8 +246,7 @@ object Multimodal {
     // the whole row — key, size, content hash — is oracle-checked
     // against the source-of-truth table.
     "m04_binaryfile_ingest" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val dir = graft.Scratch.dir(s, "graft_m04", tag)
+      val dir = graft.Scratch.dir(s, "graft_m04", d)
       graft.Scratch.materializeOnce(dir) {
         Tables(s, d, "documents").select(col("doc_id"), col("text"))
           .repartition(8)

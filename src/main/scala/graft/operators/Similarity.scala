@@ -279,16 +279,13 @@ object Similarity {
     rescore(probeCells(q, centsDf, nProbe), assigned)
   }
 
-  /** The SERVED probe path (s06): ensure the index is persisted (guard
-    * on the LAST artifact written, so a failure between the two writes
-    * re-runs the build instead of wedging every later call), load it,
-    * route, and rescore only the routed cells — exposed to
+  /** The SERVED probe path (s06): ensure the index is persisted, load
+    * it, route, and rescore only the routed cells — exposed to
     * PersistedIndexSpec for the partition-pruning plan pin. */
   private[graft] def servedProbe(s: SparkSession, d: String,
       nProbe: Int = 3): DataFrame = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val idxDir = graft.Scratch.dir(s, "graft_ivfidx", tag)
-    if (!new java.io.File(s"$idxDir/cents/_SUCCESS").exists()) {
+    val idxDir = graft.Scratch.dir(s, "graft_ivfidx", d)
+    graft.Scratch.materializeOnce(idxDir) {
       val (assigned, centsDf) = ivfIndex(s, d)
       assigned.write.mode("overwrite").partitionBy("cell")
         .parquet(s"$idxDir/assigned")
@@ -1147,8 +1144,7 @@ object Similarity {
     // count strictly shrank). SegmentCompactSpec pins the 1-file-per-
     // cell accounting and the probed-file shrinkage.
     "s16_ann_segment_compact" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val idxDir = graft.Scratch.dir(s, "graft_s16_idx", tag)
+      val idxDir = graft.Scratch.dir(s, "graft_s16_idx", d)
       val e = Tables(s, d, "embeddings")
       val cut = e.agg(expr("(max(vec_id) + 1) * 4 div 5")).head().getLong(0)
       graft.Scratch.materializeOnce(s"$idxDir/base") {

@@ -70,8 +70,7 @@ object Adaptive {
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.GraftSession.prepared(Map(
     "q43_aqe_skew_join" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val out = graft.Scratch.dir(s, "graft_q43", tag)
+      val out = graft.Scratch.dir(s, "graft_q43", d)
       withSkewConfs(s) {
         skewedAgg(s, d).write.mode("overwrite").parquet(out)
       }

@@ -67,8 +67,7 @@ object RuntimeFilter {
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.GraftSession.prepared(Map(
     "q53_bloom_join" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val out = graft.Scratch.dir(s, "graft_q53", tag)
+      val out = graft.Scratch.dir(s, "graft_q53", d)
       withBloomConfs(s) {
         urgentJoinCore(s, d).write.mode("overwrite").parquet(out)
       }

@@ -163,7 +163,7 @@ object AggSinkQueries {
     // concurrent datasets can't collide.
     "q87_custom_sink" -> ((s, d) => {
       import s.implicits._
-      val tag = "q87_" + d.replaceAll("[^A-Za-z0-9]", "_")
+      val tag = "q87_" + graft.Scratch.tag(d)
       graft.Tables(s, d, "events")
         .select(col("event_id"),
           round(col("value") * 100).cast(LongType).as("cents"))

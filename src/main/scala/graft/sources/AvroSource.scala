@@ -221,8 +221,7 @@ object AvroQueries {
     // format is the hash contract, exactly like the ORC (q40) and XML
     // (q65) round trips over the built-in sources.
     "q89_avro_roundtrip" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val dir = graft.Scratch.dir(s, "graft_avro", tag)
+      val dir = graft.Scratch.dir(s, "graft_avro", d)
       graft.Scratch.materializeOnce(dir) {
         AvroFiles.write(
           graft.Tables(s, d, "orders")

@@ -46,7 +46,7 @@ object Bucketing {
   /** Ensure the bucketed lineitem/orders copies of `sfDir` exist in the
     * session catalog (writes once per session/scale, under tmpdir). */
   private def ensureBucketedCopies(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
+    val tag = graft.Scratch.tag(d)
     val db = s"graft_buckets_$tag"
     if (!s.catalog.databaseExists(db) || !s.catalog.tableExists(s"$db.lineitem_b")) {
       val base = graft.Scratch.dir(s, "graft_buckets", tag)

@@ -36,17 +36,15 @@ object Compaction {
     * files per event_type directory), then its compaction. Returns the
     * compacted path. */
   private[graft] def ensureCompacted(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val frag = graft.Scratch.dir(s, "graft_frag", tag)
-    val compacted = graft.Scratch.dir(s, "graft_compact", tag)
-    if (!new java.io.File(s"$compacted/_SUCCESS").exists()) {
+    val frag = graft.Scratch.dir(s, "graft_frag", d)
+    val compacted = graft.Scratch.dir(s, "graft_compact", d)
+    graft.Scratch.materializeOnce(compacted) {
       graft.Tables(s, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
         .repartition(32)
         .write.mode("overwrite").partitionBy("event_type").parquet(frag)
       compact(s, frag, compacted, "event_type", 2000000L)
     }
-    compacted
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -21,7 +21,7 @@ object Formats {
     * so concurrent JVMs never collide and nothing leaks into a shared
     * warehouse. */
   private[graft] def ensureStatsTable(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
+    val tag = graft.Scratch.tag(d)
     val tbl = s"graft_stats_nation_$tag"
     if (!s.catalog.tableExists(tbl)) {
       val loc = graft.Scratch.dir(s, "graft_cbo", tag)
@@ -44,8 +44,7 @@ object Formats {
     // side — the half whose plan shape matters at 100 TB — still runs
     // on every invocation.
     "q40_orc_roundtrip" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val out = graft.Scratch.dir(s, "graft_orc", tag)
+      val out = graft.Scratch.dir(s, "graft_orc", d)
       graft.Scratch.materializeOnce(out) {
         graft.Tables(s, d, "lineitem")
           .select(col("l_returnflag"), col("l_linestatus"),
@@ -69,8 +68,7 @@ object Formats {
     // the write→read cycle breaks the hash match against the parquet
     // original.
     "q41_json_roundtrip" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val out = graft.Scratch.dir(s, "graft_json", tag)
+      val out = graft.Scratch.dir(s, "graft_json", d)
       graft.Scratch.materializeOnce(out) {
         graft.Tables(s, d, "documents")
           .select(col("doc_id"), col("lang"), col("text"))
@@ -94,8 +92,7 @@ object Formats {
     // the round-tripped data must equal the same sum over the original
     // parquet — one mis-escaped quote anywhere shifts the sum.
     "q44_csv_roundtrip" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val out = graft.Scratch.dir(s, "graft_csv", tag)
+      val out = graft.Scratch.dir(s, "graft_csv", d)
       graft.Scratch.materializeOnce(out) {
         graft.Tables(s, d, "events")
           .select(col("event_id"), col("event_type"), col("props"))
@@ -133,9 +130,8 @@ object Formats {
     // also what a real quarantine pipeline does anyway: the split is
     // the audit artifact, not a throwaway intermediate.
     "q56_corrupt_tolerant" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val out = graft.Scratch.dir(s, "graft_badcsv", tag)
-      if (!new java.io.File(s"$out/_SUCCESS").exists()) {
+      val out = graft.Scratch.dir(s, "graft_badcsv", d)
+      graft.Scratch.materializeOnce(out) {
         graft.Tables(s, d, "events")
           .select(when(pmod(col("event_id"), lit(37)) === 0,
               concat_ws(",", col("event_id"), col("event_type"), lit("oops")))
@@ -147,7 +143,7 @@ object Formats {
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("event_type", StringType),
         StructField("user_id", LongType), StructField("_bad", StringType)))
-      val parsed = graft.Scratch.dir(s, "graft_badcsv_parsed", tag)
+      val parsed = graft.Scratch.dir(s, "graft_badcsv_parsed", d)
       s.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_bad")
@@ -171,8 +167,7 @@ object Formats {
     // double round-trip via shortest-repr printing, string escaping of
     // `<`/`&`) is what the hash match proves.
     "q65_xml_roundtrip" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val out = graft.Scratch.dir(s, "graft_xml", tag)
+      val out = graft.Scratch.dir(s, "graft_xml", d)
       graft.Scratch.materializeOnce(out) {
         graft.Tables(s, d, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
@@ -207,8 +202,7 @@ object Formats {
     // db dir by applicationId, so concurrent JVMs never contend for
     // Derby's single-JVM embedded lock.
     "q69_jdbc_roundtrip" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val dbDir = graft.Scratch.dir(s, "graft_derby", tag)
+      val dbDir = graft.Scratch.dir(s, "graft_derby", d)
       // keep derby.log (and any other engine artifact) inside the
       // app-scoped scratch dir instead of the launch CWD; first boot of
       // the embedded engine in this JVM reads the property
@@ -271,8 +265,7 @@ object Formats {
     // (restated arithmetically by the oracle), and `contiguous` pins
     // row_index semantics: 0..n-1 within each file.
     "q93_file_provenance" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val out = graft.Scratch.dir(s, "graft_prov", tag)
+      val out = graft.Scratch.dir(s, "graft_prov", d)
       graft.Tables(s, d, "customer")
         .select(col("c_custkey").as("k"), pmod(col("k"), lit(4)).as("b"))
         .repartition(col("b")) // one task per bucket's rows (collisions

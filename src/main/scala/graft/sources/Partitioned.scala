@@ -25,14 +25,12 @@ object Partitioned {
     * is the amortized at-rest layout cost, as with Bucketing's copies;
     * per-applicationId scratch path, see [[graft.Scratch]]). */
   private[graft] def ensureShipYearCopy(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val out = graft.Scratch.dir(s, "graft_part", tag)
-    if (!new java.io.File(s"$out/_SUCCESS").exists()) {
+    val out = graft.Scratch.dir(s, "graft_part", d)
+    graft.Scratch.materializeOnce(out) {
       graft.Tables(s, d, "lineitem")
         .withColumn("l_shipyear", year(col("l_shipdate")).cast(IntegerType))
         .write.mode("overwrite").partitionBy("l_shipyear").parquet(out)
     }
-    out
   }
 
   /** The DPP join: fact partitioned by ship year, dim = the distinct
@@ -61,10 +59,8 @@ object Partitioned {
     * daily restatements. The q46 oracle proves both halves: click rows
     * carry the update AND the untouched partitions survived. */
   private[graft] def ensureDynamicOverwrite(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val out = graft.Scratch.dir(s, "graft_dynow", tag)
-    val done = new java.io.File(s"$out/_GRAFT_DONE")
-    if (!done.exists()) {
+    val out = graft.Scratch.dir(s, "graft_dynow", d)
+    graft.Scratch.materializeOnce(out) {
       val ev = graft.Tables(s, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
       ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
@@ -74,9 +70,7 @@ object Partitioned {
           .withColumn("user_id", col("user_id") + lit(1L))
           .write.mode("overwrite").partitionBy("event_type").parquet(out)
       }
-      done.createNewFile()
     }
-    out
   }
 
   /** Once per session: two daily customer snapshots with SCHEMA DRIFT.
@@ -88,10 +82,9 @@ object Partitioned {
     * day 2 drops every 3rd customer (an ordinary day-over-day delta)
     * and ADDS c_mktsegment. */
   private[graft] def ensureDriftSnapshots(s: SparkSession, d: String): (String, String) = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val day1 = graft.Scratch.dir(s, "graft_drift1", tag)
-    val day2 = graft.Scratch.dir(s, "graft_drift2", tag)
-    if (!new java.io.File(s"$day2/_SUCCESS").exists()) {
+    val day1 = graft.Scratch.dir(s, "graft_drift1", d)
+    val day2 = graft.Scratch.dir(s, "graft_drift2", d)
+    graft.Scratch.materializeOnce(day2) {
       val c = graft.Tables(s, d, "customer")
       c.select(col("c_custkey"), col("c_acctbal"))
         .write.mode("overwrite").parquet(day1)
@@ -123,9 +116,8 @@ object Partitioned {
     * `partitionBy` would create. RangeLayoutSpec pins the per-file
     * span property; the q52 oracle pins row-level correctness. */
   private[graft] def ensureRangeSorted(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val out = graft.Scratch.dir(s, "graft_range", tag)
-    if (!new java.io.File(s"$out/_SUCCESS").exists()) {
+    val out = graft.Scratch.dir(s, "graft_range", d)
+    graft.Scratch.materializeOnce(out) {
       graft.Tables(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_shipdate"), col("l_quantity"),
           col("l_extendedprice"))
@@ -133,7 +125,6 @@ object Partitioned {
         .sortWithinPartitions(col("l_shipdate"))
         .write.mode("overwrite").parquet(out)
     }
-    out
   }
 
   /** MANIFEST for [[ensureRangeSorted]]'s layout: one row per data file
@@ -145,16 +136,14 @@ object Partitioned {
     * file — the manifest's CONSUMERS are what this models). */
   private[graft] def ensureRangeManifest(s: SparkSession, d: String): String = {
     val dir = ensureRangeSorted(s, d)
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val man = graft.Scratch.dir(s, "graft_range_manifest", tag)
-    if (!new java.io.File(s"$man/_SUCCESS").exists()) {
+    val man = graft.Scratch.dir(s, "graft_range_manifest", d)
+    graft.Scratch.materializeOnce(man) {
       s.read.parquet(dir)
         .groupBy(col("_metadata.file_path").as("f"))
         .agg(min(col("l_shipdate")).as("lo"), max(col("l_shipdate")).as("hi"))
         .coalesce(1)
         .write.mode("overwrite").parquet(man)
     }
-    man
   }
 
   /** Plan-time file pruning off the manifest: the files whose [lo,hi]
@@ -225,9 +214,8 @@ object Partitioned {
     * 16/16 files; normalized it hits 4). The min/max stats ride the
     * plan as a broadcast scalar row — no driver-side collect. */
   private[graft] def ensureZOrdered(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val out = graft.Scratch.dir(s, "graft_zorder", tag)
-    if (!new java.io.File(s"$out/_SUCCESS").exists()) {
+    val out = graft.Scratch.dir(s, "graft_zorder", d)
+    graft.Scratch.materializeOnce(out) {
       def norm(c: org.apache.spark.sql.Column, lo: org.apache.spark.sql.Column,
           hi: org.apache.spark.sql.Column) =
         (c - lo).cast(LongType) * 4096L / (hi - lo + 1).cast(LongType)
@@ -249,7 +237,6 @@ object Partitioned {
           col("l_quantity"))
         .write.mode("overwrite").parquet(out)
     }
-    out
   }
 
   /** INCREMENTAL PARTITION PROCESSING — the pattern the reference's
@@ -266,13 +253,12 @@ object Partitioned {
     * pin the incremental plan in isolation. */
   private[graft] def incrementalRun(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val dir = ensureShipYearCopy(s, d)
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val state = graft.Scratch.dir(s, "graft_incr_state", tag)
+    val state = graft.Scratch.dir(s, "graft_incr_state", d)
     def aggYears(df: DataFrame) = df
       .groupBy(col("l_shipyear"))
       .agg(count(lit(1)).as("n"),
         sum(col("l_quantity").cast(LongType)).as("sum_qty"))
-    if (!new java.io.File(s"$state/_SUCCESS").exists()) {
+    graft.Scratch.materializeOnce(state) {
       // "yesterday's" accumulated state: every year but the newest
       aggYears(s.read.parquet(dir).filter(col("l_shipyear") < 2001))
         .write.mode("overwrite").parquet(state)

@@ -75,7 +75,7 @@ object RowCatalogQueries {
   private[graft] def sharedLifecycle(s: SparkSession, d: String,
       mor: Boolean): String = lifecycleBuilt.synchronized {
     val fmt = if (mor) "mor" else "cow"
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
+    val tag = graft.Scratch.tag(d)
     // cache key = the SAME sanitized tag the table name embeds: two
     // datasets that sanitize alike MUST share one cache entry, or the
     // second would rebuild (DROP) the first's table under a distinct
@@ -404,8 +404,7 @@ object RowCatalogQueries {
       s.sql("""INSERT INTO graft_dml.ns.spjb
         SELECT CAST(o_orderkey AS BIGINT), CAST(o_custkey AS BIGINT)
         FROM q131_orders WHERE o_orderkey % 10 = 0""")
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val out = graft.Scratch.dir(s, "graft_q131", tag)
+      val out = graft.Scratch.dir(s, "graft_q131", d)
       graft.GraftSession.withConfs(s, Map(
         "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -780,8 +779,7 @@ object RowCatalogQueries {
     // slices from raw orders.
     "q156_dml_add_files" -> ((s, d) => {
       graft.Tables(s, d, "orders").createOrReplaceTempView("q156_orders")
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val ext = graft.Scratch.dir(s, "graft_q156_ext", tag)
+      val ext = graft.Scratch.dir(s, "graft_q156_ext", d)
       // ONE QUARTER'S snapshot tree: the reference writes one
       // y=/m=/d= dir per daily DAG run, so a realistic import is a
       // bounded window of days — orders span 80 calendar months, and

@@ -649,8 +649,7 @@ object RowCatalogMaintQueries {
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.cpy")
       s.sql("CREATE TABLE graft_dml.ns.cpy " +
         "(k BIGINT, cents BIGINT, status STRING)")
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val dir = graft.Scratch.dir(s, "graft_q174_src", tag)
+      val dir = graft.Scratch.dir(s, "graft_q174_src", d)
       s.sql("""SELECT CAST(o_orderkey AS BIGINT) AS k,
                CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
                o_orderstatus AS status

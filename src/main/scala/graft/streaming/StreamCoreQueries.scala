@@ -110,8 +110,7 @@ private[streaming] object StreamCoreQueries {
     // RESULT is the sink read back from disk, so the oracle checks the
     // whole write-read round trip, partition-column typing included.
     "st05_stream_sink_parity" -> ((s, d) => withStatePartitions(s) {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val outDir = graft.Scratch.dir(s, "graft_st05", tag)
+      val outDir = graft.Scratch.dir(s, "graft_st05", d)
       val stream = s.readStream
         .schema(eventsSchema)
         .parquet(s"$d/events.parque[t]")
@@ -323,9 +322,8 @@ private[streaming] object StreamCoreQueries {
     // foreachBatch retry is the sink's job, e.g. overwrite-by-batch-id;
     // here each source file is exactly one committed batch.)
     "st09_checkpoint_recovery" -> ((s, d) => withStatePartitions(s) {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val outDir = graft.Scratch.dir(s, "graft_st09", tag)
-      val ckpt = graft.Scratch.dir(s, "graft_st09_ckpt", tag)
+      val outDir = graft.Scratch.dir(s, "graft_st09", d)
+      val ckpt = graft.Scratch.dir(s, "graft_st09_ckpt", d)
       def runOnce(): Unit = {
         val stream = s.readStream
           .schema(eventsSchema)
@@ -371,8 +369,7 @@ private[streaming] object StreamCoreQueries {
       // cleared fixed checkpoint per invocation: reusing one would make
       // the second run (bench's min-of-2) a no-op against an already-
       // committed offset log and drain an empty memory table
-      val ckpt = graft.Scratch.dir(s, "graft_st13_ckpt",
-        d.replaceAll("[^A-Za-z0-9]", "_"))
+      val ckpt = graft.Scratch.dir(s, "graft_st13_ckpt", d)
       graft.Scratch.deleteTree(ckpt)
       runToMemory(s, agg, "st13_out", "complete",
         Map("checkpointLocation" -> ckpt))
@@ -607,10 +604,9 @@ private[streaming] object StreamCoreQueries {
     "st29_stream_custom_sink" -> ((s, d) => {
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      val tag = "st29_" + d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
+      val tag = "st29_" + graft.Scratch.tag(d) + "_" +
         s.sparkContext.applicationId
-      val ckpt = graft.Scratch.dir(s, "graft_st29_ckpt",
-        d.replaceAll("[^A-Za-z0-9]", "_"))
+      val ckpt = graft.Scratch.dir(s, "graft_st29_ckpt", d)
       val q = multiBatchEventStream(s, d)
         .select(col("event_id"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -646,9 +642,8 @@ private[streaming] object StreamCoreQueries {
     // four_versions pins that the drain really committed 4 snapshots
     // (otherwise "v1" could be the final table and the check vacuous).
     "st30_time_travel" -> ((s, d) => withStatePartitions(s) {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val src = graft.Scratch.dir(s, "graft_st30_src", tag)
-      val stateDir = graft.Scratch.dir(s, "graft_st30_state", tag)
+      val src = graft.Scratch.dir(s, "graft_st30_src", d)
+      val stateDir = graft.Scratch.dir(s, "graft_st30_state", d)
       graft.Scratch.materializeOnce(src) {
         val ev = graft.Tables.events(s, d)
           .withColumn("ts", col("ts").cast("timestamp_ntz"))
@@ -733,10 +728,9 @@ private[streaming] object StreamCoreQueries {
     // corpus makes coincide. multi_batch pins the drain really split
     // (≥2 batches), else the incremental path degenerates to d15.
     "st32_stream_dedup" -> ((s, d) => withStatePartitions(s) {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val src = graft.Scratch.dir(s, "graft_st32_src", tag)
-      val storeDir = graft.Scratch.dir(s, "graft_st32_store", tag)
-      val outDir = graft.Scratch.dir(s, "graft_st32_out", tag)
+      val src = graft.Scratch.dir(s, "graft_st32_src", d)
+      val storeDir = graft.Scratch.dir(s, "graft_st32_store", d)
+      val outDir = graft.Scratch.dir(s, "graft_st32_out", d)
       val all = graft.Tables.documents(s, d)
       val cut = all.agg(expr("(max(doc_id) + 1) * 4 div 5").as("c"))
       graft.Scratch.materializeOnce(src) {

@@ -79,8 +79,7 @@ private[streaming] object StreamDmlQueries {
     // the oracle restates from raw orders.
     "st39_stream_merge_dv" -> ((s, d) => withStatePartitions(s) {
       import graft.sources.RowStore
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val src = graft.Scratch.dir(s, "graft_st39_src", tag)
+      val src = graft.Scratch.dir(s, "graft_st39_src", d)
       graft.Scratch.materializeOnce(src) {
         // the CDC stream: every seeded key (k%6=0) plus new keys
         // (k%6=3); op D for k%12 in (0,6) — one batch's worth each
@@ -230,8 +229,7 @@ private[streaming] object StreamDmlQueries {
       require(preV == 3, s"st33 expects the lifecycle at version 3 " +
         s"(CREATE + INSERT/MERGE/DELETE commits), found $preV — a " +
         "statement's write was elided at this fixture scale")
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val outDir = graft.Scratch.dir(s, "graft_st33_out", tag)
+      val outDir = graft.Scratch.dir(s, "graft_st33_out", d)
       val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
       val q = s.readStream.option("from", "0")
         .table(s"$lifecycleTable.changes")
@@ -288,8 +286,7 @@ private[streaming] object StreamDmlQueries {
       val preV = graft.sources.RowStore.currentVersion("graft_dml.ns.scdc")
       require(preV == 3, s"st38 expects the lifecycle at version 3, " +
         s"found $preV — a statement's write was elided at this scale")
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val outDir = graft.Scratch.dir(s, "graft_st38_out", tag)
+      val outDir = graft.Scratch.dir(s, "graft_st38_out", d)
       val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
       val q = s.readStream.option("from", "1").option("mode", "cdc")
         .table("graft_dml.ns.scdc.changes")
@@ -343,8 +340,7 @@ private[streaming] object StreamDmlQueries {
           SELECT CAST(o_orderkey AS BIGINT) + ${e}0000000,
                  CAST(round(o_totalprice * 100) AS BIGINT), o_orderstatus
           FROM st34_orders WHERE o_orderkey % 3 = $e""")
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val outDir = graft.Scratch.dir(s, "graft_st34_out", tag)
+      val outDir = graft.Scratch.dir(s, "graft_st34_out", d)
       val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
       val q = s.readStream.option("from", "0")
         .table("graft_dml.ns.ledger_s")
@@ -382,9 +378,8 @@ private[streaming] object StreamDmlQueries {
     // multi_batch pins that the growth really happened incrementally.
     "st35_stream_ann_upsert" -> ((s, d) => withStatePartitions(s) {
       import graft.operators.Similarity
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val src = graft.Scratch.dir(s, "graft_st35_src", tag)
-      val idxDir = graft.Scratch.dir(s, "graft_st35_idx", tag)
+      val src = graft.Scratch.dir(s, "graft_st35_src", d)
+      val idxDir = graft.Scratch.dir(s, "graft_st35_idx", d)
       val e = graft.Tables(s, d, "embeddings")
       // base/new split at 80% of the id space (1-row planning fetch)
       val cut = e.agg(expr("(max(vec_id) + 1) * 4 div 5")).head().getLong(0)
@@ -473,8 +468,7 @@ private[streaming] object StreamDmlQueries {
     // shape is pinned to the oracle's four columns).
     "st40_stream_embedding_table" -> ((s, d) => withStatePartitions(s) {
       import graft.operators.Similarity
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val src = graft.Scratch.dir(s, "graft_st40_src", tag)
+      val src = graft.Scratch.dir(s, "graft_st40_src", d)
       val e = graft.Tables(s, d, "embeddings")
       graft.Scratch.materializeOnce(src) {
         val t0 = System.currentTimeMillis() - 3600000L
@@ -498,7 +492,7 @@ private[streaming] object StreamDmlQueries {
       s.sql("CREATE TABLE graft_dml.ns.semb (vec_id BIGINT, " +
         "embedding ARRAY<FLOAT>, label INT) " +
         "PARTITIONED BY (bucket(4, vec_id))")
-      val ckpt = graft.Scratch.dir(s, "graft_st40_ckpt", tag)
+      val ckpt = graft.Scratch.dir(s, "graft_st40_ckpt", d)
       graft.Scratch.deleteTree(ckpt)
       val q = s.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", "2")
@@ -529,8 +523,7 @@ private[streaming] object StreamDmlQueries {
     // Four mtime-ordered chunks at 2 files/trigger force a genuinely
     // multi-epoch drain; the oracle restates the full slice.
     "st36_stream_table_write" -> ((s, d) => withStatePartitions(s) {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val src = graft.Scratch.dir(s, "graft_st36_src", tag)
+      val src = graft.Scratch.dir(s, "graft_st36_src", d)
       graft.Scratch.materializeOnce(src) {
         val slice = graft.Tables(s, d, "orders")
           .filter(pmod(col("o_orderkey"), lit(6)) === 0)
@@ -567,7 +560,7 @@ private[streaming] object StreamDmlQueries {
       // at the start of each invocation (not UUID-fresh, which would
       // accumulate orphan checkpoint trees across bench min-of-2 plus
       // verify runs for the whole session lifetime)
-      val ckpt = graft.Scratch.dir(s, "graft_st36_ckpt", tag)
+      val ckpt = graft.Scratch.dir(s, "graft_st36_ckpt", d)
       graft.Scratch.deleteTree(ckpt)
       val q = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", "2")
@@ -604,10 +597,9 @@ private[streaming] object StreamDmlQueries {
     // per-user count the hash will catch.
     "st37_medallion" -> ((s, d) => withStatePartitions(s) {
       import graft.sources.RowStore
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       // deterministic multi-epoch source: 4 mtime-ordered chunks of
       // the events slice, 2 files per trigger → 2 bronze epochs
-      val src = graft.Scratch.dir(s, "graft_st37_src", tag)
+      val src = graft.Scratch.dir(s, "graft_st37_src", d)
       graft.Scratch.materializeOnce(src) {
         val slice = graft.Tables.events(s, d)
           .filter(pmod(col("event_id"), lit(5)) === 0)
@@ -634,7 +626,7 @@ private[streaming] object StreamDmlQueries {
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.silver")
       s.sql("CREATE TABLE graft_dml.ns.silver " +
         "(user_id BIGINT, n_events BIGINT, max_event_id BIGINT)")
-      val ckptB = graft.Scratch.dir(s, "graft_st37_ckptb", tag)
+      val ckptB = graft.Scratch.dir(s, "graft_st37_ckptb", d)
       graft.Scratch.deleteTree(ckptB)
       val srcSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("user_id",

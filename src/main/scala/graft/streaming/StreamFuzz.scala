@@ -164,7 +164,7 @@ object StreamFuzz {
       : (Long, Seq[Seq[Long]]) = {
     val p = draw(seed)
     val glob = writeChunks(s, p, tag)
-    val qn = s"sfz_${tag.replaceAll("[^A-Za-z0-9]", "_")}_$seed"
+    val qn = s"sfz_${graft.Scratch.tag(tag)}_$seed"
     // state partitions scoped like every pinned st row (optimization
     // round 17, guide §2 right-size shuffles): unscoped, the drain
     // inherited the session's core-count partitioning — 32 state

@@ -163,8 +163,7 @@ private[streaming] object StreamJoinQueries {
     // half. The argmax fold is 128-bit (decimal / HUGEINT): µs·10¹² +
     // event_id overflows int64.
     "st25_stream_upsert" -> ((s, d) => withStatePartitions(s) {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val stateDir = graft.Scratch.dir(s, "graft_st25", tag)
+      val stateDir = graft.Scratch.dir(s, "graft_st25", d)
       // AtomicReference (not a captured var): written on the stream
       // execution thread, read on the caller thread after termination.
       // The pointer advances only AFTER a version commits, which makes

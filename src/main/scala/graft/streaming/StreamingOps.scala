@@ -242,9 +242,8 @@ object StreamingOps {
     * or the output-mode semantics they claim to exercise degenerate to
     * a single batch query. */
   private[streaming] def multiBatchEventStream(s: SparkSession, d: String): DataFrame = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    val src = graft.Scratch.dir(s, "graft_st17_src", tag)
-    if (!new java.io.File(s"$src/_SUCCESS").exists()) {
+    val src = graft.Scratch.dir(s, "graft_st17_src", d)
+    graft.Scratch.materializeOnce(src) {
       // go through the batch loader so the re-layout inherits its
       // dual-generation ts normalization, then cast back to the NTZ
       // type the declared stream schema expects (session tz is UTC, so
@@ -303,8 +302,7 @@ object StreamingOps {
         StreamDmlQueries.queries ++
         StreamFuzz.Pinned.map { case (name, seed) =>
           name -> ((s: SparkSession, d: String) =>
-            StreamFuzz.pinnedResult(s, seed,
-              d.replaceAll("[^A-Za-z0-9]", "_")))
+            StreamFuzz.pinnedResult(s, seed, d))
         }.toMap)
 
   val oracles: Map[String, String] =

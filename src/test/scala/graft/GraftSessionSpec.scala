@@ -142,4 +142,10 @@ class GraftSessionSpec extends AnyFunSuite {
       "spreadSmall", "spreadNarrowScan"), Set("Tables.scala"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("build-once markers and the tag regex live only in Scratch.scala") {
+    val hits = sourceHits(Seq("_SUCCESS", "_GRAFT_DONE",
+      "replaceAll(\"[^A-Za-z0-9]\""), Set("Scratch.scala"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

@@ -68,8 +68,7 @@ class ScalePlanSpec extends AnyFunSuite {
       // contrast arm: the same data as a raw path scan has NO
       // rowCount even under CBO — proving the assertion above tests
       // the ANALYZE plumbing, not a default every relation gets
-      val tag = sf.replaceAll("[^A-Za-z0-9]", "_")
-      val raw = spark.read.parquet(graft.Scratch.dir(spark, "graft_cbo", tag))
+      val raw = spark.read.parquet(graft.Scratch.dir(spark, "graft_cbo", sf))
       assert(raw.queryExecution.optimizedPlan.stats.rowCount.isEmpty,
         "raw scan unexpectedly carries a rowCount — the pin is vacuous")
     } finally before match {

@@ -21,8 +21,7 @@ class SegmentCompactSpec extends AnyFunSuite {
     assert(row.getBoolean(row.fieldIndex("served_identical")))
     assert(row.getBoolean(row.fieldIndex("segments_compacted")))
 
-    val tag = SparkSuite.sf.replaceAll("[^A-Za-z0-9]", "_")
-    val idxDir = graft.Scratch.dir(s, "graft_s16_idx", tag)
+    val idxDir = graft.Scratch.dir(s, "graft_s16_idx", SparkSuite.sf)
     val comp = java.nio.file.Paths.get(s"$idxDir/compacted/seg")
     assert(java.nio.file.Files.isDirectory(comp))
     // exactly one parquet file inside every cell=N directory
