@@ -37,9 +37,12 @@ object Scratch {
   }
 
   /** The one sanitization of a dataset key into a path, table,
-    * database or query-name fragment. Idempotent, so an already
-    * sanitized key maps to itself. */
-  def tag(d: String): String = d.replaceAll("[^A-Za-z0-9]", "_")
+    * database or query-name fragment. Leading non-alphanumerics are
+    * dropped first: an absolute path's leading `/` would otherwise
+    * become a leading `_`, and Spark skips such leaves as hidden.
+    * Idempotent, so an already sanitized key maps to itself. */
+  def tag(d: String): String =
+    d.replaceAll("^[^A-Za-z0-9]+", "").replaceAll("[^A-Za-z0-9]", "_")
 
   private val buildLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()

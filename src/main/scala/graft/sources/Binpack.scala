@@ -34,13 +34,14 @@ object BinpackOps {
   def binpack(s: SparkSession, table: String, targetBytes: Long)
       : (Int, Int, Int) = {
     require(targetBytes > 0, s"$table: target_bytes must be positive")
-    val meta = RowStore.readMeta(table)
-    val base = RowStore.currentVersion(table)
-    val man = RowStore.readManifest(table, base)
+    val lake = RowStore.forKey(table)
+    val meta = lake.readMeta(table)
+    val base = lake.currentVersion(table)
+    val man = lake.readManifest(table, base)
     require(man.forall(_.spec == meta.specId),
       s"$table: binpack across partition specs is not supported — " +
         "migrate with INSERT OVERWRITE onto the active spec first")
-    val dir = RowStore.dataDir(table)
+    val dir = lake.dataDir(table)
     // delta-bearing groups are out of scope (group < 0 = table-wide
     // delta poisons every group)
     val deltaGroups = man.filter(_.kind != "base").map(_.group).toSet
@@ -123,7 +124,7 @@ object BinpackOps {
       .select(outNames.map(col): _*)
       .writeTo(sink).option("compact", hs).append()
 
-    val after = RowStore.readManifest(table, RowStore.currentVersion(table))
+    val after = lake.readManifest(table, lake.currentVersion(table))
     val written = after.map(_.name).toSet -- man.map(_.name).toSet
     (selNames.size, written.size, skipped)
   }

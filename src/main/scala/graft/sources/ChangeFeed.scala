@@ -5,19 +5,11 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.RowDeltaUtils
-import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
-import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, SortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -29,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * multiset-diffed (an update surfaces as delete+insert; COW storage
   * keeps no row identity across rewrites, which is the honest
   * value-based CDF every COW format exposes). */
-class ChangesTable(baseKey: String, meta: RowStore.Meta)
+class ChangesTable(lake: RowStore, baseKey: String, meta: RowStore.Meta)
     extends Table with SupportsRead {
   override def name(): String = s"$baseKey.changes"
   override def schema(): StructType =
@@ -40,11 +32,11 @@ class ChangesTable(baseKey: String, meta: RowStore.Meta)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val from = Option(options.get("from")).map(_.toInt).getOrElse(0)
     val to = Option(options.get("to")).map(_.toInt)
-      .getOrElse(RowStore.currentVersion(baseKey))
+      .getOrElse(lake.currentVersion(baseKey))
     // mode=cdc: pair each key's single delete+insert into Delta-style
     // update_preimage/update_postimage rows (see createReaderFactory)
     val cdc = Option(options.get("mode")).contains("cdc")
-    () => new ChangesScan(baseKey, meta, schema(), from, to, cdc)
+    () => new ChangesScan(lake, baseKey, meta, schema(), from, to, cdc)
   }
 }
 
@@ -52,9 +44,9 @@ class ChangesTable(baseKey: String, meta: RowStore.Meta)
   * streaming one: only groups whose file signature differs between the
   * two manifests are planned. */
 object ChangesPlanning {
-  def partitions(baseKey: String, meta: RowStore.Meta, from: Int,
-      to: Int): Array[InputPartition] = {
-    val dir = RowStore.dataDir(baseKey)
+  def partitions(lake: RowStore, baseKey: String, meta: RowStore.Meta,
+      from: Int, to: Int): Array[InputPartition] = {
+    val dir = lake.dataDir(baseKey)
     // a side's replay sequence per group, in manifest (= commit)
     // order — the ordering that scopes equality deletes correctly.
     // The `group < 0` TABLE-WIDE sentinel applies to DELTA files only
@@ -64,7 +56,7 @@ object ChangesPlanning {
     // keys), so base lookups are exact-group and negative base groups
     // are planned like any other
     def side(v: Int): Seq[RowStore.FileEntry] =
-      RowStore.readManifest(baseKey, v)
+      lake.readManifest(baseKey, v)
     // partition identity is (spec, group), like GroupScan's planner: a
     // group NUMBER means different rows per spec, and with cross-spec
     // states routine (q157, add_files) a number-only grouping would
@@ -106,13 +98,13 @@ object ChangesPlanning {
   }
 }
 
-class ChangesScan(baseKey: String, meta: RowStore.Meta, out: StructType,
+class ChangesScan(lake: RowStore, baseKey: String, meta: RowStore.Meta, out: StructType,
     from: Int, to: Int, cdc: Boolean = false) extends Scan with Batch {
   override def readSchema(): StructType = out
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] =
-    ChangesPlanning.partitions(baseKey, meta, from, to)
+    ChangesPlanning.partitions(lake, baseKey, meta, from, to)
 
   /** Streaming CDF: the same diff read, micro-batched ONE VERSION per
     * batch (offset = committed version) — `readStream.table(
@@ -120,7 +112,7 @@ class ChangesScan(baseKey: String, meta: RowStore.Meta, out: StructType,
     * Delta/Iceberg CDF streaming reads do. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ChangesMicroBatchStream(baseKey, meta, from,
+    new ChangesMicroBatchStream(lake, baseKey, meta, from,
       createReaderFactory())
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -242,15 +234,15 @@ case class VersionOffset(v: Int)
   * delta files, fails loudly — silently re-emitting a rewritten
   * group's rows (or dropping a replaced file's) is the corruption
   * mode this check exists for. */
-class AppendTableStream(tableKey: String, meta: RowStore.Meta,
+class AppendTableStream(lake: RowStore, tableKey: String, meta: RowStore.Meta,
     from: Int, factory: PartitionReaderFactory)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
-  @volatile private var target: Int = RowStore.currentVersion(tableKey)
+  @volatile private var target: Int = lake.currentVersion(tableKey)
   override def prepareForTriggerAvailableNow(): Unit =
-    target = RowStore.currentVersion(tableKey)
+    target = lake.currentVersion(tableKey)
   override def initialOffset(): Offset = VersionOffset(from)
   override def latestOffset(): Offset = sys.error(
     "admission-controlled source: latestOffset(start, limit) is used")
@@ -266,8 +258,8 @@ class AppendTableStream(tableKey: String, meta: RowStore.Meta,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[VersionOffset].v
     val e = end.asInstanceOf[VersionOffset].v
-    val before = RowStore.readManifest(tableKey, s)
-    val after = RowStore.readManifest(tableKey, e)
+    val before = lake.readManifest(tableKey, s)
+    val after = lake.readManifest(tableKey, e)
     val beforeNames = before.map(_.name).toSet
     require(beforeNames.subsetOf(after.map(_.name).toSet),
       s"$tableKey: version $s -> $e removed or replaced files — the " +
@@ -277,7 +269,7 @@ class AppendTableStream(tableKey: String, meta: RowStore.Meta,
     require(added.forall(_.kind == "base"),
       s"$tableKey: version $s -> $e wrote delta files — the table " +
         "stream is append-only; use the .changes feed")
-    val dir = RowStore.dataDir(tableKey)
+    val dir = lake.dataDir(tableKey)
     added.groupBy(_.group).map { case (g, fs) =>
       // ROW LINEAGE: ship the batch's leaf→firstRowId map so the
       // streaming layout's `_row_id` ordinal serves committed rows'
@@ -297,15 +289,15 @@ class AppendTableStream(tableKey: String, meta: RowStore.Meta,
   * with the AvailableNow target latched at prepare time (SeqSource's
   * discipline). Planning per batch is the shared version-diff: only
   * groups whose file signature changed in that commit are read. */
-class ChangesMicroBatchStream(baseKey: String, meta: RowStore.Meta,
-    from: Int, factory: PartitionReaderFactory)
+class ChangesMicroBatchStream(lake: RowStore, baseKey: String,
+    meta: RowStore.Meta, from: Int, factory: PartitionReaderFactory)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
-  @volatile private var target: Int = RowStore.currentVersion(baseKey)
+  @volatile private var target: Int = lake.currentVersion(baseKey)
   override def prepareForTriggerAvailableNow(): Unit =
-    target = RowStore.currentVersion(baseKey)
+    target = lake.currentVersion(baseKey)
   override def initialOffset(): Offset = VersionOffset(from)
   override def latestOffset(): Offset = sys.error(
     "admission-controlled source: latestOffset(start, limit) is used")
@@ -318,7 +310,7 @@ class ChangesMicroBatchStream(baseKey: String, meta: RowStore.Meta,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    ChangesPlanning.partitions(baseKey, meta,
+    ChangesPlanning.partitions(lake, baseKey, meta,
       start.asInstanceOf[VersionOffset].v, end.asInstanceOf[VersionOffset].v)
   override def createReaderFactory(): PartitionReaderFactory = factory
 }
@@ -367,10 +359,11 @@ object RowStoreOps {
   def compact(s: SparkSession, table: String,
       sortCols: Seq[String] = Seq.empty,
       zorderCols: Seq[String] = Seq.empty): (Set[Int], Int, Int) = {
+    val lake = RowStore.forKey(table)
     require(sortCols.isEmpty || zorderCols.isEmpty,
       s"$table: a rewrite takes a lexicographic OR a zorder spec, not both")
-    val base = RowStore.currentVersion(table)
-    val man = RowStore.readManifest(table, base)
+    val base = lake.currentVersion(table)
+    val man = lake.readManifest(table, base)
     // dirtiness is a per-(spec, group) property: after a spec
     // evolution or add_files, two healthy one-file groups that merely
     // SHARE a group number across specs are not fragmentation — a
@@ -384,7 +377,7 @@ object RowStoreOps {
     // NESTED field ("props.band") is a legal sort key — the ordered
     // distribution's identity transform reads the dotted name as the
     // field path it denotes — while a struct (at any depth) refuses
-    val tblMeta = RowStore.readMeta(table)
+    val tblMeta = lake.readMeta(table)
     sortCols.foreach { c =>
       val dt = RowNested.resolve(tblMeta.schema.fields.toSeq, c)
         .getOrElse(sys.error(
@@ -430,7 +423,7 @@ object RowStoreOps {
         s"$table: OPTIMIZE across partition specs is not supported — " +
           "migrate with INSERT OVERWRITE onto the active spec first")
       if (zorderCols.nonEmpty) {
-        import org.apache.spark.sql.functions.{col, lit, shiftleft, shiftright}
+        import org.apache.spark.sql.functions.{col, lit}
         // normalization bounds folded from the manifest's per-column
         // zone maps (storage names) — every base file of the writer's
         // own making records them; a statless/legacy file refuses
@@ -488,7 +481,7 @@ object RowStoreOps {
         val outNames = src.columns.toIndexedSeq ++
           (if (tblMeta.rowids) Seq("_row_id") else Seq.empty)
         src.select(outCols :+ zv.as("_zv"): _*)
-          .repartitionByRange(RowStore.rewriteSlices(table, 16),
+          .repartitionByRange(lake.rewriteSlices(table, 16),
             col("_zv"))
           .sortWithinPartitions(col("_zv"))
           .select(outNames.map(col): _*)
@@ -505,7 +498,7 @@ object RowStoreOps {
           .writeTo(sink).option("compact", hs).append()
       }
     }
-    val after = RowStore.readManifest(table, RowStore.currentVersion(table))
+    val after = lake.readManifest(table, lake.currentVersion(table))
     (dirty, man.size, after.size)
   }
 
@@ -545,14 +538,15 @@ object RowStoreOps {
     * dropped). */
   def rewritePositionDeletes(s: SparkSession, table: String)
       : (Long, Int, Int) = {
-    val meta = RowStore.readMeta(table)
+    val lake = RowStore.forKey(table)
+    val meta = lake.readMeta(table)
     require(meta.mor, s"$table: rewrite_position_deletes applies to " +
       "merge-on-read tables (COW rewrites carry no delete records)")
-    val base = RowStore.currentVersion(table)
-    val man = RowStore.readManifest(table, base)
+    val base = lake.currentVersion(table)
+    val man = lake.readManifest(table, base)
     require(man.forall(e => e.kind == "base" || e.group >= 0),
       s"$table has untagged delta files — cannot rewrite deletes")
-    val dir = RowStore.dataDir(table)
+    val dir = lake.dataDir(table)
     val deltas = man.filter(_.kind == "delta")
     if (deltas.isEmpty) return (0L, man.count(_.kind == "dv"), 0)
     // candidate replacement names assigned up front (driver-side), so
@@ -646,7 +640,7 @@ object RowStoreOps {
     val existing = DvMerge.existingVectors(man, handles.map(_._2).toSet)
     val (dvAdded, replacedDvNames, consumed) =
       DvMerge.resolve(dir, meta.specId, handles, existing)
-    RowStore.commit(table) { (cur, _) =>
+    lake.commit(table) { (cur, _) =>
       if (cur != base)
         throw new java.util.ConcurrentModificationException(
           s"$table: rewrite_position_deletes planned at version $base " +
@@ -691,8 +685,9 @@ object RowStoreOps {
     * colMinMax refusal rule — a statless or legacy file would make
     * the mean silently wrong). Returns (base files, quality). */
   def clusteringQuality(table: String, col: String): (Int, Double) = {
-    val meta = RowStore.readMeta(table)
-    val man = RowStore.readManifest(table, RowStore.currentVersion(table))
+    val lake = RowStore.forKey(table)
+    val meta = lake.readMeta(table)
+    val man = lake.readManifest(table, lake.currentVersion(table))
     val base = man.filter(_.kind == "base")
     require(base.nonEmpty, s"$table has no base files")
     val storage = meta.storageOf(col)
@@ -735,25 +730,27 @@ object RowStoreOps {
     * stamps, so the cut is total and testable under the injectable
     * clock. */
   def vacuumOlderThan(table: String, olderThanMs: Long): (Seq[Int], Int) = {
+    val lake = RowStore.forKey(table)
     require(olderThanMs >= 0, "older_than_ms must be non-negative")
     vacuumCore(table, vs => {
-      val horizon = RowStore.clock() - olderThanMs
-      vs.filter(v => RowStore.commitTimeMs(table, v) >= horizon)
+      val horizon = lake.clock() - olderThanMs
+      vs.filter(v => lake.commitTimeMs(table, v) >= horizon)
         .toSet + vs.last
     })
   }
 
   private def vacuumCore(table: String,
-      retainF: Seq[Int] => Set[Int]): (Seq[Int], Int) =
-    RowStore.commitLock.synchronized {
-      val vs = RowStore.versions(table)
+      retainF: Seq[Int] => Set[Int]): (Seq[Int], Int) = {
+    val lake = RowStore.forKey(table)
+    lake.commitLock.synchronized {
+      val vs = lake.versions(table)
       // fail loudly with table context (the retention closures index
       // vs.last) rather than an anonymous empty-list error
       require(vs.nonEmpty, s"no committed version for $table")
       // TAGGED versions are retained regardless of the retention window
       // — a tag is a promise the snapshot stays reproducible (Iceberg's
       // tag retention); its manifest survives and so do its files
-      val tagged = RowStore.listTags(table).map(_._2).toSet
+      val tagged = lake.listTags(table).map(_._2).toSet
       val keepSet = retainF(vs) ++ tagged
       val expired = vs.filterNot(keepSet)
       val retained = vs.filter(keepSet)
@@ -765,26 +762,28 @@ object RowStoreOps {
       // chain-safe by the time its children are considered.)
       val retainedSet = retained.toSet
       retained.foreach { v =>
-        RowStore.parentVersion(table, v).filterNot(retainedSet)
-          .foreach(_ => RowStore.materializeManifest(table, v))
+        lake.parentVersion(table, v).filterNot(retainedSet)
+          .foreach(_ => lake.materializeManifest(table, v))
       }
-      val keep = referencedFiles(table, retained)
+      val keep = referencedFiles(lake, table, retained)
       expired.foreach(v =>
-        Files.deleteIfExists(RowStore.manifestPath(table, v)))
-      val dir = Paths.get(RowStore.dataDir(table))
+        Files.deleteIfExists(lake.manifestPath(table, v)))
+      val dir = Paths.get(lake.dataDir(table))
       val dead = RowStore.listNames(dir)
         .filter(n => !n.startsWith(".") && !keep(n))
       dead.foreach(deleteDataFile(dir, _))
       (retained, dead.size)
     }
+  }
 
   /** Names of the data files that `versions`' manifests reference, plus
     * those of every staged branch manifest — a sweep must not strand an
     * un-published WAP branch. */
-  private def referencedFiles(table: String, versions: Seq[Int]): Set[String] =
-    (versions.flatMap(v => RowStore.readManifest(table, v)) ++
-      RowStore.listBranches(table)
-        .flatMap(b => RowStore.readBranchManifest(table, b)._2))
+  private def referencedFiles(lake: RowStore, table: String,
+      versions: Seq[Int]): Set[String] =
+    (versions.flatMap(v => lake.readManifest(table, v)) ++
+      lake.listBranches(table)
+        .flatMap(b => lake.readBranchManifest(table, b)._2))
       .map(_.name).toSet
 
   /** Delete data file `name` with the hidden `.<name>.crc` sidecar
@@ -805,13 +804,15 @@ object RowStoreOps {
     * and branch) is observationally unchanged; older versions keep
     * their own chains until VACUUM expires them. Returns the chain
     * length before and after (after is always 1). */
-  def rewriteManifests(table: String): (Int, Int) =
-    RowStore.commitLock.synchronized {
-      val cur = RowStore.currentVersion(table)
-      val before = RowStore.manifestChainLength(table, cur)
-      RowStore.materializeManifest(table, cur)
-      (before, RowStore.manifestChainLength(table, cur))
+  def rewriteManifests(table: String): (Int, Int) = {
+    val lake = RowStore.forKey(table)
+    lake.commitLock.synchronized {
+      val cur = lake.currentVersion(table)
+      val before = lake.manifestChainLength(table, cur)
+      lake.materializeManifest(table, cur)
+      (before, lake.manifestChainLength(table, cur))
     }
+  }
 
   /** ORPHAN-FILE CLEANUP (Iceberg's `remove_orphan_files`): delete
     * data files referenced by NO retained manifest, branch manifest —
@@ -829,10 +830,11 @@ object RowStoreOps {
     * have externally quiesced writers pass 0 to sweep everything.
     * Returns (orphans deleted, files retained). */
   def removeOrphanFiles(table: String,
-      olderThanMs: Long = 3600000L): (Int, Int) =
-    RowStore.commitLock.synchronized {
-      val keep = referencedFiles(table, RowStore.versions(table))
-      val dir = Paths.get(RowStore.dataDir(table))
+      olderThanMs: Long = 3600000L): (Int, Int) = {
+    val lake = RowStore.forKey(table)
+    lake.commitLock.synchronized {
+      val keep = referencedFiles(lake, table, lake.versions(table))
+      val dir = Paths.get(lake.dataDir(table))
       val horizon = System.currentTimeMillis() - olderThanMs
       val all = RowStore.listNames(dir).filter(!_.startsWith("."))
       val orphans = all.filterNot(keep).filter { n =>
@@ -840,6 +842,7 @@ object RowStoreOps {
       orphans.foreach(deleteDataFile(dir, _))
       (orphans.size, all.filterNot(orphans.contains).size)
     }
+  }
 
   /** ROLLBACK to an earlier snapshot (Iceberg's
     * `rollback_to_snapshot`): commits a NEW version whose entry list
@@ -847,20 +850,23 @@ object RowStoreOps {
     * stay visible to time travel until VACUUM expires them), the head
     * just points at the old state again. Files are immutable, so this
     * is pure manifest metadata. Returns the new head version. */
-  def rollback(table: String, v: Int): Int =
-    RowStore.commit(table) { (_, _) =>
-      val have = RowStore.versions(table)
+  def rollback(table: String, v: Int): Int = {
+    val lake = RowStore.forKey(table)
+    lake.commit(table) { (_, _) =>
+      val have = lake.versions(table)
       require(have.contains(v),
         s"cannot roll back $table to version $v (have $have)")
-      RowStore.readManifest(table, v)
+      lake.readManifest(table, v)
     }
+  }
 
   /** TAG a committed snapshot (Iceberg's `create_tag`): an immutable
     * named ref `VERSION AS OF '<tag>'` resolves and VACUUM retains.
     * Tags the current version when `v` is negative. */
   def createTag(table: String, name: String, v: Int = -1): Int = {
-    val ver = if (v >= 0) v else RowStore.currentVersion(table)
-    RowStore.createTag(table, name, ver)
+    val lake = RowStore.forKey(table)
+    val ver = if (v >= 0) v else lake.currentVersion(table)
+    lake.createTag(table, name, ver)
     ver
   }
 
@@ -880,8 +886,9 @@ object RowStoreOps {
     * delete files committed. */
   def equalityDelete(s: SparkSession, table: String,
       keys: org.apache.spark.sql.DataFrame): Int = {
+    val lake = RowStore.forKey(table)
     import org.apache.spark.sql.functions.col
-    val meta = RowStore.readMeta(table)
+    val meta = lake.readMeta(table)
     require(meta.mor, s"$table: equality deletes are a merge-on-read " +
       "construct — COW row-level operations rewrite groups instead " +
       "(use DELETE FROM)")
@@ -899,7 +906,7 @@ object RowStoreOps {
       (inType == IntegerType && keyField.dataType == LongType),
       s"$table: keys frame column type $inType does not match key " +
         s"column ${meta.keyCol}: ${keyField.dataType} — cast explicitly")
-    val dir = RowStore.dataDir(table)
+    val dir = lake.dataDir(table)
     val n = meta.numGroups
     // same file layout as positional deltas (meta fields + the full
     // data schema in storage names): the reader's projection
@@ -959,7 +966,7 @@ object RowStoreOps {
         writers.values.foreach(_._2.close())
         writers.iterator.map { case (g, (name, _)) => (g, name) }
       }.collect()
-    RowStore.commit(table) { (_, head) =>
+    lake.commit(table) { (_, head) =>
       head ++ files.toSeq.map { case (g, name) =>
         RowStore.FileEntry("delta", g, name, spec = meta.specId) }
     }
@@ -973,8 +980,9 @@ object RowStoreOps {
     * the scan refuses: dirty (non-base entries) or any file without
     * a sketch for the column. */
   def columnNdv(table: String, col: String): Option[Long] = {
-    val meta = RowStore.readMeta(table)
-    val es = RowStore.readManifest(table, RowStore.currentVersion(table))
+    val lake = RowStore.forKey(table)
+    val meta = lake.readMeta(table)
+    val es = lake.readManifest(table, lake.currentVersion(table))
     val storage = meta.storageOf(col)
     if (es.isEmpty || es.exists(_.kind != "base") ||
       es.exists(e => !e.ndv.contains(storage))) None
@@ -996,7 +1004,8 @@ object RowStoreOps {
     * rule. Returns (files sketched, columns). */
   def computeTableStats(s: SparkSession, table: String,
       cols: Seq[String]): (Int, Int) = {
-    val meta = RowStore.readMeta(table)
+    val lake = RowStore.forKey(table)
+    val meta = lake.readMeta(table)
     require(cols.nonEmpty, "compute_table_stats: no columns named")
     val fields = cols.map { c =>
       meta.schema.fields.find(_.name == c).getOrElse(
@@ -1004,9 +1013,9 @@ object RowStoreOps {
     }
     fields.foreach(f => require(RowStore.Bloom.trackable(f.dataType),
       s"$table: ndv column ${f.name} has untrackable type ${f.dataType}"))
-    val dir = RowStore.dataDir(table)
-    val baseV = RowStore.currentVersion(table)
-    val man = RowStore.readManifest(table, baseV)
+    val dir = lake.dataDir(table)
+    val baseV = lake.currentVersion(table)
+    val man = lake.readManifest(table, baseV)
     require(man.forall(_.kind == "base"),
       s"$table: compute_table_stats needs a clean snapshot — run " +
         "OPTIMIZE to fold delta/deletion-vector entries first")
@@ -1031,7 +1040,7 @@ object RowStoreOps {
           }.toMap
           (name, per)
         }.collect().toMap
-    RowStore.commit(table, evolve = m =>
+    lake.commit(table, evolve = m =>
         m.copy(ndvCols = (m.ndvCols ++ cols).distinct)) { (cur, _) =>
       if (cur != baseV)
         throw new java.util.ConcurrentModificationException(
@@ -1086,9 +1095,10 @@ object RowStoreOps {
   }
 
   private def addFilesCore(table: String, files: Seq[String]): (Int, Long) = {
+    val lake = RowStore.forKey(table)
     import org.apache.spark.sql.types.{DateType, DecimalType}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val meta = RowStore.readMeta(table)
+    val meta = lake.readMeta(table)
     require(!meta.mor, s"$table: add_files registers into copy-on-write " +
       "tables only (MOR delta replay keys on the bucket layout, which " +
       "imported files don't follow)")
@@ -1161,7 +1171,7 @@ object RowStoreOps {
       totalRows += rows
       (f, rows)
     }
-    RowStore.commit(table) { (_, man) =>
+    lake.commit(table) { (_, man) =>
       // duplicate-registration guard (Iceberg's check_duplicate_files
       // default): re-importing an already-referenced path would
       // silently double rows, and a duplicated entry NAME poisons the
@@ -1195,9 +1205,10 @@ object RowStoreOps {
     * manifest commit and the log write (the next run derives the
     * loaded set and heals it back into the log). Returns
     * (new files, new rows, skipped). */
-  def copyInto(table: String, sourceDir: String): (Int, Long, Int) =
-    RowStore.commitLock.synchronized {
-      val logP = Paths.get(RowStore.tableDir(table), "ingest.log")
+  def copyInto(table: String, sourceDir: String): (Int, Long, Int) = {
+    val lake = RowStore.forKey(table)
+    lake.commitLock.synchronized {
+      val logP = Paths.get(lake.tableDir(table), "ingest.log")
       val logged: Set[String] =
         if (Files.exists(logP)) Files.readAllLines(logP).asScala.toSet
         else Set.empty
@@ -1211,8 +1222,8 @@ object RowStoreOps {
       // (crash, then VACUUM expires every referencing version before
       // any re-run) requires deliberately racing retention against
       // recovery.
-      val manifestLoaded = RowStore.versions(table)
-        .flatMap(v => RowStore.readManifest(table, v))
+      val manifestLoaded = lake.versions(table)
+        .flatMap(v => lake.readManifest(table, v))
         .map(_.name).filter(_.startsWith("/")).toSet
       val seen = logged ++ manifestLoaded
       val all = listParquet(sourceDir)
@@ -1226,7 +1237,7 @@ object RowStoreOps {
       // double-load hazard stays open indefinitely (r14 advisor)
       if (fresh.nonEmpty || seen != logged) {
         // torn-write-safe (the round-11 metadata rule): temp + move
-        val tmp = Paths.get(RowStore.tableDir(table), ".ingest.log.tmp")
+        val tmp = Paths.get(lake.tableDir(table), ".ingest.log.tmp")
         Files.writeString(tmp, (seen.toSeq.sorted ++ fresh)
           .mkString("", "\n", "\n"))
         Files.move(tmp, logP,
@@ -1235,6 +1246,7 @@ object RowStoreOps {
       }
       (n, rows, all.size - fresh.size)
     }
+  }
 
   /** MERGE WITH SCHEMA EVOLUTION — Delta's `mergeSchema` behavior:
     * top-level columns present in the SOURCE but not the target are
@@ -1263,7 +1275,8 @@ object RowStoreOps {
     * degenerates to the plain MERGE. */
   def mergeEvolving(s: SparkSession, table: String, sourceView: String,
       mergeSql: String): Seq[String] = {
-    val meta = RowStore.readMeta(table)
+    val lake = RowStore.forKey(table)
+    val meta = lake.readMeta(table)
     require(!meta.mor, s"$table: MERGE schema evolution is not " +
       "supported for merge-on-read tables (delta records are " +
       "projected by written name)")
@@ -1291,7 +1304,7 @@ object RowStoreOps {
         f.name
       }
     val preMergeV =
-      if (added.isEmpty) -1 else RowStore.currentVersion(table)
+      if (added.isEmpty) -1 else lake.currentVersion(table)
     try { s.sql(mergeSql); () }
     catch { case e: Throwable =>
       // best-effort rollback: a failure INSIDE the rollback (IO) must
@@ -1303,7 +1316,7 @@ object RowStoreOps {
         // the new columns). The rollback commits its own version (same
         // entries, the restored schema) — time travel sees evolve and
         // un-evolve as two honest commits
-        if (added.nonEmpty) RowStore.commit(table, evolve = m =>
+        if (added.nonEmpty) lake.commit(table, evolve = m =>
           m.copy(schema = StructType(
             m.schema.fields.filterNot(f => added.contains(f.name))))) {
           (cur, head) =>
@@ -1344,14 +1357,15 @@ object RowStoreOps {
     * as branches; re-running publish_branches on the survivors
     * reaches the same terminal state. Returns the published version
     * per table, in input order. */
-  def publishBranches(pairs: Seq[(String, String)]): Seq[Int] =
-    RowStore.commitLock.synchronized {
-      require(pairs.nonEmpty, "publish_branches: no (table, branch) pairs")
+  def publishBranches(pairs: Seq[(String, String)]): Seq[Int] = {
+    require(pairs.nonEmpty, "publish_branches: no (table, branch) pairs")
+    val lake = RowStore.forKey(pairs.head._1)
+    lake.commitLock.synchronized {
       require(pairs.map(_._1).distinct.size == pairs.size,
         "publish_branches: a table may appear once per call")
       val plans = pairs.map { case (t, b) =>
-        val (base, entries) = RowStore.readBranchManifest(t, b)
-        val cur = RowStore.currentVersion(t)
+        val (base, entries) = lake.readBranchManifest(t, b)
+        val cur = lake.currentVersion(t)
         if (cur != base)
           throw new java.util.ConcurrentModificationException(
             s"$t: branch $b forked at version $base but the table is " +
@@ -1360,8 +1374,9 @@ object RowStoreOps {
         (t, cur, entries)
       }
       val branch = pairs.toMap
-      RowStore.commitTables(plans, t => RowStore.dropBranch(t, branch(t)))
+      lake.commitTables(plans, t => lake.dropBranch(t, branch(t)))
     }
+  }
 
   /** CHERRY-PICK a staged branch onto a main that MOVED past its fork
     * base (Iceberg's cherrypick_snapshot, the resolution publishBranch
@@ -1376,13 +1391,14 @@ object RowStoreOps {
     * under the same OCC contract as publish. A branch whose base IS
     * the current version degenerates to the plain fast-forward.
     * Returns the published version. */
-  def cherrypickBranch(table: String, name: String): Int =
-    RowStore.commitLock.synchronized {
-      val v = RowStore.commit(table) { (cur, curEntries) =>
-        val (base, entries) = RowStore.readBranchManifest(table, name)
+  def cherrypickBranch(table: String, name: String): Int = {
+    val lake = RowStore.forKey(table)
+    lake.commitLock.synchronized {
+      val v = lake.commit(table) { (cur, curEntries) =>
+        val (base, entries) = lake.readBranchManifest(table, name)
         if (cur == base) entries // nothing interleaved: fast-forward
         else {
-          val baseNames = RowStore.readManifest(table, base)
+          val baseNames = lake.readManifest(table, base)
             .map(_.name).toSet
           val branchNames = entries.map(_.name).toSet
           val added = entries.filterNot(e => baseNames(e.name))
@@ -1412,9 +1428,10 @@ object RowStoreOps {
           curEntries.filterNot(e => removed(e.name)) ++ added
         }
       }
-      RowStore.dropBranch(table, name)
+      lake.dropBranch(table, name)
       v
     }
+  }
 
   /** ZERO-COPY TABLE CLONE (Delta's SHALLOW CLONE / Iceberg's
     * snapshot procedure): create `dst` with `src`'s exact metadata and
@@ -1436,14 +1453,15 @@ object RowStoreOps {
     * group routing stays consistent because dst shares src's Meta
     * (numGroups/transform/renames). Returns the referenced entry
     * count. */
-  def snapshotTable(src: String, dst: String): Int =
-    RowStore.commitLock.synchronized {
-      require(RowStore.exists(src), s"snapshot_table: $src does not exist")
-      require(!RowStore.exists(dst),
+  def snapshotTable(src: String, dst: String): Int = {
+    val lake = RowStore.forKey(src)
+    lake.commitLock.synchronized {
+      require(lake.exists(src), s"snapshot_table: $src does not exist")
+      require(!lake.exists(dst),
         s"snapshot_table: $dst already exists (clones never overwrite)")
-      val meta = RowStore.readMeta(src)
-      val entries = RowStore.readManifest(src, RowStore.currentVersion(src))
-      val srcData = RowStore.dataDir(src)
+      val meta = lake.readMeta(src)
+      val entries = lake.readManifest(src, lake.currentVersion(src))
+      val srcData = lake.dataDir(src)
       def abs(n: String) = RowStore.entryPath(srcData, n)
       val cloned = entries.map(e => e.copy(name = abs(e.name)))
       // ROW LINEAGE: the clone inherits the source's COUNTER, not just
@@ -1452,9 +1470,9 @@ object RowStoreOps {
       // and a clone that re-minted a retired id would break
       // cross-version id uniqueness when a transaction adopts it back
       val floor = if (!meta.rowids) 0L
-        else RowStore.nextRowId(src, RowStore.currentVersion(src))
-      RowStore.create(dst, meta, cloned, rowIdFloor = floor)
+        else lake.nextRowId(src, lake.currentVersion(src))
+      lake.create(dst, meta, cloned, rowIdFloor = floor)
       cloned.size
     }
+  }
 }
-

@@ -137,6 +137,7 @@ object DmlFuzz {
       table: String, keep: Boolean = false,
       rowids: Boolean = false): Int = {
     s.sql(s"DROP TABLE IF EXISTS $table")
+    val lake = RowStore.of(s)
     // ROW-LINEAGE sweep variant: same grammar, same differential —
     // plus the lineage INVARIANTS after every statement (uniqueness,
     // counter-boundedness, per-statement-kind id-set relations,
@@ -183,8 +184,7 @@ object DmlFuzz {
         val ids = triples.map(_._3).toSet
         assert(ids.size == triples.size,
           s"seed $seed/$variant ${st.label}: duplicate row ids")
-        val next = RowStore.nextRowId(table,
-          RowStore.currentVersion(table))
+        val next = lake.nextRowId(table, lake.currentVersion(table))
         assert(ids.forall(id => id >= 0 && id < next),
           s"seed $seed/$variant ${st.label}: id outside [0, $next)")
         if (st.maint.isDefined)
@@ -204,7 +204,7 @@ object DmlFuzz {
               "live id")
         liveIds = ids
       }
-      byVersion += ((RowStore.currentVersion(table), want))
+      byVersion += ((lake.currentVersion(table), want))
     }
     // whole-history re-read: every commit's snapshot must still
     // resolve to the state the model had then

@@ -1,22 +1,16 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.UUID
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.RowDeltaUtils
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, SortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, Transform}
+import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, WriteBuilder}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,8 +18,18 @@ import org.apache.spark.unsafe.types.UTF8String
 class GraftCatalog extends TableCatalog with FunctionCatalog
     with org.apache.spark.sql.connector.catalog.ProcedureCatalog {
   private var catName = "graft_dml"
-  override def initialize(name: String, options: CaseInsensitiveStringMap): Unit =
+  private var store: RowStore = _
+  /** The lake every table, scan, write and procedure of this catalog uses. */
+  def lake: RowStore = store
+
+  /** Builds the lake once, rooted at the `warehouse` option: a
+    * caller-owned directory several processes may share. The default
+    * is the per-application scratch dir, deleted on JVM exit. */
+  override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catName = name
+    store = new RowStore(Option(options.get("warehouse")).getOrElse(
+      graft.Scratch.dir(SparkSession.active, "graft_rowcat", "tables")))
+  }
 
   // ── SQL PROCEDURES (`CALL graft_dml.system.<proc>(…)`) — Iceberg's
   // stored-procedure surface for the maintenance operations that have
@@ -79,7 +83,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       Seq(("previous_version", IntegerType), ("current_version", IntegerType))) {
       override def run(a: InternalRow): Array[Any] = {
         val k = tkey(a.getUTF8String(0))
-        val prev = RowStore.currentVersion(k)
+        val prev = lake.currentVersion(k)
         Array(prev, RowStoreOps.rollback(k, a.getInt(1)))
       }
     },
@@ -285,7 +289,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         val ts = a.getUTF8String(0).toString.split(",").map(_.trim)
           .filter(_.nonEmpty).toSeq
           .map(t => tkey(UTF8String.fromString(t)))
-        val txn = Transact.begin(ts)
+        val txn = Transact.begin(lake, ts)
         Array(txn.id, UTF8String.fromString(
           ts.map(t => Transact.cloneKey(t, txn.id)).mkString(",")))
       }
@@ -298,7 +302,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       Seq(("committed_tables", IntegerType),
         ("committed_versions", StringType))) {
       override def run(a: InternalRow): Array[Any] = {
-        val vs = Transact.commit(a.getLong(0))
+        val vs = Transact.commit(lake, a.getLong(0))
         Array(vs.size, UTF8String.fromString(vs.mkString(",")))
       }
     },
@@ -308,7 +312,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       Seq(("txn_id", LongType)),
       Seq(("dropped_clones", IntegerType))) {
       override def run(a: InternalRow): Array[Any] =
-        Array(Transact.rollback(a.getLong(0)))
+        Array(Transact.rollback(lake, a.getLong(0)))
     },
     new Proc("gc_transactions",
       "reclaim transactions older than ttl_ms (a crashed owner's " +
@@ -317,7 +321,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       Seq(("ttl_ms", LongType)),
       Seq(("reclaimed", IntegerType), ("still_open", IntegerType))) {
       override def run(a: InternalRow): Array[Any] = {
-        val (reclaimed, open) = Transact.gcTransactions(a.getLong(0))
+        val (reclaimed, open) = Transact.gcTransactions(lake, a.getLong(0))
         Array(reclaimed, open)
       }
     },
@@ -401,7 +405,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
 
   override def listTables(ns: Array[String]): Array[Identifier] = {
     val prefix = (catName +: ns).mkString(".") + "."
-    RowStore.listTableKeys().toArray
+    lake.listTableKeys().toArray
       .filter(_.startsWith(prefix))
       .map(_.stripPrefix(prefix))
       // only DIRECT children: a table in a nested namespace would
@@ -420,22 +424,22 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * (per-version lineage + diff-derived operation), `.column_stats`
     * (per-tracked-column NDV + null counts — what the CBO sees). */
   private val metadataTables: Map[String, String => Table] = Map(
-    "changes" -> (b => new ChangesTable(b, RowStore.readMeta(b))),
-    "history" -> (b => new HistoryTable(b)),
-    "files" -> (b => new FilesTable(b)),
-    "partitions" -> (b => new PartitionsTable(b)),
-    "refs" -> (b => new RefsTable(b)),
-    "manifests" -> (b => new ManifestsTable(b)),
-    "snapshots" -> (b => new SnapshotsTable(b)),
-    "column_stats" -> (b => new ColumnStatsTable(b)),
+    "changes" -> (b => new ChangesTable(lake, b, lake.readMeta(b))),
+    "history" -> (b => new HistoryTable(lake, b)),
+    "files" -> (b => new FilesTable(lake, b)),
+    "partitions" -> (b => new PartitionsTable(lake, b)),
+    "refs" -> (b => new RefsTable(lake, b)),
+    "manifests" -> (b => new ManifestsTable(lake, b)),
+    "snapshots" -> (b => new SnapshotsTable(lake, b)),
+    "column_stats" -> (b => new ColumnStatsTable(lake, b)),
     // write-only: the row-lineage maintenance-rewrite sink
-    "rewrite" -> (b => new RewriteSinkTable(b, RowStore.readMeta(b))))
+    "rewrite" -> (b => new RewriteSinkTable(lake, b, lake.readMeta(b))))
 
   override def loadTable(ident: Identifier): Table = {
     val k = key(ident)
-    val have = RowStore.versions(k)
+    val have = lake.versions(k)
     if (have.nonEmpty)
-      new RowTable(k, RowStore.versionMeta(k, have.last), have.last)
+      new RowTable(lake, k, lake.versionMeta(k, have.last), have.last)
     else {
       // a real table always wins the name; only then does `t.<meta>`
       // resolve as a metadata table of `t`
@@ -445,7 +449,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         case Some(mk) =>
           val ns = ident.namespace()
           val base = key(Identifier.of(ns.dropRight(1), ns.last))
-          if (RowStore.exists(base)) mk(base)
+          if (lake.exists(base)) mk(base)
           else throw new NoSuchTableException(ident)
         case None => throw new NoSuchTableException(ident)
       }
@@ -467,34 +471,27 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * collision (a tag is a committed fact, a branch a proposal). */
   override def loadTable(ident: Identifier, version: String): Table = {
     val k = key(ident)
-    val have = RowStore.versions(k)
+    val have = lake.versions(k)
     if (have.isEmpty) throw new NoSuchTableException(ident)
-    val meta = RowStore.versionMeta(k, have.last)
+    val meta = lake.versionMeta(k, have.last)
     def pinned(v: Int): Table = {
       require(have.contains(v), s"no version $v for $k (have $have)")
       pinnedTable(k, meta, v)
     }
     version.toIntOption match {
       case Some(v) => pinned(v)
-      case None if RowStore.tagExists(k, version) =>
-        pinned(RowStore.readTag(k, version))
-      case None if RowStore.branchExists(k, version) =>
+      case None if lake.tagExists(k, version) =>
+        pinned(lake.readTag(k, version))
+      case None if lake.branchExists(k, version) =>
         // branch reads plan from the STAGED manifest; version is the
         // fork base (display/metadata only — the scan ignores it)
-        new RowTable(k, meta, RowStore.readBranchManifest(k, version)._1,
+        new RowTable(lake, k, meta, lake.readBranchManifest(k, version)._1,
           forceBranch = Some(version))
       case None => sys.error(
         s"$k has no version, tag, or staged branch named '$version'")
     }
   }
 
-  /** `PARTITIONED BY (bucket(n, col))` — the Iceberg-shaped partition
-    * transform: n becomes the group count and col the group key, so
-    * groups, write distribution, zone maps, and file skipping all
-    * follow the DECLARED layout instead of the first-column default.
-    * Only `bucket` is supported: the catalog's column types are
-    * INT/LONG/STRING, so the temporal transforms (`days`/`hours`)
-    * have no legal input column here and fail loudly. */
   /** `TIMESTAMP AS OF t` — Spark hands MICROseconds since epoch; the
     * snapshot is the LATEST version committed at or before t
     * (Iceberg/Delta's as-of rule). Commit times are recorded in the
@@ -503,21 +500,21 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * fails loudly. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val k = key(ident)
-    val have = RowStore.versions(k)
+    val have = lake.versions(k)
     if (have.isEmpty) throw new NoSuchTableException(ident)
     val atOrBefore = have.filter(v =>
-      RowStore.commitTimeMs(k, v) * 1000L <= timestampMicros)
+      lake.commitTimeMs(k, v) * 1000L <= timestampMicros)
     require(atOrBefore.nonEmpty,
       s"no snapshot of $k at or before timestamp ${timestampMicros}us " +
-        s"(earliest commit: ${RowStore.commitTimeMs(k, have.head)}ms)")
-    pinnedTable(k, RowStore.versionMeta(k, have.last), atOrBefore.max)
+        s"(earliest commit: ${lake.commitTimeMs(k, have.head)}ms)")
+    pinnedTable(k, lake.versionMeta(k, have.last), atOrBefore.max)
   }
 
   /** Version `v` read through the current metadata `meta`, with the
     * schema and renames `v` was committed under. */
   private def pinnedTable(k: String, meta: RowStore.Meta, v: Int): Table = {
-    val vm = RowStore.versionMeta(k, v)
-    new RowTable(k, meta.copy(schema = vm.schema, renames = vm.renames), v)
+    val vm = lake.versionMeta(k, v)
+    new RowTable(lake, k, meta.copy(schema = vm.schema, renames = vm.renames), v)
   }
 
   /** (transform, tparam, col, numGroups) from a declared transform.
@@ -682,8 +679,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       tparam = spec.map(_._2).getOrElse(0L),
       bloomCols = bloomCols, dv = dv, ndvCols = ndvCols, check = check,
       rowids = rowids, gen = gen)
-    RowStore.create(k, meta) // v0 = empty table at CREATE
-    new RowTable(k, meta, 0)
+    lake.create(k, meta) // v0 = empty table at CREATE
+    new RowTable(lake, k, meta, 0)
   }
 
   /** Schema evolution, additive form (the lake-format default): ADD
@@ -701,9 +698,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     * ops refuse until the table is migrated (INSERT OVERWRITE). */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val k = key(ident)
-    RowStore.commitLock.synchronized {
-      if (!RowStore.exists(k)) throw new NoSuchTableException(ident)
-      val meta = RowStore.readMeta(k)
+    lake.commitLock.synchronized {
+      if (!lake.exists(k)) throw new NoSuchTableException(ident)
+      val meta = lake.readMeta(k)
       val (specChanges, colChanges) = changes.partition {
         case p: TableChange.SetProperty => p.property() == "partition"
         case _ => false
@@ -969,12 +966,12 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       // keeps the old shape, the new head pins the new one. m2 was
       // planned against `meta`: a head another process evolved since
       // refuses rather than silently dropping that evolution.
-      val v = RowStore.commit(k, evolve = head =>
+      val v = lake.commit(k, evolve = head =>
         if (head == meta) m2
         else throw new java.util.ConcurrentModificationException(
           s"$k: table metadata changed while this ALTER was planned " +
             "— re-run it against the new schema"))((_, head) => head)
-      new RowTable(k, m2, v)
+      new RowTable(lake, k, m2, v)
     }
   }
 
@@ -998,7 +995,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
   }
 
   override def dropTable(ident: Identifier): Boolean =
-    RowStore.drop(key(ident))
+    lake.drop(key(ident))
 
   override def renameTable(from: Identifier, to: Identifier): Unit =
     throw new UnsupportedOperationException("RENAME not supported")
@@ -1061,7 +1058,7 @@ private object RowIdMetaCol extends MetadataColumn {
   override def isNullable: Boolean = true
 }
 
-class RowTable(tableKey: String, meta: RowStore.Meta, version: Int,
+class RowTable(lake: RowStore, tableKey: String, meta: RowStore.Meta, version: Int,
     forceBranch: Option[String] = None)
     extends Table with SupportsRead with SupportsWrite
     with SupportsRowLevelOperations with SupportsMetadataColumns
@@ -1101,7 +1098,7 @@ class RowTable(tableKey: String, meta: RowStore.Meta, version: Int,
     predicates.isEmpty || predicates.forall(_.name() == "ALWAYS_TRUE")
   override def deleteWhere(predicates: Array[
       org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
-    RowStore.commit(tableKey)((_, _) => Seq.empty)
+    lake.commit(tableKey)((_, _) => Seq.empty)
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ,
@@ -1135,7 +1132,7 @@ class RowTable(tableKey: String, meta: RowStore.Meta, version: Int,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val handshake =
       Option(options.get("compact")).map(GroupWrite.parseCompact)
-    new GroupScanBuilder(tableKey, meta, version, None,
+    new GroupScanBuilder(lake, tableKey, meta, version, None,
       Option(options.get("groups"))
         .map(_.split(",").map(_.trim.toInt).toSet)
         .orElse(handshake.map(_._2)),
@@ -1156,7 +1153,7 @@ class RowTable(tableKey: String, meta: RowStore.Meta, version: Int,
     Option(info.options().get("compact"))
       .map(GroupWrite.parseCompact) match {
       case Some((base, gs, sort, preserve, files)) =>
-        new GroupWrite(tableKey, meta, info.schema(),
+        new GroupWrite(lake, tableKey, meta, info.schema(),
           GroupWrite.Compact(base, gs, files), sortCols = sort,
           preserveLayout = preserve)
       case None =>
@@ -1164,9 +1161,9 @@ class RowTable(tableKey: String, meta: RowStore.Meta, version: Int,
           // write option `branch=<name>`: the append STAGES into the
           // named branch (WAP) — files land on disk, but no table
           // version commits until publishBranch
-          case Some(b) => new GroupWrite(tableKey, meta, info.schema(),
+          case Some(b) => new GroupWrite(lake, tableKey, meta, info.schema(),
             GroupWrite.StageBranch(b))
-          case None => new GroupWrite(tableKey, meta, info.schema(),
+          case None => new GroupWrite(lake, tableKey, meta, info.schema(),
             GroupWrite.Append, Option(info.queryId()).getOrElse(""))
         }
     }
@@ -1177,8 +1174,8 @@ class RowTable(tableKey: String, meta: RowStore.Meta, version: Int,
     * 'format'='mor'. */
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder =
-    if (meta.mor) () => new DeltaRowLevelOp(tableKey, meta, info.command())
-    else () => new GroupRowLevelOp(tableKey, meta, info.command())
+    if (meta.mor) () => new DeltaRowLevelOp(lake, tableKey, meta, info.command())
+    else () => new GroupRowLevelOp(lake, tableKey, meta, info.command())
 }
 
 /** Copy-on-write row-level operation: its scan records which groups
@@ -1186,7 +1183,7 @@ class RowTable(tableKey: String, meta: RowStore.Meta, version: Int,
   * groups' files at commit. The scan↔write handshake rides this
   * object — the same contract Iceberg's copy-on-write scan/write pair
   * uses. */
-class GroupRowLevelOp(tableKey: String, meta: RowStore.Meta,
+class GroupRowLevelOp(lake: RowStore, tableKey: String, meta: RowStore.Meta,
     cmd: RowLevelOperation.Command) extends RowLevelOperation {
   /** (spec, group) pairs the operation's (possibly runtime-pruned)
     * scan planned; None = scan never planned (plan dropped) → replace
@@ -1213,12 +1210,12 @@ class GroupRowLevelOp(tableKey: String, meta: RowStore.Meta,
       Array(Expressions.column("_group"), Expressions.column("_row_id"))
     else Array(Expressions.column("_group"))
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val v = RowStore.currentVersion(tableKey)
+    val v = lake.currentVersion(tableKey)
     baseVersion = Some(v)
-    new GroupScanBuilder(tableKey, meta, v, Some(this))
+    new GroupScanBuilder(lake, tableKey, meta, v, Some(this))
   }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new GroupWrite(tableKey, meta, info.schema(),
+    new GroupWrite(lake, tableKey, meta, info.schema(),
       GroupWrite.ReplaceGroups(this))
 }
 
@@ -1232,7 +1229,7 @@ class GroupRowLevelOp(tableKey: String, meta: RowStore.Meta,
   * metadata column alongside the data and appends here; the writer
   * runs in trailing-id mode and the commit is the ordinary compact
   * handshake swap. Write-only (reads go through the real table). */
-class RewriteSinkTable(tableKey: String, meta: RowStore.Meta)
+class RewriteSinkTable(lake: RowStore, tableKey: String, meta: RowStore.Meta)
     extends Table with SupportsWrite {
   override def name(): String = s"$tableKey.rewrite"
   override def schema(): StructType =
@@ -1245,7 +1242,7 @@ class RewriteSinkTable(tableKey: String, meta: RowStore.Meta)
         "non-rowids tables rewrite through the table itself")
     Option(info.options().get("compact")).map(GroupWrite.parseCompact) match {
       case Some((base, gs, sort, preserve, files)) =>
-        new GroupWrite(tableKey, meta, meta.schema,
+        new GroupWrite(lake, tableKey, meta, meta.schema,
           GroupWrite.Compact(base, gs, files), sortCols = sort,
           preserveLayout = preserve)
       case None => sys.error(
@@ -1253,4 +1250,3 @@ class RewriteSinkTable(tableKey: String, meta: RowStore.Meta)
     }
   }
 }
-

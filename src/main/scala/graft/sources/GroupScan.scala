@@ -1,27 +1,16 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.UUID
-
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.RowDeltaUtils
-import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
-import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, SortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-class GroupScanBuilder(tableKey: String, meta: RowStore.Meta, version: Int,
+class GroupScanBuilder(lake: RowStore, tableKey: String, meta: RowStore.Meta, version: Int,
     op: Option[GroupRowLevelOp], staticGroups: Option[Set[Int]] = None,
     streamFrom: Int = 0, branch: Option[String] = None,
     staticFiles: Option[Set[String]] = None)
@@ -51,7 +40,7 @@ class GroupScanBuilder(tableKey: String, meta: RowStore.Meta, version: Int,
   // is immutable, and supportCompletePushDown/pushAggregation/build
   // would otherwise each re-read it
   private lazy val manifestEntries: Seq[RowStore.FileEntry] =
-    RowStore.readManifest(tableKey, version)
+    lake.readManifest(tableKey, version)
 
   private lazy val manifestCount: Option[Long] =
     RowStore.exactRowCount(manifestEntries)
@@ -362,7 +351,7 @@ class GroupScanBuilder(tableKey: String, meta: RowStore.Meta, version: Int,
 
   override def build(): Scan =
     if (aggPushed) new ManifestAggScan(pushedValues)
-    else new GroupScan(tableKey, meta, version,
+    else new GroupScan(lake, tableKey, meta, version,
     required, op, staticGroups,
     if (keyLo == Long.MinValue && keyHi == Long.MaxValue) None
     else Some((keyLo, keyHi)), streamFrom, branch, (strLo, strHi),
@@ -375,7 +364,7 @@ class GroupScanBuilder(tableKey: String, meta: RowStore.Meta, version: Int,
   * Spark evaluates the DML condition first and hands back
   * `In(_group, …)`, and only those groups are planned — and therefore
   * only those groups are rewritten. */
-class GroupScan(tableKey: String, meta: RowStore.Meta, version: Int,
+class GroupScan(lake: RowStore, tableKey: String, meta: RowStore.Meta, version: Int,
     required: StructType, op: Option[GroupRowLevelOp],
     staticGroups: Option[Set[Int]] = None,
     keyRange: Option[(Long, Long)] = None,
@@ -396,7 +385,7 @@ class GroupScan(tableKey: String, meta: RowStore.Meta, version: Int,
     * repeatedly per scan while planning a multi-join query — read and
     * parse it once per scan instance. */
   private lazy val versionEntries: Seq[RowStore.FileEntry] =
-    RowStore.readManifest(tableKey, version)
+    lake.readManifest(tableKey, version)
 
   /** STORAGE-PARTITIONED JOIN eligibility: a plain read of a clean
     * single-spec bucket table reports KeyGroupedPartitioning over the
@@ -431,14 +420,14 @@ class GroupScan(tableKey: String, meta: RowStore.Meta, version: Int,
     * threshold's safety margin; estimates feed planning only, never
     * correctness. */
   private lazy val cachedStats: Statistics = {
-    val dir = RowStore.dataDir(tableKey)
+    val dir = lake.dataDir(tableKey)
     // stats must describe what THIS scan reads (the DSv2 contract is
     // post-pushdown): a branch read's bytes come from the STAGED
     // manifest, not the committed one — otherwise a huge staged
     // snapshot would report the tiny committed size as authoritative
     // and Catalyst would auto-broadcast the audit side
     val statEntries = branch match {
-      case Some(b) => RowStore.readBranchManifest(tableKey, b)._2
+      case Some(b) => lake.readBranchManifest(tableKey, b)._2
       case None    => versionEntries
     }
     val bytes = statEntries
@@ -562,7 +551,7 @@ class GroupScan(tableKey: String, meta: RowStore.Meta, version: Int,
         StructField("_rid", StringType, nullable = false)) ++
       (if (meta.rowids) Seq(StructField("_row_id", LongType))
       else Seq.empty))
-    new AppendTableStream(tableKey, meta, streamFrom,
+    new AppendTableStream(lake, tableKey, meta, streamFrom,
       new GroupReaderFactory(streamOut, meta.schema, meta.renames,
         meta.keyCol))
   }
@@ -603,7 +592,7 @@ class GroupScan(tableKey: String, meta: RowStore.Meta, version: Int,
     // other machinery is identical — staged entries are ordinary
     // immutable files the branch commit added
     val entries = branch match {
-      case Some(b) => RowStore.readBranchManifest(tableKey, b)._2
+      case Some(b) => lake.readBranchManifest(tableKey, b)._2
       case None    => versionEntries
     }
     val baseEntries = entries.filter(_.kind == "base")
@@ -611,7 +600,7 @@ class GroupScan(tableKey: String, meta: RowStore.Meta, version: Int,
     // delta records AND deletion-vector blobs (kind "dv") — both replay
     // against base rows, both make a group dirty
     val deltas = entries.filter(_.kind != "base")
-    val dir = RowStore.dataDir(tableKey)
+    val dir = lake.dataDir(tableKey)
     // SPEC EVOLUTION boundary: files written under a retired partition
     // spec keep their original group layout; a plain read plans across
     // every spec. Rewriting machinery stays on the ACTIVE spec only —
@@ -786,8 +775,8 @@ class GroupScan(tableKey: String, meta: RowStore.Meta, version: Int,
         groupDeltas.map(e => RowStore.entryPath(dir, e.name)), ordered,
         rowIdBase): InputPartition
     }.toArray
-    RowStore.lastPlannedBaseFiles.set(planned)
-    RowStore.lastSkippedBaseFiles.set(skipped)
+    lake.lastPlannedBaseFiles.set(planned)
+    lake.lastSkippedBaseFiles.set(skipped)
     parts
   }
 
@@ -953,4 +942,3 @@ class GroupReaderFactory(required: StructType, dataSchema: StructType,
     }
   }
 }
-

@@ -1,25 +1,17 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import java.util.UUID
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.RowDeltaUtils
-import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
-import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, SortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, SortOrder}
+import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Batch write: executors bucket rows by the first-column hash and
   * write one parquet file per (task, non-empty group); commit messages
@@ -90,7 +82,7 @@ object GroupWrite {
   }
 }
 
-class GroupWrite(tableKey: String, meta: RowStore.Meta,
+class GroupWrite(lake: RowStore, tableKey: String, meta: RowStore.Meta,
     writeSchema: StructType, mode: GroupWrite.Mode,
     queryId: String = "", sortCols: Seq[String] = Seq.empty,
     preserveLayout: Boolean = false)
@@ -102,7 +94,7 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
     require(!mode.isInstanceOf[GroupWrite.StageBranch],
       s"$tableKey: INSERT OVERWRITE into a branch is not supported — " +
         "branches stage appends only (WAP)")
-    new GroupWrite(tableKey, meta, writeSchema, GroupWrite.Overwrite, queryId)
+    new GroupWrite(lake, tableKey, meta, writeSchema, GroupWrite.Overwrite, queryId)
   }
 
   // storage-aligned write: cluster incoming rows by the group hash so
@@ -157,11 +149,11 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
   // local[32] than local[8] for a table whose right slicing is a
   // property of its size.
   override def requiredNumPartitions(): Int =
-    if (sortCols.nonEmpty) RowStore.rewriteSlices(tableKey, 8)
+    if (sortCols.nonEmpty) lake.rewriteSlices(tableKey, 8)
     else 0
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GroupWriterFactory(RowStore.dataDir(tableKey), writeSchema,
+    new GroupWriterFactory(lake.dataDir(tableKey), writeSchema,
       meta.keyCol, meta.numGroups, meta.transform, meta.tparam,
       meta.renames, meta.bloomCols, meta.ndvCols, meta.check,
       // ROW LINEAGE: only the row-RELOCATING writes materialize ids —
@@ -188,7 +180,7 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
           : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
         new org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
           private val inner = new GroupWriterFactory(
-            RowStore.dataDir(tableKey), writeSchema, meta.keyCol,
+            lake.dataDir(tableKey), writeSchema, meta.keyCol,
             meta.numGroups, meta.transform, meta.tparam, meta.renames,
             meta.bloomCols, meta.ndvCols, meta.check, gen = meta.gen)
           override def createWriter(partitionId: Int, taskId: Long,
@@ -199,15 +191,15 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
       // publish: both sit under the (reentrant) commit lock
       override def commit(epochId: Long,
           messages: Array[WriterCommitMessage]): Unit =
-        RowStore.commitLock.synchronized {
+        lake.commitLock.synchronized {
           require(queryId.nonEmpty,
             s"$tableKey: streaming write without a query id")
-          if (epochId > RowStore.lastStreamEpoch(tableKey, queryId)) {
+          if (epochId > lake.lastStreamEpoch(tableKey, queryId)) {
             val added = messages.flatMap(_.asInstanceOf[FilesMessage].files)
               .map(_.entry("base", meta.specId)).toSeq
-            val v = RowStore.commit(tableKey,
+            val v = lake.commit(tableKey,
               Seq(s"#ep\t$queryId\t$epochId"))((_, head) => head ++ added)
-            RowStore.recordStreamEpoch(tableKey, queryId, epochId, v)
+            lake.recordStreamEpoch(tableKey, queryId, epochId, v)
           }
         }
       override def abort(epochId: Long,
@@ -223,13 +215,13 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
         // WAP staging: fold into the branch manifest (stacked audit
         // appends compose); NO table version commits. Fork base is
         // recorded on first stage — publish validates against it.
-        RowStore.commitLock.synchronized {
-          val cur = RowStore.currentVersion(tableKey)
+        lake.commitLock.synchronized {
+          val cur = lake.currentVersion(tableKey)
           val (base, existing) =
-            if (RowStore.branchExists(tableKey, name))
-              RowStore.readBranchManifest(tableKey, name)
-            else (cur, RowStore.readManifest(tableKey, cur))
-          RowStore.writeBranchManifest(tableKey, name, base,
+            if (lake.branchExists(tableKey, name))
+              lake.readBranchManifest(tableKey, name)
+            else (cur, lake.readManifest(tableKey, cur))
+          lake.writeBranchManifest(tableKey, name, base,
             existing ++ added)
         }
         return
@@ -240,7 +232,7 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
     // head (ReplaceGroups' per-group signature check and Compact's base
     // check re-fire naturally; a REAL conflict surfaces as
     // ConcurrentModificationException, never a silent clobber)
-    RowStore.commit(tableKey) { (cur, old) =>
+    lake.commit(tableKey) { (cur, old) =>
       mode match {
         case GroupWrite.StageBranch(_) =>
           sys.error("unreachable: staged above")
@@ -273,7 +265,7 @@ class GroupWrite(tableKey: String, meta: RowStore.Meta,
           // retry against the new snapshot.
           if (base != cur) {
             val baseMan =
-              try RowStore.readManifest(tableKey, base)
+              try lake.readManifest(tableKey, base)
               catch { case _: Exception =>
                 throw new java.util.ConcurrentModificationException(
                   s"$tableKey: row-level operation read version $base " +
@@ -743,7 +735,7 @@ class GroupWriterFactory(dir: String, writeSchema: StructType,
   * hands per-row insert/update/delete calls keyed by `_rid`; one delta
   * parquet file per writer task records them, the manifest appends it,
   * and NO base file is rewritten (pinned in RowCatalogSpec). */
-class DeltaRowLevelOp(tableKey: String, meta: RowStore.Meta,
+class DeltaRowLevelOp(lake: RowStore, tableKey: String, meta: RowStore.Meta,
     cmd: RowLevelOperation.Command) extends RowLevelOperation with SupportsDelta {
   /** OCC base, as in [[GroupRowLevelOp]]: delta records reference
     * `_rid`s of this snapshot — replaying them over a different one
@@ -763,30 +755,30 @@ class DeltaRowLevelOp(tableKey: String, meta: RowStore.Meta,
       Array(Expressions.column("_group"), Expressions.column("_row_id"))
     else Array(Expressions.column("_group"))
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val v = RowStore.currentVersion(tableKey)
+    val v = lake.currentVersion(tableKey)
     baseVersion = Some(v)
-    new GroupScanBuilder(tableKey, meta, v, None)
+    new GroupScanBuilder(lake, tableKey, meta, v, None)
   }
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
-    new RowDeltaWrite(tableKey, meta, info.schema(), Some(this))
+    new RowDeltaWrite(lake, tableKey, meta, info.schema(), Some(this))
 }
 
-class RowDeltaWrite(tableKey: String, meta: RowStore.Meta,
+class RowDeltaWrite(lake: RowStore, tableKey: String, meta: RowStore.Meta,
     rowSchema: StructType, op: Option[DeltaRowLevelOp] = None)
     extends DeltaWriteBuilder with DeltaWrite
     with DeltaBatchWrite {
   override def build(): DeltaWrite = this
   override def toBatch: DeltaBatchWrite = this
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-    new RowDeltaWriterFactory(RowStore.dataDir(tableKey), rowSchema,
+    new RowDeltaWriterFactory(lake.dataDir(tableKey), rowSchema,
       meta.keyCol, meta.numGroups, meta.dv, meta.check, meta.rowids,
       meta.gen)
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.map(_.asInstanceOf[FilesMessage])
     // test seam: DeletionVectorSpec pins that the serialized message
     // payload is O(touched files), not O(deleted rows)
-    if (RowStore.commitBytesProbe != null)
-      RowStore.commitBytesProbe(RowStore.serializedSize(messages))
+    if (lake.commitBytesProbe != null)
+      lake.commitBytesProbe(RowStore.serializedSize(messages))
     // rowids tables record each delta file's RECORD count (`rows`),
     // so row-lineage assignment can reserve the file's id range —
     // insert records inherit firstRowId + record index. Other tables
@@ -806,7 +798,7 @@ class RowDeltaWrite(tableKey: String, meta: RowStore.Meta,
     // popcounts only, never bitmap words.
     val handles: Seq[(Int, String, String, Long)] = msgs.flatMap(_.dvs)
       .map(d => (d.group, d.target, d.name, d.card)).toSeq
-    val dir = RowStore.dataDir(tableKey)
+    val dir = lake.dataDir(tableKey)
     // existing vector per TOUCHED target only: the target rides the
     // manifest entry (`dvTarget`), so commit IO is proportional to
     // this commit's touched files — never to the table's total
@@ -824,10 +816,10 @@ class RowDeltaWrite(tableKey: String, meta: RowStore.Meta,
     // The commit re-validates the head and re-resolves in the rare
     // case it moved (the first pass's merged blobs then become
     // unreferenced orphans — swept, never dangling).
-    val preCur = RowStore.currentVersion(tableKey)
-    val preResolved = resolveAt(RowStore.readManifest(tableKey, preCur))
+    val preCur = lake.currentVersion(tableKey)
+    val preResolved = resolveAt(lake.readManifest(tableKey, preCur))
     var consumed = Seq.empty[String]
-    RowStore.commit(tableKey) { (cur, man) =>
+    lake.commit(tableKey) { (cur, man) =>
       op.flatMap(_.baseVersion).filter(_ != cur).foreach { v =>
         throw new java.util.ConcurrentModificationException(
           s"$tableKey: delta operation read version $v but the table " +
@@ -968,4 +960,3 @@ class RowDeltaWriterFactory(dir: String, rowSchema: StructType,
       override def close(): Unit = ()
     }
 }
-

@@ -1,23 +1,12 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.UUID
-
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.RowDeltaUtils
-import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
-import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, SortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `history`/`snapshots` surface): one row per committed version with
   * its manifest-derived file and row counts. Metadata-sized by
   * construction — the scan reads manifests only, never data files. */
-class HistoryTable(baseKey: String) extends Table with SupportsRead {
+class HistoryTable(lake: RowStore, baseKey: String) extends Table with SupportsRead {
   override def name(): String = s"$baseKey.history"
   override def schema(): StructType = StructType(Seq(
     StructField("version", IntegerType, nullable = false),
@@ -42,10 +31,10 @@ class HistoryTable(baseKey: String) extends Table with SupportsRead {
       override def planInputPartitions(): Array[InputPartition] = {
         // computed at plan time on the driver (manifest-sized) and
         // shipped in the partition — the executor only replays rows
-        val vs = RowStore.versions(baseKey)
+        val vs = lake.versions(baseKey)
         val cur = vs.max
         val rows = vs.map { v =>
-          val es = RowStore.readManifest(baseKey, v)
+          val es = lake.readManifest(baseKey, v)
           // exact only when every entry carries a count and no deltas
           // mutate rows at read time — else unknown (NULL); one shared
           // rule (RowStore.exactRowCount) with the COUNT(*) pushdown
@@ -91,7 +80,7 @@ case class HistoryPartition(rows: Seq[HistoryRow]) extends InputPartition
   * data file. The popcount comes from the blob itself (rows/8 bytes,
   * file-level metadata like the manifest — the parquet-open counter
   * RowCatalogSpec pins stays at zero). */
-class FilesTable(baseKey: String) extends Table with SupportsRead {
+class FilesTable(lake: RowStore, baseKey: String) extends Table with SupportsRead {
   override def name(): String = s"$baseKey.files"
   override def schema(): StructType = StructType(Seq(
     StructField("grp", IntegerType, nullable = false),
@@ -112,8 +101,8 @@ class FilesTable(baseKey: String) extends Table with SupportsRead {
       override def readSchema(): StructType = FilesTable.this.schema()
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] = {
-        Array(FilesPartition(RowStore.readManifest(baseKey,
-          RowStore.currentVersion(baseKey))))
+        Array(FilesPartition(lake.readManifest(baseKey,
+          lake.currentVersion(baseKey))))
       }
       override def createReaderFactory(): PartitionReaderFactory =
         new PartitionReaderFactory {
@@ -159,7 +148,7 @@ case class FilesPartition(entries: Seq[RowStore.FileEntry])
   * are vectors still reports an EXACT live `n_rows` (base rows minus
   * popcounts) — record-granularity deltas are what make a count
   * inexact, not DVs. */
-class PartitionsTable(baseKey: String) extends Table with SupportsRead {
+class PartitionsTable(lake: RowStore, baseKey: String) extends Table with SupportsRead {
   override def name(): String = s"$baseKey.partitions"
   override def schema(): StructType = StructType(Seq(
     StructField("spec", IntegerType, nullable = false),
@@ -176,9 +165,9 @@ class PartitionsTable(baseKey: String) extends Table with SupportsRead {
       override def readSchema(): StructType = PartitionsTable.this.schema()
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] = {
-        val es = RowStore.readManifest(baseKey,
-          RowStore.currentVersion(baseKey))
-        val dir = RowStore.dataDir(baseKey)
+        val es = lake.readManifest(baseKey,
+          lake.currentVersion(baseKey))
+        val dir = lake.dataDir(baseKey)
         // record-granularity deltas anywhere table-wide poison
         // exactness (a group<0 delta can hold records of EVERY
         // group); vectors never do (terminal rid-deletes)
@@ -229,7 +218,6 @@ case class PartitionRow(spec: Int, grp: Int, nFiles: Long, nDelta: Long,
 case class PartitionsPartition(rows: Seq[PartitionRow])
     extends InputPartition
 
-
 /** `<table>.refs` — Iceberg's refs metadata table: one row per named
   * reference — the implicit `main` branch at the current head, every
   * immutable TAG with its pinned version, and every staged
@@ -239,7 +227,7 @@ case class PartitionsPartition(rows: Seq[PartitionRow])
   * completes the metadata-table family. Pure directory listing +
   * ref/manifest-header reads — ZERO data files opened (pinned in
   * RowCatalogSpec via the parquet-open counter). */
-class RefsTable(baseKey: String) extends Table with SupportsRead {
+class RefsTable(lake: RowStore, baseKey: String) extends Table with SupportsRead {
   override def name(): String = s"$baseKey.refs"
   override def schema(): StructType = StructType(Seq(
     StructField("ref_name", StringType, nullable = false),
@@ -256,11 +244,11 @@ class RefsTable(baseKey: String) extends Table with SupportsRead {
         // partition: `main` tracks the head; a staged branch reports
         // its fork base (publish validates against it — OCC)
         val main = RefRow("main", "BRANCH",
-          RowStore.currentVersion(baseKey))
-        val tags = RowStore.listTags(baseKey).map { case (n, v) =>
+          lake.currentVersion(baseKey))
+        val tags = lake.listTags(baseKey).map { case (n, v) =>
           RefRow(n, "TAG", v) }
-        val branches = RowStore.listBranches(baseKey).map { n =>
-          RefRow(n, "BRANCH", RowStore.readBranchManifest(baseKey, n)._1) }
+        val branches = lake.listBranches(baseKey).map { n =>
+          RefRow(n, "BRANCH", lake.readBranchManifest(baseKey, n)._1) }
         Array(RefsPartition((Seq(main) ++ branches ++ tags)
           .sortBy(r => (r.refName, r.refType))))
       }
@@ -295,7 +283,7 @@ case class RefsPartition(rows: Seq[RefRow]) extends InputPartition
   * ZERO data files opened (pinned in RowCatalogSpec); the lineage
   * surface `.history` summarizes, with the operation column CDC/audit
   * consumers key on. */
-class SnapshotsTable(baseKey: String) extends Table with SupportsRead {
+class SnapshotsTable(lake: RowStore, baseKey: String) extends Table with SupportsRead {
   override def name(): String = s"$baseKey.snapshots"
   override def schema(): StructType = StructType(Seq(
     StructField("version", IntegerType, nullable = false),
@@ -312,11 +300,10 @@ class SnapshotsTable(baseKey: String) extends Table with SupportsRead {
       override def readSchema(): StructType = SnapshotsTable.this.schema()
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] = {
-        val vs = RowStore.versions(baseKey)
+        val vs = lake.versions(baseKey)
         val cur = vs.max
-        val vsSet = vs.toSet
         val rows = vs.map { v =>
-          val es = RowStore.readManifest(baseKey, v)
+          val es = lake.readManifest(baseKey, v)
           val nRows: Option[Long] = RowStore.exactRowCount(es)
           // parent = the previous RETAINED version (VACUUM may have
           // expired intermediate ones); None for the chain's first.
@@ -330,7 +317,7 @@ class SnapshotsTable(baseKey: String) extends Table with SupportsRead {
             if (v == 0) "create"
             else if (!parent.contains(v - 1)) "unknown"
             else {
-              val prev = RowStore.readManifest(baseKey, v - 1)
+              val prev = lake.readManifest(baseKey, v - 1)
                 .map(_.name).toSet
               val now = es.map(_.name).toSet
               val added = now.diff(prev).nonEmpty
@@ -383,7 +370,7 @@ case class SnapshotsPartition(rows: Seq[SnapshotRow])
   * opened. Distinct counts are EXACT whenever the true cardinality
   * sits under the sketch's K (the q158 fixture pins that case
   * hash-green; high-cardinality columns surface the ±~8% estimate). */
-class ColumnStatsTable(baseKey: String) extends Table with SupportsRead {
+class ColumnStatsTable(lake: RowStore, baseKey: String) extends Table with SupportsRead {
   override def name(): String = s"$baseKey.column_stats"
   override def schema(): StructType = StructType(Seq(
     StructField("column", StringType, nullable = false),
@@ -396,9 +383,9 @@ class ColumnStatsTable(baseKey: String) extends Table with SupportsRead {
       override def readSchema(): StructType = ColumnStatsTable.this.schema()
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] = {
-        val meta = RowStore.readMeta(baseKey)
-        val es = RowStore.readManifest(baseKey,
-          RowStore.currentVersion(baseKey))
+        val meta = lake.readMeta(baseKey)
+        val es = lake.readManifest(baseKey,
+          lake.currentVersion(baseKey))
         val clean = es.nonEmpty && es.forall(_.kind == "base")
         val rows = meta.ndvCols.sorted.map { c =>
           val storage = meta.storageOf(c)
@@ -444,7 +431,7 @@ case class ColumnStatsPartition(rows: Seq[ColumnStatsRow])
   * removal count. The observability surface for "is my chain deep, do
   * I need rewrite_manifests?". Pure manifest-header reads — ZERO data
   * files opened. */
-class ManifestsTable(baseKey: String) extends Table with SupportsRead {
+class ManifestsTable(lake: RowStore, baseKey: String) extends Table with SupportsRead {
   override def name(): String = s"$baseKey.manifests"
   override def schema(): StructType = StructType(Seq(
     StructField("version", IntegerType, nullable = false),
@@ -460,9 +447,9 @@ class ManifestsTable(baseKey: String) extends Table with SupportsRead {
       override def readSchema(): StructType = ManifestsTable.this.schema()
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] =
-        Array(ManifestsPartition(RowStore.versions(baseKey).map { v =>
+        Array(ManifestsPartition(lake.versions(baseKey).map { v =>
           val (parent, entries, removed) =
-            RowStore.manifestFileStats(baseKey, v)
+            lake.manifestFileStats(baseKey, v)
           ManifestRow(v, parent.isEmpty, parent, entries.toLong,
             removed.toLong)
         }))

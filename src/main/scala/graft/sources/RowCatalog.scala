@@ -1,26 +1,5 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.UUID
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.RowDeltaUtils
-import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
-import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, SortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
-
 /** Driver-contract entries for the DML catalog. */
 object RowCatalogQueries {
   import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -778,6 +757,7 @@ object RowCatalogQueries {
     // and cross-spec DML on imported files. The oracle restates both
     // slices from raw orders.
     "q156_dml_add_files" -> ((s, d) => {
+      val lake = RowStore.of(s)
       graft.Tables(s, d, "orders").createOrReplaceTempView("q156_orders")
       val ext = graft.Scratch.dir(s, "graft_q156_ext", d)
       // ONE QUARTER'S snapshot tree: the reference writes one
@@ -805,11 +785,11 @@ object RowCatalogQueries {
         SELECT CAST(o_orderkey AS BIGINT),
                CAST(round(o_totalprice * 100) AS BIGINT), o_orderstatus
         FROM q156_orders WHERE o_orderkey % 9 = 1""")
-      val preImport = RowStore.currentVersion("graft_dml.ns.imp")
+      val preImport = lake.currentVersion("graft_dml.ns.imp")
       val nativeN = s.table("graft_dml.ns.imp").count()
       s.sql(s"CALL graft_dml.system.add_files('ns.imp', '$ext')").collect()
-      val imported = RowStore.readManifest("graft_dml.ns.imp",
-        RowStore.currentVersion("graft_dml.ns.imp")).filter(_.spec < 0)
+      val imported = lake.readManifest("graft_dml.ns.imp",
+        lake.currentVersion("graft_dml.ns.imp")).filter(_.spec < 0)
       val zeroCopy = imported.nonEmpty && imported.forall(e =>
         e.name.startsWith(ext + "/") &&
           java.nio.file.Files.exists(java.nio.file.Paths.get(e.name)))
@@ -1183,7 +1163,7 @@ object RowCatalogQueries {
     // and before-first-commit cases under a controlled clock.
     "q123_dml_timestamp_travel" -> ((s, d) => {
       val t = sharedLifecycle(s, d, mor = false)
-      val ms = RowStore.commitTimeMs(t, 2)
+      val ms = RowStore.of(s).commitTimeMs(t, 2)
       // epoch-based timestamp expression, NOT a zone-less string
       // literal: a wall-clock literal parses in the session timezone,
       // silently coupling snapshot resolution to a UTC session config
@@ -1252,6 +1232,7 @@ object RowCatalogQueries {
     // v2 snapshot exactly); the content read-back must be unchanged —
     // the oracle restates all four slices.
     "q149_dml_rewrite_manifests" -> ((s, d) => {
+      val lake = RowStore.of(s)
       graft.Tables(s, d, "orders").createOrReplaceTempView("q149_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.manif")
       s.sql("CREATE TABLE graft_dml.ns.manif (k BIGINT, cents BIGINT)")
@@ -1261,9 +1242,9 @@ object RowCatalogQueries {
         FROM q149_orders WHERE o_orderkey % 8 = $r"""); () }
       for (r <- 0 until 4) ins(r) // v1..v4: incremental manifests
       val t = "graft_dml.ns.manif"
-      val before = RowStore.manifestChainLength(t, RowStore.currentVersion(t))
+      val before = lake.manifestChainLength(t, lake.currentVersion(t))
       s.sql("CALL graft_dml.system.rewrite_manifests('ns.manif')").collect()
-      val after = RowStore.manifestChainLength(t, RowStore.currentVersion(t))
+      val after = lake.manifestChainLength(t, lake.currentVersion(t))
       val v2n = s.sql("SELECT COUNT(*) FROM graft_dml.ns.manif " +
         "VERSION AS OF 2").head().getLong(0)
       val want2 = s.sql("SELECT COUNT(*) FROM q149_orders " +
@@ -1325,6 +1306,7 @@ object RowCatalogQueries {
     // untouched. RowCatalogSpec pins the referenced-files-retained
     // accounting.
     "q151_dml_orphan_cleanup" -> ((s, d) => {
+      val lake = RowStore.of(s)
       graft.Tables(s, d, "orders").createOrReplaceTempView("q151_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.orph")
       s.sql("CREATE TABLE graft_dml.ns.orph (k BIGINT, cents BIGINT)")
@@ -1334,8 +1316,8 @@ object RowCatalogQueries {
         FROM q151_orders WHERE o_orderkey % 9 = $r"""); () }
       ins(0); ins(4)
       val t = "graft_dml.ns.orph"
-      val dir = java.nio.file.Paths.get(RowStore.dataDir(t))
-      val ref = RowStore.readManifest(t, RowStore.currentVersion(t)).head.name
+      val dir = java.nio.file.Paths.get(lake.dataDir(t))
+      val ref = lake.readManifest(t, lake.currentVersion(t)).head.name
       val orphan = "g0-crashed-writer-task.parquet"
       java.nio.file.Files.copy(dir.resolve(ref), dir.resolve(orphan))
       // older_than_ms = 0: the fixture just planted the orphan, and no

@@ -395,7 +395,7 @@ object RowCatalogMaintQueries {
         WHERE $c >= ${mx / 3}L AND $c < ${2 * mx / 3}L
         GROUP BY status"""
       def skippedAfter(q: String): Int = {
-        s.sql(q).collect(); RowStore.lastSkippedBaseFiles.get()
+        s.sql(q).collect(); RowStore.of(s).lastSkippedBaseFiles.get()
       }
       RowStoreOps.compact(s, "graft_dml.ns.zord") // plain bin-pack
       val plainK = skippedAfter(banded("k", mxK))
@@ -425,6 +425,7 @@ object RowCatalogMaintQueries {
     // observationally invariant throughout. BinpackSpec pins the
     // file-count/size half.
     "q178_dml_binpack" -> ((s, d) => {
+      val lake = RowStore.of(s)
       graft.Tables(s, d, "orders").createOrReplaceTempView("q178_orders")
       val t = "graft_dml.ns.bp"
       s.sql(s"DROP TABLE IF EXISTS $t")
@@ -437,8 +438,8 @@ object RowCatalogMaintQueries {
       // (keys 1000000..1000007 mod the 4 default buckets)
       for (i <- 0 until 8)
         s.sql(s"INSERT INTO $t VALUES (${1000000 + i}, ${11 * i})")
-      val dir = RowStore.dataDir(t)
-      val man0 = RowStore.readManifest(t, RowStore.currentVersion(t))
+      val dir = lake.dataDir(t)
+      val man0 = lake.readManifest(t, lake.currentVersion(t))
       val preNames = man0.map(_.name).toSet
       def sz(n: String) =
         new java.io.File(RowStore.entryPath(dir, n)).length()
@@ -453,19 +454,19 @@ object RowCatalogMaintQueries {
         s"'ns.bp', ${target}L)").head()
       val packed = frags.size == 8 && r1.getInt(0) == frags.size &&
         r1.getInt(1) == frags.map(_.group).distinct.size
-      val man1Names = RowStore
-        .readManifest(t, RowStore.currentVersion(t)).map(_.name).toSet
+      val man1Names =
+        lake.readManifest(t, lake.currentVersion(t)).map(_.name).toSet
       // every in-band (seed) entry survived with its NAME — its stats
       // were never recomputed, its bytes never read — and exactly the
       // fragments left the manifest
       val preserved = inBand.size == 4 &&
         inBand.forall(e => man1Names(e.name)) &&
         (preNames -- man1Names).size == frags.size
-      val v1 = RowStore.currentVersion(t)
+      val v1 = lake.currentVersion(t)
       val r2 = s.sql("CALL graft_dml.system.rewrite_data_files_binpack(" +
         s"'ns.bp', ${target}L)").head()
       val noop = r2.getInt(0) == 0 &&
-        RowStore.currentVersion(t) == v1
+        lake.currentVersion(t) == v1
       import org.apache.spark.sql.functions.lit
       s.table(t).select("k", "cents")
         .withColumn("packed", lit(packed))
@@ -539,7 +540,7 @@ object RowCatalogMaintQueries {
         }
       s.sql(s"CALL graft_dml.system.rollback_transaction(${id2}L)")
         .collect()
-      val cleaned = refused && clones2.forall(c => !RowStore.exists(c)) &&
+      val cleaned = refused && clones2.forall(c => !RowStore.of(s).exists(c)) &&
         s.table("graft_dml.ns.txb").where("k = -1").count() == 0L
       import org.apache.spark.sql.functions.lit
       s.sql("""SELECT 'a' AS side, k, cents FROM graft_dml.ns.txa
@@ -563,6 +564,7 @@ object RowCatalogMaintQueries {
     // version unchanged, neither staged slice visible). The oracle
     // restates both tables' final content from raw orders.
     "q176_dml_atomic_publish" -> ((s, d) => {
+      val lake = RowStore.of(s)
       graft.Tables(s, d, "orders").createOrReplaceTempView("q176_orders")
       def slice(t: String, r: Int, branch: Option[String]): Unit = {
         val df = s.sql(s"""SELECT CAST(o_orderkey AS BIGINT) AS k,
@@ -603,9 +605,9 @@ object RowCatalogMaintQueries {
           f
         }
       val allOrNothing = refused &&
-        RowStore.currentVersion("graft_dml.ns.ap1") == 2 &&
-        RowStore.branchExists("graft_dml.ns.ap1", "audit") &&
-        RowStore.branchExists("graft_dml.ns.ap2", "audit")
+        lake.currentVersion("graft_dml.ns.ap1") == 2 &&
+        lake.branchExists("graft_dml.ns.ap1", "audit") &&
+        lake.branchExists("graft_dml.ns.ap2", "audit")
       import org.apache.spark.sql.functions.lit
       s.sql("""SELECT 'a' AS side, k, cents FROM graft_dml.ns.ap1
         UNION ALL
@@ -761,6 +763,7 @@ object RowCatalogMaintQueries {
     // (reference-aliveness under single-group churn, maintenance
     // never deleting source bytes, the no-overwrite refusal).
     "q172_dml_shallow_clone" -> ((s, d) => {
+      val lake = RowStore.of(s)
       graft.Tables(s, d, "orders").createOrReplaceTempView("q172_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.snapcln")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.snapsrc")
@@ -774,9 +777,9 @@ object RowCatalogMaintQueries {
           FROM q172_orders WHERE o_orderkey % 8 = $r""")
       val refs = s.sql("CALL graft_dml.system.snapshot_table(" +
         "'ns.snapsrc', 'ns.snapcln')").head().getInt(0)
-      val clnEntries = RowStore.readManifest("graft_dml.ns.snapcln", 0)
+      val clnEntries = lake.readManifest("graft_dml.ns.snapcln", 0)
       val ownFiles = RowStore.listNames(java.nio.file.Paths.get(
-        RowStore.dataDir("graft_dml.ns.snapcln"))).size
+        lake.dataDir("graft_dml.ns.snapcln"))).size
       val zeroCopy = refs > 0 && clnEntries.nonEmpty &&
         clnEntries.forall(_.name.startsWith("/")) && ownFiles == 0L
       // diverge: churn the clone, append to the source
@@ -896,7 +899,7 @@ object RowCatalogMaintQueries {
       val v = s.sql(
         "CALL graft_dml.system.cherrypick_branch('ns.cp', 'audit')")
         .head().getInt(0)
-      val branchGone = RowStore.listBranches("graft_dml.ns.cp").isEmpty
+      val branchGone = RowStore.of(s).listBranches("graft_dml.ns.cp").isEmpty
       import org.apache.spark.sql.functions.lit
       s.table("graft_dml.ns.cp")
         .withColumn("strict_publish_refused", lit(refused))
@@ -919,6 +922,7 @@ object RowCatalogMaintQueries {
     // invariant (the q108 discipline); the oracle restates it from raw
     // orders with the delete/update algebra applied relationally.
     "q165_dml_rewrite_deletes" -> ((s, d) => {
+      val lake = RowStore.of(s)
       graft.Tables(s, d, "orders").createOrReplaceTempView("q165_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.rpd")
       s.sql("CREATE TABLE graft_dml.ns.rpd " +
@@ -932,12 +936,12 @@ object RowCatalogMaintQueries {
       s.sql("UPDATE graft_dml.ns.rpd SET cents = cents + 1 WHERE k % 11 = 0")
       s.sql("DELETE FROM graft_dml.ns.rpd WHERE k % 5 = 0")
       val t = "graft_dml.ns.rpd"
-      val preBase = RowStore.readManifest(t, RowStore.currentVersion(t))
+      val preBase = lake.readManifest(t, lake.currentVersion(t))
         .filter(_.kind == "base").map(_.name).toSet
       val r = s.sql(
         "CALL graft_dml.system.rewrite_position_deletes('ns.rpd')").head()
       val (folded, dropped) = (r.getLong(0), r.getInt(2))
-      val post = RowStore.readManifest(t, RowStore.currentVersion(t))
+      val post = lake.readManifest(t, lake.currentVersion(t))
       val postBase = post.filter(_.kind == "base").map(_.name).toSet
       val dvs = post.filter(_.kind == "dv")
       import org.apache.spark.sql.functions.lit
@@ -1122,6 +1126,7 @@ object RowCatalogMaintQueries {
     // SortedRewriteSpec pins the opened-fraction drop and the
     // rows-planned bound.
     "q161_dml_sorted_rewrite" -> ((s, d) => {
+      val lake = RowStore.of(s)
       graft.Tables(s, d, "orders").createOrReplaceTempView("q161_orders")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.sortr")
       s.sql("CREATE TABLE graft_dml.ns.sortr " +
@@ -1144,11 +1149,11 @@ object RowCatalogMaintQueries {
         GROUP BY status ORDER BY status"""
       RowStoreOps.compact(s, "graft_dml.ns.sortr") // plain bin-pack
       s.sql(banded).collect()
-      val plainSkipped = RowStore.lastSkippedBaseFiles.get()
+      val plainSkipped = lake.lastSkippedBaseFiles.get()
       s.sql("CALL graft_dml.system.rewrite_data_files_sorted(" +
         "'ns.sortr', 'k')").collect()
       s.sql(banded).collect()
-      val sortedSkipped = RowStore.lastSkippedBaseFiles.get()
+      val sortedSkipped = lake.lastSkippedBaseFiles.get()
       s.sql(banded)
         .withColumn("plain_skipped_none",
           org.apache.spark.sql.functions.lit(plainSkipped == 0))

@@ -1,24 +1,11 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.RowDeltaUtils
-import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
-import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Expressions, NamedReference, SortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A DSv2 TABLE CATALOG with SQL DML over FILE-GROUP storage — the
@@ -71,14 +58,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[SupportsPushDownRequiredColumns]] + a parquet projection schema.
   * Supported column types: BIGINT, INT, STRING (the demo schema — a
   * format adds a type bridge, not new plumbing).
+  *
+  * ONE LAKE PER CATALOG: an instance is the lake [[GraftCatalog]]
+  * builds at its `warehouse` root, with everything that keeps state
+  * (commit lock, caches, seams, counters, open transactions). It is
+  * driver-only and not Serializable: executors see absolute paths.
+  * The companion object holds the pure codecs and publishers.
   */
-object RowStore {
-  /** Driver-side commit lock: the FAST PATH for same-JVM commit
-    * ordering, taken by [[commit]]. It is reentrant, so a caller that
-    * must keep a step atomic with the publish (dropping a published
-    * branch, recording a stream epoch) holds it around its `commit`
-    * call. Cross-process atomicity does NOT rest on it — every
-    * manifest publishes via [[publishStaged]]'s atomic
+final class RowStore(val root: String) {
+  import RowStore._
+
+  /** Driver-side commit lock: the FAST PATH for ordering this lake's
+    * commits within the JVM, taken by [[commit]]. It is reentrant, so
+    * a caller that must keep a step atomic with the publish (dropping
+    * a published branch, recording a stream epoch) holds it around
+    * its `commit` call. Cross-process atomicity does NOT rest on it —
+    * every manifest publishes via [[publishStaged]]'s atomic
     * create-if-absent (write the rendered manifest to a temp file,
     * then hard-link it to `v<N>.manifest`, which FAILS if another
     * process already committed that version) — the atomic-rename /
@@ -88,27 +83,11 @@ object RowStore {
     * (CrossProcessCommitSpec forks a second JVM to prove it). */
   private[sources] val commitLock = new Object
 
-  /** Thrown when a manifest publish loses the cross-process
-    * create-if-absent race: another writer committed the same version
-    * number first. The in-JVM [[commitLock]] makes this unreachable
-    * for same-process contention. [[commit]] catches it, re-reads the
-    * head and re-runs the caller's validation against it, so every
-    * single-table commit rebases; it reaches a caller only after
-    * [[MaxCommitAttempts]] consecutive losses, or from the multi-table
-    * [[commitTables]], which does not retry. */
-  final class CommitConflictException(msg: String)
-    extends RuntimeException(msg)
-
   /** Plan-time observability for the spec (the SeqSourceSpec
     * emission-counter discipline): base files planned / skipped by
     * the LAST GroupScan planning on this driver. */
   val lastPlannedBaseFiles = new java.util.concurrent.atomic.AtomicInteger(0)
   val lastSkippedBaseFiles = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Column names reserved for metadata / delta-record bookkeeping. */
-  private[sources] val Reserved =
-    Set("_group", "_rid", "_change", "_op", "_grp", "_zv",
-      "_row_id", "_rowid")
 
   /** Test seam: invoked at the top of every [[commit]], before it
     * takes the lock. The concurrency spec points it at a latch so
@@ -132,6 +111,614 @@ object RowStore {
     * message (rows/8 bytes per file) shows up as message bytes
     * scaling with deleted-row count. Production value is null. */
   @volatile private[graft] var commitBytesProbe: Long => Unit = null
+
+  /** This process's open [[Transact]] transactions, by id. */
+  private[sources] val openTxns =
+    new java.util.concurrent.ConcurrentHashMap[Long, Transact.Txn]()
+
+  private[sources] def tableDir(key: String): String = s"$root/$key"
+  private[graft] def dataDir(key: String): String = {
+    val d = s"${tableDir(key)}/data"
+    Files.createDirectories(Paths.get(d))
+    d
+  }
+
+  /** A table exists once its version 0 is published: a CREATE that
+    * lost its publish leaves at most an empty directory, never a
+    * table. Not a test for `v0.manifest` — VACUUM expires v0. */
+  def exists(key: String): Boolean = versions(key).nonEmpty
+
+  /** The current version's metadata. */
+  def readMeta(key: String): Meta = versionMeta(key, currentVersion(key))
+
+  /** Every table of this warehouse (SHOW TABLES): directories that
+    * hold a published version, see [[exists]]. */
+  def listTableKeys(): Seq[String] =
+    listNames(Paths.get(root)).filter(exists)
+
+  def versions(key: String): Seq[Int] =
+    listNames(Paths.get(tableDir(key))).collect {
+      case s if s.startsWith("v") && s.endsWith(".manifest") =>
+        s.stripPrefix("v").stripSuffix(".manifest").toInt
+    }.sorted
+
+  def currentVersion(key: String): Int = versions(key).lastOption.getOrElse(
+    sys.error(s"no committed version for $key"))
+
+  /** Number of manifest FILES walked to resolve version `v` — 1 for a
+    * full (checkpointed) manifest, parent chain + 1 for incrementals.
+    * The `rewrite_manifests` procedure reports and collapses this. */
+  def manifestChainLength(key: String, v: Int): Int =
+    parentVersion(key, v).fold(1)(p => 1 + manifestChainLength(key, p))
+
+  /** The version an incremental manifest resolves through (`#parent`);
+    * None for a full one. */
+  private[sources] def parentVersion(key: String, v: Int): Option[Int] =
+    headerValue(key, v, "#parent").map(_.toInt)
+
+  /** The `#` header lines of version `v`'s manifest, through `#parent`
+    * for an incremental one. Stops at the first line that is not a
+    * header, so the cost never grows with the entries (or their bloom
+    * blobs) — the header always precedes the body. */
+  private def header(key: String, v: Int): Seq[String] = {
+    val r = Files.newBufferedReader(manifestPath(key, v))
+    try {
+      val out = Seq.newBuilder[String]
+      var line = r.readLine()
+      while (line != null && line.startsWith("#")) {
+        out += line
+        line = if (line.startsWith("#parent\t")) null else r.readLine()
+      }
+      out.result()
+    } finally r.close()
+  }
+
+  private def headerValue(key: String, v: Int, tag: String): Option[String] =
+    header(key, v).collectFirst {
+      case l if l.startsWith(tag + "\t") => l.stripPrefix(tag + "\t") }
+
+  /** Range-slice count for a clustering rewrite (sorted / z-order),
+    * derived from the TABLE'S OWN SIZE instead of the session's core
+    * count (optimization round 17, guide §2 — scale-adaptive
+    * partitioning): slices = ceil(current base rows / target rows per
+    * file), floored at `floor` so a small table still splits into
+    * enough range-disjoint files for zone-map skipping (the rewrite's
+    * whole point — AQE would coalesce an unpinned count to ONE slice
+    * and silently recreate the group-wide files). Core-count-derived
+    * counts made the SAME rewrite write 4× more files at local[32]
+    * than local[8] (q161 2.0 s @32c vs 1.56 @8c) while the slice
+    * count is a property of the data, not the box. The target is the
+    * deployment's file-sizing knob (`spark.graft.rewrite.targetFileRows`,
+    * default 4M rows ≈ a few hundred MB for typical lake rows — the
+    * guide §6 output-file band); manifest row counts are plan-time
+    * metadata, so this opens zero data files. */
+  def rewriteSlices(tableKey: String, floor: Int): Int = {
+    val target = org.apache.spark.sql.SparkSession.active.sessionState
+      .conf.getConfString("spark.graft.rewrite.targetFileRows", "4000000")
+      .toLong
+    val rows = readManifest(tableKey, currentVersion(tableKey))
+      .iterator.filter(_.kind == "base").flatMap(_.rows).sum
+    math.max(floor, math.ceil(rows.toDouble / target.toDouble).toInt)
+  }
+
+  /** One version's manifest FILE shape (not its resolved snapshot):
+    * (parent version if incremental, own entry-line count, removal
+    * count) — what the `.manifests` metadata table surfaces so an
+    * operator can see chain structure and per-commit write cost. */
+  def manifestFileStats(key: String, v: Int): (Option[Int], Int, Int) = {
+    val lines = Files.readAllLines(manifestPath(key, v)).asScala.toSeq
+    val parent = lines.collectFirst { case l if l.startsWith("#parent\t") =>
+      l.stripPrefix("#parent\t").toInt }
+    // count entry LINES (parseEntries' own keep-predicate) rather than
+    // fully parsing per-column bounds and bloom blobs just for a size
+    (parent, lines.count(l => l.nonEmpty && !l.startsWith("#")),
+      lines.count(_.startsWith("#rm\t")))
+  }
+
+  /** Resolved-entry cache for [[readManifest]]: a committed version's
+    * RESOLVED entry sequence is immutable (files never change meaning;
+    * even [[materializeManifest]] rewrites only the FILE SHAPE — same
+    * resolved entries by contract), so one resolution can be reused for
+    * as long as its manifest file is the same file. Without it, every
+    * commit on a deep incremental chain re-walks the chain's manifest
+    * FILES (st31's per-micro-batch MERGE read the whole chain per epoch
+    * — O(chain) file IO per commit, the round-11 regression), and every
+    * scan build re-reads at least one file. Each hit is checked against
+    * the manifest's [[fileId]] with one stat, so a manifest that VACUUM
+    * deleted (q111 pins that `VERSION AS OF` an expired snapshot
+    * fails) or that a DROP and re-CREATE replaced — in this process or
+    * any other sharing the warehouse — is never served from here.
+    * LRU-bounded; entries of dropped tables simply age out. */
+  private val manifestCache =
+    lru[(String, Int), (FileId, Seq[FileEntry])](512)
+
+  /** A synchronized access-order LRU map holding at most `cap` entries. */
+  private def lru[K, V](cap: Int): java.util.Map[K, V] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[K, V]) =
+          size > cap
+      })
+
+  private[sources] def manifestPath(key: String, v: Int): Path =
+    Paths.get(tableDir(key), s"v$v.manifest")
+
+  /** The [[FileId]] of version `v`'s manifest; throws
+    * NoSuchFileException when it is not (or no longer) published. */
+  private def fileId(key: String, v: Int): FileId = {
+    val a = Files.readAttributes(manifestPath(key, v),
+      classOf[java.nio.file.attribute.BasicFileAttributes])
+    (a.fileKey, a.lastModifiedTime, a.size)
+  }
+
+  def readManifest(key: String, v: Int): Seq[FileEntry] = {
+    val id = fileId(key, v)
+    val cached = manifestCache.get((key, v))
+    if (cached != null && cached._1 == id) cached._2
+    else {
+      val lines = Files.readAllLines(manifestPath(key, v)).asScala.toSeq
+      val resolved = lines.collectFirst { case l if l.startsWith("#parent\t") =>
+        l.stripPrefix("#parent\t").toInt } match {
+        case None => parseEntries(lines)
+        case Some(p) =>
+          // incremental: parent's resolved entries minus this commit's
+          // removals (relative order preserved), plus its additions
+          // appended — exactly the sequence the commit validated at
+          // write time, so manifest order (= commit order, what MOR
+          // replay keys on) survives the chain encoding
+          val removed = lines.collect {
+            case l if l.startsWith("#rm\t") => l.stripPrefix("#rm\t") }.toSet
+          readManifest(key, p).filterNot(e => removed(e.name)) ++
+            parseEntries(lines)
+      }
+      manifestCache.put((key, v), (id, resolved))
+      resolved
+    }
+  }
+
+  /** Rewrite version `v`'s manifest as FULL (self-contained): same
+    * resolved entries, same headers, chain length 1 — the
+    * `rewrite_manifests` compaction and VACUUM's chain-cut. Byte
+    * content of every snapshot is observationally unchanged (reads
+    * resolve the identical entry sequence). Caller holds
+    * [[commitLock]]. */
+  private[sources] def materializeManifest(key: String, v: Int): Unit = {
+    val p = manifestPath(key, v)
+    val lines = Files.readAllLines(p).asScala.toSeq
+    if (lines.exists(_.startsWith("#parent\t"))) {
+      val resolved = readManifest(key, v)
+      val headers = lines.filter(l => l.startsWith("#") &&
+        !l.startsWith("#parent\t") && !l.startsWith("#rm\t"))
+      // write-to-temp + ATOMIC_MOVE: this is the ONE path that rewrites
+      // a committed, reader-visible manifest, and readers (scan
+      // planning) read manifests without the commit lock — an in-place
+      // truncate-and-write would open a torn-read window where a
+      // concurrent reader sees an empty or half-written file
+      val tmp = Paths.get(tableDir(key), s".v$v.manifest.tmp")
+      Files.writeString(tmp,
+        headers.map(_ + "\n").mkString + renderEntries(resolved))
+      Files.move(tmp, p,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      ()
+    }
+  }
+
+  /** Streaming-append high-water mark for ONE streaming query: the
+    * last epoch whose commit landed in the manifest chain. Epoch ids
+    * restart at 0 per checkpoint, so the mark must be per-QUERY — a
+    * table-wide mark would silently drop a second query's early
+    * batches. Recorded ATOMICALLY in the committing manifest's header
+    * (`#ep\t<queryId>\t<n>`): a crash between "manifest written" and
+    * "mark written" cannot exist, so a replayed epoch can never
+    * double-commit. Resolution scans retained versions newest-first;
+    * like Delta's txn retention, VACUUMing past a query's last commit
+    * ends its replay-dedup window. -1 = nothing committed yet.
+    *
+    * Every epoch commit runs on this driver under [[commitLock]], so
+    * once a (table, query) mark is resolved, later commits keep it
+    * current in `epochCache` — without it, each epoch commit re-reads
+    * every retained manifest newest-first (O(versions) file IO per
+    * epoch, O(V²) over a long-running query into a table with deep
+    * history). A cached mark remembers the version whose manifest
+    * carries it and that manifest's [[fileId]], and holds only while
+    * that is still the same file: a DROP and re-CREATE of the table
+    * by any process, or a VACUUM that expired the version, sends the
+    * next call back to the manifests. Access-order LRU bounded;
+    * eviction is cheap-and-correct. */
+  private val epochCache = lru[(String, String), (Int, FileId, Long)](1024)
+
+  def lastStreamEpoch(key: String, queryId: String): Long = {
+    val cached = epochCache.get((key, queryId))
+    val live = cached != null &&
+      (try fileId(key, cached._1) == cached._2
+      catch { case _: java.nio.file.NoSuchFileException => false })
+    if (live) cached._3
+    else versions(key).reverse.iterator
+      .flatMap(v => headerValue(key, v, s"#ep\t$queryId").map(v -> _.toLong))
+      .nextOption().fold(-1L) { case (v, epoch) =>
+        recordStreamEpoch(key, queryId, epoch, v); epoch }
+  }
+
+  /** Record epoch `epoch` as committed by version `v` (called under
+    * [[commitLock]] right after that version, whose header carries the
+    * `#ep` mark, is published). */
+  private[sources] def recordStreamEpoch(key: String, queryId: String,
+      epoch: Long, v: Int): Unit =
+    epochCache.put((key, queryId), (v, fileId(key, v), epoch))
+
+  /** Test seam for commit wall-clock (TIMESTAMP AS OF resolution). */
+  @volatile private[graft] var clock: () => Long =
+    () => System.currentTimeMillis()
+
+  /** The metadata version `v` was committed under — what `VERSION/
+    * TIMESTAMP AS OF` reads resolve their schema and renames against
+    * (Iceberg/Delta's snapshot-schema rule), and, at the head, the
+    * table's current metadata ([[readMeta]]). */
+  def versionMeta(key: String, v: Int): Meta =
+    parseMeta(key, v, header(key, v).collect {
+      case l if l.startsWith("#meta\t") => l.stripPrefix("#meta\t") })
+
+  /** A version's recorded commit time (ms), from the `#ms` header
+    * [[stageManifest]] writes. */
+  def commitTimeMs(key: String, v: Int): Long =
+    headerValue(key, v, "#ms").getOrElse(
+      sys.error(s"$key: version $v has no commit time")).toLong
+
+  /** The row-id high-water mark after version `v`'s commit (rowids
+    * tables; `#nextrowid` manifest header), 0 when the header is
+    * absent — safe, because the assignment fold below also maxes over
+    * the entries actually present. */
+  def nextRowId(key: String, v: Int): Long =
+    headerValue(key, v, "#nextrowid").fold(0L)(_.toLong)
+
+  /** Render + stage version `v`'s manifest to a uniquely-named temp
+    * file in the table dir (same filesystem as the target — the
+    * precondition for an atomic link/rename), WITHOUT publishing it.
+    * The header carries the commit time, the whole `meta`, the
+    * row-id high-water mark and `extraHeader`. [[publishStaged]] makes
+    * it the committed version; the split exists so [[commitTables]]
+    * can stage EVERY table's manifest before linking ANY of them. Only
+    * [[stageAndLink]] and [[create]] call the pair. */
+  private[graft] def stageManifest(key: String, v: Int, meta: Meta,
+      entries0: Seq[FileEntry], extraHeader: Seq[String] = Seq.empty,
+      rowIdFloor: Long = 0L): Path = {
+    // ── ROW-LINEAGE ASSIGNMENT (rowids tables) — the one funnel every
+    // version commit passes through (appends, COW swaps, MOR deltas,
+    // streaming epochs, rollback, branch publish, cherry-pick,
+    // transaction adoption), so ids are assigned exactly once per
+    // entry and a rebased retry re-assigns from the head it actually
+    // publishes onto. Each row-bearing entry WITHOUT an id gets the
+    // next contiguous range [ctr, ctr + rows); entries that already
+    // carry one (carried forward, cloned, adopted — possibly from a
+    // clone whose counter ran ahead of ours) keep it, and the new
+    // high-water mark maxes over BOTH sources so no later assignment
+    // can ever overlap an adopted range. O(entries) driver work, zero
+    // per-row cost — the ids themselves are virtual (firstRowId +
+    // position) until a rewrite materializes them.
+    val rowIdState: Option[(Seq[FileEntry], Long)] =
+      if (!meta.rowids) None
+      else {
+        val parentNext = if (v <= 0) 0L else nextRowId(key, v - 1)
+        // `rowIdFloor`: an external counter seed — snapshot_table
+        // passes the SOURCE table's counter so a clone can never
+        // re-mint an id the source already retired
+        var ctr = math.max(math.max(parentNext, rowIdFloor),
+          entries0.flatMap(e =>
+            e.firstRowId.map(_ + e.rows.getOrElse(0L))).maxOption
+            .getOrElse(0L))
+        val assigned = entries0.map { e =>
+          if (e.kind == "dv" || e.firstRowId.isDefined) e
+          else e.rows match {
+            case Some(r) => val f = ctr; ctr += r
+              e.copy(firstRowId = Some(f))
+            case None => e
+          }
+        }
+        Some((assigned, ctr))
+      }
+    val entries = rowIdState.map(_._1).getOrElse(entries0)
+    // STRICTLY monotonic commit times per table: two sub-millisecond
+    // commits must never share a timestamp, or TIMESTAMP AS OF the
+    // earlier one would silently resolve to the later
+    val ms = {
+      val now = clock()
+      if (v == 0) now
+      else try math.max(now, commitTimeMs(key, v - 1) + 1)
+      catch { case _: java.io.IOException => now }
+    }
+    // every version PINS the metadata it was committed under: time
+    // travel reads its schema and renames (so DROP COLUMN can't
+    // silently lose a column from historical reads), and the head's
+    // is the table's current metadata
+    val metaHeader = renderMeta(meta).map("#meta\t" + _)
+    // INCREMENTAL encoding (the Delta-log commit model): when the new
+    // entry list is the parent's with some names removed and new
+    // entries appended — which every append/rewrite/compact commit is —
+    // the manifest records only `#parent`, the `#rm` removals, and the
+    // added entries: commit cost O(change), not O(table). The encoding
+    // is taken ONLY when the reconstruction reproduces the entry
+    // SEQUENCE exactly (order is commit order — MOR replay depends on
+    // it), and the chain is capped at [[CheckpointEvery]] by writing a
+    // full manifest past that depth, so snapshot reads stay bounded.
+    val body = {
+      val pv = v - 1
+      val parentPath = manifestPath(key, pv)
+      if (v <= 0 || !Files.exists(parentPath)) renderEntries(entries)
+      else if (manifestChainLength(key, pv) >= CheckpointEvery)
+        renderEntries(entries)
+      else {
+        val parent = readManifest(key, pv)
+        val newNames = entries.map(_.name).toSet
+        val removedNames = parent.collect {
+          case e if !newNames(e.name) => e.name }
+        val rmSet = removedNames.toSet
+        val parentNames = parent.map(_.name).toSet
+        val added = entries.filterNot(e => parentNames(e.name))
+        val reconstructed = parent.filterNot(e => rmSet(e.name)) ++ added
+        if (reconstructed == entries)
+          s"#parent\t$pv\n" +
+            removedNames.map(n => s"#rm\t$n\n").mkString +
+            renderEntries(added)
+        else renderEntries(entries)
+      }
+    }
+    val tmp = Files.createTempFile(
+      Paths.get(tableDir(key)), s".v$v.manifest.", ".tmp")
+    val rowIdHeader =
+      rowIdState.map { case (_, ctr) => s"#nextrowid\t$ctr" }.toSeq
+    Files.writeString(tmp,
+      s"#ms\t$ms\n" +
+        (metaHeader ++ rowIdHeader ++ extraHeader).map(_ + "\n").mkString +
+        body)
+    tmp
+  }
+
+  /** The active publisher — swapped by the commit-seam spec; every
+    * production path uses the local-fs instance. */
+  @volatile private[graft] var publisher: ManifestPublisher =
+    HardLinkPublisher
+
+  /** PUBLISH a staged manifest as version `v` through the
+    * [[ManifestPublisher]] seam. A loser's staged file is cleaned up
+    * and [[CommitConflictException]] tells it to re-validate against
+    * the new head. */
+  private[graft] def publishStaged(key: String, v: Int, staged: Path): Unit = {
+    val target = manifestPath(key, v)
+    try publisher.publishIfAbsent(target, staged)
+    catch {
+      case e: java.nio.file.FileAlreadyExistsException =>
+        throw new CommitConflictException(
+          s"$key: version $v was committed by another writer while " +
+            s"this commit was staging (${e.getMessage}) — re-read the " +
+            "head, re-validate, and retry")
+    }
+  }
+
+  /** THE single-table commit: publishes the next version of `key` and
+    * returns its number. Runs [[preCommitHook]], takes [[commitLock]],
+    * reads the head (`cur`, its entries) and asks `next` for the new
+    * entry list; `next` validates against that head and throws
+    * ConcurrentModificationException on a real conflict. Then
+    * [[prePublishHook]] and the atomic publish of `cur + 1`. A publish
+    * lost to another process (the in-JVM lock rules out a same-process
+    * loss) re-reads the new head and calls `next` again, so every
+    * caller's validation re-runs against what it rebases onto.
+    * `extraHeader` lines ride in the manifest header. The new version
+    * carries the head's [[Meta]] passed through `evolve`, which a
+    * metadata change (ALTER, compute_table_stats, a MERGE's schema
+    * undo) uses to change it in the same publish; like `next` it
+    * re-runs against every head it rebases onto, and may throw
+    * ConcurrentModificationException. A caller that already holds the
+    * lock (streaming epochs, ALTER) runs [[preCommitHook]] under it.
+    * Versions of several tables published together go through
+    * [[commitTables]]. */
+  def commit(key: String, extraHeader: Seq[String] = Seq.empty,
+      evolve: Meta => Meta = identity)(
+      next: (Int, Seq[FileEntry]) => Seq[FileEntry]): Int = {
+    @annotation.tailrec
+    def attempt(n: Int): Int = {
+      val cur = currentVersion(key)
+      val entries = next(cur, readManifest(key, cur))
+      val meta = evolve(versionMeta(key, cur))
+      val won =
+        try { stageAndLink(Seq((key, cur, meta, entries)), extraHeader); true }
+        catch { case _: CommitConflictException if n < MaxCommitAttempts => false }
+      if (won) cur + 1 else attempt(n + 1)
+    }
+    preCommitHook()
+    commitLock.synchronized(attempt(1))
+  }
+
+  /** THE multi-table commit (publish_branches, COMMIT TRANSACTION):
+    * publishes version `cur + 1` of every `(key, cur, entries)` plan,
+    * each under its head's [[Meta]], and returns the new versions in
+    * input order. The caller holds [[commitLock]] and has validated
+    * every plan against its head `cur` before calling, so every check
+    * runs before any link. Runs [[preCommitHook]] once, then
+    * [[stageAndLink]] with `afterLink` as the per-table step. There is
+    * no retry: a link lost to another process throws
+    * [[CommitConflictException]], and the tables linked before it stay
+    * published — the documented partial-publish window, which staging
+    * every manifest before linking any narrows to the links alone. */
+  def commitTables(plans: Seq[(String, Int, Seq[FileEntry])],
+      afterLink: String => Unit = _ => ()): Seq[Int] = {
+    require(Thread.holdsLock(commitLock),
+      "commitTables runs under the commit lock its caller validated in")
+    preCommitHook()
+    stageAndLink(plans.map { case (key, cur, entries) =>
+      (key, cur, versionMeta(key, cur), entries) }, afterLink = afterLink)
+  }
+
+  /** The publish step [[commit]] and [[commitTables]] share: stages
+    * version `cur + 1` of every `(key, cur, meta, entries)` plan, then,
+    * table by table, runs [[prePublishHook]], links the staged
+    * manifest and calls `afterLink(key)`. Returns the published
+    * versions; no staged temp outlives it. */
+  private def stageAndLink(plans: Seq[(String, Int, Meta, Seq[FileEntry])],
+      extraHeader: Seq[String] = Seq.empty,
+      afterLink: String => Unit = _ => ()): Seq[Int] = {
+    val staged = scala.collection.mutable.ListBuffer.empty[Path]
+    try {
+      plans.foreach { case (key, cur, meta, entries) =>
+        staged += stageManifest(key, cur + 1, meta, entries, extraHeader) }
+      plans.zip(staged).map { case ((key, cur, _, _), tmp) =>
+        prePublishHook()
+        publishStaged(key, cur + 1, tmp)
+        afterLink(key)
+        cur + 1
+      }
+    } finally staged.foreach(Files.deleteIfExists(_))
+  }
+
+  /** Publish version 0 of a new table (CREATE, snapshot_table) — its
+    * metadata and entries in one atomic publish. There is no head to
+    * rebase onto: losing version 0 means another writer created the
+    * table, and [[CommitConflictException]] says so. `rowIdFloor`
+    * seeds the row-lineage counter (see [[stageManifest]]). */
+  def create(key: String, meta: Meta, entries: Seq[FileEntry] = Seq.empty,
+      rowIdFloor: Long = 0L): Unit = {
+    Files.createDirectories(Paths.get(tableDir(key)))
+    publishStaged(key, 0,
+      stageManifest(key, 0, meta, entries, rowIdFloor = rowIdFloor))
+  }
+
+  // ── BRANCHES (Iceberg's write-audit-publish surface): a branch
+  // manifest is a STAGED next snapshot — full entry list plus the
+  // `#base` header recording the version it forked from. Plain reads
+  // never see it; a read with option `branch=<name>` plans from it;
+  // [[RowStoreOps.publishBranch]] promotes it to the next committed
+  // version under the same OCC rule as any rewrite.
+
+  private def branchPath(key: String, name: String): Path = {
+    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
+      s"branch name '$name' must be alphanumeric")
+    Paths.get(tableDir(key), s"branch-$name.manifest")
+  }
+
+  def branchExists(key: String, name: String): Boolean =
+    Files.exists(branchPath(key, name))
+
+  def writeBranchManifest(key: String, name: String, base: Int,
+      entries: Seq[FileEntry]): Unit = {
+    // branches are MUTABLE refs (stacked stages overwrite), so no
+    // create-if-absent — but the overwrite is still temp + ATOMIC_MOVE
+    // so a concurrent branch read (another process planning from
+    // `branch=<name>`) can never see a torn file
+    val tmp = Files.createTempFile(
+      Paths.get(tableDir(key)), s".branch-$name.", ".tmp")
+    Files.writeString(tmp, s"#base\t$base\n" + renderEntries(entries))
+    Files.move(tmp, branchPath(key, name),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    ()
+  }
+
+  /** (fork-base version, staged entries). */
+  def readBranchManifest(key: String, name: String): (Int, Seq[FileEntry]) = {
+    val all = Files.readAllLines(branchPath(key, name)).asScala.toSeq
+    val base = all.collectFirst {
+      case l if l.startsWith("#base\t") => l.stripPrefix("#base\t").toInt
+    }.getOrElse(sys.error(s"branch $name of $key has no #base header"))
+    (base, parseEntries(all))
+  }
+
+  def dropBranch(key: String, name: String): Unit = {
+    Files.deleteIfExists(branchPath(key, name)); ()
+  }
+
+  /** Names of every staged branch of `key`. */
+  def listBranches(key: String): Seq[String] =
+    listNames(Paths.get(tableDir(key))).collect {
+      case n if n.startsWith("branch-") && n.endsWith(".manifest") =>
+        n.stripPrefix("branch-").stripSuffix(".manifest")
+    }.sorted
+
+  // ── TAGS (Iceberg's named immutable snapshot refs): a tag pins a
+  // COMMITTED version under a name — `VERSION AS OF '<tag>'` resolves
+  // through it, and VACUUM retains a tagged version's manifest and
+  // files regardless of the keepLast window (the "audited release"
+  // use: tag it and it stays reproducible). Tags are immutable:
+  // re-pointing a name is a loud error, not a silent move.
+
+  private def tagPath(key: String, name: String): Path = {
+    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
+      s"tag name '$name' must be alphanumeric")
+    // an all-digit tag would be unreachable: VERSION AS OF resolves
+    // numerics as version ids first
+    require(name.exists(!_.isDigit),
+      s"tag name '$name' must contain a non-digit")
+    Paths.get(tableDir(key), s"tag-$name.ref")
+  }
+
+  def tagExists(key: String, name: String): Boolean =
+    Files.exists(tagPath(key, name))
+
+  def createTag(key: String, name: String, v: Int): Unit =
+    commitLock.synchronized {
+      require(versions(key).contains(v),
+        s"cannot tag $key@$v: no such committed version")
+      require(!tagExists(key, name),
+        s"tag '$name' of $key already exists (tags are immutable — " +
+          "drop it first to re-point)")
+      Files.writeString(tagPath(key, name), s"$v\n"); ()
+    }
+
+  def readTag(key: String, name: String): Int =
+    Files.readString(tagPath(key, name)).trim.toInt
+
+  def dropTag(key: String, name: String): Unit = {
+    Files.deleteIfExists(tagPath(key, name)); ()
+  }
+
+  /** (name, version) of every tag of `key`. */
+  def listTags(key: String): Seq[(String, Int)] =
+    listNames(Paths.get(tableDir(key))).collect {
+      case n if n.startsWith("tag-") && n.endsWith(".ref") =>
+        n.stripPrefix("tag-").stripSuffix(".ref")
+    }.sorted.map(n => (n, readTag(key, n)))
+
+  def drop(key: String): Boolean = {
+    val d = Paths.get(tableDir(key))
+    if (!Files.exists(d)) false
+    else {
+      val walk = Files.walk(d)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => { Files.deleteIfExists(p); () })
+      finally walk.close()
+      true
+    }
+  }
+}
+
+object RowStore {
+  /** The lake of the [[GraftCatalog]] registered as `catalog` in `spark`. */
+  def of(spark: SparkSession, catalog: String = "graft_dml"): RowStore =
+    spark.sessionState.catalogManager.catalog(catalog) match {
+      case c: GraftCatalog => c.lake
+      case other => sys.error(s"catalog $catalog is a " +
+        s"${other.getClass.getName}, not a GraftCatalog")
+    }
+
+  /** The lake holding `key` (`<catalog>.<ns>.<table>`) in the active session. */
+  def forKey(key: String): RowStore =
+    of(SparkSession.active, key.takeWhile(_ != '.'))
+
+  /** Thrown when a manifest publish loses the cross-process
+    * create-if-absent race: another writer committed the same version
+    * number first. The lake's commit lock makes this unreachable for
+    * contention within one lake. [[commit]] catches it, re-reads the
+    * head and re-runs the caller's validation against it, so every
+    * single-table commit rebases; it reaches a caller only after
+    * [[MaxCommitAttempts]] consecutive losses, or from the multi-table
+    * [[commitTables]], which does not retry. */
+  final class CommitConflictException(msg: String)
+    extends RuntimeException(msg)
+
+  /** Column names reserved for metadata / delta-record bookkeeping. */
+  private[sources] val Reserved =
+    Set("_group", "_rid", "_change", "_op", "_grp", "_zv",
+      "_row_id", "_rowid")
 
   /** Java-serialized size of `o`, counted without buffering the
     * bytes (the probe's measuring stick). */
@@ -523,31 +1110,6 @@ object RowStore {
     }
   }
 
-  /** Per-session table root (Scratch semantics: per-applicationId,
-    * deleted on JVM exit). All catalog/commit calls run on the driver;
-    * executors only ever see absolute file paths.
-    *
-    * `-Dgraft.warehouse.root=<dir>` overrides the per-application
-    * scratch with a SHARED warehouse — the deploy shape where several
-    * driver processes commit against the same lake (what the atomic
-    * create-if-absent publish exists for). The override directory is
-    * caller-owned: nothing deletes it on exit. */
-  private def root(): String =
-    sys.props.get("graft.warehouse.root").getOrElse(
-      graft.Scratch.dir(SparkSession.active, "graft_rowcat", "tables"))
-
-  private[sources] def tableDir(key: String): String = s"${root()}/$key"
-  private[graft] def dataDir(key: String): String = {
-    val d = s"${tableDir(key)}/data"
-    Files.createDirectories(Paths.get(d))
-    d
-  }
-
-  /** A table exists once its version 0 is published: a CREATE that
-    * lost its publish leaves at most an empty directory, never a
-    * table. Not a test for `v0.manifest` — VACUUM expires v0. */
-  def exists(key: String): Boolean = versions(key).nonEmpty
-
   /** A manifest entry's on-disk path. Entry names are normally leaf
     * file names under the table's data dir; `add_files`-registered
     * entries carry ABSOLUTE paths (file identity preserved — zero
@@ -659,9 +1221,6 @@ object RowStore {
       list("ndv"), kv("check"), kv("rowids").toBoolean, kv("gen"))
   }
 
-  /** The current version's metadata. */
-  def readMeta(key: String): Meta = versionMeta(key, currentVersion(key))
-
   /** Sorted entry names of `dir`; empty when it does not exist. */
   private[sources] def listNames(dir: Path): Seq[String] =
     if (!Files.isDirectory(dir)) Seq.empty
@@ -670,20 +1229,6 @@ object RowStore {
       try stream.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
       finally stream.close()
     }
-
-  /** Every table of this warehouse (SHOW TABLES): directories that
-    * hold a published version, see [[exists]]. */
-  def listTableKeys(): Seq[String] =
-    listNames(Paths.get(root())).filter(exists)
-
-  def versions(key: String): Seq[Int] =
-    listNames(Paths.get(tableDir(key))).collect {
-      case s if s.startsWith("v") && s.endsWith(".manifest") =>
-        s.stripPrefix("v").stripSuffix(".manifest").toInt
-    }.sorted
-
-  def currentVersion(key: String): Int = versions(key).lastOption.getOrElse(
-    sys.error(s"no committed version for $key"))
 
   /** Manifest CHAIN checkpoint cadence: a commit writes an INCREMENTAL
     * manifest (`#parent` + `#rm` removals + added entries — O(change),
@@ -696,38 +1241,6 @@ object RowStore {
     * O(history). */
   val CheckpointEvery = 16
 
-  /** Number of manifest FILES walked to resolve version `v` — 1 for a
-    * full (checkpointed) manifest, parent chain + 1 for incrementals.
-    * The `rewrite_manifests` procedure reports and collapses this. */
-  def manifestChainLength(key: String, v: Int): Int =
-    parentVersion(key, v).fold(1)(p => 1 + manifestChainLength(key, p))
-
-  /** The version an incremental manifest resolves through (`#parent`);
-    * None for a full one. */
-  private[sources] def parentVersion(key: String, v: Int): Option[Int] =
-    headerValue(key, v, "#parent").map(_.toInt)
-
-  /** The `#` header lines of version `v`'s manifest, through `#parent`
-    * for an incremental one. Stops at the first line that is not a
-    * header, so the cost never grows with the entries (or their bloom
-    * blobs) — the header always precedes the body. */
-  private def header(key: String, v: Int): Seq[String] = {
-    val r = Files.newBufferedReader(manifestPath(key, v))
-    try {
-      val out = Seq.newBuilder[String]
-      var line = r.readLine()
-      while (line != null && line.startsWith("#")) {
-        out += line
-        line = if (line.startsWith("#parent\t")) null else r.readLine()
-      }
-      out.result()
-    } finally r.close()
-  }
-
-  private def headerValue(key: String, v: Int, tag: String): Option[String] =
-    header(key, v).collectFirst {
-      case l if l.startsWith(tag + "\t") => l.stripPrefix(tag + "\t") }
-
   /** EXACT row count of an entry list, defined only when provably so:
     * no delta/deletion-vector files (they add/remove/move rows at read
     * time) and every entry recorded a count — the one "clean snapshot"
@@ -738,141 +1251,10 @@ object RowStore {
       entries.exists(_.rows.isEmpty)) None
     else Some(entries.map(_.rows.get).sum)
 
-  /** Range-slice count for a clustering rewrite (sorted / z-order),
-    * derived from the TABLE'S OWN SIZE instead of the session's core
-    * count (optimization round 17, guide §2 — scale-adaptive
-    * partitioning): slices = ceil(current base rows / target rows per
-    * file), floored at `floor` so a small table still splits into
-    * enough range-disjoint files for zone-map skipping (the rewrite's
-    * whole point — AQE would coalesce an unpinned count to ONE slice
-    * and silently recreate the group-wide files). Core-count-derived
-    * counts made the SAME rewrite write 4× more files at local[32]
-    * than local[8] (q161 2.0 s @32c vs 1.56 @8c) while the slice
-    * count is a property of the data, not the box. The target is the
-    * deployment's file-sizing knob (`spark.graft.rewrite.targetFileRows`,
-    * default 4M rows ≈ a few hundred MB for typical lake rows — the
-    * guide §6 output-file band); manifest row counts are plan-time
-    * metadata, so this opens zero data files. */
-  def rewriteSlices(tableKey: String, floor: Int): Int = {
-    val target = org.apache.spark.sql.SparkSession.active.sessionState
-      .conf.getConfString("spark.graft.rewrite.targetFileRows", "4000000")
-      .toLong
-    val rows = readManifest(tableKey, currentVersion(tableKey))
-      .iterator.filter(_.kind == "base").flatMap(_.rows).sum
-    math.max(floor, math.ceil(rows.toDouble / target.toDouble).toInt)
-  }
-
-  /** One version's manifest FILE shape (not its resolved snapshot):
-    * (parent version if incremental, own entry-line count, removal
-    * count) — what the `.manifests` metadata table surfaces so an
-    * operator can see chain structure and per-commit write cost. */
-  def manifestFileStats(key: String, v: Int): (Option[Int], Int, Int) = {
-    val lines = Files.readAllLines(manifestPath(key, v)).asScala.toSeq
-    val parent = lines.collectFirst { case l if l.startsWith("#parent\t") =>
-      l.stripPrefix("#parent\t").toInt }
-    // count entry LINES (parseEntries' own keep-predicate) rather than
-    // fully parsing per-column bounds and bloom blobs just for a size
-    (parent, lines.count(l => l.nonEmpty && !l.startsWith("#")),
-      lines.count(_.startsWith("#rm\t")))
-  }
-
-  /** Resolved-entry cache for [[readManifest]]: a committed version's
-    * RESOLVED entry sequence is immutable (files never change meaning;
-    * even [[materializeManifest]] rewrites only the FILE SHAPE — same
-    * resolved entries by contract), so one resolution can be reused for
-    * as long as its manifest file is the same file. Without it, every
-    * commit on a deep incremental chain re-walks the chain's manifest
-    * FILES (st31's per-micro-batch MERGE read the whole chain per epoch
-    * — O(chain) file IO per commit, the round-11 regression), and every
-    * scan build re-reads at least one file. Each hit is checked against
-    * the manifest's [[fileId]] with one stat, so a manifest that VACUUM
-    * deleted (q111 pins that `VERSION AS OF` an expired snapshot
-    * fails) or that a DROP and re-CREATE replaced — in this process or
-    * any other sharing the warehouse — is never served from here.
-    * LRU-bounded; entries of dropped tables simply age out. */
-  private val manifestCache =
-    lru[(String, Int), (FileId, Seq[FileEntry])](512)
-
-  /** A synchronized access-order LRU map holding at most `cap` entries. */
-  private def lru[K, V](cap: Int): java.util.Map[K, V] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[K, V]) =
-          size > cap
-      })
-
   /** Which file a path names right now: its inode key, modification
     * time and size. Deleting a manifest and writing one again at the
     * same path yields a different id. */
   private type FileId = (AnyRef, java.nio.file.attribute.FileTime, Long)
-
-  private[sources] def manifestPath(key: String, v: Int): Path =
-    Paths.get(tableDir(key), s"v$v.manifest")
-
-  /** The [[FileId]] of version `v`'s manifest; throws
-    * NoSuchFileException when it is not (or no longer) published. */
-  private def fileId(key: String, v: Int): FileId = {
-    val a = Files.readAttributes(manifestPath(key, v),
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    (a.fileKey, a.lastModifiedTime, a.size)
-  }
-
-  def readManifest(key: String, v: Int): Seq[FileEntry] = {
-    // keyed by the PER-APPLICATION table dir (see epochCache): a
-    // re-created same-named table under a new SparkSession's root
-    // must never resolve through the old application's cache
-    val ck = (tableDir(key), v)
-    val id = fileId(key, v)
-    val cached = manifestCache.get(ck)
-    if (cached != null && cached._1 == id) cached._2
-    else {
-      val lines = Files.readAllLines(manifestPath(key, v)).asScala.toSeq
-      val resolved = lines.collectFirst { case l if l.startsWith("#parent\t") =>
-        l.stripPrefix("#parent\t").toInt } match {
-        case None => parseEntries(lines)
-        case Some(p) =>
-          // incremental: parent's resolved entries minus this commit's
-          // removals (relative order preserved), plus its additions
-          // appended — exactly the sequence the commit validated at
-          // write time, so manifest order (= commit order, what MOR
-          // replay keys on) survives the chain encoding
-          val removed = lines.collect {
-            case l if l.startsWith("#rm\t") => l.stripPrefix("#rm\t") }.toSet
-          readManifest(key, p).filterNot(e => removed(e.name)) ++
-            parseEntries(lines)
-      }
-      manifestCache.put(ck, (id, resolved))
-      resolved
-    }
-  }
-
-  /** Rewrite version `v`'s manifest as FULL (self-contained): same
-    * resolved entries, same headers, chain length 1 — the
-    * `rewrite_manifests` compaction and VACUUM's chain-cut. Byte
-    * content of every snapshot is observationally unchanged (reads
-    * resolve the identical entry sequence). Caller holds
-    * [[commitLock]]. */
-  private[sources] def materializeManifest(key: String, v: Int): Unit = {
-    val p = manifestPath(key, v)
-    val lines = Files.readAllLines(p).asScala.toSeq
-    if (lines.exists(_.startsWith("#parent\t"))) {
-      val resolved = readManifest(key, v)
-      val headers = lines.filter(l => l.startsWith("#") &&
-        !l.startsWith("#parent\t") && !l.startsWith("#rm\t"))
-      // write-to-temp + ATOMIC_MOVE: this is the ONE path that rewrites
-      // a committed, reader-visible manifest, and readers (scan
-      // planning) read manifests without the commit lock — an in-place
-      // truncate-and-write would open a torn-read window where a
-      // concurrent reader sees an empty or half-written file
-      val tmp = Paths.get(tableDir(key), s".v$v.manifest.tmp")
-      Files.writeString(tmp,
-        headers.map(_ + "\n").mkString + renderEntries(resolved))
-      Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    }
-  }
 
   private def parseEntries(all: Seq[String]): Seq[FileEntry] =
     all.filter(l => l.nonEmpty && !l.startsWith("#")).map { l =>
@@ -981,179 +1363,6 @@ object RowStore {
       val frid = e.firstRowId.map(r => s"\tR$r").getOrElse("")
       s"${e.kind}\t${e.group}\t${e.name}$stats$sstats$rows$spec$cn$cs$bl$nd$dvt$frid"
     }.mkString("", "\n", "\n")
-
-  /** Streaming-append high-water mark for ONE streaming query: the
-    * last epoch whose commit landed in the manifest chain. Epoch ids
-    * restart at 0 per checkpoint, so the mark must be per-QUERY — a
-    * table-wide mark would silently drop a second query's early
-    * batches. Recorded ATOMICALLY in the committing manifest's header
-    * (`#ep\t<queryId>\t<n>`): a crash between "manifest written" and
-    * "mark written" cannot exist, so a replayed epoch can never
-    * double-commit. Resolution scans retained versions newest-first;
-    * like Delta's txn retention, VACUUMing past a query's last commit
-    * ends its replay-dedup window. -1 = nothing committed yet.
-    *
-    * Every epoch commit runs on this driver under [[commitLock]], so
-    * once a (table, query) mark is resolved, later commits keep it
-    * current in `epochCache` — without it, each epoch commit re-reads
-    * every retained manifest newest-first (O(versions) file IO per
-    * epoch, O(V²) over a long-running query into a table with deep
-    * history). A cached mark remembers the version whose manifest
-    * carries it and that manifest's [[fileId]], and holds only while
-    * that is still the same file: a DROP and re-CREATE of the table
-    * by any process, or a VACUUM that expired the version, sends the
-    * next call back to the manifests. Access-order LRU bounded;
-    * eviction is cheap-and-correct. */
-  private val epochCache = lru[(String, String), (Int, FileId, Long)](1024)
-
-  def lastStreamEpoch(key: String, queryId: String): Long = {
-    // keyed by the PER-APPLICATION table dir, not the bare name: a
-    // second SparkSession in this JVM gets a fresh scratch root, and
-    // a stale mark for a same-named table must not leak across
-    val cached = epochCache.get((tableDir(key), queryId))
-    val live = cached != null &&
-      (try fileId(key, cached._1) == cached._2
-      catch { case _: java.nio.file.NoSuchFileException => false })
-    if (live) cached._3
-    else versions(key).reverse.iterator
-      .flatMap(v => headerValue(key, v, s"#ep\t$queryId").map(v -> _.toLong))
-      .nextOption().fold(-1L) { case (v, epoch) =>
-        recordStreamEpoch(key, queryId, epoch, v); epoch }
-  }
-
-  /** Record epoch `epoch` as committed by version `v` (called under
-    * [[commitLock]] right after that version, whose header carries the
-    * `#ep` mark, is published). */
-  private[sources] def recordStreamEpoch(key: String, queryId: String,
-      epoch: Long, v: Int): Unit =
-    epochCache.put((tableDir(key), queryId), (v, fileId(key, v), epoch))
-
-  /** Test seam for commit wall-clock (TIMESTAMP AS OF resolution). */
-  @volatile private[graft] var clock: () => Long =
-    () => System.currentTimeMillis()
-
-  /** The metadata version `v` was committed under — what `VERSION/
-    * TIMESTAMP AS OF` reads resolve their schema and renames against
-    * (Iceberg/Delta's snapshot-schema rule), and, at the head, the
-    * table's current metadata ([[readMeta]]). */
-  def versionMeta(key: String, v: Int): Meta =
-    parseMeta(key, v, header(key, v).collect {
-      case l if l.startsWith("#meta\t") => l.stripPrefix("#meta\t") })
-
-  /** A version's recorded commit time (ms), from the `#ms` header
-    * [[stageManifest]] writes. */
-  def commitTimeMs(key: String, v: Int): Long =
-    headerValue(key, v, "#ms").getOrElse(
-      sys.error(s"$key: version $v has no commit time")).toLong
-
-  /** The row-id high-water mark after version `v`'s commit (rowids
-    * tables; `#nextrowid` manifest header), 0 when the header is
-    * absent — safe, because the assignment fold below also maxes over
-    * the entries actually present. */
-  def nextRowId(key: String, v: Int): Long =
-    headerValue(key, v, "#nextrowid").fold(0L)(_.toLong)
-
-  /** Render + stage version `v`'s manifest to a uniquely-named temp
-    * file in the table dir (same filesystem as the target — the
-    * precondition for an atomic link/rename), WITHOUT publishing it.
-    * The header carries the commit time, the whole `meta`, the
-    * row-id high-water mark and `extraHeader`. [[publishStaged]] makes
-    * it the committed version; the split exists so [[commitTables]]
-    * can stage EVERY table's manifest before linking ANY of them. Only
-    * [[stageAndLink]] and [[create]] call the pair. */
-  private[graft] def stageManifest(key: String, v: Int, meta: Meta,
-      entries0: Seq[FileEntry], extraHeader: Seq[String] = Seq.empty,
-      rowIdFloor: Long = 0L): Path = {
-    // ── ROW-LINEAGE ASSIGNMENT (rowids tables) — the one funnel every
-    // version commit passes through (appends, COW swaps, MOR deltas,
-    // streaming epochs, rollback, branch publish, cherry-pick,
-    // transaction adoption), so ids are assigned exactly once per
-    // entry and a rebased retry re-assigns from the head it actually
-    // publishes onto. Each row-bearing entry WITHOUT an id gets the
-    // next contiguous range [ctr, ctr + rows); entries that already
-    // carry one (carried forward, cloned, adopted — possibly from a
-    // clone whose counter ran ahead of ours) keep it, and the new
-    // high-water mark maxes over BOTH sources so no later assignment
-    // can ever overlap an adopted range. O(entries) driver work, zero
-    // per-row cost — the ids themselves are virtual (firstRowId +
-    // position) until a rewrite materializes them.
-    val rowIdState: Option[(Seq[FileEntry], Long)] =
-      if (!meta.rowids) None
-      else {
-        val parentNext = if (v <= 0) 0L else nextRowId(key, v - 1)
-        // `rowIdFloor`: an external counter seed — snapshot_table
-        // passes the SOURCE table's counter so a clone can never
-        // re-mint an id the source already retired
-        var ctr = math.max(math.max(parentNext, rowIdFloor),
-          entries0.flatMap(e =>
-            e.firstRowId.map(_ + e.rows.getOrElse(0L))).maxOption
-            .getOrElse(0L))
-        val assigned = entries0.map { e =>
-          if (e.kind == "dv" || e.firstRowId.isDefined) e
-          else e.rows match {
-            case Some(r) => val f = ctr; ctr += r
-              e.copy(firstRowId = Some(f))
-            case None => e
-          }
-        }
-        Some((assigned, ctr))
-      }
-    val entries = rowIdState.map(_._1).getOrElse(entries0)
-    // STRICTLY monotonic commit times per table: two sub-millisecond
-    // commits must never share a timestamp, or TIMESTAMP AS OF the
-    // earlier one would silently resolve to the later
-    val ms = {
-      val now = clock()
-      if (v == 0) now
-      else try math.max(now, commitTimeMs(key, v - 1) + 1)
-      catch { case _: java.io.IOException => now }
-    }
-    // every version PINS the metadata it was committed under: time
-    // travel reads its schema and renames (so DROP COLUMN can't
-    // silently lose a column from historical reads), and the head's
-    // is the table's current metadata
-    val metaHeader = renderMeta(meta).map("#meta\t" + _)
-    // INCREMENTAL encoding (the Delta-log commit model): when the new
-    // entry list is the parent's with some names removed and new
-    // entries appended — which every append/rewrite/compact commit is —
-    // the manifest records only `#parent`, the `#rm` removals, and the
-    // added entries: commit cost O(change), not O(table). The encoding
-    // is taken ONLY when the reconstruction reproduces the entry
-    // SEQUENCE exactly (order is commit order — MOR replay depends on
-    // it), and the chain is capped at [[CheckpointEvery]] by writing a
-    // full manifest past that depth, so snapshot reads stay bounded.
-    val body = {
-      val pv = v - 1
-      val parentPath = manifestPath(key, pv)
-      if (v <= 0 || !Files.exists(parentPath)) renderEntries(entries)
-      else if (manifestChainLength(key, pv) >= CheckpointEvery)
-        renderEntries(entries)
-      else {
-        val parent = readManifest(key, pv)
-        val newNames = entries.map(_.name).toSet
-        val removedNames = parent.collect {
-          case e if !newNames(e.name) => e.name }
-        val rmSet = removedNames.toSet
-        val parentNames = parent.map(_.name).toSet
-        val added = entries.filterNot(e => parentNames(e.name))
-        val reconstructed = parent.filterNot(e => rmSet(e.name)) ++ added
-        if (reconstructed == entries)
-          s"#parent\t$pv\n" +
-            removedNames.map(n => s"#rm\t$n\n").mkString +
-            renderEntries(added)
-        else renderEntries(entries)
-      }
-    }
-    val tmp = Files.createTempFile(
-      Paths.get(tableDir(key)), s".v$v.manifest.", ".tmp")
-    val rowIdHeader =
-      rowIdState.map { case (_, ctr) => s"#nextrowid\t$ctr" }.toSeq
-    Files.writeString(tmp,
-      s"#ms\t$ms\n" +
-        (metaHeader ++ rowIdHeader ++ extraHeader).map(_ + "\n").mkString +
-        body)
-    tmp
-  }
 
   // ── OBJECT-STORE COMMIT SEAM ──────────────────────────────────────
   // The commit protocol is three named steps — STAGE (write the next
@@ -1268,227 +1477,11 @@ object RowStore {
       }
   }
 
-  /** The active publisher — swapped by the commit-seam spec; every
-    * production path uses the local-fs instance. */
-  @volatile private[graft] var publisher: ManifestPublisher =
-    HardLinkPublisher
-
-  /** PUBLISH a staged manifest as version `v` through the
-    * [[ManifestPublisher]] seam. A loser's staged file is cleaned up
-    * and [[CommitConflictException]] tells it to re-validate against
-    * the new head. */
-  private[graft] def publishStaged(key: String, v: Int, staged: Path): Unit = {
-    val target = manifestPath(key, v)
-    try publisher.publishIfAbsent(target, staged)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"$key: version $v was committed by another writer while " +
-            s"this commit was staging (${e.getMessage}) — re-read the " +
-            "head, re-validate, and retry")
-    }
-  }
-
   /** Publish attempts one [[commit]] makes: a bound, not a policy —
     * losing this many in a row to other processes means a
     * pathologically hot table, and the last [[CommitConflictException]]
     * surfaces. */
   val MaxCommitAttempts = 16
-
-  /** THE single-table commit: publishes the next version of `key` and
-    * returns its number. Runs [[preCommitHook]], takes [[commitLock]],
-    * reads the head (`cur`, its entries) and asks `next` for the new
-    * entry list; `next` validates against that head and throws
-    * ConcurrentModificationException on a real conflict. Then
-    * [[prePublishHook]] and the atomic publish of `cur + 1`. A publish
-    * lost to another process (the in-JVM lock rules out a same-process
-    * loss) re-reads the new head and calls `next` again, so every
-    * caller's validation re-runs against what it rebases onto.
-    * `extraHeader` lines ride in the manifest header. The new version
-    * carries the head's [[Meta]] passed through `evolve`, which a
-    * metadata change (ALTER, compute_table_stats, a MERGE's schema
-    * undo) uses to change it in the same publish; like `next` it
-    * re-runs against every head it rebases onto, and may throw
-    * ConcurrentModificationException. A caller that already holds the
-    * lock (streaming epochs, ALTER) runs [[preCommitHook]] under it.
-    * Versions of several tables published together go through
-    * [[commitTables]]. */
-  def commit(key: String, extraHeader: Seq[String] = Seq.empty,
-      evolve: Meta => Meta = identity)(
-      next: (Int, Seq[FileEntry]) => Seq[FileEntry]): Int = {
-    @annotation.tailrec
-    def attempt(n: Int): Int = {
-      val cur = currentVersion(key)
-      val entries = next(cur, readManifest(key, cur))
-      val meta = evolve(versionMeta(key, cur))
-      val won =
-        try { stageAndLink(Seq((key, cur, meta, entries)), extraHeader); true }
-        catch { case _: CommitConflictException if n < MaxCommitAttempts => false }
-      if (won) cur + 1 else attempt(n + 1)
-    }
-    preCommitHook()
-    commitLock.synchronized(attempt(1))
-  }
-
-  /** THE multi-table commit (publish_branches, COMMIT TRANSACTION):
-    * publishes version `cur + 1` of every `(key, cur, entries)` plan,
-    * each under its head's [[Meta]], and returns the new versions in
-    * input order. The caller holds [[commitLock]] and has validated
-    * every plan against its head `cur` before calling, so every check
-    * runs before any link. Runs [[preCommitHook]] once, then
-    * [[stageAndLink]] with `afterLink` as the per-table step. There is
-    * no retry: a link lost to another process throws
-    * [[CommitConflictException]], and the tables linked before it stay
-    * published — the documented partial-publish window, which staging
-    * every manifest before linking any narrows to the links alone. */
-  def commitTables(plans: Seq[(String, Int, Seq[FileEntry])],
-      afterLink: String => Unit = _ => ()): Seq[Int] = {
-    require(Thread.holdsLock(commitLock),
-      "commitTables runs under the commit lock its caller validated in")
-    preCommitHook()
-    stageAndLink(plans.map { case (key, cur, entries) =>
-      (key, cur, versionMeta(key, cur), entries) }, afterLink = afterLink)
-  }
-
-  /** The publish step [[commit]] and [[commitTables]] share: stages
-    * version `cur + 1` of every `(key, cur, meta, entries)` plan, then,
-    * table by table, runs [[prePublishHook]], links the staged
-    * manifest and calls `afterLink(key)`. Returns the published
-    * versions; no staged temp outlives it. */
-  private def stageAndLink(plans: Seq[(String, Int, Meta, Seq[FileEntry])],
-      extraHeader: Seq[String] = Seq.empty,
-      afterLink: String => Unit = _ => ()): Seq[Int] = {
-    val staged = scala.collection.mutable.ListBuffer.empty[Path]
-    try {
-      plans.foreach { case (key, cur, meta, entries) =>
-        staged += stageManifest(key, cur + 1, meta, entries, extraHeader) }
-      plans.zip(staged).map { case ((key, cur, _, _), tmp) =>
-        prePublishHook()
-        publishStaged(key, cur + 1, tmp)
-        afterLink(key)
-        cur + 1
-      }
-    } finally staged.foreach(Files.deleteIfExists(_))
-  }
-
-  /** Publish version 0 of a new table (CREATE, snapshot_table) — its
-    * metadata and entries in one atomic publish. There is no head to
-    * rebase onto: losing version 0 means another writer created the
-    * table, and [[CommitConflictException]] says so. `rowIdFloor`
-    * seeds the row-lineage counter (see [[stageManifest]]). */
-  def create(key: String, meta: Meta, entries: Seq[FileEntry] = Seq.empty,
-      rowIdFloor: Long = 0L): Unit = {
-    Files.createDirectories(Paths.get(tableDir(key)))
-    publishStaged(key, 0,
-      stageManifest(key, 0, meta, entries, rowIdFloor = rowIdFloor))
-  }
-
-  // ── BRANCHES (Iceberg's write-audit-publish surface): a branch
-  // manifest is a STAGED next snapshot — full entry list plus the
-  // `#base` header recording the version it forked from. Plain reads
-  // never see it; a read with option `branch=<name>` plans from it;
-  // [[RowStoreOps.publishBranch]] promotes it to the next committed
-  // version under the same OCC rule as any rewrite.
-
-  private def branchPath(key: String, name: String): Path = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"branch name '$name' must be alphanumeric")
-    Paths.get(tableDir(key), s"branch-$name.manifest")
-  }
-
-  def branchExists(key: String, name: String): Boolean =
-    Files.exists(branchPath(key, name))
-
-  def writeBranchManifest(key: String, name: String, base: Int,
-      entries: Seq[FileEntry]): Unit = {
-    // branches are MUTABLE refs (stacked stages overwrite), so no
-    // create-if-absent — but the overwrite is still temp + ATOMIC_MOVE
-    // so a concurrent branch read (another process planning from
-    // `branch=<name>`) can never see a torn file
-    val tmp = Files.createTempFile(
-      Paths.get(tableDir(key)), s".branch-$name.", ".tmp")
-    Files.writeString(tmp, s"#base\t$base\n" + renderEntries(entries))
-    Files.move(tmp, branchPath(key, name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  /** (fork-base version, staged entries). */
-  def readBranchManifest(key: String, name: String): (Int, Seq[FileEntry]) = {
-    val all = Files.readAllLines(branchPath(key, name)).asScala.toSeq
-    val base = all.collectFirst {
-      case l if l.startsWith("#base\t") => l.stripPrefix("#base\t").toInt
-    }.getOrElse(sys.error(s"branch $name of $key has no #base header"))
-    (base, parseEntries(all))
-  }
-
-  def dropBranch(key: String, name: String): Unit = {
-    Files.deleteIfExists(branchPath(key, name)); ()
-  }
-
-  /** Names of every staged branch of `key`. */
-  def listBranches(key: String): Seq[String] =
-    listNames(Paths.get(tableDir(key))).collect {
-      case n if n.startsWith("branch-") && n.endsWith(".manifest") =>
-        n.stripPrefix("branch-").stripSuffix(".manifest")
-    }.sorted
-
-  // ── TAGS (Iceberg's named immutable snapshot refs): a tag pins a
-  // COMMITTED version under a name — `VERSION AS OF '<tag>'` resolves
-  // through it, and VACUUM retains a tagged version's manifest and
-  // files regardless of the keepLast window (the "audited release"
-  // use: tag it and it stays reproducible). Tags are immutable:
-  // re-pointing a name is a loud error, not a silent move.
-
-  private def tagPath(key: String, name: String): Path = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"tag name '$name' must be alphanumeric")
-    // an all-digit tag would be unreachable: VERSION AS OF resolves
-    // numerics as version ids first
-    require(name.exists(!_.isDigit),
-      s"tag name '$name' must contain a non-digit")
-    Paths.get(tableDir(key), s"tag-$name.ref")
-  }
-
-  def tagExists(key: String, name: String): Boolean =
-    Files.exists(tagPath(key, name))
-
-  def createTag(key: String, name: String, v: Int): Unit =
-    commitLock.synchronized {
-      require(versions(key).contains(v),
-        s"cannot tag $key@$v: no such committed version")
-      require(!tagExists(key, name),
-        s"tag '$name' of $key already exists (tags are immutable — " +
-          "drop it first to re-point)")
-      Files.writeString(tagPath(key, name), s"$v\n"); ()
-    }
-
-  def readTag(key: String, name: String): Int =
-    Files.readString(tagPath(key, name)).trim.toInt
-
-  def dropTag(key: String, name: String): Unit = {
-    Files.deleteIfExists(tagPath(key, name)); ()
-  }
-
-  /** (name, version) of every tag of `key`. */
-  def listTags(key: String): Seq[(String, Int)] =
-    listNames(Paths.get(tableDir(key))).collect {
-      case n if n.startsWith("tag-") && n.endsWith(".ref") =>
-        n.stripPrefix("tag-").stripSuffix(".ref")
-    }.sorted.map(n => (n, readTag(key, n)))
-
-  def drop(key: String): Boolean = {
-    val d = Paths.get(tableDir(key))
-    if (!Files.exists(d)) false
-    else {
-      val walk = Files.walk(d)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally walk.close()
-      true
-    }
-  }
 
   /** Hash bucket of a row's first-column value — the group function.
     * Longs bucket by value (engine-portable, easy to reason about in
@@ -1575,4 +1568,3 @@ object RowStore {
     case other => sys.error(s"unknown partition transform $other")
   }
 }
-

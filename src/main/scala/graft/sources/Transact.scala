@@ -89,8 +89,6 @@ object Transact {
     * that. */
   private val nextId = new java.util.concurrent.atomic.AtomicLong(
     System.currentTimeMillis() << 12)
-  private val live =
-    new java.util.concurrent.ConcurrentHashMap[Long, Txn]()
 
   /** This process's identity in transaction records — what makes a
     * cross-process COMMIT/ROLLBACK attempt distinguishable from the
@@ -108,17 +106,17 @@ object Transact {
   // so a torn world (record without clones or vice versa) degrades to
   // reclaimable debris, never to wrong data.
 
-  private def txnDir(): Path = {
-    val p = Paths.get(RowStore.tableDir("_txns"))
+  private def txnDir(lake: RowStore): Path = {
+    val p = Paths.get(lake.tableDir("_txns"))
     Files.createDirectories(p)
     p
   }
-  private def recordPath(id: Long): Path = txnDir().resolve(s"txn$id")
+  private def recordPath(lake: RowStore, id: Long): Path = txnDir(lake).resolve(s"txn$id")
 
-  private def writeRecord(txn: Txn): Unit = {
+  private def writeRecord(lake: RowStore, txn: Txn): Unit = {
     val body = s"owner\t$processToken\nms\t${System.currentTimeMillis()}\n" +
       txn.tables.map(t => s"table\t$t\t${txn.bases(t)}\n").mkString
-    Files.write(recordPath(txn.id),
+    Files.write(recordPath(lake, txn.id),
       body.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       java.nio.file.StandardOpenOption.CREATE_NEW)
     ()
@@ -141,17 +139,17 @@ object Transact {
     } catch { case _: Exception => None } // concurrently deleted / torn
 
   /** Every open transaction's record, any owner. */
-  def scan(): Seq[OpenTxn] = {
-    val d = txnDir()
+  def scan(lake: RowStore): Seq[OpenTxn] = {
+    val d = txnDir(lake)
     RowStore.listNames(d).filter(_.startsWith("txn"))
       .flatMap(n => readRecord(d.resolve(n))).sortBy(_.id)
   }
 
   /** Refuse an operation on a transaction this process does not own.
-    * A missing record reads as closed/GC'd (the in-process `live`
-    * check then words the error). */
-  private def requireOwned(op: String, id: Long): Unit =
-    readRecord(recordPath(id)).foreach(r => require(r.ownedByThisProcess,
+    * A missing record reads as closed/GC'd (the in-process
+    * [[RowStore.openTxns]] check then words the error). */
+  private def requireOwned(lake: RowStore, op: String, id: Long): Unit =
+    readRecord(recordPath(lake, id)).foreach(r => require(r.ownedByThisProcess,
       s"$op: transaction $id is owned by process ${r.owner} — only " +
         "the owning process can commit or roll back (its clones are " +
         s"observable as <table>__txn$id; a dead owner's debris " +
@@ -161,17 +159,17 @@ object Transact {
     * time): drop their clones and records; bases untouched by
     * construction. Any process may run it — the intended janitor for
     * a crashed owner's debris. Returns (reclaimed, still open). */
-  def gcTransactions(ttlMs: Long): (Int, Int) =
-    RowStore.commitLock.synchronized {
+  def gcTransactions(lake: RowStore, ttlMs: Long): (Int, Int) =
+    lake.commitLock.synchronized {
       val now = System.currentTimeMillis()
-      val all = scan()
+      val all = scan(lake)
       val (expired, kept) = all.partition(o => now - o.createdMs >= ttlMs)
       expired.foreach { o =>
         o.tables.foreach { t =>
-          RowStore.drop(cloneKey(t, o.id)); ()
+          lake.drop(cloneKey(t, o.id)); ()
         }
-        Files.deleteIfExists(recordPath(o.id))
-        live.remove(o.id)
+        Files.deleteIfExists(recordPath(lake, o.id))
+        lake.openTxns.remove(o.id)
       }
       (expired.size, kept.size)
     }
@@ -181,40 +179,41 @@ object Transact {
     * begin that fails mid-way (e.g. a clone-name collision on table
     * 3 of 4) drops the clones it already made — no leaked debris
     * without a rollback handle. */
-  def begin(tables: Seq[String]): Txn = RowStore.commitLock.synchronized {
-    require(tables.nonEmpty, "begin_transaction: no tables")
-    require(tables.distinct.size == tables.size,
-      "begin_transaction: a table may appear once")
-    tables.foreach(t => require(RowStore.exists(t),
-      s"begin_transaction: $t does not exist"))
-    val id = nextId.getAndIncrement()
-    val bases = tables.map(t => t -> RowStore.currentVersion(t)).toMap
-    val metas = tables.map(t => t -> RowStore.readMeta(t)).toMap
-    val made = scala.collection.mutable.ListBuffer.empty[String]
-    val txn = Txn(id, tables, bases, metas)
-    try {
-      tables.foreach { t =>
-        RowStoreOps.snapshotTable(t, cloneKey(t, id)); made += t
+  def begin(lake: RowStore, tables: Seq[String]): Txn =
+    lake.commitLock.synchronized {
+      require(tables.nonEmpty, "begin_transaction: no tables")
+      require(tables.distinct.size == tables.size,
+        "begin_transaction: a table may appear once")
+      tables.foreach(t => require(lake.exists(t),
+        s"begin_transaction: $t does not exist"))
+      val id = nextId.getAndIncrement()
+      val bases = tables.map(t => t -> lake.currentVersion(t)).toMap
+      val metas = tables.map(t => t -> lake.readMeta(t)).toMap
+      val made = scala.collection.mutable.ListBuffer.empty[String]
+      val txn = Txn(id, tables, bases, metas)
+      try {
+        tables.foreach { t =>
+          RowStoreOps.snapshotTable(t, cloneKey(t, id)); made += t
+        }
+        writeRecord(lake, txn)
+      } catch { case e: Throwable =>
+        made.foreach(t => lake.drop(cloneKey(t, id)))
+        throw e
       }
-      writeRecord(txn)
-    } catch { case e: Throwable =>
-      made.foreach(t => RowStore.drop(cloneKey(t, id)))
-      throw e
+      lake.openTxns.put(id, txn)
+      txn
     }
-    live.put(id, txn)
-    txn
-  }
 
   /** Abandon the transaction: drop the clones and the record, bases
     * untouched. Runs under the commit lock and atomically claims the
     * id, so a rollback can never race a concurrent commit on the same
     * transaction into deleting clone files mid-adoption. */
-  def rollback(id: Long): Int = RowStore.commitLock.synchronized {
-    requireOwned("rollback_transaction", id)
-    val txn = live.remove(id)
+  def rollback(lake: RowStore, id: Long): Int = lake.commitLock.synchronized {
+    requireOwned(lake, "rollback_transaction", id)
+    val txn = lake.openTxns.remove(id)
     require(txn != null, s"rollback_transaction: no open transaction $id")
-    val n = txn.tables.count(t => RowStore.drop(cloneKey(t, id)))
-    Files.deleteIfExists(recordPath(id))
+    val n = txn.tables.count(t => lake.drop(cloneKey(t, id)))
+    Files.deleteIfExists(recordPath(lake, id))
     n
   }
 
@@ -228,20 +227,20 @@ object Transact {
     * the id dies, and the error says so — already-published tables
     * are durable, unpublished bases are untouched, and any moved-but-
     * unreferenced files are debris `remove_orphan_files` reclaims. */
-  def commit(id: Long): Seq[Int] = {
-    RowStore.commitLock.synchronized {
-      requireOwned("commit_transaction", id)
-      val txn = live.get(id)
+  def commit(lake: RowStore, id: Long): Seq[Int] = {
+    lake.commitLock.synchronized {
+      requireOwned(lake, "commit_transaction", id)
+      val txn = lake.openTxns.get(id)
       require(txn != null, s"commit_transaction: no open transaction $id")
       // phase 0 — OCC + schema validation, ALL before ANY mutation
-      val plans = txn.tables.map(t => validate(txn, t))
+      val plans = txn.tables.map(t => validate(lake, txn, t))
       // phases 1+2 mutate (file moves, links): any failure past this
       // point CLOSES the transaction — see the scaladoc contract
-      try commitAdopt(txn, plans)
+      try commitAdopt(lake, txn, plans)
       catch { case e: Throwable =>
-        txn.tables.foreach(t => RowStore.drop(cloneKey(t, id)))
-        live.remove(id)
-        Files.deleteIfExists(recordPath(id))
+        txn.tables.foreach(t => lake.drop(cloneKey(t, id)))
+        lake.openTxns.remove(id)
+        Files.deleteIfExists(recordPath(lake, id))
         throw new IllegalStateException(
           s"transaction $id failed mid-adoption and was CLOSED " +
             "(already-published tables are durable, unpublished bases " +
@@ -255,23 +254,23 @@ object Transact {
     * its begin version adopts the whole clone manifest; a base that
     * advanced validates at GROUP level and plans a rebase (see the
     * scaladoc) or refuses. Pure — no mutation. */
-  private def validate(txn: Txn, t: String): TablePlan = {
+  private def validate(lake: RowStore, txn: Txn, t: String): TablePlan = {
     val id = txn.id
     val ck = cloneKey(t, id)
     // diagnose against the BEGIN-time meta snapshot, so a concurrent
     // DDL on the base reads as the retryable conflict it is instead
     // of being blamed on the transaction (r16 review finding)
     val m0 = txn.metas(t)
-    if (RowStore.readMeta(t) != m0)
+    if (lake.readMeta(t) != m0)
       throw new java.util.ConcurrentModificationException(
         s"$t: table metadata evolved concurrently since transaction " +
           s"$id began — NOTHING was committed (all-or-nothing); " +
           "re-begin against the new schema")
-    require(RowStore.readMeta(ck) == m0,
+    require(lake.readMeta(ck) == m0,
       s"$t: schema/metadata evolved inside transaction $id — DDL " +
         "in transactions is not supported; rollback")
-    val cur = RowStore.currentVersion(t)
-    val cloneMan = RowStore.readManifest(ck, RowStore.currentVersion(ck))
+    val cur = lake.currentVersion(t)
+    val cloneMan = lake.readManifest(ck, lake.currentVersion(ck))
     if (cur == txn.bases(t)) return TablePlan(t, cur, Seq.empty, cloneMan)
     val base = txn.bases(t)
     def refuse(why: String): Nothing =
@@ -280,12 +279,12 @@ object Transact {
           s"is now at $cur and $why — NOTHING was committed " +
           "(all-or-nothing); rollback or re-begin")
     val baseMan =
-      try RowStore.readManifest(t, base)
+      try lake.readManifest(t, base)
       catch { case _: Exception =>
         refuse("the begin version's manifest is no longer retained " +
           "(cannot validate at group level)")
       }
-    val curMan = RowStore.readManifest(t, cur)
+    val curMan = lake.readManifest(t, cur)
     // ROW LINEAGE: clone-minted id ranges start at the BEGIN-time
     // counter (the clone's v0 `#nextrowid` floor). If the advanced
     // base — or an already-adopted sibling transaction — ALSO minted
@@ -298,9 +297,9 @@ object Transact {
     // ids, so a group-disjoint interloper that merely rewrote
     // existing rows still rebases cleanly on non-rowids semantics.
     if (m0.rowids) {
-      val floor = RowStore.nextRowId(ck, 0)
-      val cloneNow = RowStore.nextRowId(ck, RowStore.currentVersion(ck))
-      val baseNow = RowStore.nextRowId(t, cur)
+      val floor = lake.nextRowId(ck, 0)
+      val cloneNow = lake.nextRowId(ck, lake.currentVersion(ck))
+      val baseNow = lake.nextRowId(t, cur)
       if (cloneNow > floor && baseNow > floor)
         refuse("both the transaction and the base assigned row-id " +
           "ranges past the begin-time counter — adoption would " +
@@ -311,7 +310,7 @@ object Transact {
     // (absolute into the base's data dir) strips back to its leaf;
     // txn-written files (clone-relative) and true externals never
     // match a base entry and read as changes
-    val baseData = RowStore.dataDir(t)
+    val baseData = lake.dataDir(t)
     val cloneNorm = cloneMan.map(e =>
       if (e.name.startsWith(baseData + "/"))
         e.copy(name = e.name.stripPrefix(baseData + "/"))
@@ -350,13 +349,13 @@ object Transact {
     * transaction closes rather than retries. Single-writer-per-table
     * deployments (this harness) never hit it; a real format closes it
     * with a catalog-service CAS over the whole table set. */
-  private def commitAdopt(txn: Txn, plans: Seq[TablePlan]): Seq[Int] = {
+  private def commitAdopt(lake: RowStore, txn: Txn, plans: Seq[TablePlan]): Seq[Int] = {
     val id = txn.id
     // phase 1 — adopt: every table's next entry list, in base form
     val adopted = plans.map { plan =>
       val t = plan.table
-      val baseData = RowStore.dataDir(t)
-      val cloneData = RowStore.dataDir(cloneKey(t, id))
+      val baseData = lake.dataDir(t)
+      val cloneData = lake.dataDir(cloneKey(t, id))
       def adopt(n: String): String =
         if (!n.startsWith("/")) {
           // clone-relative = a file THIS transaction wrote: move it
@@ -371,10 +370,10 @@ object Transact {
         plan.carried ++ plan.adopt.map(e => e.copy(name = adopt(e.name))))
     }
     // phase 2 — stage all, then link all
-    val versions = RowStore.commitTables(adopted)
-    txn.tables.foreach(t => RowStore.drop(cloneKey(t, id)))
-    live.remove(id)
-    Files.deleteIfExists(recordPath(id))
+    val versions = lake.commitTables(adopted)
+    txn.tables.foreach(t => lake.drop(cloneKey(t, id)))
+    lake.openTxns.remove(id)
+    Files.deleteIfExists(recordPath(lake, id))
     versions
   }
 }

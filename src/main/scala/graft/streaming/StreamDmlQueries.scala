@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
+import graft.sources.RowStore
 import StreamingOps._
 
 /** DML-catalog streaming queries (SURVEY.md §2.9): streaming MERGE
@@ -78,7 +78,6 @@ private[streaming] object StreamDmlQueries {
     // batches × deletes). The final state is a pure relational fold
     // the oracle restates from raw orders.
     "st39_stream_merge_dv" -> ((s, d) => withStatePartitions(s) {
-      import graft.sources.RowStore
       val src = graft.Scratch.dir(s, "graft_st39_src", d)
       graft.Scratch.materializeOnce(src) {
         // the CDC stream: every seeded key (k%6=0) plus new keys
@@ -139,7 +138,8 @@ private[streaming] object StreamDmlQueries {
         .start()
       q.awaitTermination()
       val key = "graft_dml.ns.cdcdv"
-      val es = RowStore.readManifest(key, RowStore.currentVersion(key))
+      val lake = RowStore.of(s)
+      val es = lake.readManifest(key, lake.currentVersion(key))
       val dvEntries = es.filter(_.kind == "dv")
       val dvBounded = dvEntries.nonEmpty &&
         dvEntries.flatMap(_.dvTarget).distinct.size == dvEntries.size
@@ -179,7 +179,7 @@ private[streaming] object StreamDmlQueries {
     "st41_stream_ivm" -> ((s, d) => withStatePartitions(s) {
       val lifecycleTable =
         graft.sources.RowCatalogQueries.sharedLifecycle(s, d, mor = false)
-      val preV = graft.sources.RowStore.currentVersion(lifecycleTable)
+      val preV = RowStore.of(s).currentVersion(lifecycleTable)
       require(preV == 3, s"st41 expects the lifecycle at version 3, " +
         s"found $preV — a statement's write was elided at this scale")
       s.sql("DROP TABLE IF EXISTS graft_dml.ns.sivmv")
@@ -225,7 +225,7 @@ private[streaming] object StreamDmlQueries {
       // matches) must have committed a version. Fail here with a
       // clear message rather than downstream with a confusing hash
       // diff.
-      val preV = graft.sources.RowStore.currentVersion(lifecycleTable)
+      val preV = RowStore.of(s).currentVersion(lifecycleTable)
       require(preV == 3, s"st33 expects the lifecycle at version 3 " +
         s"(CREATE + INSERT/MERGE/DELETE commits), found $preV — a " +
         "statement's write was elided at this fixture scale")
@@ -283,7 +283,7 @@ private[streaming] object StreamDmlQueries {
         WHEN NOT MATCHED THEN INSERT (k, cents, status)
           VALUES (s.k, s.cents, s.status)""")
       s.sql("DELETE FROM graft_dml.ns.scdc WHERE k % 97 = 0")
-      val preV = graft.sources.RowStore.currentVersion("graft_dml.ns.scdc")
+      val preV = RowStore.of(s).currentVersion("graft_dml.ns.scdc")
       require(preV == 3, s"st38 expects the lifecycle at version 3, " +
         s"found $preV — a statement's write was elided at this scale")
       val outDir = graft.Scratch.dir(s, "graft_st38_out", d)
@@ -647,8 +647,9 @@ private[streaming] object StreamDmlQueries {
       // silver leg: one bronze COMMIT per micro-batch; the version
       // guard makes application idempotent (replay ⇒ no-op)
       val silverKey = "graft_dml.ns.silver"
+      val lake = RowStore.of(s)
       def applyBatch(batch: DataFrame, batchId: Long): Unit =
-        if (RowStore.currentVersion(silverKey) == batchId) {
+        if (lake.currentVersion(silverKey) == batchId) {
           batch.groupBy(col("user_id"))
             .agg(count(lit(1)).as("n_events"),
               max(col("event_id")).as("max_event_id"))
@@ -677,14 +678,14 @@ private[streaming] object StreamDmlQueries {
 
       // exactly-once pin: replay the LAST batch through the same path
       // — the version guard must reject it without committing
-      val lastV = RowStore.currentVersion(silverKey)
+      val lastV = lake.currentVersion(silverKey)
       val lastDiff = s.read
-        .option("from", (RowStore.currentVersion("graft_dml.ns.bronze") - 1)
+        .option("from", (lake.currentVersion("graft_dml.ns.bronze") - 1)
           .toString)
-        .option("to", RowStore.currentVersion("graft_dml.ns.bronze").toString)
+        .option("to", lake.currentVersion("graft_dml.ns.bronze").toString)
         .table("graft_dml.ns.bronze.changes")
       applyBatch(lastDiff, lastV - 1) // the batch id it was applied as
-      val replayNoop = RowStore.currentVersion(silverKey) == lastV
+      val replayNoop = lake.currentVersion(silverKey) == lastV
 
       s.table("graft_dml.ns.silver")
         .withColumn("bronze_multi_batch", lit(bronzeLast >= 1L))

@@ -9,11 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * imported (negative) spec through the cross-spec path, and a second
   * import lands under its own spec id. */
 class AddFilesSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowFiles, RowStore, RowStoreOps}
 
   private def entries(key: String) =
-    RowStore.readManifest(key, RowStore.currentVersion(key))
+    lake.readManifest(key, lake.currentVersion(key))
 
   test("import registers external parquet without copying or opening data") {
     val s = spark
@@ -29,7 +31,7 @@ class AddFilesSpec extends AnyFunSuite {
       "PARTITIONED BY (bucket(2, k))")
     s.sql("INSERT INTO graft_dml.spec.af VALUES (1, 10), (2, 20)")
     val key = "graft_dml.spec.af"
-    val dataDir = java.nio.file.Paths.get(RowStore.dataDir(key))
+    val dataDir = java.nio.file.Paths.get(lake.dataDir(key))
     val preLocal = java.nio.file.Files.list(dataDir).count()
 
     val (nFiles, nRows) = RowStoreOps.addFiles(key, ext)

@@ -10,10 +10,11 @@ import graft.sources.{BinpackOps, RowStore}
   * version committed, an oversized file splits toward the target, and
   * delta-bearing (MOR) groups are out of scope by contract. */
 class BinpackSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
 
   private def sizes(t: String): Map[String, Long] = {
-    val dir = RowStore.dataDir(t)
-    RowStore.readManifest(t, RowStore.currentVersion(t))
+    val dir = lake.dataDir(t)
+    lake.readManifest(t, lake.currentVersion(t))
       .filter(_.kind == "base")
       .map(e => e.name ->
         new java.io.File(RowStore.entryPath(dir, e.name)).length()).toMap
@@ -45,9 +46,9 @@ class BinpackSpec extends AnyFunSuite {
     // a packed table is a provable NO-OP: nothing planned, nothing
     // committed (the packed 2-row files are lone per group — a lone
     // undersized file re-written alone would be the same file)
-    val v1 = RowStore.currentVersion(t)
+    val v1 = lake.currentVersion(t)
     val (rw2, wr2, _) = BinpackOps.binpack(s, t, target)
-    assert(rw2 == 0 && wr2 == 0 && RowStore.currentVersion(t) == v1,
+    assert(rw2 == 0 && wr2 == 0 && lake.currentVersion(t) == v1,
       "second binpack must plan nothing and commit nothing")
   }
 
@@ -82,9 +83,9 @@ class BinpackSpec extends AnyFunSuite {
     s.sql(s"INSERT INTO $t VALUES (1, 10), (2, 20)")
     s.sql(s"INSERT INTO $t VALUES (3, 30)")
     s.sql(s"DELETE FROM $t WHERE k = 2") // delta record
-    val v0 = RowStore.currentVersion(t)
+    val v0 = lake.currentVersion(t)
     val (rw, wr, _) = BinpackOps.binpack(s, t, 1L << 20)
-    assert(rw == 0 && wr == 0 && RowStore.currentVersion(t) == v0,
+    assert(rw == 0 && wr == 0 && lake.currentVersion(t) == v0,
       "binpack must skip delta-bearing groups entirely " +
         "(rewrite_data_files owns them)")
     assert(s.table(t).count() == 2)

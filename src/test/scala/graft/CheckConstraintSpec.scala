@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * ALTER guard (dropping/renaming a constrained column refuses;
   * unrelated evolution passes). */
 class CheckConstraintSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.RowStore
 
@@ -34,11 +36,11 @@ class CheckConstraintSpec extends AnyFunSuite {
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('check'='v < 10')")
     s.sql(s"INSERT INTO $t SELECT id, id % 10 FROM range(0, 50)")
-    val v1 = RowStore.currentVersion(t)
+    val v1 = lake.currentVersion(t)
     intercept[Exception] {
       s.sql(s"INSERT INTO $t SELECT id, 99 FROM range(0, 5)")
     }
-    assert(RowStore.currentVersion(t) == v1,
+    assert(lake.currentVersion(t) == v1,
       "a refused write must not commit a version")
     assert(s.table(t).count() == 50)
     // SQL CHECK semantics: NULL (unknown) passes, only FALSE violates
@@ -70,11 +72,11 @@ class CheckConstraintSpec extends AnyFunSuite {
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('format'='mor', 'check'='v >= 0')")
     s.sql(s"INSERT INTO $t SELECT id, id FROM range(0, 50)")
-    val v1 = RowStore.currentVersion(t)
+    val v1 = lake.currentVersion(t)
     intercept[Exception] {
       s.sql(s"UPDATE $t SET v = -1 WHERE k % 9 = 0")
     }
-    assert(RowStore.currentVersion(t) == v1)
+    assert(lake.currentVersion(t) == v1)
     s.sql(s"UPDATE $t SET v = v + 1 WHERE k % 9 = 0") // clean one lands
     assert(s.sql(s"SELECT SUM(v) FROM $t").head().getLong(0) ==
       (0L until 50).sum + 6)

@@ -11,11 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * rewrote what the branch removed) refuses loudly and leaves the
   * branch ref intact for re-staging. */
 class CherrypickSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowStore, RowStoreOps}
 
   private def entries(key: String) =
-    RowStore.readManifest(key, RowStore.currentVersion(key))
+    lake.readManifest(key, lake.currentVersion(key))
 
   private def fresh(name: String): String = {
     val s = spark
@@ -36,11 +38,11 @@ class CherrypickSpec extends AnyFunSuite {
     intercept[java.util.ConcurrentModificationException] {
       RowStoreOps.publishBranch(t, "b")
     }
-    assert(RowStore.branchExists(t, "b"), "refusal must keep the branch")
+    assert(lake.branchExists(t, "b"), "refusal must keep the branch")
     val mainFiles = entries(t).map(_.name).toSet
     val v = RowStoreOps.cherrypickBranch(t, "b")
     assert(v == 3)
-    assert(!RowStore.branchExists(t, "b"), "pick consumes the branch")
+    assert(!lake.branchExists(t, "b"), "pick consumes the branch")
     // main's files all survive; the branch added new ones
     val post = entries(t).map(_.name).toSet
     assert(mainFiles.subsetOf(post))
@@ -73,7 +75,7 @@ class CherrypickSpec extends AnyFunSuite {
     val victim = e1.head
     // stage a branch that removed one base file (the compaction /
     // delete-on-branch shape the append path never produces)
-    RowStore.writeBranchManifest(t, "b", 1, e1.filterNot(_ == victim))
+    lake.writeBranchManifest(t, "b", 1, e1.filterNot(_ == victim))
     s.sql(s"INSERT INTO $t SELECT id + 2000, id FROM range(0, 20)") // append
     val v = RowStoreOps.cherrypickBranch(t, "b")
     assert(v == 3)
@@ -96,8 +98,8 @@ class CherrypickSpec extends AnyFunSuite {
     }
     // all-or-nothing: t1 (whose branch WAS publishable) committed
     // nothing, both refs survive
-    assert(RowStore.currentVersion(t1) == 1)
-    assert(RowStore.branchExists(t1, "b") && RowStore.branchExists(t2, "b"))
+    assert(lake.currentVersion(t1) == 1)
+    assert(lake.branchExists(t1, "b") && lake.branchExists(t2, "b"))
     // a table may appear once per call
     intercept[IllegalArgumentException] {
       RowStoreOps.publishBranches(Seq(t1 -> "b", t1 -> "b"))
@@ -115,7 +117,7 @@ class CherrypickSpec extends AnyFunSuite {
     val s = spark
     val t = fresh("cp4")
     val e1 = entries(t)
-    RowStore.writeBranchManifest(t, "b", 1, e1.tail)
+    lake.writeBranchManifest(t, "b", 1, e1.tail)
     // COW DELETE rewrites the groups holding even keys — every base
     // file is replaced, so the branch's removal target is gone
     s.sql(s"DELETE FROM $t WHERE k % 2 = 0")
@@ -125,7 +127,7 @@ class CherrypickSpec extends AnyFunSuite {
     intercept[java.util.ConcurrentModificationException] {
       RowStoreOps.cherrypickBranch(t, "b")
     }
-    assert(RowStore.branchExists(t, "b"), "refusal must keep the branch")
+    assert(lake.branchExists(t, "b"), "refusal must keep the branch")
     assert(entries(t) == pre, "refusal must not commit")
   }
 }

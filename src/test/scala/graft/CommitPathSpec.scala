@@ -19,6 +19,8 @@ import graft.sources.{RowStore, RowStoreOps}
   * metadata lives only in the published versions: a CREATE or ALTER
   * whose publish is lost leaves no trace of its metadata. */
 class CommitPathSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
 
   /** Runs `body` with both hooks counting; returns (preCommit,
@@ -26,12 +28,12 @@ class CommitPathSpec extends AnyFunSuite {
   private def counted(body: => Unit): (Int, Int) = {
     val pre = new AtomicInteger(0)
     val pub = new AtomicInteger(0)
-    RowStore.preCommitHook = () => { pre.incrementAndGet(); () }
-    RowStore.prePublishHook = () => { pub.incrementAndGet(); () }
+    lake.preCommitHook = () => { pre.incrementAndGet(); () }
+    lake.prePublishHook = () => { pub.incrementAndGet(); () }
     try body
     finally {
-      RowStore.preCommitHook = () => ()
-      RowStore.prePublishHook = () => ()
+      lake.preCommitHook = () => ()
+      lake.prePublishHook = () => ()
     }
     (pre.get(), pub.get())
   }
@@ -62,9 +64,9 @@ class CommitPathSpec extends AnyFunSuite {
       StructField("v", LongType)))
 
     def once(table: String, what: String)(op: => Unit): Unit = {
-      val before = RowStore.currentVersion(table)
+      val before = lake.currentVersion(table)
       val (pre, pub) = counted(op)
-      assert(RowStore.currentVersion(table) == before + 1,
+      assert(lake.currentVersion(table) == before + 1,
         s"$what must publish exactly one version")
       assert((pre, pub) == ((1, 1)),
         s"$what: preCommit/prePublish calls = ($pre, $pub), want (1, 1)")
@@ -99,9 +101,9 @@ class CommitPathSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10)")
-    val before = RowStore.versions(t)
-    val saved = RowStore.publisher
-    RowStore.publisher = new RowStore.ManifestPublisher {
+    val before = lake.versions(t)
+    val saved = lake.publisher
+    lake.publisher = new RowStore.ManifestPublisher {
       def publishIfAbsent(target: Path, staged: Path): Unit = {
         Files.deleteIfExists(staged)
         throw new java.nio.file.FileAlreadyExistsException(target.toString)
@@ -113,10 +115,10 @@ class CommitPathSpec extends AnyFunSuite {
           RowStoreOps.rollback(t, 0)
         }
         ()
-      } finally RowStore.publisher = saved
+      } finally lake.publisher = saved
     assert(pub == RowStore.MaxCommitAttempts,
       s"one prePublish call per attempt, saw $pub")
-    assert(RowStore.versions(t) == before, "nothing may publish")
+    assert(lake.versions(t) == before, "nothing may publish")
     s.sql(s"DROP TABLE $t")
   }
 
@@ -130,9 +132,9 @@ class CommitPathSpec extends AnyFunSuite {
   }
 
   private def losing[T](body: => T): T = {
-    val saved = RowStore.publisher
-    RowStore.publisher = alwaysLoses
-    try body finally RowStore.publisher = saved
+    val saved = lake.publisher
+    lake.publisher = alwaysLoses
+    try body finally lake.publisher = saved
   }
 
   test("a lost CREATE leaves the name free") {
@@ -141,12 +143,12 @@ class CommitPathSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE IF EXISTS $t")
     val ddl = s"CREATE TABLE $t (k BIGINT, v BIGINT)"
     losing { intercept[Exception] { s.sql(ddl) } }
-    assert(!RowStore.exists(t), "a CREATE that never published is no table")
+    assert(!lake.exists(t), "a CREATE that never published is no table")
     val shown = s.sql("SHOW TABLES IN graft_dml.spec").collect()
       .map(_.getAs[String]("tableName")).toSeq
     assert(!shown.contains("cpath_lost_create"), s"SHOW TABLES: $shown")
     s.sql(ddl)
-    assert(RowStore.versions(t) == Seq(0))
+    assert(lake.versions(t) == Seq(0))
     assert(s.table(t).schema.fieldNames.toSeq == Seq("k", "v"))
     s.sql(s"DROP TABLE $t")
   }
@@ -157,15 +159,15 @@ class CommitPathSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10)")
-    val before = RowStore.versions(t)
+    val before = lake.versions(t)
     losing {
       intercept[RowStore.CommitConflictException] {
         s.sql(s"ALTER TABLE $t ADD COLUMNS (w BIGINT)")
       }
     }
-    assert(RowStore.versions(t) == before, "nothing may publish")
-    val head = RowStore.versionMeta(t, RowStore.currentVersion(t))
-    assert(RowStore.readMeta(t) == head)
+    assert(lake.versions(t) == before, "nothing may publish")
+    val head = lake.versionMeta(t, lake.currentVersion(t))
+    assert(lake.readMeta(t) == head)
     assert(head.schema.fieldNames.toSeq == Seq("k", "v"))
     s.sql(s"DROP TABLE $t")
   }
@@ -188,9 +190,9 @@ class CommitPathSpec extends AnyFunSuite {
       bloomCols = Seq("k", "s.f"), dv = true, ndvCols = Seq("cents"),
       check = "k = 1\tOR cents >= 0", rowids = true,
       gen = "d: CAST(cents AS DECIMAL(12, 2)) =\t1")
-    RowStore.create(t, m)
-    assert(RowStore.readMeta(t) == m)
-    RowStore.drop(t)
+    lake.create(t, m)
+    assert(lake.readMeta(t) == m)
+    lake.drop(t)
   }
 
   test("a manifest without a metadata header is refused by name") {
@@ -200,13 +202,13 @@ class CommitPathSpec extends AnyFunSuite {
     s.sql(s"CREATE TABLE $t (k BIGINT)")
     // a manifest in the earlier layout: metadata lived in a separate
     // file, so the header has no #meta lines
-    val v0 = Paths.get(RowStore.dataDir(t)).getParent.resolve("v0.manifest")
+    val v0 = Paths.get(lake.dataDir(t)).getParent.resolve("v0.manifest")
     Files.write(v0, Files.readAllLines(v0).asScala
       .filterNot(_.startsWith("#meta\t")).asJava)
-    val e = intercept[IllegalArgumentException](RowStore.readMeta(t))
+    val e = intercept[IllegalArgumentException](lake.readMeta(t))
     assert(e.getMessage.contains("no #meta header"), e.getMessage)
     assert(e.getMessage.contains("older format"), e.getMessage)
-    RowStore.drop(t)
+    lake.drop(t)
   }
 
   test("publish_branches and a transaction commit publish each table once through the hooks") {
@@ -220,9 +222,9 @@ class CommitPathSpec extends AnyFunSuite {
     // each table gains exactly one version, with one preCommit call
     // for the whole publish and one prePublish call per table
     def oncePerTable(what: String, tables: Seq[String])(op: => Unit): Unit = {
-      val before = tables.map(RowStore.currentVersion)
+      val before = tables.map(lake.currentVersion)
       val (pre, pub) = counted(op)
-      assert(tables.map(RowStore.currentVersion) == before.map(_ + 1),
+      assert(tables.map(lake.currentVersion) == before.map(_ + 1),
         s"$what must publish exactly one version per table")
       assert((pre, pub) == ((1, tables.size)),
         s"$what: preCommit/prePublish calls = ($pre, $pub)")
@@ -233,12 +235,12 @@ class CommitPathSpec extends AnyFunSuite {
     oncePerTable("publish_branches", Seq(a, b)) {
       RowStoreOps.publishBranches(Seq(a -> "audit", b -> "audit")); ()
     }
-    val txn = graft.sources.Transact.begin(Seq(a, b))
+    val txn = graft.sources.Transact.begin(lake, Seq(a, b))
     for (t <- Seq(a, b))
       s.sql(s"INSERT INTO ${graft.sources.Transact.cloneKey(t, txn.id)} " +
         "VALUES (3, 30)")
     oncePerTable("commit_transaction", Seq(a, b)) {
-      graft.sources.Transact.commit(txn.id); ()
+      graft.sources.Transact.commit(lake, txn.id); ()
     }
     for (t <- Seq(a, b)) {
       assert(s.table(t).orderBy("k").collect().map(_.getLong(0)).toSeq ==
@@ -252,13 +254,13 @@ class CommitPathSpec extends AnyFunSuite {
     val t = "graft_dml.spec.cpath_dvline"
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT)")
-    val v0 = Paths.get(RowStore.dataDir(t)).getParent.resolve("v0.manifest")
+    val v0 = Paths.get(lake.dataDir(t)).getParent.resolve("v0.manifest")
     // a vector entry naming its target but not its popcount
     Files.write(v0, (Files.readAllLines(v0).asScala :+
       "dv\t0\tdv0-x.bin\tDpart-0.parquet").asJava)
-    val e = intercept[IllegalArgumentException](RowStore.readManifest(t, 0))
+    val e = intercept[IllegalArgumentException](lake.readManifest(t, 0))
     assert(e.getMessage.contains("corrupt manifest line"), e.getMessage)
-    RowStore.drop(t)
+    lake.drop(t)
   }
 
   test("only RowStore runs the commit hooks") {

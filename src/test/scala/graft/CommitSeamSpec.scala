@@ -15,12 +15,13 @@ import graft.sources.RowStore
   * exactly one winner per version, losers loudly conflicted, staged
   * temps consumed either way. */
 class CommitSeamSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
 
   test("full DML lifecycle publishes through the conditional-PUT impl") {
     val s = SparkSuite.spark
     val t = "graft_dml.seam.a"
     s.sql(s"DROP TABLE IF EXISTS $t")
-    RowStore.publisher = new RowStore.CasPublisher
+    lake.publisher = new RowStore.CasPublisher
     try {
       s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
         "TBLPROPERTIES ('format'='mor','deletes'='dv')")
@@ -32,9 +33,9 @@ class CommitSeamSpec extends AnyFunSuite {
         Seq((1L, 10L), (2L, 21L)),
         "every commit of the lifecycle must have published through " +
           "the CAS seam")
-      assert(RowStore.currentVersion(t) == 3)
+      assert(lake.currentVersion(t) == 3)
     } finally {
-      RowStore.publisher = RowStore.HardLinkPublisher
+      lake.publisher = RowStore.HardLinkPublisher
       s.sql(s"DROP TABLE IF EXISTS $t")
     }
   }
@@ -46,28 +47,28 @@ class CommitSeamSpec extends AnyFunSuite {
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10)")
     val key = t
-    val entries = RowStore.readManifest(key, RowStore.currentVersion(key))
-    val meta = RowStore.readMeta(key)
+    val entries = lake.readManifest(key, lake.currentVersion(key))
+    val meta = lake.readMeta(key)
     for (publisher <- Seq[RowStore.ManifestPublisher](
         RowStore.HardLinkPublisher, new RowStore.CasPublisher)) {
-      RowStore.publisher = publisher
+      lake.publisher = publisher
       try {
         // each round publishes a FRESH version number (no file
         // deletion between rounds — a deleted-then-reread version
         // would serve the first round's manifest CACHE and make the
         // second round's content assertion vacuous)
-        val v = RowStore.currentVersion(key) + 1
+        val v = lake.currentVersion(key) + 1
         // two writers stage the same next version, then race the
         // publish from two threads: the seam's contract is exactly
         // one success and one CommitConflictException — on EITHER
         // implementation
-        val s1 = RowStore.stageManifest(key, v, meta, entries)
-        val s2 = RowStore.stageManifest(key, v, meta, entries)
+        val s1 = lake.stageManifest(key, v, meta, entries)
+        val s2 = lake.stageManifest(key, v, meta, entries)
         assert(s1 != s2, "staging must be private per writer")
         val outcomes =
           new java.util.concurrent.ConcurrentLinkedQueue[String]()
         val threads = Seq(s1, s2).map(st => new Thread(() =>
-          try { RowStore.publishStaged(key, v, st); outcomes.add("ok") }
+          try { lake.publishStaged(key, v, st); outcomes.add("ok") }
           catch {
             case _: RowStore.CommitConflictException =>
               outcomes.add("conflict")
@@ -83,10 +84,10 @@ class CommitSeamSpec extends AnyFunSuite {
         assert(!java.nio.file.Files.exists(s1) &&
           !java.nio.file.Files.exists(s2),
           "publish must consume the staged temp on both paths")
-        assert(RowStore.readManifest(key, v) == entries,
+        assert(lake.readManifest(key, v) == entries,
           s"${publisher.getClass.getSimpleName}: published v$v must " +
             "read back as the staged content")
-      } finally RowStore.publisher = RowStore.HardLinkPublisher
+      } finally lake.publisher = RowStore.HardLinkPublisher
     }
     s.sql(s"DROP TABLE IF EXISTS $t")
   }

@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * fact about the load, not the current layout), and the MOR refusal
   * is the add_files rule. */
 class CopyIntoSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowStore, RowStoreOps}
 
@@ -25,7 +27,7 @@ class CopyIntoSpec extends AnyFunSuite {
     // them) — the rewrite materializes the rows into owned files and
     // drops the absolute references from the manifest
     s.sql(s"DELETE FROM $t WHERE k % 7 = 0")
-    val man = RowStore.readManifest(t, RowStore.currentVersion(t))
+    val man = lake.readManifest(t, lake.currentVersion(t))
     assert(!man.exists(_.name.startsWith("/")),
       "fixture must rewrite the imported references")
     // a re-run must STILL skip: the load log, not the manifest, is
@@ -47,7 +49,7 @@ class CopyIntoSpec extends AnyFunSuite {
     // simulate the crash window: the manifest committed but the log
     // write never happened
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
-      graft.sources.RowStore.dataDir(t)).getParent.resolve("ingest.log"))
+      lake.dataDir(t)).getParent.resolve("ingest.log"))
     val (n2, _, sk2) = RowStoreOps.copyInto(t, dir)
     assert(n2 == 0 && sk2 == 2,
       s"manifest history must stand in for the lost log: new=$n2")

@@ -29,9 +29,11 @@ import graft.sources.{RowStore, RowStoreOps}
   *     advisor's residual-hazard fix).
   */
 class CrashRecoverySpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
 
+  /** `key`'s data files, in the lake of the active session. */
   private def dataFiles(key: String): Set[String] = {
-    val d = Paths.get(RowStore.dataDir(key))
+    val d = Paths.get(RowStore.forKey(key).dataDir(key))
     val stream = Files.list(d)
     try stream.iterator().asScala.map(_.getFileName.toString)
       .filter(!_.startsWith(".")).toSet
@@ -39,15 +41,14 @@ class CrashRecoverySpec extends AnyFunSuite {
   }
 
   test("COW writer killed before publish: invisible, swept, re-runnable") {
-    val s = SparkSuite.spark
     val root = Files.createTempDirectory("graft-crash").toString
-    System.setProperty("graft.warehouse.root", root)
-    try {
+    XProc.withWarehouse(root) { s =>
+      val lake = RowStore.of(s)
       s.sql("DROP TABLE IF EXISTS graft_dml.cr.t")
       s.sql("CREATE TABLE graft_dml.cr.t (k BIGINT, v BIGINT)")
       s.sql("INSERT INTO graft_dml.cr.t VALUES (1, 10), (2, 20)")
       val key = "graft_dml.cr.t"
-      val v0 = RowStore.currentVersion(key)
+      val v0 = lake.currentVersion(key)
       val before = dataFiles(key)
 
       // the worker dies AFTER its tasks landed files, BEFORE the
@@ -58,7 +59,7 @@ class CrashRecoverySpec extends AnyFunSuite {
         Map("graft.halt.at" -> "preCommit")), expect = 42)
 
       // no manifest advanced; the landed debris is invisible to reads
-      assert(RowStore.currentVersion(key) == v0,
+      assert(lake.currentVersion(key) == v0,
         "a killed writer must not advance the version")
       assert(s.table(key).count() == 2)
       val debris = dataFiles(key) -- before
@@ -75,20 +76,16 @@ class CrashRecoverySpec extends AnyFunSuite {
 
       // the killed statement re-runs cleanly — nothing poisoned
       s.sql("INSERT INTO graft_dml.cr.t VALUES (3, 30), (4, 40)")
-      assert(RowStore.currentVersion(key) == v0 + 1)
+      assert(lake.currentVersion(key) == v0 + 1)
       assert(s.table(key).orderBy("k").collect().map(_.getLong(1)).toSeq ==
         Seq(10L, 20L, 30L, 40L))
-    } finally {
-      System.clearProperty("graft.warehouse.root")
-      Scratch.deleteTree(root)
     }
   }
 
   test("MOR dv writer killed before publish: delta/dv debris swept") {
-    val s = SparkSuite.spark
     val root = Files.createTempDirectory("graft-crash").toString
-    System.setProperty("graft.warehouse.root", root)
-    try {
+    XProc.withWarehouse(root) { s =>
+      val lake = RowStore.of(s)
       for (t <- Seq("t", "src")) s.sql(s"DROP TABLE IF EXISTS graft_dml.cr.$t")
       s.sql("CREATE TABLE graft_dml.cr.t (k BIGINT, v BIGINT) " +
         "TBLPROPERTIES ('format'='mor', 'deletes'='dv')")
@@ -97,7 +94,7 @@ class CrashRecoverySpec extends AnyFunSuite {
       s.sql("CREATE TABLE graft_dml.cr.src (k BIGINT)")
       s.sql("INSERT INTO graft_dml.cr.src VALUES (1), (2), (3)")
       val key = "graft_dml.cr.t"
-      val v0 = RowStore.currentVersion(key)
+      val v0 = lake.currentVersion(key)
       val before = dataFiles(key)
 
       // prePublish = the LATEST kill point: delta files landed from
@@ -110,7 +107,7 @@ class CrashRecoverySpec extends AnyFunSuite {
            WHEN MATCHED THEN DELETE"""),
         Map("graft.halt.at" -> "prePublish")), expect = 42)
 
-      assert(RowStore.currentVersion(key) == v0)
+      assert(lake.currentVersion(key) == v0)
       assert(s.table(key).count() == 8,
         "reads must not see the killed MERGE's deltas or vectors")
       val debris = dataFiles(key) -- before
@@ -128,9 +125,6 @@ class CrashRecoverySpec extends AnyFunSuite {
         (r.getLong(0), r.getLong(1))).toSeq ==
         Seq((0L, 0L), (1L, 999L)) ++ (4 until 8).map(i =>
           (i.toLong, i * 10L)))
-    } finally {
-      System.clearProperty("graft.warehouse.root")
-      Scratch.deleteTree(root)
     }
   }
 
@@ -149,20 +143,20 @@ class CrashRecoverySpec extends AnyFunSuite {
     // (before the second table's link) — the sharpest window the r14
     // verdict named for q176
     val links = new java.util.concurrent.atomic.AtomicInteger(0)
-    RowStore.prePublishHook = () =>
+    lake.prePublishHook = () =>
       if (links.incrementAndGet() == 2) sys.error(s"injected crash after $ka")
     val e =
       try intercept[RuntimeException] {
         RowStoreOps.publishBranches(Seq((ka, "audit"), (kb, "audit")))
-      } finally RowStore.prePublishHook = () => ()
+      } finally lake.prePublishHook = () => ()
     assert(e.getMessage.contains("injected crash"), e.getMessage)
     // partial state is EXACTLY as documented: the linked table is
     // published (branch consumed), the other still fully staged
-    assert(RowStore.currentVersion(ka) == 2 &&
-      !RowStore.branchExists(ka, "audit"),
+    assert(lake.currentVersion(ka) == 2 &&
+      !lake.branchExists(ka, "audit"),
       "first table must be published with its branch consumed")
-    assert(RowStore.currentVersion(kb) == 1 &&
-      RowStore.branchExists(kb, "audit"),
+    assert(lake.currentVersion(kb) == 1 &&
+      lake.branchExists(kb, "audit"),
       "second table must remain staged, nothing torn")
     assert(s.table(kb).count() == 1,
       "readers of the staged table must not see branch rows")
@@ -170,8 +164,8 @@ class CrashRecoverySpec extends AnyFunSuite {
     // terminal state an uninterrupted publish would have
     RowStoreOps.publishBranches(Seq((kb, "audit")))
     for (t <- Seq(ka, kb)) {
-      assert(RowStore.currentVersion(t) == 2)
-      assert(!RowStore.branchExists(t, "audit"))
+      assert(lake.currentVersion(t) == 2)
+      assert(!lake.branchExists(t, "audit"))
       assert(s.table(t).orderBy("k").collect().map(_.getLong(0)).toSeq ==
         Seq(1L, 3L, 4L), s"terminal content of $t")
     }
@@ -186,7 +180,7 @@ class CrashRecoverySpec extends AnyFunSuite {
     s.range(0, 20).selectExpr("id AS k", "id AS v")
       .repartition(2).write.mode("overwrite").parquet(dir)
     RowStoreOps.copyInto(t, dir)
-    val logP = Paths.get(RowStore.dataDir(t)).getParent.resolve("ingest.log")
+    val logP = Paths.get(lake.dataDir(t)).getParent.resolve("ingest.log")
     val healthy = Files.readAllLines(logP).asScala.toSet
     assert(healthy.size == 2)
     // crash window: manifest committed, log write lost
@@ -215,9 +209,9 @@ class CrashRecoverySpec extends AnyFunSuite {
       .map(_.toString).filter(_.endsWith(".parquet")).toSeq
     assert(ext.size == 1)
     // stage a branch that registers the external file...
-    val base = RowStore.currentVersion(t)
-    val (_, baseEntries) = (base, RowStore.readManifest(t, base))
-    RowStore.writeBranchManifest(t, "imp", base, baseEntries ++ Seq(
+    val base = lake.currentVersion(t)
+    val (_, baseEntries) = (base, lake.readManifest(t, base))
+    lake.writeBranchManifest(t, "imp", base, baseEntries ++ Seq(
       RowStore.FileEntry("base", 0, ext.head, rows = Some(10L),
         spec = -1)))
     // ...then an interleaved main commit registers the SAME file

@@ -11,11 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * interleave still ordered (resurrection semantics survive the
   * vector encoding). */
 class DeletionVectorSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.RowStore
 
   private def entries(key: String) =
-    RowStore.readManifest(key, RowStore.currentVersion(key))
+    lake.readManifest(key, lake.currentVersion(key))
 
   test("one vector per touched file; second delete merges, not stacks") {
     val s = spark
@@ -121,7 +123,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(got == want)
     // the DV'd snapshot before the re-insert: 3 absent, 4 absent
     val key = t
-    val vPre = RowStore.currentVersion(key) - 1
+    val vPre = lake.currentVersion(key) - 1
     assert(s.sql(s"SELECT k FROM $t VERSION AS OF $vPre")
       .collect().map(_.getLong(0)).sorted.toSeq ==
       Seq(0L, 1L, 5L, 6L, 7L, 8L, 9L))
@@ -199,9 +201,9 @@ class DeletionVectorSpec extends AnyFunSuite {
       s.range(rows).selectExpr("id AS k", "id * 10 AS v")
         .writeTo(t).append()
       var bytes = -1L
-      RowStore.commitBytesProbe = b => bytes = b
+      lake.commitBytesProbe = b => bytes = b
       try s.sql(s"DELETE FROM $t WHERE k % 2 = 0")
-      finally RowStore.commitBytesProbe = null
+      finally lake.commitBytesProbe = null
       assert(bytes > 0, "the delete commit must report its payload")
       val e = entries(t)
       val nBase = e.count(_.kind == "base")

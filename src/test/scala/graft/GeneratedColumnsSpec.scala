@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * generated partition column, and refuse at DDL anything that would
   * break the binding. */
 class GeneratedColumnsSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.RowStoreOps
 
@@ -91,7 +93,7 @@ class GeneratedColumnsSpec extends AnyFunSuite {
       "PARTITIONED BY (bucket(4, b)) " +
       "TBLPROPERTIES ('generated'='b: cents % 4')")
     s.sql(s"INSERT INTO $t (k, cents) SELECT id, id * 7 FROM range(40)")
-    val man = RowStore.readManifest(t, RowStore.currentVersion(t))
+    val man = lake.readManifest(t, lake.currentVersion(t))
     assert(man.map(_.group).distinct.size == 4,
       "computed values must spread the declared bucket space")
     // every row sits in the group its COMPUTED value hashes to

@@ -90,8 +90,9 @@ class GraftSessionSpec extends AnyFunSuite {
 
   /** `file:line: text` for every line of `src/main` outside the
     * `exempt` file names that contains one of `banned`. */
-  private def sourceHits(banned: Seq[String], exempt: Set[String]): Seq[String] = {
-    val main = Paths.get("src/main/scala")
+  private def sourceHits(banned: Seq[String], exempt: Set[String],
+      dir: String = "src/main/scala"): Seq[String] = {
+    val main = Paths.get(dir)
     assert(Files.isDirectory(main), s"run from the repository root: $main")
     val files = Files.walk(main).iterator.asScala
       .filter(_.toString.endsWith(".scala"))
@@ -140,6 +141,23 @@ class GraftSessionSpec extends AnyFunSuite {
   test("only Tables decides how to spread an under-split input") {
     val hits = sourceHits(Seq("defaultParallelism", "getNumPartitions",
       "spreadSmall", "spreadNarrowScan"), Set("Tables.scala"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("the RowStore object holds no lake state; no JVM property roots a lake") {
+    // member declarations sit at indent <= 4 (the object's and its
+    // nested codecs'); deeper `var`s are locals of pure functions
+    val obj = Files.readAllLines(
+      Paths.get("src/main/scala/graft/sources/RowStore.scala")).asScala
+      .zipWithIndex.dropWhile(!_._1.startsWith("object RowStore"))
+    assert(obj.nonEmpty)
+    val state = obj.collect { case (l, i) if
+        Seq("new Object", "lru[", "Atomic").exists(l.contains) ||
+          (l.contains("var ") && l.takeWhile(_ == ' ').length <= 4) =>
+      s"RowStore.scala:${i + 1}: $l" }
+    assert(state.isEmpty, state.mkString("\n"))
+    val hits = sourceHits(Seq(Seq("graft", "warehouse", "root").mkString(".")),
+      Set.empty, dir = "src")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

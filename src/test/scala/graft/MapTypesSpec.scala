@@ -12,11 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * travel; the stats machinery and key guard refuse map columns
   * loudly. */
 class MapTypesSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowFiles, RowStore}
 
   private def entries(key: String) =
-    RowStore.readManifest(key, RowStore.currentVersion(key))
+    lake.readManifest(key, lake.currentVersion(key))
 
   test("map round-trip through insert + COW merge + time travel") {
     val s = spark
@@ -48,7 +50,7 @@ class MapTypesSpec extends AnyFunSuite {
       .head().getMap[String, Any](0) == Map("a" -> 1L, "b" -> 2L))
 
     // storage: one parquet BINARY blob per row
-    val dir = RowStore.dataDir(t)
+    val dir = lake.dataDir(t)
     val f = entries(t).filter(_.kind == "base").head.name
     val (_, msg) = RowFiles.footerMeta(s"$dir/$f")
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -154,7 +156,7 @@ class MapTypesSpec extends AnyFunSuite {
     assert(rows(1).getLong(1) == 8L && rows(1).isNullAt(2))
     assert(rows(2).isNullAt(1) && rows(2).isNullAt(2)) // NULL struct
     // the struct's map leaf stores as a flat BINARY column "props.bag"
-    val dir = sources.RowStore.dataDir(t)
+    val dir = lake.dataDir(t)
     val f = entries(t).filter(_.kind == "base").head.name
     val (_, msg) = sources.RowFiles.footerMeta(s"$dir/$f")
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName

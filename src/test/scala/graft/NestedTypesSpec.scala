@@ -11,11 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * from structs of NULLs, dropped nested paths are blacklisted against
   * re-add, and the MOR delta path carries struct rows. */
 class NestedTypesSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowFiles, RowStore}
 
   private def entries(key: String) =
-    RowStore.readManifest(key, RowStore.currentVersion(key))
+    lake.readManifest(key, lake.currentVersion(key))
 
   test("leaves store flattened; rename is metadata-only name mapping") {
     val s = spark
@@ -27,7 +29,7 @@ class NestedTypesSpec extends AnyFunSuite {
     s.sql(s"INSERT INTO $t VALUES " +
       "(1, named_struct('cents', 10L, 'status', 'a')), " +
       "(2, named_struct('cents', 20L, 'status', 'b'))")
-    val dir = RowStore.dataDir(t)
+    val dir = lake.dataDir(t)
     val pre = entries(t).filter(_.kind == "base").map(_.name).toSet
     // files store marker + dotted leaves, never a parquet group
     val (_, msg) = RowFiles.footerMeta(s"$dir/${pre.head}")
@@ -114,15 +116,15 @@ class NestedTypesSpec extends AnyFunSuite {
     val got = s.sql(s"SELECT CAST(COUNT(*) AS BIGINT) FROM $t " +
       "WHERE props.band >= 100 AND props.band < 200").head().getLong(0)
     assert(got == 50)
-    val planned = RowStore.lastPlannedBaseFiles.get()
-    val skipped = RowStore.lastSkippedBaseFiles.get()
+    val planned = lake.lastPlannedBaseFiles.get()
+    val skipped = lake.lastSkippedBaseFiles.get()
     assert(planned == 2 && skipped == 4,
       s"nested-leaf zone maps must prune to one commit's files: " +
         s"planned $planned skipped $skipped")
     // bloom point lookup on the nested leaf skips the band-miss files
     assert(s.sql(s"SELECT COUNT(*) FROM $t WHERE props.band = 205")
       .head().getLong(0) == 5)
-    assert(RowStore.lastSkippedBaseFiles.get() >= 4)
+    assert(lake.lastSkippedBaseFiles.get() >= 4)
     // the ndv surface covers the nested leaf exactly (30 distinct
     // bands, far under the sketch's K — the fold is exact)
     val cs = s.table(s"$t.column_stats")

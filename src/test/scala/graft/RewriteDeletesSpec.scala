@@ -10,14 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * minting), eq-delete records survive as records, and every read —
   * head and time travel — is observationally unchanged. */
 class RewriteDeletesSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowFiles, RowResolve, RowStore, RowStoreOps}
 
   private def entries(key: String) =
-    RowStore.readManifest(key, RowStore.currentVersion(key))
+    lake.readManifest(key, lake.currentVersion(key))
 
   private def opsOf(key: String, leaf: String): Seq[Int] = {
-    val dir = RowStore.dataDir(key)
+    val dir = lake.dataDir(key)
     RowFiles.readRows(s"$dir/$leaf", RowResolve.DeltaMetaFields.take(1))
       .map(_(0).asInstanceOf[java.lang.Integer].intValue).toSeq
   }
@@ -81,7 +83,7 @@ class RewriteDeletesSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(postContent == preContent)
     // ...and via time travel to the pre-fold version
-    val pv = RowStore.currentVersion(t) - 1
+    val pv = lake.currentVersion(t) - 1
     assert(s.sql(s"SELECT k, v FROM $t VERSION AS OF $pv ORDER BY k")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == preContent)
     // idempotent: nothing left to fold

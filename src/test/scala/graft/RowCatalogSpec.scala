@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * statement's end state is asserted against values computed here —
   * tiny fixture, exact expectations. */
 class RowCatalogSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
 
   test("UPDATE, DELETE and catalog plumbing against the DML catalog") {
@@ -77,7 +79,7 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("INSERT INTO graft_dml.spec.cow VALUES " +
       (0 until 16).map(i => s"($i, ${i * 10}, 't')").mkString(", "))
     val key = "graft_dml.spec.cow"
-    val v1 = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val v1 = lake.readManifest(key, lake.currentVersion(key))
     def files(m: Seq[RowStore.FileEntry], g: Int): Seq[String] =
       m.filter(e => e.kind == "base" && e.group == g).map(_.name)
     assert((0 until 4).forall(g => files(v1, g).size == 1),
@@ -92,7 +94,7 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("""MERGE INTO graft_dml.spec.cow t
       USING graft_dml.spec.cow_src s ON t.k = s.k
       WHEN MATCHED THEN UPDATE SET v = t.v + s.dv""")
-    val v2 = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val v2 = lake.readManifest(key, lake.currentVersion(key))
     for (g <- Seq(0, 1, 3))
       assert(files(v2, g) == files(v1, g),
         s"group $g was rewritten by a MERGE that never matched it")
@@ -121,10 +123,10 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("INSERT INTO graft_dml.spec.mor VALUES " +
       (0 until 8).map(i => s"($i, ${i * 10})").mkString(", "))
     val key = "graft_dml.spec.mor"
-    val v1 = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val v1 = lake.readManifest(key, lake.currentVersion(key))
 
     s.sql("UPDATE graft_dml.spec.mor SET v = v + 7 WHERE k % 2 = 0")
-    val v2 = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val v2 = lake.readManifest(key, lake.currentVersion(key))
     assert(v2.filter(_.kind == "base") == v1.filter(_.kind == "base"),
       "MOR must not rewrite base files")
     // matched keys {0,2,4,6} live in groups {0,2}: exactly one
@@ -143,7 +145,7 @@ class RowCatalogSpec extends AnyFunSuite {
     // DELETE also lands as a delta; inserts via MERGE get fresh row
     // ids that later statements can hit
     s.sql("DELETE FROM graft_dml.spec.mor WHERE k = 3")
-    val v3 = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val v3 = lake.readManifest(key, lake.currentVersion(key))
     assert(v3.filter(_.kind == "base") == v1.filter(_.kind == "base"))
     assert(s.table("graft_dml.spec.mor").count() == 7)
     s.sql("DROP TABLE graft_dml.spec.mor")
@@ -160,14 +162,14 @@ class RowCatalogSpec extends AnyFunSuite {
     // deltas land in groups {0, 2} only; groups {1, 3} stay clean
     s.sql("UPDATE graft_dml.spec.opt SET v = v + 7 WHERE k % 2 = 0")
     val key = "graft_dml.spec.opt"
-    val before = RowStore.readManifest(key, RowStore.currentVersion(key))
-    val preVersion = RowStore.currentVersion(key)
+    val before = lake.readManifest(key, lake.currentVersion(key))
+    val preVersion = lake.currentVersion(key)
     def base(m: Seq[RowStore.FileEntry], g: Int): Seq[String] =
       m.filter(e => e.kind == "base" && e.group == g).map(_.name)
 
     val (dirty, _, _) = RowStoreOps.compact(s, key)
     assert(dirty == Set(0, 2), s"dirty groups should be the delta'd ones: $dirty")
-    val after = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val after = lake.readManifest(key, lake.currentVersion(key))
     // clean groups' files verbatim; dirty groups one FRESH base file;
     // no delta survives
     for (g <- Seq(1, 3)) assert(base(after, g) == base(before, g),
@@ -187,9 +189,9 @@ class RowCatalogSpec extends AnyFunSuite {
       s"SELECT sum(v) FROM graft_dml.spec.opt VERSION AS OF $preVersion")
       .head().getLong(0) == got.map(_._2).sum)
     // compacting a clean table is a metadata no-op: no new version
-    val v0 = RowStore.currentVersion(key)
+    val v0 = lake.currentVersion(key)
     assert(RowStoreOps.compact(s, key)._1.isEmpty)
-    assert(RowStore.currentVersion(key) == v0)
+    assert(lake.currentVersion(key) == v0)
     s.sql("DROP TABLE graft_dml.spec.opt")
   }
 
@@ -202,7 +204,7 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("INSERT INTO graft_dml.spec.occ VALUES (1, 10), (2, 20)")
     val key = "graft_dml.spec.occ"
     // a row-level operation plans its scan at the current version...
-    val op = new GroupRowLevelOp(key, RowStore.readMeta(key),
+    val op = new GroupRowLevelOp(lake, key, lake.readMeta(key),
       org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE)
     op.newScanBuilder(CaseInsensitiveStringMap.empty()).build()
       .asInstanceOf[org.apache.spark.sql.connector.read.Batch]
@@ -210,8 +212,8 @@ class RowCatalogSpec extends AnyFunSuite {
     // ...another writer commits in between...
     s.sql("INSERT INTO graft_dml.spec.occ VALUES (3, 30)")
     // ...so the stale rewrite's commit must refuse, not clobber
-    val w = new graft.sources.GroupWrite(key, RowStore.readMeta(key),
-      RowStore.readMeta(key).schema, GroupWrite.ReplaceGroups(op))
+    val w = new graft.sources.GroupWrite(lake, key, lake.readMeta(key),
+      lake.readMeta(key).schema, GroupWrite.ReplaceGroups(op))
     intercept[java.util.ConcurrentModificationException] {
       w.commit(Array.empty)
     }
@@ -249,7 +251,7 @@ class RowCatalogSpec extends AnyFunSuite {
     // interleaving the OCC validation exists for, made deterministic
     def race(a: String, b: String): Seq[Option[Throwable]] = {
       val latch = new CountDownLatch(2)
-      RowStore.preCommitHook =
+      lake.preCommitHook =
         () => { latch.countDown(); latch.await(60, TimeUnit.SECONDS); () }
       try {
         val fs = Seq(a, b).map { src =>
@@ -260,18 +262,18 @@ class RowCatalogSpec extends AnyFunSuite {
           })
         }
         fs.map(_.get(180, TimeUnit.SECONDS))
-      } finally RowStore.preCommitHook = () => ()
+      } finally lake.preCommitHook = () => ()
     }
 
     // DISJOINT groups: both planned at the same snapshot, both must
     // commit — the second validates group 1's files unchanged and
     // rebases onto the winner's manifest (Iceberg's
     // partition-disjoint concurrent-rewrite behavior)
-    val v0 = RowStore.currentVersion(key)
+    val v0 = lake.currentVersion(key)
     val r1 = race("s1", "s2")
     assert(r1.forall(_.isEmpty),
       s"disjoint-group merges must both commit, got $r1")
-    assert(RowStore.currentVersion(key) == v0 + 2,
+    assert(lake.currentVersion(key) == v0 + 2,
       "manifest linearity: two commits, two consecutive versions")
     val afterDisjoint = s.table(key).orderBy("k").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -283,7 +285,7 @@ class RowCatalogSpec extends AnyFunSuite {
     // OVERLAPPING group: exactly one commits; the loser sees group 1
     // changed since its scan and refuses (never silently drops the
     // winner's update), manifest advances by exactly one version
-    val v1 = RowStore.currentVersion(key)
+    val v1 = lake.currentVersion(key)
     val sum1 = afterDisjoint.map(_._2).sum
     val r2 = race("s1", "s3")
     def causes(t: Throwable): Seq[Throwable] =
@@ -294,7 +296,7 @@ class RowCatalogSpec extends AnyFunSuite {
     assert(causes(failed.head)
       .exists(_.isInstanceOf[java.util.ConcurrentModificationException]),
       s"the refusal must be the OCC conflict, got ${causes(failed.head)}")
-    assert(RowStore.currentVersion(key) == v1 + 1,
+    assert(lake.currentVersion(key) == v1 + 1,
       "manifest linearity: one commit, one version")
     val sum2 = s.table(key).agg(org.apache.spark.sql.functions.sum("v"))
       .head().getLong(0)
@@ -314,13 +316,13 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("CREATE TABLE graft_dml.spec.bt (v BIGINT, k BIGINT) " +
       "PARTITIONED BY (bucket(4, k))")
     val key = "graft_dml.spec.bt"
-    assert(RowStore.readMeta(key).keyCol == "k")
+    assert(lake.readMeta(key).keyCol == "k")
     // constant first column, keys 0..11: first-column grouping would
     // collapse everything into one group; bucket(4, k) spreads them
     // over all four
     s.sql("INSERT INTO graft_dml.spec.bt VALUES " +
       (0 until 12).map(i => s"(7, $i)").mkString(", "))
-    val v1 = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val v1 = lake.readManifest(key, lake.currentVersion(key))
     assert(v1.map(_.group).distinct.sorted == Seq(0, 1, 2, 3),
       s"bucket(4, k) must spread constant-v rows across all groups: $v1")
     // zone maps track the TRANSFORM column: group g holds keys
@@ -338,7 +340,7 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("""MERGE INTO graft_dml.spec.bt t
       USING graft_dml.spec.bt_src x ON t.k = x.k
       WHEN MATCHED THEN UPDATE SET v = t.v + x.dv""")
-    val v2 = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val v2 = lake.readManifest(key, lake.currentVersion(key))
     def files(man: Seq[RowStore.FileEntry], g: Int) =
       man.filter(e => e.kind == "base" && e.group == g).map(_.name).toSet
     val changed = (0 until 4).filter(g => files(v1, g) != files(v2, g))
@@ -360,7 +362,7 @@ class RowCatalogSpec extends AnyFunSuite {
     // controlled clock: v0 CREATE at t=1000, commits 60s apart
     val t0 = 1755000000000L
     val tick = new java.util.concurrent.atomic.AtomicLong(t0)
-    RowStore.clock = () => tick.getAndAdd(60000L)
+    lake.clock = () => tick.getAndAdd(60000L)
     try {
       s.sql("DROP TABLE IF EXISTS graft_dml.spec.tt")
       s.sql("CREATE TABLE graft_dml.spec.tt (k BIGINT, v BIGINT)")
@@ -369,9 +371,9 @@ class RowCatalogSpec extends AnyFunSuite {
       def nAsOf(ms: Long): Long =
         s.sql(s"SELECT COUNT(*) FROM graft_dml.spec.tt " +
           s"TIMESTAMP AS OF timestamp_millis(${ms}L)").head().getLong(0)
-      val (c0, c1, c2) = (RowStore.commitTimeMs("graft_dml.spec.tt", 0),
-        RowStore.commitTimeMs("graft_dml.spec.tt", 1),
-        RowStore.commitTimeMs("graft_dml.spec.tt", 2))
+      val (c0, c1, c2) = (lake.commitTimeMs("graft_dml.spec.tt", 0),
+        lake.commitTimeMs("graft_dml.spec.tt", 1),
+        lake.commitTimeMs("graft_dml.spec.tt", 2))
       assert(c0 < c1 && c1 < c2, s"monotonic commit times: $c0 $c1 $c2")
       assert(nAsOf(c0) == 0, "at the CREATE instant: empty v0")
       assert(nAsOf(c1 - 1) == 0, "just before the first insert: v0")
@@ -385,10 +387,10 @@ class RowCatalogSpec extends AnyFunSuite {
       // strictly increasing commit times
       tick.set(c2 - 120000L)
       s.sql("INSERT INTO graft_dml.spec.tt VALUES (3, 30)")
-      val c3 = RowStore.commitTimeMs("graft_dml.spec.tt", 3)
+      val c3 = lake.commitTimeMs("graft_dml.spec.tt", 3)
       assert(c3 == c2 + 1, s"stalled clock must advance: $c2 -> $c3")
       s.sql("DROP TABLE graft_dml.spec.tt")
-    } finally RowStore.clock = () => System.currentTimeMillis()
+    } finally lake.clock = () => System.currentTimeMillis()
   }
 
   test("age-based snapshot expiry retains the window, current, and tags") {
@@ -401,7 +403,7 @@ class RowCatalogSpec extends AnyFunSuite {
     import graft.sources.{RowStore, RowStoreOps}
     val t0 = 1755100000000L
     val tick = new java.util.concurrent.atomic.AtomicLong(t0)
-    RowStore.clock = () => tick.getAndAdd(60000L)
+    lake.clock = () => tick.getAndAdd(60000L)
     try {
       s.sql("DROP TABLE IF EXISTS graft_dml.spec.agev")
       val t = "graft_dml.spec.agev"
@@ -416,7 +418,7 @@ class RowCatalogSpec extends AnyFunSuite {
       s.sql(s"INSERT INTO $t VALUES (5, 50)")                   // v5
       // clock now reads t0 + 6*60s; freeze it for a deterministic cut
       val now = tick.get()
-      RowStore.clock = () => now
+      lake.clock = () => now
       // horizon = now - 150s keeps versions committed in the last
       // 150 s: v4 (now-120s) and v5 (now-60s) — plus tagged v1
       val (retained, deleted) = RowStoreOps.vacuumOlderThan(t, 150000L)
@@ -429,7 +431,7 @@ class RowCatalogSpec extends AnyFunSuite {
         s.sql(s"SELECT * FROM $t VERSION AS OF 2").collect() }
       assert(e.getMessage.contains("no version"), e.getMessage)
       s.sql(s"DROP TABLE $t")
-    } finally RowStore.clock = () => System.currentTimeMillis()
+    } finally lake.clock = () => System.currentTimeMillis()
   }
 
   test("nightly maintenance chain: compact, rewrite, expire, sweep compose") {
@@ -444,7 +446,7 @@ class RowCatalogSpec extends AnyFunSuite {
     import graft.sources.{RowStore, RowStoreOps}
     val t0 = 1755200000000L
     val tick = new java.util.concurrent.atomic.AtomicLong(t0)
-    RowStore.clock = () => tick.getAndAdd(60000L)
+    lake.clock = () => tick.getAndAdd(60000L)
     try {
       s.sql("DROP TABLE IF EXISTS graft_dml.spec.night")
       val t = "graft_dml.spec.night"
@@ -461,23 +463,23 @@ class RowCatalogSpec extends AnyFunSuite {
         "table => 'spec.night')").collect()                       // v4
       s.sql("CALL graft_dml.system.rewrite_manifests('spec.night')")
         .collect()
-      assert(RowStore.manifestChainLength(t,
-        RowStore.currentVersion(t)) == 1)
+      assert(lake.manifestChainLength(t,
+        lake.currentVersion(t)) == 1)
       s.sql(s"INSERT INTO $t VALUES (10, 100)")                 // v5
       // plant crashed-writer debris, then expire + sweep
-      val dir = java.nio.file.Paths.get(RowStore.dataDir(t))
+      val dir = java.nio.file.Paths.get(lake.dataDir(t))
       java.nio.file.Files.write(dir.resolve("g0-crashed.parquet"),
         Array[Byte](1, 2, 3))
       val now = tick.get()
-      RowStore.clock = () => now
+      lake.clock = () => now
       // keep only versions committed in the last 150 s (v4, v5) + tag
       s.sql("CALL graft_dml.system.expire_snapshots_older_than(" +
         "'spec.night', 150000L)").collect()
       s.sql("CALL graft_dml.system.remove_orphan_files('spec.night', 0L)")
         .collect()
       // closure: directory == union of retained manifest references
-      val referenced = RowStore.versions(t)
-        .flatMap(v => RowStore.readManifest(t, v)).map(_.name).toSet
+      val referenced = lake.versions(t)
+        .flatMap(v => lake.readManifest(t, v)).map(_.name).toSet
       val stream = java.nio.file.Files.list(dir)
       val onDisk = try {
         import scala.jdk.CollectionConverters._
@@ -495,7 +497,7 @@ class RowCatalogSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
         == want)
       s.sql(s"DROP TABLE $t")
-    } finally RowStore.clock = () => System.currentTimeMillis()
+    } finally lake.clock = () => System.currentTimeMillis()
   }
 
   test("a re-delivered streaming epoch commit is a manifest no-op") {
@@ -504,39 +506,39 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.se")
     s.sql("CREATE TABLE graft_dml.spec.se (k BIGINT, v BIGINT)")
     val key = "graft_dml.spec.se"
-    val sw = new GroupWrite(key, RowStore.readMeta(key),
-      RowStore.readMeta(key).schema, GroupWrite.Append, "query-A")
+    val sw = new GroupWrite(lake, key, lake.readMeta(key),
+      lake.readMeta(key).schema, GroupWrite.Append, "query-A")
       .toStreaming
     val msg = Array[org.apache.spark.sql.connector.write.WriterCommitMessage](
       FilesMessage(Seq.empty))
     sw.commit(0L, msg)
     sw.commit(1L, msg)
-    assert(RowStore.currentVersion(key) == 2 &&
-      RowStore.lastStreamEpoch(key, "query-A") == 1L)
+    assert(lake.currentVersion(key) == 2 &&
+      lake.lastStreamEpoch(key, "query-A") == 1L)
     // replay of an already-committed epoch (post-failure batch rerun):
     // no new version, high-water mark unchanged
     sw.commit(1L, msg)
     sw.commit(0L, msg)
-    assert(RowStore.currentVersion(key) == 2,
+    assert(lake.currentVersion(key) == 2,
       "a replayed epoch must not commit a new version")
-    assert(RowStore.lastStreamEpoch(key, "query-A") == 1L)
+    assert(lake.lastStreamEpoch(key, "query-A") == 1L)
     sw.commit(2L, msg)
-    assert(RowStore.currentVersion(key) == 3 &&
-      RowStore.lastStreamEpoch(key, "query-A") == 2L)
+    assert(lake.currentVersion(key) == 3 &&
+      lake.lastStreamEpoch(key, "query-A") == 2L)
     // a DIFFERENT query's epochs restart at 0 (fresh checkpoint) and
     // must NOT be dropped by query-A's high-water mark — per-query
     // marks are what makes a second writer's first batches safe
-    val sw2 = new GroupWrite(key, RowStore.readMeta(key),
-      RowStore.readMeta(key).schema, GroupWrite.Append, "query-B")
+    val sw2 = new GroupWrite(lake, key, lake.readMeta(key),
+      lake.readMeta(key).schema, GroupWrite.Append, "query-B")
       .toStreaming
     sw2.commit(0L, msg)
-    assert(RowStore.currentVersion(key) == 4,
+    assert(lake.currentVersion(key) == 4,
       "a new query's epoch 0 must commit despite another query's mark")
-    assert(RowStore.lastStreamEpoch(key, "query-B") == 0L &&
-      RowStore.lastStreamEpoch(key, "query-A") == 2L)
+    assert(lake.lastStreamEpoch(key, "query-B") == 0L &&
+      lake.lastStreamEpoch(key, "query-A") == 2L)
     // and query-A's mark still dedupes ITS replays after interleaving
     sw.commit(2L, msg)
-    assert(RowStore.currentVersion(key) == 4)
+    assert(lake.currentVersion(key) == 4)
     s.sql("DROP TABLE graft_dml.spec.se")
   }
 
@@ -546,12 +548,12 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.trunc")
     s.sql("CREATE TABLE graft_dml.spec.trunc (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.trunc VALUES (1, 10), (2, 20), (3, 30)")
-    val vSeed = RowStore.currentVersion("graft_dml.spec.trunc")
+    val vSeed = lake.currentVersion("graft_dml.spec.trunc")
     // no WHERE: the rewrite's scan would be optimized to empty — this
     // must take the metadata-delete path, not refuse at commit
     s.sql("DELETE FROM graft_dml.spec.trunc")
     assert(s.table("graft_dml.spec.trunc").count() == 0)
-    assert(RowStore.currentVersion("graft_dml.spec.trunc") == vSeed + 1,
+    assert(lake.currentVersion("graft_dml.spec.trunc") == vSeed + 1,
       "truncate must commit one new (empty) version")
     // pure manifest swap: the seed version still time-travels
     assert(s.sql(s"SELECT COUNT(*) FROM graft_dml.spec.trunc " +
@@ -573,7 +575,7 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.dc")
     s.sql("CREATE TABLE graft_dml.spec.dc (k BIGINT, a BIGINT, b STRING)")
     s.sql("INSERT INTO graft_dml.spec.dc VALUES (1, 10, 'x'), (2, 20, 'y')")
-    val filesBefore = graft.sources.RowStore
+    val filesBefore = lake
       .readManifest("graft_dml.spec.dc", 1).map(_.name).toSet
     s.sql("ALTER TABLE graft_dml.spec.dc DROP COLUMN a")
     assert(s.table("graft_dml.spec.dc").columns.toSeq == Seq("k", "b"))
@@ -581,7 +583,7 @@ class RowCatalogSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((1L, "x"), (2L, "y")),
       "pre-drop files must read correctly under the narrowed schema")
-    assert(graft.sources.RowStore.readManifest("graft_dml.spec.dc", 1)
+    assert(lake.readManifest("graft_dml.spec.dc", 1)
       .map(_.name).toSet == filesBefore, "no file may be rewritten")
     // time travel to a pre-drop version resurfaces the dropped column
     // WITH its values — the snapshot-time schema is pinned per version,
@@ -617,7 +619,7 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("INSERT INTO graft_dml.spec.tr VALUES " +
       "(5, 1), (105, 2), (250, 3), (999, 4)")
     val trKey = "graft_dml.spec.tr"
-    val trGroups = RowStore.readManifest(trKey, RowStore.currentVersion(trKey))
+    val trGroups = lake.readManifest(trKey, lake.currentVersion(trKey))
       .filter(_.kind == "base").map(_.group).sorted
     assert(trGroups == Seq(0, 1, 2, 9), s"got $trGroups")
     assert(s.table("graft_dml.spec.tr").orderBy("k").collect()
@@ -633,7 +635,7 @@ class RowCatalogSpec extends AnyFunSuite {
       "(TIMESTAMP'2024-03-08 00:00:01', 3)")
     val dyKey = "graft_dml.spec.dy"
     val d0 = java.time.LocalDate.of(2024, 3, 7).toEpochDay.toInt
-    val dyGroups = RowStore.readManifest(dyKey, RowStore.currentVersion(dyKey))
+    val dyGroups = lake.readManifest(dyKey, lake.currentVersion(dyKey))
       .filter(_.kind == "base").map(_.group).sorted
     assert(dyGroups == Seq(d0, d0 + 1), s"got $dyGroups (epoch day $d0)")
     assert(s.table("graft_dml.spec.dy")
@@ -722,7 +724,7 @@ class RowCatalogSpec extends AnyFunSuite {
       "(TIMESTAMP'2024-02-29 23:59:59', 2), " +   // leap-day month end
       "(TIMESTAMP'2024-03-01 00:00:01', 3)")
     val moKey = "graft_dml.spec.mo"
-    val moGroups = RowStore.readManifest(moKey, RowStore.currentVersion(moKey))
+    val moGroups = lake.readManifest(moKey, lake.currentVersion(moKey))
       .filter(_.kind == "base").map(_.group).sorted
     assert(moGroups == Seq(648, 649, 650), s"got $moGroups")
     assert(s.table("graft_dml.spec.mo").count() == 3)
@@ -736,7 +738,7 @@ class RowCatalogSpec extends AnyFunSuite {
       "(TIMESTAMP'1970-06-01 00:00:00', 2), " +
       "(TIMESTAMP'2024-06-01 00:00:00', 3)")
     val yrKey = "graft_dml.spec.yr"
-    val yrGroups = RowStore.readManifest(yrKey, RowStore.currentVersion(yrKey))
+    val yrGroups = lake.readManifest(yrKey, lake.currentVersion(yrKey))
       .filter(_.kind == "base").map(_.group).sorted
     assert(yrGroups == Seq(-1, 0, 54), s"got $yrGroups")
     assert(s.table("graft_dml.spec.yr").count() == 3)
@@ -748,7 +750,7 @@ class RowCatalogSpec extends AnyFunSuite {
     assert(s.table("graft_dml.spec.yr").count() == 2)
     assert(RowStoreOps.rollback(yrKey, 1) == 3)
     assert(s.table("graft_dml.spec.yr").count() == 3)
-    assert(RowStore.versions(yrKey) == Seq(0, 1, 2, 3))
+    assert(lake.versions(yrKey) == Seq(0, 1, 2, 3))
     s.sql("DROP TABLE graft_dml.spec.yr")
   }
 
@@ -822,12 +824,12 @@ class RowCatalogSpec extends AnyFunSuite {
       "(TIMESTAMP'2024-03-09 10:00:00', 3)")
     import graft.sources.RowStore
     val k3 = "graft_dml.spec.pr3"
-    val before = RowStore.readManifest(k3, RowStore.currentVersion(k3))
+    val before = lake.readManifest(k3, lake.currentVersion(k3))
       .map(e => (e.group, e.name)).toSet
     s.sql("UPDATE graft_dml.spec.pr3 SET v = v + 100 WHERE " +
       "ts >= TIMESTAMP'2024-03-08 00:00:00' AND " +
       "ts < TIMESTAMP'2024-03-09 00:00:00'")
-    val after = RowStore.readManifest(k3, RowStore.currentVersion(k3))
+    val after = lake.readManifest(k3, lake.currentVersion(k3))
       .map(e => (e.group, e.name)).toSet
     val d8 = java.time.LocalDate.of(2024, 3, 8).toEpochDay.toInt
     // out-of-range days' files survive byte-identical; day 8's replaced
@@ -852,7 +854,7 @@ class RowCatalogSpec extends AnyFunSuite {
     val key = "graft_dml.spec.rn"
     // post-rename files STILL store the original name (metadata-only:
     // old and new files mutually readable through the mapping)
-    assert(RowStore.readMeta(key).renames == Map("amount" -> "cents"))
+    assert(lake.readMeta(key).renames == Map("amount" -> "cents"))
     val allRows = s.sql("SELECT k, amount FROM graft_dml.spec.rn")
       .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(allRows == Seq((1L, 10L), (2L, 20L), (3L, 30L)), s"got $allRows")
@@ -865,13 +867,13 @@ class RowCatalogSpec extends AnyFunSuite {
     assert(e1.getMessage.contains("store"), e1.getMessage)
     // rename-back restores the identity mapping
     s.sql("ALTER TABLE graft_dml.spec.rn RENAME COLUMN amount TO cents")
-    assert(RowStore.readMeta(key).renames.isEmpty)
+    assert(lake.readMeta(key).renames.isEmpty)
     assert(s.sql("SELECT sum(cents) FROM graft_dml.spec.rn")
       .head().getLong(0) == 60L)
     // DROP of a renamed column blacklists the STORAGE name
     s.sql("ALTER TABLE graft_dml.spec.rn RENAME COLUMN cents TO amount")
     s.sql("ALTER TABLE graft_dml.spec.rn DROP COLUMN amount")
-    assert(RowStore.readMeta(key).dropped.contains("cents"))
+    assert(lake.readMeta(key).dropped.contains("cents"))
     val e2 = intercept[Exception](
       s.sql("ALTER TABLE graft_dml.spec.rn ADD COLUMN cents BIGINT"))
     assert(e2.getMessage.contains("previously dropped"), e2.getMessage)
@@ -934,18 +936,18 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("INSERT INTO graft_dml.spec.trd VALUES " +
       "(1, 10), (5, 50), (15, 150), (25, 250)") // groups 0, 0, 1, 2
     val key = "graft_dml.spec.trd"
-    def groups() = RowStore
-      .readManifest(key, RowStore.currentVersion(key))
+    def groups() = lake
+      .readManifest(key, lake.currentVersion(key))
       .filter(_.kind == "base").map(_.group).sorted
     assert(groups() == Seq(0, 1, 2))
-    val g1Before = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val g1Before = lake.readManifest(key, lake.currentVersion(key))
       .filter(e => e.kind == "base" && e.group == 1).map(_.name)
 
     // DELETE matching only group 0: groups 1/2 keep files verbatim
     s.sql("DELETE FROM graft_dml.spec.trd WHERE k = 5")
     assert(s.table("graft_dml.spec.trd").orderBy("k").collect()
       .map(_.getLong(0)).toSeq == Seq(1L, 15L, 25L))
-    assert(RowStore.readManifest(key, RowStore.currentVersion(key))
+    assert(lake.readManifest(key, lake.currentVersion(key))
       .filter(e => e.kind == "base" && e.group == 1).map(_.name) == g1Before,
       "an untouched group must keep its files across an unbounded-layout rewrite")
 
@@ -969,7 +971,7 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("INSERT INTO graft_dml.spec.ev VALUES " +
       (0 until 16).map(i => s"($i, ${i * 10})").mkString(", "))
     val key = "graft_dml.spec.ev"
-    val preFiles = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val preFiles = lake.readManifest(key, lake.currentVersion(key))
       .filter(_.kind == "base")
     assert(preFiles.forall(_.spec == 0))
     assert(preFiles.map(_.group).distinct.sorted == Seq(0, 1, 2, 3))
@@ -978,7 +980,7 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("ALTER TABLE graft_dml.spec.ev " +
       "SET TBLPROPERTIES('partition'='truncate(8, k)')")
     s.sql("INSERT INTO graft_dml.spec.ev VALUES (16, 160), (17, 170)")
-    val post = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val post = lake.readManifest(key, lake.currentVersion(key))
       .filter(_.kind == "base")
     val oldSide = post.filter(_.spec == 0)
     val newSide = post.filter(_.spec == 1)
@@ -1001,10 +1003,10 @@ class RowCatalogSpec extends AnyFunSuite {
     // only — every other old-spec group keeps its file verbatim, the
     // new-spec file is untouched, and the touched group's SURVIVING
     // rows are rewritten under the ACTIVE spec (migration-by-touch).
-    val preDel = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val preDel = lake.readManifest(key, lake.currentVersion(key))
       .filter(_.kind == "base")
     s.sql("DELETE FROM graft_dml.spec.ev WHERE k = 3")
-    val postDel = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val postDel = lake.readManifest(key, lake.currentVersion(key))
       .filter(_.kind == "base")
     val untouched = preDel.filterNot(e => e.spec == 0 && e.group == 3)
     assert(untouched.map(e => (e.spec, e.group, e.name)).toSet
@@ -1038,8 +1040,8 @@ class RowCatalogSpec extends AnyFunSuite {
     // INSERT OVERWRITE still migrates everything onto the active spec
     s.sql("INSERT OVERWRITE graft_dml.spec.ev " +
       "SELECT k, v FROM graft_dml.spec.ev VERSION AS OF " +
-      RowStore.currentVersion(key))
-    val migrated = RowStore.readManifest(key, RowStore.currentVersion(key))
+      lake.currentVersion(key))
+    val migrated = lake.readManifest(key, lake.currentVersion(key))
       .filter(_.kind == "base")
     assert(migrated.forall(_.spec == 1), s"migration left $migrated")
     assert(migrated.map(_.group).distinct.sorted == Seq(0, 1, 2),
@@ -1057,12 +1059,12 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("CREATE TABLE graft_dml.spec.wapx (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.wapx VALUES (1, 10), (2, 20)")
     val key = "graft_dml.spec.wapx"
-    assert(RowStore.currentVersion(key) == 1)
+    assert(lake.currentVersion(key) == 1)
 
     // stage one row — files land, NO version commits, main unchanged
     Seq((3L, 30L)).toDF("k", "v")
       .writeTo("graft_dml.spec.wapx").option("branch", "b").append()
-    assert(RowStore.currentVersion(key) == 1,
+    assert(lake.currentVersion(key) == 1,
       "staging must not commit a table version")
     assert(s.table("graft_dml.spec.wapx").count() == 2,
       "staged rows must be invisible to plain reads")
@@ -1088,15 +1090,15 @@ class RowCatalogSpec extends AnyFunSuite {
       RowStoreOps.publishBranch(key, "b"))
 
     // re-stage against the current snapshot → publish fast-forwards
-    RowStore.dropBranch(key, "b")
+    lake.dropBranch(key, "b")
     Seq((3L, 30L), (4L, 40L)).toDF("k", "v")
       .writeTo("graft_dml.spec.wapx").option("branch", "b").append()
     val v = RowStoreOps.publishBranch(key, "b")
-    assert(v == RowStore.currentVersion(key))
+    assert(v == lake.currentVersion(key))
     assert(s.table("graft_dml.spec.wapx").orderBy("k").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L), (5L, 50L)))
-    assert(!RowStore.branchExists(key, "b"),
+    assert(!lake.branchExists(key, "b"),
       "publish must retire the branch manifest")
     s.sql("DROP TABLE graft_dml.spec.wapx")
   }
@@ -1112,16 +1114,16 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("CREATE TABLE graft_dml.spec.up (k BIGINT, v BIGINT)")
     s.sql("INSERT INTO graft_dml.spec.up VALUES (1, 10), (2, 20)")
     val key = "graft_dml.spec.up"
-    val meta = RowStore.readMeta(key)
-    val op = new GroupRowLevelOp(key, meta,
+    val meta = lake.readMeta(key)
+    val op = new GroupRowLevelOp(lake, key, meta,
       org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE)
-    val w = new GroupWrite(key, meta, meta.schema,
+    val w = new GroupWrite(lake, key, meta, meta.schema,
       GroupWrite.ReplaceGroups(op))
-    val before = RowStore.currentVersion(key)
+    val before = lake.currentVersion(key)
     val e = intercept[IllegalArgumentException](
       w.commit(Array.empty))
     assert(e.getMessage.contains("planned scan"), e.getMessage)
-    assert(RowStore.currentVersion(key) == before,
+    assert(lake.currentVersion(key) == before,
       "the refused commit must not advance the manifest chain")
     s.sql("DROP TABLE graft_dml.spec.up")
   }
@@ -1196,8 +1198,8 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("INSERT INTO graft_dml.spec.mcm VALUES " +
       (0 until 20).map(i => s"($i, $i)").mkString(", "))
     s.sql("DELETE FROM graft_dml.spec.mcm WHERE k % 4 = 0")
-    assert(RowStore.readManifest("graft_dml.spec.mcm",
-      RowStore.currentVersion("graft_dml.spec.mcm")).exists(_.kind == "delta"))
+    assert(lake.readManifest("graft_dml.spec.mcm",
+      lake.currentVersion("graft_dml.spec.mcm")).exists(_.kind == "delta"))
     RowFiles.filesOpened.set(0L)
     assert(s.sql("SELECT COUNT(*) FROM graft_dml.spec.mcm").head().getLong(0)
       == 15)
@@ -1254,17 +1256,17 @@ class RowCatalogSpec extends AnyFunSuite {
     val sum = s.sql("SELECT CAST(SUM(v) AS BIGINT) FROM graft_dml.spec.skip " +
       "WHERE k >= 1000 AND k <= 1015").head().getLong(0)
     assert(sum == (0 until 16).map(_ + 1000L).sum)
-    assert(RowStore.lastPlannedBaseFiles.get == 4 &&
-      RowStore.lastSkippedBaseFiles.get == 8,
+    assert(lake.lastPlannedBaseFiles.get == 4 &&
+      lake.lastSkippedBaseFiles.get == 8,
       s"expected 4 planned / 8 skipped, got " +
-        s"${RowStore.lastPlannedBaseFiles.get}/" +
-        s"${RowStore.lastSkippedBaseFiles.get}")
+        s"${lake.lastPlannedBaseFiles.get}/" +
+        s"${lake.lastSkippedBaseFiles.get}")
     // unfiltered read: nothing skips (SUM forces a real scan — a bare
     // COUNT(*) is now answered from manifest row counts and would
     // leave the planning counters untouched)
     assert(s.sql("SELECT CAST(SUM(v) AS BIGINT), COUNT(*) " +
         "FROM graft_dml.spec.skip").head().getLong(1) == 48)
-    assert(RowStore.lastSkippedBaseFiles.get == 0)
+    assert(lake.lastSkippedBaseFiles.get == 0)
     s.sql("DROP TABLE graft_dml.spec.skip")
 
     // a DIRTY (delta-carrying) group must not skip: an update delta
@@ -1284,11 +1286,11 @@ class RowCatalogSpec extends AnyFunSuite {
     val got = s.sql("SELECT CAST(SUM(v) AS BIGINT) FROM graft_dml.spec.skipm " +
       "WHERE k <= 10").head().getLong(0)
     assert(got == 60L, s"the moved row must stay visible, got $got")
-    assert(RowStore.lastPlannedBaseFiles.get == 3 &&
-      RowStore.lastSkippedBaseFiles.get == 1,
+    assert(lake.lastPlannedBaseFiles.get == 3 &&
+      lake.lastSkippedBaseFiles.get == 1,
       s"expected 3 planned / 1 skipped, got " +
-        s"${RowStore.lastPlannedBaseFiles.get}/" +
-        s"${RowStore.lastSkippedBaseFiles.get}")
+        s"${lake.lastPlannedBaseFiles.get}/" +
+        s"${lake.lastSkippedBaseFiles.get}")
     s.sql("DROP TABLE graft_dml.spec.skipm")
   }
 
@@ -1320,23 +1322,23 @@ class RowCatalogSpec extends AnyFunSuite {
     // numeric point lookup: the odd file is definitely-absent
     assert(s.sql("SELECT CAST(SUM(k) AS BIGINT) FROM graft_dml.spec.bl " +
       "WHERE v = 150").head().getLong(0) == 25L)
-    assert(RowStore.lastPlannedBaseFiles.get == 1 &&
-      RowStore.lastSkippedBaseFiles.get == 1,
+    assert(lake.lastPlannedBaseFiles.get == 1 &&
+      lake.lastSkippedBaseFiles.get == 1,
       s"numeric bloom must skip the odd file, got " +
-        s"${RowStore.lastPlannedBaseFiles.get} planned / " +
-        s"${RowStore.lastSkippedBaseFiles.get} skipped")
+        s"${lake.lastPlannedBaseFiles.get} planned / " +
+        s"${lake.lastSkippedBaseFiles.get} skipped")
     // string point lookup: the even file is definitely-absent
     assert(s.sql("SELECT CAST(SUM(k) AS BIGINT) FROM graft_dml.spec.bl " +
       "WHERE t = 'o7'").head().getLong(0) == 107L)
-    assert(RowStore.lastPlannedBaseFiles.get == 1 &&
-      RowStore.lastSkippedBaseFiles.get == 1,
+    assert(lake.lastPlannedBaseFiles.get == 1 &&
+      lake.lastSkippedBaseFiles.get == 1,
       s"string bloom must skip the even file, got " +
-        s"${RowStore.lastPlannedBaseFiles.get} planned / " +
-        s"${RowStore.lastSkippedBaseFiles.get} skipped")
+        s"${lake.lastPlannedBaseFiles.get} planned / " +
+        s"${lake.lastSkippedBaseFiles.get} skipped")
     // IN straddling both files: each value hits one bloom — both plan
     assert(s.sql("SELECT CAST(SUM(k) AS BIGINT) FROM graft_dml.spec.bl " +
       "WHERE v IN (150, 151)").head().getLong(0) == 25L + 125L)
-    assert(RowStore.lastSkippedBaseFiles.get == 0,
+    assert(lake.lastSkippedBaseFiles.get == 0,
       "an IN matching every file's bloom must skip nothing")
     s.sql("DROP TABLE graft_dml.spec.bl")
 
@@ -1372,23 +1374,23 @@ class RowCatalogSpec extends AnyFunSuite {
     // DECIMAL point lookup: 150.00 lives only in the even file
     assert(s.sql("SELECT CAST(SUM(k) AS BIGINT) FROM graft_dml.spec.bld " +
       "WHERE amt = CAST(150 AS DECIMAL(12,2))").head().getLong(0) == 25L)
-    assert(RowStore.lastPlannedBaseFiles.get == 1 &&
-      RowStore.lastSkippedBaseFiles.get == 1,
+    assert(lake.lastPlannedBaseFiles.get == 1 &&
+      lake.lastSkippedBaseFiles.get == 1,
       s"decimal bloom must skip the odd file, got " +
-        s"${RowStore.lastPlannedBaseFiles.get} planned / " +
-        s"${RowStore.lastSkippedBaseFiles.get} skipped")
+        s"${lake.lastPlannedBaseFiles.get} planned / " +
+        s"${lake.lastSkippedBaseFiles.get} skipped")
     // DATE point lookup: 2024-01-15 (offset 14, even) — odd file skips
     assert(s.sql("SELECT CAST(SUM(k) AS BIGINT) FROM graft_dml.spec.bld " +
       "WHERE d = DATE '2024-01-15'").head().getLong(0) == 7L)
-    assert(RowStore.lastPlannedBaseFiles.get == 1 &&
-      RowStore.lastSkippedBaseFiles.get == 1,
+    assert(lake.lastPlannedBaseFiles.get == 1 &&
+      lake.lastSkippedBaseFiles.get == 1,
       s"date bloom must skip the even file, got " +
-        s"${RowStore.lastPlannedBaseFiles.get} planned / " +
-        s"${RowStore.lastSkippedBaseFiles.get} skipped")
+        s"${lake.lastPlannedBaseFiles.get} planned / " +
+        s"${lake.lastSkippedBaseFiles.get} skipped")
     // an absent value skips BOTH files (definitely-absent everywhere)
     assert(s.sql("SELECT COUNT(*) FROM graft_dml.spec.bld " +
       "WHERE amt = CAST(977 AS DECIMAL(12,2))").head().getLong(0) == 0L)
-    assert(RowStore.lastSkippedBaseFiles.get == 2,
+    assert(lake.lastSkippedBaseFiles.get == 2,
       "an absent decimal must skip every file")
     // correctness backstop: full-table aggregates over both types
     val r = s.sql("SELECT CAST(SUM(amt) AS DECIMAL(18,2)), MIN(d), MAX(d) " +
@@ -1465,21 +1467,21 @@ class RowCatalogSpec extends AnyFunSuite {
     val sum = s.sql("SELECT CAST(SUM(v) AS BIGINT) FROM graft_dml.spec.sskip " +
       "WHERE name >= 'm' AND name < 'n'").head().getLong(0)
     assert(sum == (0 until 16).map(_ + 1000L).sum)
-    assert(RowStore.lastPlannedBaseFiles.get > 0 &&
-      RowStore.lastSkippedBaseFiles.get > 0,
+    assert(lake.lastPlannedBaseFiles.get > 0 &&
+      lake.lastSkippedBaseFiles.get > 0,
       s"string range must skip out-of-band files, got " +
-        s"${RowStore.lastPlannedBaseFiles.get} planned / " +
-        s"${RowStore.lastSkippedBaseFiles.get} skipped")
+        s"${lake.lastPlannedBaseFiles.get} planned / " +
+        s"${lake.lastSkippedBaseFiles.get} skipped")
     // the middle band must skip BOTH other bands: planned ≤ 1/3 of all
     val total =
-      RowStore.lastPlannedBaseFiles.get + RowStore.lastSkippedBaseFiles.get
-    assert(RowStore.lastPlannedBaseFiles.get * 3 <= total,
+      lake.lastPlannedBaseFiles.get + lake.lastSkippedBaseFiles.get
+    assert(lake.lastPlannedBaseFiles.get * 3 <= total,
       s"expected ≤ total/3 planned, got " +
-        s"${RowStore.lastPlannedBaseFiles.get}/$total")
+        s"${lake.lastPlannedBaseFiles.get}/$total")
     // unfiltered read: nothing skips
     assert(s.sql("SELECT CAST(SUM(v) AS BIGINT), COUNT(*) " +
       "FROM graft_dml.spec.sskip").head().getLong(1) == 48)
-    assert(RowStore.lastSkippedBaseFiles.get == 0)
+    assert(lake.lastSkippedBaseFiles.get == 0)
     s.sql("DROP TABLE graft_dml.spec.sskip")
   }
 
@@ -1502,35 +1504,35 @@ class RowCatalogSpec extends AnyFunSuite {
       "graft_dml.spec.cskip WHERE v >= 1000 AND v <= 1015")
       .head().getLong(0)
     assert(sum == (0 until 16).map(_ + 1000L).sum)
-    assert(RowStore.lastPlannedBaseFiles.get == 4 &&
-      RowStore.lastSkippedBaseFiles.get == 8,
+    assert(lake.lastPlannedBaseFiles.get == 4 &&
+      lake.lastSkippedBaseFiles.get == 8,
       s"numeric non-key predicate: expected 4 planned / 8 skipped, got " +
-        s"${RowStore.lastPlannedBaseFiles.get}/" +
-        s"${RowStore.lastSkippedBaseFiles.get}")
+        s"${lake.lastPlannedBaseFiles.get}/" +
+        s"${lake.lastSkippedBaseFiles.get}")
     // string non-key predicate (truncated bounds: names run past 16
     // chars): same accounting
     val cnt = s.sql("SELECT COUNT(*), CAST(SUM(v) AS BIGINT) FROM " +
       "graft_dml.spec.cskip WHERE name >= 'm' AND name < 'n'").head()
     assert(cnt.getLong(0) == 16 && cnt.getLong(1) == sum)
-    assert(RowStore.lastPlannedBaseFiles.get == 4 &&
-      RowStore.lastSkippedBaseFiles.get == 8,
+    assert(lake.lastPlannedBaseFiles.get == 4 &&
+      lake.lastSkippedBaseFiles.get == 8,
       s"string non-key predicate: expected 4 planned / 8 skipped, got " +
-        s"${RowStore.lastPlannedBaseFiles.get}/" +
-        s"${RowStore.lastSkippedBaseFiles.get}")
+        s"${lake.lastPlannedBaseFiles.get}/" +
+        s"${lake.lastSkippedBaseFiles.get}")
     // conjunction across columns: v-band of commit 1 ∧ name-band of
     // commit 2 is empty, and the windows compose to skip EVERYTHING
     assert(s.sql("SELECT COUNT(*) FROM graft_dml.spec.cskip " +
       "WHERE v >= 1000 AND v <= 1015 AND name >= 'z'").head().getLong(0)
       == 0)
-    assert(RowStore.lastPlannedBaseFiles.get == 0 &&
-      RowStore.lastSkippedBaseFiles.get == 12,
+    assert(lake.lastPlannedBaseFiles.get == 0 &&
+      lake.lastSkippedBaseFiles.get == 12,
       s"cross-column conjunction: expected 0 planned / 12 skipped, got " +
-        s"${RowStore.lastPlannedBaseFiles.get}/" +
-        s"${RowStore.lastSkippedBaseFiles.get}")
+        s"${lake.lastPlannedBaseFiles.get}/" +
+        s"${lake.lastSkippedBaseFiles.get}")
     // unfiltered read: nothing skips
     assert(s.sql("SELECT CAST(SUM(v) AS BIGINT), COUNT(*) FROM " +
       "graft_dml.spec.cskip").head().getLong(1) == 48)
-    assert(RowStore.lastSkippedBaseFiles.get == 0)
+    assert(lake.lastSkippedBaseFiles.get == 0)
     // an all-NULL column records no bounds and never skips (sound:
     // the file stays planned) while a present column still prunes
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.cnull")
@@ -1542,11 +1544,11 @@ class RowCatalogSpec extends AnyFunSuite {
     assert(got == 0)
     // the all-NULL commit's files must be PLANNED (no bounds), the
     // [10,20] commit's files skipped by the v >= 100 window
-    assert(RowStore.lastSkippedBaseFiles.get > 0 &&
-      RowStore.lastPlannedBaseFiles.get > 0,
+    assert(lake.lastSkippedBaseFiles.get > 0 &&
+      lake.lastPlannedBaseFiles.get > 0,
       s"expected the statless files planned and the bounded ones " +
-        s"skipped, got ${RowStore.lastPlannedBaseFiles.get}/" +
-        s"${RowStore.lastSkippedBaseFiles.get}")
+        s"skipped, got ${lake.lastPlannedBaseFiles.get}/" +
+        s"${lake.lastSkippedBaseFiles.get}")
     s.sql("DROP TABLE graft_dml.spec.cnull")
     s.sql("DROP TABLE graft_dml.spec.cskip")
   }
@@ -1557,11 +1559,11 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.wid")
     s.sql("CREATE TABLE graft_dml.spec.wid (k BIGINT, v INT)")
     s.sql("INSERT INTO graft_dml.spec.wid VALUES (1, 10), (2, 20)") // v1
-    val filesBefore = graft.sources.RowStore
+    val filesBefore = lake
       .readManifest("graft_dml.spec.wid", 1).map(_.name).toSet
     s.sql("ALTER TABLE graft_dml.spec.wid ALTER COLUMN v TYPE BIGINT") // v2
     // metadata-only: no file moved
-    assert(graft.sources.RowStore.readManifest("graft_dml.spec.wid", 2)
+    assert(lake.readManifest("graft_dml.spec.wid", 2)
       .map(_.name).toSet == filesBefore)
     // post-widening values past Int.MaxValue land in INT64 files; the
     // head read plans BOTH eras in one scan and widens the narrow one
@@ -1601,11 +1603,11 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql("DROP TABLE IF EXISTS graft_dml.spec.widd")
     s.sql("CREATE TABLE graft_dml.spec.widd (k BIGINT, amt DECIMAL(8,2))")
     s.sql("INSERT INTO graft_dml.spec.widd VALUES (1, 12.25)") // v1
-    val dFiles = graft.sources.RowStore
+    val dFiles = lake
       .readManifest("graft_dml.spec.widd", 1).map(_.name).toSet
     s.sql("ALTER TABLE graft_dml.spec.widd " +
       "ALTER COLUMN amt TYPE DECIMAL(14,2)")                   // v2
-    assert(graft.sources.RowStore.readManifest("graft_dml.spec.widd", 2)
+    assert(lake.readManifest("graft_dml.spec.widd", 2)
       .map(_.name).toSet == dFiles, "decimal widening must move no file")
     s.sql("INSERT INTO graft_dml.spec.widd " +
       "VALUES (2, 123456789012.50)")                           // v3
@@ -1713,13 +1715,13 @@ class RowCatalogSpec extends AnyFunSuite {
       "TBLPROPERTIES ('format'='mor')")
     s.sql("INSERT INTO graft_dml.spec.eqd VALUES " +
       "(1, 10), (2, 20), (5, 50), (6, 60)") // v1
-    val basesBefore = RowStore.readManifest("graft_dml.spec.eqd", 1)
+    val basesBefore = lake.readManifest("graft_dml.spec.eqd", 1)
       .filter(_.kind == "base").map(_.name).toSet
     val nFiles = RowStoreOps.equalityDelete(s, "graft_dml.spec.eqd",
       s.range(1, 3).toDF("kv")) // delete keys 1, 2
     assert(nFiles > 0)
     // NO base file was rewritten — the delete is delta-only
-    val man2 = RowStore.readManifest("graft_dml.spec.eqd", 2)
+    val man2 = lake.readManifest("graft_dml.spec.eqd", 2)
     assert(man2.filter(_.kind == "base").map(_.name).toSet == basesBefore)
     assert(man2.count(_.kind == "delta") == nFiles)
     // content: keys 1, 2 gone
@@ -1739,8 +1741,8 @@ class RowCatalogSpec extends AnyFunSuite {
     // post-compact read opens exactly one base file per non-empty
     // group with zero deltas
     RowStoreOps.compact(s, "graft_dml.spec.eqd")
-    val head = RowStore.currentVersion("graft_dml.spec.eqd")
-    val manH = RowStore.readManifest("graft_dml.spec.eqd", head)
+    val head = lake.currentVersion("graft_dml.spec.eqd")
+    val manH = lake.readManifest("graft_dml.spec.eqd", head)
     assert(manH.count(_.kind == "delta") == 0,
       s"compaction must drop eq-deltas, got $manH")
     RowFiles.filesOpened.set(0L)
@@ -1792,7 +1794,7 @@ class RowCatalogSpec extends AnyFunSuite {
     // the MOR chain kept its seed base file un-rewritten and carries
     // BOTH delta kinds
     import graft.sources.RowStore
-    val man = RowStore.readManifest("graft_dml.spec.mixm", 4)
+    val man = lake.readManifest("graft_dml.spec.mixm", 4)
     assert(man.count(_.kind == "delta") >= 2,
       s"expected position + equality delta files, got $man")
     def state(t: String, v: Int): Seq[(Long, Long)] =
@@ -1817,7 +1819,7 @@ class RowCatalogSpec extends AnyFunSuite {
     val t = "graft_dml.spec.chain"
     for (i <- 1 to 4) s.sql(s"INSERT INTO $t VALUES ($i, ${i * 10})")
     // four appends on top of the v0 full manifest = a 5-deep chain
-    assert(RowStore.manifestChainLength(t, 4) == 5)
+    assert(lake.manifestChainLength(t, 4) == 5)
     RowStoreOps.createTag(t, "prewrite")
     val contentBefore = s.table(t).collect().map(r =>
       (r.getLong(0), r.getLong(1))).toSeq.sorted
@@ -1846,11 +1848,11 @@ class RowCatalogSpec extends AnyFunSuite {
       (3, false, 2), (4, true, -1)), mrows.mkString("; "))
     // further commits chain off the fresh checkpoint
     s.sql(s"INSERT INTO $t VALUES (5, 50)")
-    assert(RowStore.manifestChainLength(t, 5) == 2)
+    assert(lake.manifestChainLength(t, 5) == 2)
     // AUTO-CHECKPOINT: the chain never exceeds CheckpointEvery even
     // without a manual rewrite — commit depth is bounded by design
     for (i <- 6 to 30) s.sql(s"INSERT INTO $t VALUES ($i, ${i * 10})")
-    val depths = (5 to 30).map(v => RowStore.manifestChainLength(t, v))
+    val depths = (5 to 30).map(v => lake.manifestChainLength(t, v))
     assert(depths.max <= RowStore.CheckpointEvery,
       s"chain depth must stay capped, got $depths")
     assert(depths.min == 1, "a checkpoint manifest must have been written")
@@ -1870,11 +1872,11 @@ class RowCatalogSpec extends AnyFunSuite {
       "PARTITIONED BY (bucket(4, k))")
     for (c <- 0 until 10)
       s.sql(s"INSERT INTO $t SELECT id + ${c * 10}, id FROM range(0, 10)")
-    val resolved = RowStore.readManifest(t, 10)
+    val resolved = lake.readManifest(t, 10)
     assert(resolved.size >= 30, s"expected ~40 accumulated files")
     import scala.jdk.CollectionConverters._
     val rawLines = java.nio.file.Files.readAllLines(java.nio.file.Paths
-      .get(graft.sources.RowStore.dataDir(t)).getParent
+      .get(lake.dataDir(t)).getParent
       .resolve("v10.manifest")).asScala.toSeq
     val entryLines = rawLines.count(l =>
       l.nonEmpty && !l.startsWith("#"))
@@ -1899,7 +1901,7 @@ class RowCatalogSpec extends AnyFunSuite {
     // manifest files
     val (retained, _) = RowStoreOps.vacuum(t, keepLast = 2)
     assert(retained == Seq(4, 5))
-    assert(RowStore.manifestChainLength(t, 4) == 1)
+    assert(lake.manifestChainLength(t, 4) == 1)
     assert(s.sql(s"SELECT COUNT(*) FROM $t").head().getLong(0) == 5L)
     assert(s.sql(s"SELECT COUNT(*) FROM $t VERSION AS OF 4")
       .head().getLong(0) == 4L)
@@ -1914,8 +1916,8 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10), (2, 20)")
     s.sql(s"INSERT INTO $t VALUES (3, 30)")
-    val dir = java.nio.file.Paths.get(RowStore.dataDir(t))
-    val referenced = RowStore.readManifest(t, RowStore.currentVersion(t))
+    val dir = java.nio.file.Paths.get(lake.dataDir(t))
+    val referenced = lake.readManifest(t, lake.currentVersion(t))
       .map(_.name)
     // plant two orphans: a crashed writer's task file (copied data) and
     // a zero-byte temp
@@ -1989,7 +1991,7 @@ class RowCatalogSpec extends AnyFunSuite {
     s.sql(s"INSERT INTO $t VALUES (4, 40)")
     def feed(mode: Option[String]) = {
       val r = s.read.option("from", "1")
-        .option("to", s"${graft.sources.RowStore.currentVersion(t)}")
+        .option("to", s"${lake.currentVersion(t)}")
       mode.foreach(m => r.option("mode", m))
       r.table(s"$t.changes").orderBy("k", "_change").collect()
         .map(x => (x.getLong(0), x.getLong(1), x.getString(2))).toSeq
@@ -2024,8 +2026,8 @@ class RowCatalogSpec extends AnyFunSuite {
     assert(rows.toSeq == Seq(("main", "BRANCH", 2), ("rel1", "TAG", 1),
       ("wip", "BRANCH", 2)), rows.mkString("; "))
     // drops reflect immediately: only the implicit main remains
-    RowStore.dropTag("graft_dml.spec.refs", "rel1")
-    RowStore.dropBranch("graft_dml.spec.refs", "wip")
+    lake.dropTag("graft_dml.spec.refs", "rel1")
+    lake.dropBranch("graft_dml.spec.refs", "wip")
     assert(s.table("graft_dml.spec.refs.refs").collect()
       .map(_.getString(0)).toSeq == Seq("main"))
     s.sql("DROP TABLE graft_dml.spec.refs")
@@ -2193,8 +2195,8 @@ class RowCatalogSpec extends AnyFunSuite {
       (0 until 8).map(i => s"($i, $i)").mkString(", "))         // v1
     s.sql("INSERT OVERWRITE graft_dml.spec.vac VALUES (1, 1), (2, 2)") // v2
     val key = "graft_dml.spec.vac"
-    val m1 = RowStore.readManifest(key, 1).map(_.name).toSet
-    val m2 = RowStore.readManifest(key, 2).map(_.name).toSet
+    val m1 = lake.readManifest(key, 1).map(_.name).toSet
+    val m2 = lake.readManifest(key, 2).map(_.name).toSet
     val orphans = m1 -- m2
     assert(orphans.nonEmpty, "overwrite must orphan v1's files")
 
@@ -2202,7 +2204,7 @@ class RowCatalogSpec extends AnyFunSuite {
     assert(retained == Seq(2) && deleted == orphans.size,
       s"expected exactly the ${orphans.size} orphaned files deleted, " +
         s"got $deleted (retained $retained)")
-    assert(RowStore.versions(key) == Seq(2))
+    assert(lake.versions(key) == Seq(2))
     // current read unaffected; expired time travel fails at ANALYSIS
     assert(s.table("graft_dml.spec.vac").orderBy("k").collect()
       .map(_.getLong(0)).toSeq == Seq(1L, 2L))

@@ -11,6 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * rewrite, binpack. Appends stay VIRTUAL (firstRowId + position,
   * zero per-row storage); only rewrites materialize. */
 class RowLineageSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowStore, RowStoreOps}
 
@@ -39,7 +41,7 @@ class RowLineageSpec extends AnyFunSuite {
       "first append inherits 0..n-1 in plan order")
     // the append path stays VIRTUAL: no id column in the written file
     val key = t
-    val man1 = RowStore.readManifest(key, RowStore.currentVersion(key))
+    val man1 = lake.readManifest(key, lake.currentVersion(key))
     assert(man1.forall(_.firstRowId.isDefined),
       "every committed entry carries its assigned range")
     // `.files` surfaces the assigned range starts (zero data opens)
@@ -323,11 +325,11 @@ class RowLineageSpec extends AnyFunSuite {
     // retire ids 0..2: the live max range end drops to 5, but the
     // counter stays at 5 — and so must a clone's
     s.sql(s"INSERT OVERWRITE $t VALUES (10, 0), (11, 1)")
-    val srcNext = RowStore.nextRowId(t, RowStore.currentVersion(t))
+    val srcNext = lake.nextRowId(t, lake.currentVersion(t))
     assert(srcNext == 5L)
     s.sql(s"CALL graft_dml.system.snapshot_table(" +
       s"'spec.lineage_src', 'spec.lineage_cln')")
-    assert(RowStore.nextRowId(c, RowStore.currentVersion(c)) == srcNext,
+    assert(lake.nextRowId(c, lake.currentVersion(c)) == srcNext,
       "the clone must inherit the source COUNTER, not its live max")
     s.sql(s"INSERT INTO $c VALUES (20, 0)")
     val cloneIds = ids(c)

@@ -78,9 +78,15 @@ class ScratchSpec extends AnyFunSuite {
   }
 
   test("the tag is sanitized once, idempotently") {
-    assert(Scratch.tag("/data/sf0.001") == "_data_sf0_001")
+    assert(Scratch.tag("/data/sf0.001") == "data_sf0_001")
     assert(Scratch.tag(Scratch.tag("a-b.c")) == Scratch.tag("a-b.c"))
     assert(Scratch.dir(spark, "g", "/x/sf0.1") ==
       Scratch.dir(spark, "g", "_x_sf0_1"))
+  }
+
+  test("a dataset path's tag is not a name Spark hides") {
+    val t = Scratch.tag("/root/testdata/sf0.001")
+    assert(!t.startsWith("_") && !t.startsWith("."), t)
+    assert(Scratch.tag(t) == t)
   }
 }

@@ -12,15 +12,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * addresses, not file references), and cloning onto an existing
   * table refuses. */
 class SnapshotCloneSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowStore, RowStoreOps}
 
   private def entries(key: String) =
-    RowStore.readManifest(key, RowStore.currentVersion(key))
+    lake.readManifest(key, lake.currentVersion(key))
 
   private def ownFiles(key: String): Seq[String] = {
     val st = java.nio.file.Files.list(
-      java.nio.file.Paths.get(RowStore.dataDir(key)))
+      java.nio.file.Paths.get(lake.dataDir(key)))
     try {
       import scala.jdk.CollectionConverters._
       st.iterator().asScala.map(_.getFileName.toString).toSeq
@@ -44,7 +46,7 @@ class SnapshotCloneSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE IF EXISTS $dst")
     val refs = RowStoreOps.snapshotTable(src, dst)
     assert(refs > 0)
-    val e0 = RowStore.readManifest(dst, 0)
+    val e0 = lake.readManifest(dst, 0)
     assert(e0.nonEmpty && e0.forall(_.name.startsWith("/")),
       "clone entries must be absolute references")
     assert(ownFiles(dst).isEmpty, "zero bytes in the clone's own dir")
@@ -89,7 +91,7 @@ class SnapshotCloneSpec extends AnyFunSuite {
     val dst = "graft_dml.spec.sc_dst3"
     s.sql(s"DROP TABLE IF EXISTS $dst")
     RowStoreOps.snapshotTable(src, dst)
-    val e0 = RowStore.readManifest(dst, 0)
+    val e0 = lake.readManifest(dst, 0)
     // dv targets stay in LEAF form (rid-space addresses — r15 advisor:
     // absolutizing them broke the existing-vector lookup on clones);
     // each must pair with the leaf of an absolutized base entry

@@ -11,6 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * unchanged, and rows-planned bounded by the band's true row count
   * plus boundary tolerance. */
 class SortedRewriteSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowStore, RowStoreOps}
 
@@ -32,8 +34,8 @@ class SortedRewriteSpec extends AnyFunSuite {
 
     RowStoreOps.compact(s, t) // plain bin-pack: 1 group-wide file each
     assert(s.sql(banded).head().getLong(0) == want)
-    val plainPlanned = RowStore.lastPlannedBaseFiles.get()
-    val plainSkipped = RowStore.lastSkippedBaseFiles.get()
+    val plainPlanned = lake.lastPlannedBaseFiles.get()
+    val plainSkipped = lake.lastSkippedBaseFiles.get()
     assert(plainPlanned == 4 && plainSkipped == 0,
       s"bin-packed layout must plan all 4 group files, skip none: " +
         s"$plainPlanned/$plainSkipped")
@@ -42,8 +44,8 @@ class SortedRewriteSpec extends AnyFunSuite {
     assert(gs == Set(0, 1, 2, 3), "sorted rewrite targets every group")
     assert(s.sql(banded).head().getLong(0) == want,
       "the rewrite must be observationally invisible")
-    val planned = RowStore.lastPlannedBaseFiles.get()
-    val skipped = RowStore.lastSkippedBaseFiles.get()
+    val planned = lake.lastPlannedBaseFiles.get()
+    val skipped = lake.lastSkippedBaseFiles.get()
     assert(skipped > 0, "range-clustered files must skip under the band")
     val frac = planned.toDouble / (planned + skipped)
     assert(frac < 1.0 && frac <= 0.7,
@@ -52,7 +54,7 @@ class SortedRewriteSpec extends AnyFunSuite {
 
     // the planner's file set agrees with the manifest's zone maps,
     // and rows planned are band-sized, not table-sized
-    val man = RowStore.readManifest(t, RowStore.currentVersion(t))
+    val man = lake.readManifest(t, lake.currentVersion(t))
     assert(man.forall(_.kind == "base"))
     val intersecting = man.filter(e =>
       e.maxK.exists(_ >= 100L) && e.minK.exists(_ < 200L))
@@ -76,11 +78,11 @@ class SortedRewriteSpec extends AnyFunSuite {
       "WHERE cat >= 'b' AND cat <= 'b'"
     val want2 = (0 until 240).filter(_ % 4 == 1).map(_ * 3L).sum
     assert(s.sql(catBand).head().getLong(0) == want2)
-    assert(RowStore.lastSkippedBaseFiles.get() == 0,
+    assert(lake.lastSkippedBaseFiles.get() == 0,
       "interleaved layout has nothing to skip on cat")
     RowStoreOps.compact(s, t2, sortCols = Seq("cat", "k"))
     assert(s.sql(catBand).head().getLong(0) == want2)
-    assert(RowStore.lastSkippedBaseFiles.get() > 0,
+    assert(lake.lastSkippedBaseFiles.get() > 0,
       "cat-leading sort must make the cat band skip files")
     s.sql(s"DROP TABLE $t2")
 
@@ -97,11 +99,11 @@ class SortedRewriteSpec extends AnyFunSuite {
     val nestedBand = s"SELECT CAST(COUNT(*) AS BIGINT) FROM $t3 " +
       "WHERE props.band >= 10 AND props.band < 20"
     assert(s.sql(nestedBand).head().getLong(0) == 40)
-    assert(RowStore.lastSkippedBaseFiles.get() == 0,
+    assert(lake.lastSkippedBaseFiles.get() == 0,
       "interleaved bands: nothing skippable before the rewrite")
     RowStoreOps.compact(s, t3, sortCols = Seq("props.band"))
     assert(s.sql(nestedBand).head().getLong(0) == 40)
-    assert(RowStore.lastSkippedBaseFiles.get() > 0,
+    assert(lake.lastSkippedBaseFiles.get() > 0,
       "nested-leaf sort must make the nested band skip files")
     s.sql(s"DROP TABLE $t3")
 

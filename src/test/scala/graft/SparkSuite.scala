@@ -10,5 +10,8 @@ object SparkSuite {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString))
 
+  /** The lake of [[spark]]'s `graft_dml` catalog. */
+  def lake: graft.sources.RowStore = graft.sources.RowStore.of(spark)
+
   val sf: String = "/root/testdata/sf0.001"
 }

@@ -15,9 +15,10 @@ import graft.sources.{RowStore, Transact}
   * and nothing moved, and MOR delta/dv state survives adoption with
   * its rid pairing intact. */
 class TransactSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
 
   private def listData(key: String): Set[String] = {
-    val d = Paths.get(RowStore.dataDir(key))
+    val d = Paths.get(lake.dataDir(key))
     val stream = Files.list(d)
     try stream.iterator().asScala.map(_.getFileName.toString)
       .filter(!_.startsWith(".")).toSet
@@ -31,20 +32,20 @@ class TransactSpec extends AnyFunSuite {
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10), (2, 20)")
     val baseFilesBefore = listData(t)
-    val txn = Transact.begin(Seq(t))
+    val txn = Transact.begin(lake, Seq(t))
     val ck = Transact.cloneKey(t, txn.id)
     s.sql(s"INSERT INTO $ck VALUES (3, 30)")
     s.sql(s"UPDATE $ck SET v = v + 1 WHERE k = 1")
     val txnWritten = listData(ck) // files only the txn wrote
     assert(txnWritten.nonEmpty)
-    val vs = Transact.commit(txn.id)
-    assert(vs == Seq(RowStore.currentVersion(t)))
+    val vs = Transact.commit(lake, txn.id)
+    assert(vs == Seq(lake.currentVersion(t)))
     // clone gone; every file its final manifest referenced from its
     // own dir now lives in the base's dir (MOVED — the clone dir was
     // dropped, so a copy would have been deleted with it)
-    assert(!RowStore.exists(ck), "clone must drop at commit")
+    assert(!lake.exists(ck), "clone must drop at commit")
     val baseFilesAfter = listData(t)
-    val manifest = RowStore.readManifest(t, RowStore.currentVersion(t))
+    val manifest = lake.readManifest(t, lake.currentVersion(t))
       .map(_.name).toSet
     assert(manifest.forall(n => n.startsWith("/") || baseFilesAfter(n)),
       s"adopted manifest references a missing file: $manifest")
@@ -61,19 +62,19 @@ class TransactSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10)")
-    val v0 = RowStore.currentVersion(t)
+    val v0 = lake.currentVersion(t)
     val files0 = listData(t)
-    val txn = Transact.begin(Seq(t))
+    val txn = Transact.begin(lake, Seq(t))
     val ck = Transact.cloneKey(t, txn.id)
     s.sql(s"DELETE FROM $ck WHERE k = 1")
     s.sql(s"INSERT INTO $ck VALUES (9, 90)")
-    assert(Transact.rollback(txn.id) == 1)
-    assert(!RowStore.exists(ck))
-    assert(RowStore.currentVersion(t) == v0 && listData(t) == files0,
+    assert(Transact.rollback(lake, txn.id) == 1)
+    assert(!lake.exists(ck))
+    assert(lake.currentVersion(t) == v0 && listData(t) == files0,
       "rollback must not touch the base: no version, no file")
     assert(s.table(t).collect().map(_.getLong(0)).toSeq == Seq(1L))
     // double rollback is a loud error, not a silent no-op
-    intercept[IllegalArgumentException] { Transact.rollback(txn.id) }
+    intercept[IllegalArgumentException] { Transact.rollback(lake, txn.id) }
   }
 
   test("refused commit leaves the txn open, nothing moved; retry works") {
@@ -84,7 +85,7 @@ class TransactSpec extends AnyFunSuite {
       s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
       s.sql(s"INSERT INTO $t VALUES (1, 10)")
     }
-    val txn = Transact.begin(Seq(ta, tb))
+    val txn = Transact.begin(lake, Seq(ta, tb))
     val (ca, cb) = (Transact.cloneKey(ta, txn.id),
       Transact.cloneKey(tb, txn.id))
     s.sql(s"INSERT INTO $ca VALUES (2, 20)")
@@ -96,17 +97,17 @@ class TransactSpec extends AnyFunSuite {
     // next test)
     s.sql(s"INSERT INTO $ta VALUES (6, 60)")
     intercept[java.util.ConcurrentModificationException] {
-      Transact.commit(txn.id)
+      Transact.commit(lake, txn.id)
     }
     // ALL-or-nothing: neither table advanced past its own state, the
     // clones (including untouched B's) survive with every file in
     // place — the txn can be inspected, rolled back, or re-begun
-    assert(RowStore.exists(ca) && RowStore.exists(cb),
+    assert(lake.exists(ca) && lake.exists(cb),
       "a refused commit must keep the transaction open")
     assert(listData(ca) == cloneFiles, "refusal must move nothing")
     assert(s.table(tb).count() == 1,
       "the non-conflicting table must not publish either")
-    assert(Transact.rollback(txn.id) == 2)
+    assert(Transact.rollback(lake, txn.id) == 2)
   }
 
   test("group-DISJOINT interloper and transaction BOTH land (rebase)") {
@@ -115,12 +116,12 @@ class TransactSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10)")
-    val txn = Transact.begin(Seq(t))
+    val txn = Transact.begin(lake, Seq(t))
     val ck = Transact.cloneKey(t, txn.id)
     s.sql(s"INSERT INTO $ck VALUES (2, 20)")   // txn touches group 2
     s.sql(s"INSERT INTO $t VALUES (7, 70)")    // interloper: group 3
-    val curBefore = RowStore.currentVersion(t)
-    val vs = Transact.commit(txn.id)
+    val curBefore = lake.currentVersion(t)
+    val vs = Transact.commit(lake, txn.id)
     // the commit REBASED onto the interloper's head instead of
     // refusing: both writes are visible, nothing lost, version linear
     assert(vs == Seq(curBefore + 1))
@@ -138,29 +139,29 @@ class TransactSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10)")
-    val v0 = RowStore.currentVersion(t)
-    val txn = Transact.begin(Seq(t))
+    val v0 = lake.currentVersion(t)
+    val txn = Transact.begin(lake, Seq(t))
     val ck = Transact.cloneKey(t, txn.id)
     s.sql(s"INSERT INTO $ck VALUES (2, 20)")
     // observable from the registry (any process could run this scan)
-    val rec = Transact.scan().find(_.id == txn.id)
+    val rec = Transact.scan(lake).find(_.id == txn.id)
     assert(rec.isDefined && rec.get.tables == Seq(t) &&
       rec.get.bases(t) == v0 && rec.get.ownedByThisProcess,
-      s"open txn must be on the registry: ${Transact.scan()}")
+      s"open txn must be on the registry: ${Transact.scan(lake)}")
     // a generous TTL keeps it; ttl 0 reclaims it: clones + record
     // gone, base untouched
-    val (e0, k0) = Transact.gcTransactions(3600 * 1000L)
+    val (e0, k0) = Transact.gcTransactions(lake, 3600 * 1000L)
     assert(e0 == 0 && k0 >= 1, s"($e0, $k0)")
-    assert(RowStore.exists(ck))
-    val (e1, _) = Transact.gcTransactions(0L)
+    assert(lake.exists(ck))
+    val (e1, _) = Transact.gcTransactions(lake, 0L)
     assert(e1 >= 1)
-    assert(!RowStore.exists(ck), "GC must drop the expired clone")
-    assert(Transact.scan().forall(_.id != txn.id))
-    assert(RowStore.currentVersion(t) == v0 && s.table(t).count() == 1,
+    assert(!lake.exists(ck), "GC must drop the expired clone")
+    assert(Transact.scan(lake).forall(_.id != txn.id))
+    assert(lake.currentVersion(t) == v0 && s.table(t).count() == 1,
       "GC must never touch the base")
     // the reclaimed id is dead for commit and rollback alike
-    intercept[IllegalArgumentException] { Transact.commit(txn.id) }
-    intercept[IllegalArgumentException] { Transact.rollback(txn.id) }
+    intercept[IllegalArgumentException] { Transact.commit(lake, txn.id) }
+    intercept[IllegalArgumentException] { Transact.rollback(lake, txn.id) }
   }
 
   test("a foreign process's txn: observed, commit refused, GC'd") {
@@ -169,33 +170,33 @@ class TransactSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10)")
-    val v0 = RowStore.currentVersion(t)
+    val v0 = lake.currentVersion(t)
     // P1: a SECOND JVM opens a transaction and exits WITHOUT
     // committing — the crashed-owner shape; its record and clones
-    // survive it on the shared warehouse (this process's scratch
-    // root, handed to the worker via -Dgraft.warehouse.root)
-    val sharedRoot = graft.sources.RowStore.dataDir(t)
-      .stripSuffix(s"/$t/data")
-    val before = Transact.scan().map(_.id).toSet
+    // survive it on the shared warehouse (this process's lake root,
+    // handed to the worker as its catalog's `warehouse` option)
+    val sharedRoot = lake.root
+    val before = Transact.scan(lake).map(_.id).toSet
     XProc.await(XProc.fork(sharedRoot, Seq(
       "CALL graft_dml.system.begin_transaction('tx.x')")))
-    val foreign = Transact.scan().filterNot(o => before(o.id))
+    val foreign = Transact.scan(lake).filterNot(o => before(o.id))
     assert(foreign.size == 1, s"worker's txn must be observable: " +
-      s"${Transact.scan()}")
+      s"${Transact.scan(lake)}")
     val o = foreign.head
     assert(!o.ownedByThisProcess && o.tables == Seq(t))
-    assert(RowStore.exists(Transact.cloneKey(t, o.id)),
+    assert(lake.exists(Transact.cloneKey(t, o.id)),
       "the foreign clone is visible debris")
     // this process may neither commit nor roll back the foreign txn
-    val e1 = intercept[IllegalArgumentException] { Transact.commit(o.id) }
+    val e1 = intercept[IllegalArgumentException] { Transact.commit(lake, o.id) }
     assert(e1.getMessage.contains("owned by process"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] { Transact.rollback(o.id) }
+    val e2 = intercept[IllegalArgumentException] {
+      Transact.rollback(lake, o.id) }
     assert(e2.getMessage.contains("owned by process"), e2.getMessage)
     // the owner is dead: GC reclaims its debris, base untouched
-    val (reclaimed, _) = Transact.gcTransactions(0L)
+    val (reclaimed, _) = Transact.gcTransactions(lake, 0L)
     assert(reclaimed >= 1)
-    assert(!RowStore.exists(Transact.cloneKey(t, o.id)))
-    assert(RowStore.currentVersion(t) == v0 && s.table(t).count() == 1)
+    assert(!lake.exists(Transact.cloneKey(t, o.id)))
+    assert(lake.currentVersion(t) == v0 && s.table(t).count() == 1)
   }
 
   test("MOR dv table: delta and vector state survives adoption") {
@@ -208,13 +209,13 @@ class TransactSpec extends AnyFunSuite {
       (0 until 8).map(i => s"($i, ${i * 10})").mkString(", "))
     // pre-txn MOR churn so the clone carries existing deltas + dvs
     s.sql(s"DELETE FROM $t WHERE k = 7")
-    val txn = Transact.begin(Seq(t))
+    val txn = Transact.begin(lake, Seq(t))
     val ck = Transact.cloneKey(t, txn.id)
     s.sql(s"""MERGE INTO $ck c USING (SELECT 1 AS k UNION ALL
       SELECT 2 AS k) x ON c.k = x.k
       WHEN MATCHED AND c.k = 1 THEN UPDATE SET v = 999
       WHEN MATCHED THEN DELETE""")
-    Transact.commit(txn.id)
+    Transact.commit(lake, txn.id)
     // the adopted snapshot replays deltas + vectors over the base
     // files exactly as the clone did (leaf-rid pairing intact)
     assert(s.table(t).orderBy("k").collect().map(r =>
@@ -228,7 +229,7 @@ class TransactSpec extends AnyFunSuite {
     // of leaf form) stacks a second vector on the same target, which
     // the union keeps observationally correct but breaks the
     // at-most-one-vector-per-file invariant forever
-    val dvs = RowStore.readManifest(t, RowStore.currentVersion(t))
+    val dvs = lake.readManifest(t, lake.currentVersion(t))
       .filter(_.kind == "dv")
     assert(dvs.nonEmpty && dvs.groupBy(_.dvTarget).forall(_._2.size == 1),
       s"adoption must preserve at-most-one-vector-per-file: " +
@@ -246,24 +247,24 @@ class TransactSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10)")
-    val v0 = RowStore.currentVersion(t)
-    val txn = Transact.begin(Seq(t))
+    val v0 = lake.currentVersion(t)
+    val txn = Transact.begin(lake, Seq(t))
     val ck = Transact.cloneKey(t, txn.id)
     s.sql(s"INSERT INTO $ck VALUES (2, 20)")
     // inject a phase-1 IO failure: delete one txn-written file out
     // from under the adoption's Files.move
-    val cloneDir = Paths.get(RowStore.dataDir(ck))
+    val cloneDir = Paths.get(lake.dataDir(ck))
     val victim = Files.list(cloneDir).iterator().asScala
       .filter(!_.getFileName.toString.startsWith(".")).toSeq.head
     Files.delete(victim)
-    val e = intercept[IllegalStateException] { Transact.commit(txn.id) }
+    val e = intercept[IllegalStateException] { Transact.commit(lake, txn.id) }
     assert(e.getMessage.contains("CLOSED"), e.getMessage)
     // the contract: base untouched, clones dropped, id dead — a
     // retry-poisoned transaction must not stay claimable
-    assert(RowStore.currentVersion(t) == v0 && s.table(t).count() == 1)
-    assert(!RowStore.exists(ck), "a closed txn's clones must drop")
-    intercept[IllegalArgumentException] { Transact.commit(txn.id) }
-    intercept[IllegalArgumentException] { Transact.rollback(txn.id) }
+    assert(lake.currentVersion(t) == v0 && s.table(t).count() == 1)
+    assert(!lake.exists(ck), "a closed txn's clones must drop")
+    intercept[IllegalArgumentException] { Transact.commit(lake, txn.id) }
+    intercept[IllegalArgumentException] { Transact.rollback(lake, txn.id) }
   }
 
   test("DDL inside a transaction refuses at commit") {
@@ -272,12 +273,13 @@ class TransactSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10)")
-    val txn = Transact.begin(Seq(t))
+    val txn = Transact.begin(lake, Seq(t))
     val ck = Transact.cloneKey(t, txn.id)
     s.sql(s"ALTER TABLE $ck ADD COLUMN extra BIGINT")
-    val e = intercept[IllegalArgumentException] { Transact.commit(txn.id) }
+    val e = intercept[IllegalArgumentException] {
+      Transact.commit(lake, txn.id) }
     assert(e.getMessage.contains("DDL"), e.getMessage)
-    assert(Transact.rollback(txn.id) == 1)
+    assert(Transact.rollback(lake, txn.id) == 1)
     assert(s.table(t).columns.toSeq == Seq("k", "v"))
   }
 
@@ -287,7 +289,7 @@ class TransactSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     s.sql(s"INSERT INTO $t VALUES (1, 10)")
-    val txn = Transact.begin(Seq(t))
+    val txn = Transact.begin(lake, Seq(t))
     val ck = Transact.cloneKey(t, txn.id)
     s.sql(s"INSERT INTO $ck VALUES (2, 20)")
     // the interloper evolves the BASE's schema — the transaction did
@@ -295,10 +297,10 @@ class TransactSpec extends AnyFunSuite {
     // signal, not the 'DDL in transactions' misdiagnosis (r16 review)
     s.sql(s"ALTER TABLE $t ADD COLUMN extra BIGINT")
     val e = intercept[java.util.ConcurrentModificationException] {
-      Transact.commit(txn.id)
+      Transact.commit(lake, txn.id)
     }
     assert(e.getMessage.contains("evolved concurrently"), e.getMessage)
-    assert(Transact.rollback(txn.id) == 1)
+    assert(Transact.rollback(lake, txn.id) == 1)
     assert(s.table(t).columns.toSeq == Seq("k", "v", "extra"))
   }
 }

@@ -11,11 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * loudly (bloom/ndv DDL) instead of recording garbage; the implied
   * first-column key guard refuses ungroupable key types. */
 class WideTypesSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowFiles, RowStore}
 
   private def entries(key: String) =
-    RowStore.readManifest(key, RowStore.currentVersion(key))
+    lake.readManifest(key, lake.currentVersion(key))
 
   test("array/double/binary round-trip through insert + COW merge + time travel") {
     val s = spark
@@ -52,7 +54,7 @@ class WideTypesSpec extends AnyFunSuite {
       .head().getSeq[Float](0) == Seq(0.25f, -1.5f))
 
     // files store native physical types, arrays as BINARY blobs
-    val dir = RowStore.dataDir(t)
+    val dir = lake.dataDir(t)
     val f = entries(t).filter(_.kind == "base").head.name
     val (_, msg) = RowFiles.footerMeta(s"$dir/$f")
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName

@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * manifest's zone maps alone, and the spec surface refuses bad
   * specs loudly. */
 class ZOrderRewriteSpec extends AnyFunSuite {
+  private def lake = SparkSuite.lake
+
   lazy val spark = SparkSuite.spark
   import graft.sources.{RowStore, RowStoreOps}
 
@@ -34,15 +36,15 @@ class ZOrderRewriteSpec extends AnyFunSuite {
 
     RowStoreOps.compact(s, t) // plain bin-pack
     assert(s.sql(band("k")).head().getLong(0) == wantK)
-    assert(RowStore.lastSkippedBaseFiles.get() == 0)
+    assert(lake.lastSkippedBaseFiles.get() == 0)
     assert(s.sql(band("p")).head().getLong(0) == wantP)
-    assert(RowStore.lastSkippedBaseFiles.get() == 0)
+    assert(lake.lastSkippedBaseFiles.get() == 0)
 
     // lexicographic on (k, p): k skips, p does NOT (the bias q166's
     // zorder exists to fix)
     RowStoreOps.compact(s, t, sortCols = Seq("k", "p"))
     assert(s.sql(band("p")).head().getLong(0) == wantP)
-    assert(RowStore.lastSkippedBaseFiles.get() == 0,
+    assert(lake.lastSkippedBaseFiles.get() == 0,
       "lexicographic leading-k layout must not skip on p")
 
     val (gs, _, _) = RowStoreOps.compact(s, t, zorderCols = Seq("k", "p"))
@@ -55,8 +57,8 @@ class ZOrderRewriteSpec extends AnyFunSuite {
     def frac(c: String, want: Long): Double = {
       assert(s.sql(band(c)).head().getLong(0) == want,
         "the rewrite must be observationally invisible")
-      val planned = RowStore.lastPlannedBaseFiles.get()
-      val skipped = RowStore.lastSkippedBaseFiles.get()
+      val planned = lake.lastPlannedBaseFiles.get()
+      val skipped = lake.lastSkippedBaseFiles.get()
       assert(skipped > 0, s"$c band must skip under the z layout")
       planned.toDouble / (planned + skipped)
     }
